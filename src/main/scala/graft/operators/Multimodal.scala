@@ -145,10 +145,13 @@ object Multimodal {
     * [[ingestBinaryDir]] scan reads. A scheme-less or `file:` dir uses
     * `java.nio` directly: identical namespace semantics (local mode is
     * trivially shared; a node-local path shards per node under EITHER
-    * api — a deployment property this code cannot see), and 65x faster
-    * here — without native Hadoop libs, `RawLocalFileSystem.create`
-    * sets permissions by exec'ing a chmod subprocess per file
-    * (measured 4.4 ms/file vs 0.07 ms via nio at 5k files).
+    * api — a deployment property this code cannot see). Since
+    * [[graft.fs.GraftRawLocalFileSystem]] stopped the `chmod` subprocess
+    * per file, a single-threaded checksum-free Hadoop create costs about
+    * what nio does (0.14 vs 0.02–0.3 ms/file at 5k files; stock Hadoop
+    * 3.1–3.9 ms), but q198 through the Hadoop path still ran 0.9–2.1 s
+    * slower in each of 4 alternating runs (10.9–14.7 s vs 10.0–12.8 s,
+    * 4 cores, sf0.1), so the nio branch stays.
     */
   def writeAssets(df: DataFrame, idCol: String, textCol: String,
       dir: String): Unit = {

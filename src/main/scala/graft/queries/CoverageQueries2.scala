@@ -160,8 +160,8 @@ object CoverageQueries2 {
   val q72FormatRoundtrip: QueryDef = QueryDef(
     "q72_format_roundtrip",
     (s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_formats").toString
+      val tmp = graft.operators.TmpWorkspaces
+        .pidScoped("graft_formats_q72_", dir).toString
       val li = Tables.load(s, dir, "lineitem")
         .filter(col("l_orderkey") <= 2000)
         .select(col("l_orderkey"),

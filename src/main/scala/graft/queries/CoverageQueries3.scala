@@ -90,8 +90,8 @@ object CoverageQueries3 {
   val q77OrcPartitioned: QueryDef = QueryDef(
     "q77_orc_partitioned",
     (s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_orc").toString
+      val tmp = graft.operators.TmpWorkspaces
+        .pidScoped("graft_orc_q77_", dir).toString
       Tables.load(s, dir, "part")
         .select(col("p_partkey"), col("p_brand"),
           col("p_size").cast("int").as("p_size"))
@@ -241,8 +241,8 @@ object CoverageQueries3 {
   val q94BucketedJoin: QueryDef = QueryDef(
     "q94_bucketed_join",
     (s, dir) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_buckets").toString
+      val tmp = graft.operators.TmpWorkspaces
+        .pidScoped("graft_buckets_q94_", dir).toString
       s.sql("DROP TABLE IF EXISTS graft_li_b")
       s.sql("DROP TABLE IF EXISTS graft_ord_b")
       Tables.load(s, dir, "lineitem")

@@ -104,8 +104,8 @@ object StreamingQueries2 {
     "q65_upsert_materialize",
     (s, dir) => {
       StreamRunner.useHeapState(s)
-      val log = java.nio.file.Files
-        .createTempDirectory("graft_upsert_log").toString
+      val log = graft.operators.TmpWorkspaces
+        .pidScoped("graft_upsert_log_q65_", dir).toString
       val changelog = StreamRunner.eventsStream(s, dir)
         .filter(col("event_type").isin("signup", "purchase", "error"))
         .select(

@@ -177,9 +177,7 @@ object Clustering {
 
   /** Materializes the SEMANTIC INDEX: an [[assignL2]] output persisted
     * parquet PARTITIONED BY the cluster id — the written layout behind
-    * incremental SemDeDup, completing the incremental-dedup family
-    * (exact q160 / minhash q159 / containment q161 / simhash q168 /
-    * block q172) on its embedding side. Rows carry the exact double
+    * incremental SemDeDup (q173). Rows carry the exact double
     * vector (`v` — parquet round-trips doubles bit-identically, so
     * served cosines equal in-session ones), the assignment distance
     * `d2` (the drift audit's raw material — it is already computed by
@@ -199,10 +197,9 @@ object Clustering {
     * algorithm: Abbas et al. 2023 (SemDeDup), public.
     */
   def semanticWriteIndex(assigned: DataFrame, path: String,
-      idCol: String = "vec_id"): Unit = {
-    IndexPaths.clearPointer(assigned.sparkSession, path)
-    writeSemGeneration(assigned, path, idCol, gen = 0, mode = "overwrite")
-  }
+      idCol: String = "vec_id"): Unit =
+    IndexLayout.semantic(idCol).write(assigned, path, None,
+      memberRows(assigned, idCol, gen = 0))
 
   /** Appends a NEW-SNAPSHOT generation of assignments — delta-sized,
     * zero base reads. The delta must be assigned against the SAME
@@ -220,17 +217,14 @@ object Clustering {
   def semanticAppendIndex(assignedDelta: DataFrame, path: String,
       gen: Int, idCol: String = "vec_id"): Unit = {
     require(gen > 0, s"append generations start at 1 (0 is the base build), got $gen")
-    writeSemGeneration(assignedDelta,
-      IndexPaths.resolve(assignedDelta.sparkSession, path), idCol, gen,
-      mode = "append")
+    IndexLayout.semantic(idCol).append(path,
+      memberRows(assignedDelta, idCol, gen))
   }
 
-  private def writeSemGeneration(assigned: DataFrame, path: String,
-      idCol: String, gen: Int, mode: String): Unit =
+  private def memberRows(assigned: DataFrame, idCol: String,
+      gen: Int): DataFrame =
     assigned
       .select(col(idCol), col("v"), col("d2"), lit(gen).as("gen"), col("cid"))
-      .repartition(col("cid"))
-      .write.mode(mode).partitionBy("cid").parquet(path)
 
   /** Incremental SemDeDup of a new snapshot against a semantic index
     * that already contains it ([[semanticWriteIndex]] +
@@ -299,81 +293,6 @@ object Clustering {
     snap.join(removed, Seq("id"), "left")
       .select(col("cid"), col("id").as(idCol), col("rm").isNull.as("kept"))
   }
-
-  /** Duplicate-member audit of a semantic index — the cluster-layout
-    * member of the audit family (exact `exactAuditIndex`, lexical
-    * `bm25AuditIndex`, PQ `ivfPqAuditIndex`): a REPLAYED append (the
-    * damage the exactly-once contract warns about) lands bit-identical
-    * member rows, which inflate union cluster sizes toward the
-    * [[semDedupIndexed]] cap and double-count both sides of
-    * [[semanticDriftAudit]]'s shares. One grouped scan of the index:
-    * every member id present more than once, with its copy count and
-    * how many DISTINCT payloads the copies carry — the payload is the
-    * FULL non-key row (v, d2, gen, cid), exactly what
-    * [[semanticCompactIndex]] dedups on, so the audit's taxonomy and
-    * the repair's agree: `n_payloads = 1` is clean replay damage
-    * (compaction repairs it); `n_payloads > 1` is divergence (the
-    * same id re-appended under a different generation, a retrained
-    * centroid family, or a corrupted vector) that needs a rebuild,
-    * not a compaction.
-    */
-  def semanticAuditIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String = "vec_id"): DataFrame =
-    spark.read.parquet(IndexPaths.resolve(spark, path))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_copies"),
-        count_distinct(struct(col("v"), col("d2"), col("gen"), col("cid")))
-          .as("n_payloads"))
-      .filter(col("n_copies") > 1)
-
-  /** REPAIR for a double-appended semantic index ([[semanticAuditIndex]]
-    * hits): compact `src` into a fresh layout at `dst`, dropping the
-    * replayed rows. Dedup is on WHOLE member rows — a replayed append
-    * lands bit-identical (id, v, d2, gen, cid) rows (parquet
-    * round-trips the doubles exactly) — and if an id still collides
-    * after (payload divergence: re-appended under another generation
-    * or centroid family, so the copies disagree on cid/gen/d2),
-    * compaction REFUSES loudly: a member may live in exactly ONE
-    * cluster, and silently picking a copy would move [[semDedupIndexed]]
-    * verdicts. Stage-then-swap to a NEW path (the `ivfPqCompactIndex`
-    * idiom); cost is one read + one cid-partitioned write of the
-    * member rows, as a repair op should be. q178 gates
-    * replay → audit → compact → probe ≡ the clean fresh-union oracle.
-    */
-  def semanticCompactIndex(spark: org.apache.spark.sql.SparkSession,
-      srcPath0: String, dstPath: String, idCol: String = "vec_id"): Unit = {
-    val srcPath = IndexPaths.resolve(spark, srcPath0)
-    val rows = spark.read.parquet(srcPath)
-      .select(col(idCol), col("v"), col("d2"), col("gen"), col("cid"))
-      .dropDuplicates()
-      .localCheckpoint()
-    // divergence probe ∥ rewrite — both consume the one checkpointed
-    // frame (guide §2.6); refusal still throws, dst stays staged
-    Parallelism.inParallel(
-      () => {
-        val divergent = rows.groupBy(col(idCol))
-          .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1).collect()
-        require(divergent.isEmpty, {
-          val d = divergent.head
-          s"semanticCompactIndex: member ${d.get(0)} has payload-" +
-            "divergent copies (same id, different v/cid/gen/d2) — not " +
-            "append-replay damage; rebuild the index from a fresh " +
-            "assignment instead"
-        })
-      },
-      () => rows.repartition(col("cid"))
-        .write.mode("overwrite").partitionBy("cid").parquet(dstPath))
-  }
-
-  /** ONLINE repair: [[semanticCompactIndex]] into the next generation
-    * under the same root + the atomic [[IndexPaths.compactSwap]]
-    * pointer cutover — standing probes keep the old generation; new
-    * resolves serve the repaired one. Returns the new generation dir.
-    */
-  def semanticCompactSwap(spark: org.apache.spark.sql.SparkSession,
-      root: String, idCol: String = "vec_id"): String =
-    IndexPaths.compactSwap(spark, root)(
-      semanticCompactIndex(spark, _, _, idCol))
 
   /** CENTROID-STALENESS drift audit of a semantic index — the
     * embedding-side twin of the bigram-model drift audit (q169) and of

@@ -320,15 +320,14 @@ object Curation {
     *
     * NOT idempotent — the standard append contract: a replayed batch
     * doubles its documents' mass contributions and duplicates their
-    * keys; audit with `groupBy(keyCol).count > 1` over the payload and
-    * repair by rewriting it deduplicated.
+    * keys — a SILENT corpus-wide rate shift that
+    * `IndexLayout.mixture(stratumCol, keyCol)` audits and compacts.
     */
   def mixtureAppendIndex(batch: DataFrame, path: String,
       stratumCol: String, keyCol: String, textCol: String): Unit =
-    batch.select(col(stratumCol), col(keyCol),
-        size(TextOps.tokens(col(textCol))).cast("long").as("n_toks"))
-      .write.mode("append")
-      .parquet(IndexPaths.resolve(batch.sparkSession, path))
+    IndexLayout.mixture(stratumCol, keyCol).append(path,
+      batch.select(col(stratumCol), col(keyCol),
+        size(TextOps.tokens(col(textCol))).cast("long").as("n_toks")))
 
   /** Serves the standing admission manifest from a written mixture
     * payload ([[mixtureAppendIndex]] generations): derive rates from
@@ -342,67 +341,6 @@ object Curation {
       budget: Long): DataFrame =
     mixtureFromCounts(spark.read.parquet(IndexPaths.resolve(spark, path)),
       stratumCol, keyCol, budget)
-
-  /** Replay audit of a written mixture payload ([[mixtureAppendIndex]]
-    * generations): duplicate keys, with copy count and DISTINCT-payload
-    * count. The failure it catches is SILENT: a replayed ingest batch
-    * doubles its documents' mass contributions, which moves EVERY
-    * source's rate — admission decisions corrupt corpus-wide with no
-    * error anywhere. Taxonomy matches the other audit/repair pairs:
-    * `n_payloads = 1` is replay damage ([[mixtureCompactIndex]]
-    * repairs it); `n_payloads > 1` is divergence (the same key
-    * re-ingested with different text or source) that needs re-ingest,
-    * not compaction.
-    */
-  def mixtureAuditIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, stratumCol: String = "source",
-      keyCol: String = "doc_id"): DataFrame =
-    spark.read.parquet(IndexPaths.resolve(spark, path))
-      .groupBy(col(keyCol))
-      .agg(count(lit(1)).as("n_copies"),
-        count_distinct(struct(col(stratumCol), col("n_toks")))
-          .as("n_payloads"))
-      .filter(col("n_copies") > 1)
-
-  /** Compacting repair for replay damage: whole-row dedup of the
-    * payload, staged to `dstPath` (stage-and-swap — the
-    * `semanticCompactIndex` idiom). REFUSES payload-divergent keys
-    * loudly: deduping them would silently pick an arbitrary token
-    * count per document and rates would still be wrong.
-    */
-  def mixtureCompactIndex(spark: org.apache.spark.sql.SparkSession,
-      srcPath0: String, dstPath: String, stratumCol: String = "source",
-      keyCol: String = "doc_id"): Unit = {
-    val srcPath = IndexPaths.resolve(spark, srcPath0)
-    val rows = spark.read.parquet(srcPath)
-      .select(col(stratumCol), col(keyCol), col("n_toks"))
-      .dropDuplicates()
-      .localCheckpoint()
-    // divergence probe ∥ rewrite — both consume the one checkpointed
-    // frame (guide §2.6); refusal still throws, dst stays staged
-    Parallelism.inParallel(
-      () => {
-        val divergent = rows.groupBy(col(keyCol))
-          .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1).collect()
-        require(divergent.isEmpty, {
-          val d = divergent.head
-          s"mixtureCompactIndex: key ${d.get(0)} has payload-divergent " +
-            "copies (same key, different source/n_toks) — not " +
-            "append-replay damage; re-ingest the corpus instead"
-        })
-      },
-      () => rows.write.mode("overwrite").parquet(dstPath))
-  }
-
-  /** ONLINE repair: [[mixtureCompactIndex]] into the next generation
-    * under the same root + the atomic [[IndexPaths.compactSwap]]
-    * pointer cutover. Returns the new generation dir.
-    */
-  def mixtureCompactSwap(spark: org.apache.spark.sql.SparkSession,
-      root: String, stratumCol: String = "source",
-      keyCol: String = "doc_id"): String =
-    IndexPaths.compactSwap(spark, root)(
-      mixtureCompactIndex(spark, _, _, stratumCol, keyCol))
 
   /** Day-2 of [[temperatureMixture]]: a snapshot lands, the per-source
     * token masses move, and — the budget being FIXED — every source's

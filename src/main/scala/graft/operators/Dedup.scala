@@ -74,6 +74,31 @@ object Dedup {
     if (dedupPairs) paired.distinct() else paired
   }
 
+  /** `probe` rows flagged `__delta` iff their doc_id is in the
+    * materialized delta id set (broadcast) — the incremental probes
+    * drop (base, base) pairs AT EMISSION with it: such a pair is
+    * discarded by the endpoint filter whatever its multiplicity.
+    */
+  private[operators] def flagDelta(probe: DataFrame,
+      deltaIds: DataFrame): DataFrame =
+    probe
+      .join(broadcast(deltaIds.withColumn("__delta", lit(true))),
+        Seq("doc_id"), "left")
+      .withColumn("__delta", coalesce(col("__delta"), lit(false)))
+
+  /** `pairs` with at least one endpoint (doc_a or doc_b) in `deltaIds`:
+    * two broadcast hash joins (an OR-semi-join would plan a nested
+    * loop).
+    */
+  private[operators] def withDeltaEndpoint(pairs: DataFrame,
+      deltaIds: DataFrame): DataFrame =
+    pairs
+      .join(broadcast(deltaIds.select(col("doc_id").as("doc_a"))
+        .withColumn("fa", lit(1))), Seq("doc_a"), "left")
+      .join(broadcast(deltaIds.select(col("doc_id").as("doc_b"))
+        .withColumn("fb", lit(1))), Seq("doc_b"), "left")
+      .filter(col("fa").isNotNull || col("fb").isNotNull)
+
   // ------------------------------------------------------------------
   // Exact dedup
   // ------------------------------------------------------------------
@@ -98,53 +123,25 @@ object Dedup {
     */
   def exactWriteIndex(df: DataFrame, path: String,
       idCol: String, textCol: String): Unit =
-    writeFpGeneration(df, path, idCol, textCol, "overwrite")
+    IndexLayout.Exact.write(df, path, None, fingerprintRows(df, idCol, textCol))
 
   /** Appends a NEW-DOCUMENT snapshot's fingerprints — delta-sized,
     * zero base reads; the usual new-ids / exactly-once append
-    * contract (a replayed append inflates cluster_size counts).
+    * contract (a replayed append inflates cluster_size counts, which
+    * `IndexLayout.Exact.audit` localizes).
     */
   def exactAppendIndex(df: DataFrame, path: String,
       idCol: String, textCol: String): Unit =
-    writeFpGeneration(df, path, idCol, textCol, "append")
+    IndexLayout.Exact.append(path, fingerprintRows(df, idCol, textCol))
 
-  private def writeFpGeneration(df: DataFrame, path: String,
-      idCol: String, textCol: String, mode: String): Unit = {
-    // scale-adaptive shard count (guide §6): fresh builds size the
-    // alphabet from the input, appends follow the layout's persisted
-    // choice (IndexShards)
-    val nSh =
-      if (mode == "append")
-        IndexShards.forAppend(df.sparkSession, s"$path/fingerprints")
-      else IndexShards.pick(df)
+  private def fingerprintRows(df: DataFrame, idCol: String,
+      textCol: String): DataFrame =
     // fan out before the per-doc normalize+md5 (guide §2.5): a small-
     // file corpus otherwise hashes serially in the scan stage
     Parallelism.fanOut(
         df.select(col(idCol).cast("long").as("doc_id"),
           col(textCol).cast("string").as("__t")), "doc_id")
       .select(col("doc_id"), md5(normalize(col("__t"))).as("fingerprint"))
-      .withColumn("shard", IndexShards.hexShard(col("fingerprint"), nSh))
-      .repartition(col("shard"))
-      .write.mode(mode).partitionBy("shard").parquet(s"$path/fingerprints")
-    if (mode != "append")
-      IndexShards.publish(df.sparkSession, s"$path/fingerprints", nSh)
-  }
-
-  /** Replay audit of an [[exactWriteIndex]] layout — one grouped scan
-    * of `fingerprints/` emitting ids present more than once:
-    * `n_payloads` = 1 means a replayed append (bit-identical copies);
-    * > 1 means the id was re-appended with DIFFERENT text (payload
-    * divergence — a rebuild signal). The same damage taxonomy as
-    * `bm25AuditIndex`/`ivfPqAuditIndex`; repair here is trivial
-    * (rewrite `dropDuplicates()`), so no compact twin ships.
-    */
-  def exactAuditIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.parquet(s"$path/fingerprints")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_copies"),
-        count_distinct(col("fingerprint")).as("n_payloads"))
-      .filter(col("n_copies") > 1)
 
   /** Incremental [[exactClusters]] of a new snapshot against an
     * [[exactWriteIndex]] layout that already contains it: every
@@ -164,19 +161,7 @@ object Dedup {
       idCol: String, textCol: String): DataFrame = {
     val deltaFp = deltaDocs
       .select(md5(normalize(col(textCol))).as("fingerprint")).distinct()
-    // prune with the layout's persisted shard derivation; a layout
-    // without one (pre-IndexShards, or a crashed build) scans unpruned
-    // — pruning is never a correctness dependency
-    val scan = IndexShards.read(spark, s"$path/fingerprints") match {
-      case Some(nSh) =>
-        val shards = deltaFp
-          .select(IndexShards.hexShard(col("fingerprint"), nSh).as("shard"))
-          .distinct().collect().map(_.getString(0))
-        spark.read.parquet(s"$path/fingerprints")
-          .filter(col("shard").isin(shards.toSeq: _*))
-      case None => spark.read.parquet(s"$path/fingerprints")
-    }
-    scan
+    IndexLayout.Exact.prunedScan(spark, path, deltaFp)
       .join(broadcast(deltaFp), Seq("fingerprint"), "leftsemi")
       .groupBy(col("fingerprint"))
       .agg(min(col("doc_id")).as("kept_id"), count(lit(1)).as("cluster_size"))
@@ -370,8 +355,9 @@ object Dedup {
   def minhashWriteIndex(df: DataFrame, path: String,
       idCol: String, textCol: String,
       numHashes: Int = 16, bands: Int = 4, shingleN: Int = 3): Unit =
-    writeSigGeneration(df, path, idCol, textCol, numHashes, bands,
-      shingleN, "overwrite")
+    IndexLayout.MinhashBands.write(df, path, None,
+      minhashBandRows(df, idCol, textCol, numHashes, bands, shingleN),
+      IndexLayout.MinhashSigs -> sigRows(df, idCol, textCol, shingleN))
 
   /** Appends a NEW-DOCUMENT snapshot to a [[minhashWriteIndex]] layout:
     * delta-sized signature + set passes, zero base reads. Same
@@ -386,50 +372,24 @@ object Dedup {
   def minhashAppendIndex(df: DataFrame, path: String,
       idCol: String, textCol: String,
       numHashes: Int = 16, bands: Int = 4, shingleN: Int = 3): Unit =
-    writeSigGeneration(df, path, idCol, textCol, numHashes, bands,
-      shingleN, "append")
+    IndexLayout.MinhashBands.append(path,
+      minhashBandRows(df, idCol, textCol, numHashes, bands, shingleN),
+      IndexLayout.MinhashSigs -> sigRows(df, idCol, textCol, shingleN))
 
-  private def writeSigGeneration(df: DataFrame, path: String,
-      idCol: String, textCol: String, numHashes: Int, bands: Int,
-      shingleN: Int, mode: String): Unit = {
-    val sig = minhashSignatures(df, idCol, textCol, numHashes, shingleN)
-    // scale-adaptive shard count (guide §6, IndexShards): picked from
-    // the pre-shingle input, persisted for appends/probes
-    val nSh =
-      if (mode == "append")
-        IndexShards.forAppend(df.sparkSession, s"$path/bands")
-      else IndexShards.pick(df)
-    // bands/ and sigs/ are independent passes over the same input into
-    // disjoint directories — overlap them (guide §2.6): each pass
-    // re-shingles the corpus (deliberately NOT checkpointed: the hash
-    // sets are the widest rows this family owns and pinning the whole
-    // corpus' sets in storage memory is the 100 TB anti-pattern), so
-    // running them concurrently hides one pass behind the other
-    Parallelism.inParallel(
-      () => bandKeys(sig, numHashes, bands)
-        .withColumn("shard", IndexShards.hexShard(md5(col("bk")), nSh))
-        .repartition(col("shard"))
-        .write.mode(mode).partitionBy("shard").parquet(s"$path/bands"),
-      () => shingleSets(df, idCol, textCol, shingleN)
-        .select("doc_id", "hs", "n")
-        .write.mode(mode).parquet(s"$path/sigs"))
-    if (mode != "append")
-      IndexShards.publish(df.sparkSession, s"$path/bands", nSh)
-  }
+  // bands/ and sigs/ are independent passes over the same input into
+  // disjoint directories, written overlapped (guide §2.6): each pass
+  // re-shingles the corpus (deliberately NOT checkpointed: the hash
+  // sets are the widest rows this family owns and pinning the whole
+  // corpus' sets in storage memory is the 100 TB anti-pattern), so
+  // running them concurrently hides one pass behind the other
+  private def minhashBandRows(df: DataFrame, idCol: String,
+      textCol: String, numHashes: Int, bands: Int, shingleN: Int) =
+    bandKeys(minhashSignatures(df, idCol, textCol, numHashes, shingleN),
+      numHashes, bands)
 
-  /** Replay audit of a [[minhashWriteIndex]] layout: duplicate
-    * (doc_id, bk) band rows — the damage the [[minhashAppendIndex]]
-    * contract warns about (replay inflates bucket_n toward the cap,
-    * silently DROPPING pairs a clean layout finds). One narrow
-    * grouped scan of `bands/`; `sigs/` replay shows up as the same
-    * ids here, so one audit covers the layout.
-    */
-  def minhashAuditIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.parquet(s"$path/bands")
-      .groupBy(col("doc_id"), col("bk"))
-      .agg(count(lit(1)).as("n_copies"))
-      .filter(col("n_copies") > 1)
+  private def sigRows(df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int) =
+    shingleSets(df, idCol, textCol, shingleN).select("doc_id", "hs", "n")
 
   /** Incremental near-dup dedup of a NEW snapshot against a
     * [[minhashWriteIndex]] layout that already contains it (write base,
@@ -476,41 +436,24 @@ object Dedup {
       .select(col("doc_id"), col("bk")).distinct().localCheckpoint()
     // one aggregation job: shard list (in the layout's persisted
     // derivation — IndexShards) + a conservative broadcast bound
-    val nShOpt = IndexShards.read(spark, s"$path/bands")
-    val info = qbands.agg(
-      collect_set(IndexShards.hexShard(md5(col("bk")),
-        nShOpt.getOrElse(IndexShards.Wide))).as("shards"),
-      count(lit(1)).as("n")).head()
-    val shards = info.getSeq[String](0)
-    val nRows = info.getLong(1)
+    val (bandsScan, nRows) =
+      IndexLayout.MinhashBands.prunedScanCounted(spark, path, qbands)
     val qbk = qbands.select(col("bk")).distinct().localCheckpoint()
     val deltaIds = qbands.select(col("doc_id")).distinct().localCheckpoint()
-    val bandsScan = spark.read.parquet(s"$path/bands")
-    val probe = nShOpt.fold(bandsScan)(_ =>
-        bandsScan.filter(col("shard").isin(shards.toSeq: _*)))
+    val probe = bandsScan
       .join(Parallelism.boundedBroadcast(qbk, nRows), Seq("bk"), "leftsemi")
       .select(col("doc_id"), col("bk"))
     // EARLY endpoint filter — same as [[winnowPairsIndexed]]: a
     // (base, base) bucket pair is discarded by the endpoint filter no
     // matter what, so filter at emission instead of after the distinct
-    val flagged = probe
-      .join(broadcast(deltaIds.withColumn("__delta", lit(true))),
-        Seq("doc_id"), "left")
-      .withColumn("__delta", coalesce(col("__delta"), lit(false)))
+    val flagged = flagDelta(probe, deltaIds)
     val cands = emitSortedPairs(flagged, keys = Seq("bk"),
       item = struct(col("doc_id"), col("__delta")), capCol = "bucket_n",
       maxGroupSize = maxBucketSize, aName = "a", bName = "b",
       dedupPairs = true)
       .filter(col("a.__delta") || col("b.__delta"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val fa = deltaIds.select(col("doc_id").as("doc_a"))
-      .withColumn("fa", lit(1))
-    val fb = deltaIds.select(col("doc_id").as("doc_b"))
-      .withColumn("fb", lit(1))
-    val dcands = cands
-      .join(broadcast(fa), Seq("doc_a"), "left")
-      .join(broadcast(fb), Seq("doc_b"), "left")
-      .filter(col("fa").isNotNull || col("fb").isNotNull)
+    val dcands = withDeltaEndpoint(cands, deltaIds)
       .select(col("doc_a"), col("doc_b"))
     // prune the verify-set fetch to PROBED-BUCKET MEMBERS before the
     // join: sigs/ rows carry the full shingle-hash arrays (the widest
@@ -522,7 +465,7 @@ object Dedup {
     // candidate pipeline itself stays lazy, so the served plan keeps
     // its pruned bands scan.
     val memberIds = probe.select(col("doc_id")).distinct().localCheckpoint()
-    val sigs = spark.read.parquet(s"$path/sigs")
+    val sigs = spark.read.parquet(IndexLayout.MinhashSigs.live(spark, path))
       .join(Parallelism.boundedBroadcast(memberIds), Seq("doc_id"), "leftsemi")
     verifyJaccard(dcands, sigs, threshold)
   }
@@ -675,18 +618,15 @@ object Dedup {
       .withColumn("bval",
         expr(s"shiftright(simhash, bidx * $SimhashBandBits) & $SimhashBandMask"))
 
-  /** The written-index partition key: 4 bands × the band value's top 6
-    * bits = ≤256 directories — the repo-standard shard fan-out (BM25's
-    * md5 shards). The first cut used the top 8 bits (1,024 dirs) and
-    * the two write rounds' small-file overhead dominated the q168
-    * lifecycle (measured ~12 s → ~7 s at sf0.1 after the cut); probe
-    * pruning keeps the same shape, one level coarser.
+  /** The band layout's shard id (`IndexLayout.Simhash`'s derivation):
+    * `bidx × (n/4) + top-bits(bval)` — `n` is the layout's total shard
+    * count over its 4 bands (IndexShards: 256 = band × top-6-bits, the
+    * repo-standard fan-out; 16 = band × top-2). A first cut used the
+    * top 8 bits (1,024 dirs) and its small-file overhead dominated the
+    * q168 lifecycle (~12 s → ~7 s at sf0.1 after the cut).
     */
-  /** Band-layout shard id: `bidx × (n/4) + top-bits(bval)` — `n` is
-    * the layout's total shard count over its 4 bands (IndexShards:
-    * 256 = the historical band×top-6-bits geometry, 16 = band×top-2).
-    */
-  private def simhashShard(bidx: Column, bval: Column, n: Int): Column = {
+  private[operators] def simhashShard(bidx: Column, bval: Column,
+      n: Int): Column = {
     val perBand = n / 4
     val bits = 31 - Integer.numberOfLeadingZeros(perBand)
     (bidx * lit(perBand) + shiftright(bval, SimhashBandBits - bits))
@@ -751,20 +691,21 @@ object Dedup {
       .select(col("blk"), col("doc_a"), col("doc_b"), col("hamming"))
 
   /** Materializes the SimHash band index as a WRITTEN, shard-pruned
-    * layout — the fourth and last member of the incremental-dedup
-    * family (exact q160, MinHash q159, containment q161): `bands/` =
+    * layout (q168): `bands/` =
     * (doc_id, blk, simhash, bidx, bval) PARTITIONED BY `pshard` =
-    * (band, top-8-bits-of-value) — ≤1,024 directories. Both columns
+    * (band, top bits of value) — [[simhashShard]]. Both columns
     * are per-document facts, so the layout is append-stable; the
     * fingerprint rides inline, so the PROBE never touches text (the
     * verify is `bit_count` on stored longs — unlike MinHash, SimHash
     * needs no signature re-read).
     */
   def simhashWriteIndex(df: DataFrame, path: String,
-      idCol: String, textCol: String, blockCol: String): Unit = {
-    IndexPaths.clearPointer(df.sparkSession, path)
-    writeSimhashGeneration(df, path, idCol, textCol, blockCol, "overwrite")
-  }
+      idCol: String, textCol: String, blockCol: String): Unit =
+    // the input may be an object barrier (the frame-text members), whose
+    // size estimate is its child's — pre-explode bytes, conservative
+    // toward Wide
+    IndexLayout.Simhash.write(df, path, None,
+      simhashBandRows(simhash60Blocked(df, idCol, textCol, blockCol)))
 
   /** Appends a NEW-DOCUMENT snapshot's band rows — delta-sized, zero
     * base reads; the usual new-ids / exactly-once append contract (a
@@ -773,25 +714,8 @@ object Dedup {
     */
   def simhashAppendIndex(df: DataFrame, path: String,
       idCol: String, textCol: String, blockCol: String): Unit =
-    writeSimhashGeneration(df, IndexPaths.resolve(df.sparkSession, path),
-      idCol, textCol, blockCol, "append")
-
-  private def writeSimhashGeneration(df: DataFrame, path: String,
-      idCol: String, textCol: String, blockCol: String, mode: String): Unit = {
-    // scale-adaptive shard count (guide §6, IndexShards); the input may
-    // be an object barrier (the frame-text members), whose estimate is
-    // its child's — pre-explode bytes, conservative toward Wide
-    val nSh =
-      if (mode == "append")
-        IndexShards.forAppend(df.sparkSession, s"$path/bands")
-      else IndexShards.pick(df)
-    simhashBandRows(simhash60Blocked(df, idCol, textCol, blockCol))
-      .withColumn("pshard", simhashShard(col("bidx"), col("bval"), nSh))
-      .repartition(col("pshard"))
-      .write.mode(mode).partitionBy("pshard").parquet(s"$path/bands")
-    if (mode != "append")
-      IndexShards.publish(df.sparkSession, s"$path/bands", nSh)
-  }
+    IndexLayout.Simhash.append(path,
+      simhashBandRows(simhash60Blocked(df, idCol, textCol, blockCol)))
 
   /** Incremental SimHash near-dup: every pair within the hamming ball
     * that has at least one endpoint in `deltaDocs`, served from a
@@ -814,16 +738,7 @@ object Dedup {
     val qb = simhashBandRows(
       simhash60Blocked(deltaDocs, idCol, textCol, blockCol)
         .localCheckpoint())
-    val bandsDir = s"${IndexPaths.resolve(spark, path)}/bands"
-    val bandsScan = spark.read.parquet(bandsDir)
-    // prune with the layout's persisted shard derivation (IndexShards);
-    // no persisted count → scan unpruned (pruning is never correctness)
-    val probed = IndexShards.read(spark, bandsDir).fold(bandsScan) { nSh =>
-      val shards = qb
-        .select(simhashShard(col("bidx"), col("bval"), nSh).as("pshard"))
-        .distinct().collect().map(_.getInt(0))
-      bandsScan.filter(col("pshard").isin(shards.toSeq: _*))
-    }
+    val probed = IndexLayout.Simhash.prunedScan(spark, path, qb)
       .join(broadcast(
           qb.select(col("blk"), col("bidx"), col("bval")).distinct()),
         Seq("blk", "bidx", "bval"))
@@ -842,72 +757,6 @@ object Dedup {
           .otherwise(col("simhash")).as("fb"))
     pairTail(cands, maxHamming)
   }
-
-  /** Replay audit of a [[simhashWriteIndex]] band layout — the family
-    * taxonomy on band rows: (doc_id, bidx) coordinates present more
-    * than once; `n_payloads` = 1 means a replayed append (bit-identical
-    * band rows — harmless to PAIRS, whose candidate tail distincts,
-    * but it inflates raw bucket counts toward `maxBucketSize`, so a
-    * doubled viral bucket can spuriously cross the cap and DROP true
-    * pairs), > 1 means the same document was re-appended with
-    * DIFFERENT content (payload divergence — a rebuild signal). One
-    * narrow grouped scan of the compact band rows; never touches text.
-    */
-  def simhashAuditIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.parquet(s"${IndexPaths.resolve(spark, path)}/bands")
-      .groupBy(col("doc_id"), col("bidx"))
-      .agg(count(lit(1)).as("n_copies"),
-        count_distinct(col("simhash")).as("n_payloads"))
-      .filter(col("n_copies") > 1)
-
-  /** Compacting repair of [[simhashAuditIndex]]-localized replay
-    * damage — the band-index member of the repair family: replayed
-    * appends land bit-identical (doc_id, blk, bidx, bval, simhash)
-    * rows, removed exactly by a whole-row dedup rewrite; if
-    * coordinates still collide after (payload divergence), compaction
-    * REFUSES — silently picking a fingerprint would move
-    * [[simhashNearDupIndexed]] pair/cap verdicts. Touches only the
-    * ~40-byte band rows — no document text is ever re-read. Stage-
-    * then-swap to a NEW path, the family's idiom.
-    */
-  def simhashCompactIndex(spark: org.apache.spark.sql.SparkSession,
-      srcPath0: String, dstPath: String): Unit = {
-    val srcPath = IndexPaths.resolve(spark, srcPath0)
-    val rows = spark.read.parquet(s"$srcPath/bands")
-      .select(col("doc_id"), col("blk"), col("bidx"), col("bval"),
-        col("simhash"), col("pshard"))
-      .dropDuplicates()
-      .localCheckpoint()
-    // divergence probe ∥ rewrite — both consume the one checkpointed
-    // frame (guide §2.6); refusal still throws, dst stays staged
-    Parallelism.inParallel(
-      () => {
-        val divergent = rows.groupBy(col("doc_id"), col("bidx"))
-          .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1).collect()
-        require(divergent.isEmpty, {
-          val d = divergent.head
-          s"simhashCompactIndex: doc ${d.get(0)} band ${d.get(1)} has " +
-            "payload-divergent copies (same coordinate, different " +
-            "fingerprint) — not append-replay damage; re-append the " +
-            "document's true band rows and rebuild instead"
-        })
-      },
-      () => rows.repartition(col("pshard"))
-        .write.mode("overwrite").partitionBy("pshard")
-        .parquet(s"$dstPath/bands"))
-    // the rewrite carries src's shard values verbatim — carry its
-    // persisted shard count too (IndexShards)
-    IndexShards.mirror(spark, s"$srcPath/bands", s"$dstPath/bands")
-  }
-
-  /** ONLINE repair: [[simhashCompactIndex]] into the next generation
-    * under the same root + the atomic [[IndexPaths.compactSwap]]
-    * pointer cutover. Returns the new generation dir.
-    */
-  def simhashCompactSwap(spark: org.apache.spark.sql.SparkSession,
-      root: String): String =
-    IndexPaths.compactSwap(spark, root)(simhashCompactIndex(spark, _, _))
 
   // ------------------------------------------------------------------
   // Blocked n-gram Jaccard (no LSH; exact within blocks)
@@ -1015,9 +864,8 @@ object Dedup {
   // ------------------------------------------------------------------
 
   /** Materializes the blocked n-gram inverted index as a WRITTEN
-    * layout — the third leg of the incremental-dedup family (exact =
-    * [[exactWriteIndex]], MinHash = [[minhashWriteIndex]]): one
-    * posting row per (blk, doc, shingle-hash), PARTITIONED BY
+    * layout (q161): one posting row per (blk, doc, shingle-hash),
+    * PARTITIONED BY
     * `shard = h mod 256` (the shingle hash is already uniform — it is
     * its own shard key), with the document's distinct-shingle count
     * `n` denormalized inline (a per-document fact, append-stable —
@@ -1028,8 +876,8 @@ object Dedup {
   def ngramWriteIndex(df: DataFrame, path: String,
       idCol: String, textCol: String, blockCol: String,
       shingleN: Int = 3): Unit =
-    writeNgramGeneration(df, path, idCol, textCol, blockCol, shingleN,
-      "overwrite")
+    IndexLayout.Ngram.write(df, path, None,
+      ngramPostingRows(df, idCol, textCol, blockCol, shingleN))
 
   /** Appends a NEW-DOCUMENT snapshot's postings — delta-sized, zero
     * base reads; the standard new-ids / exactly-once append contract
@@ -1039,40 +887,15 @@ object Dedup {
   def ngramAppendIndex(df: DataFrame, path: String,
       idCol: String, textCol: String, blockCol: String,
       shingleN: Int = 3): Unit =
-    writeNgramGeneration(df, path, idCol, textCol, blockCol, shingleN,
-      "append")
+    IndexLayout.Ngram.append(path,
+      ngramPostingRows(df, idCol, textCol, blockCol, shingleN))
 
-  private def writeNgramGeneration(df: DataFrame, path: String,
-      idCol: String, textCol: String, blockCol: String, shingleN: Int,
-      mode: String): Unit = {
-    // scale-adaptive shard count (guide §6, IndexShards)
-    val nSh =
-      if (mode == "append")
-        IndexShards.forAppend(df.sparkSession, s"$path/postings")
-      else IndexShards.pick(df)
+  private def ngramPostingRows(df: DataFrame, idCol: String,
+      textCol: String, blockCol: String, shingleN: Int): DataFrame =
     shingleSets(df, idCol, textCol, shingleN, Some(blockCol))
       .filter(col("blk").isNotNull)
       .select(col("blk"), col("doc_id"), col("n"),
         explode(col("hs")).as("h"))
-      .withColumn("shard", IndexShards.modShard(col("h"), nSh))
-      .repartition(col("shard"))
-      .write.mode(mode).partitionBy("shard").parquet(s"$path/postings")
-    if (mode != "append")
-      IndexShards.publish(df.sparkSession, s"$path/postings", nSh)
-  }
-
-  /** Replay audit of an [[ngramWriteIndex]] layout: duplicate
-    * (blk, doc_id, h) posting rows — a replayed append would DOUBLE
-    * pair multiplicities (intersection counts), turning every
-    * affected containment/jaccard value wrong rather than merely
-    * dropped. One narrow grouped scan of `postings/`.
-    */
-  def ngramAuditIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.parquet(s"$path/postings")
-      .groupBy(col("blk"), col("doc_id"), col("h"))
-      .agg(count(lit(1)).as("n_copies"))
-      .filter(col("n_copies") > 1)
 
   /** Shared incremental core: intersections of every pair with at
     * least one snapshot endpoint, from a [[ngramWriteIndex]] layout
@@ -1103,18 +926,11 @@ object Dedup {
       .distinct().localCheckpoint()
     // one aggregation job: shard list (the layout's persisted
     // derivation — IndexShards) + a conservative broadcast bound
-    val nShOpt = IndexShards.read(spark, s"$path/postings")
-    val info = qsets.agg(
-      collect_set(IndexShards.modShard(col("h"),
-        nShOpt.getOrElse(IndexShards.Wide))).as("shards"),
-      count(lit(1)).as("n")).head()
-    val shards = info.getSeq[Int](0)
-    val nRows = info.getLong(1)
+    val (postingsScan, nRows) =
+      IndexLayout.Ngram.prunedScanCounted(spark, path, qsets)
     val qhs = qsets.select(col("h")).distinct().localCheckpoint()
     val deltaIds = qsets.select(col("doc_id")).distinct().localCheckpoint()
-    val postingsScan = spark.read.parquet(s"$path/postings")
-    val probe = nShOpt.fold(postingsScan)(_ =>
-        postingsScan.filter(col("shard").isin(shards.toSeq: _*)))
+    val probe = postingsScan
       // the PRUNED-REGIME semi (r21 — the q219 argument on the ngram
       // member, h-only because the caller carries no block column:
       // every shared shingle of a snapshot-endpoint pair is one the
@@ -1125,10 +941,7 @@ object Dedup {
       .join(Parallelism.boundedBroadcast(qhs, nRows), Seq("h"), "leftsemi")
     // EARLY endpoint filter — same as [[winnowPairsIndexed]]: don't
     // emit or aggregate (base, base) pairs the final filter discards
-    val flagged = probe
-      .join(broadcast(deltaIds.withColumn("__delta", lit(true))),
-        Seq("doc_id"), "left")
-      .withColumn("__delta", coalesce(col("__delta"), lit(false)))
+    val flagged = flagDelta(probe, deltaIds)
     val pairs = emitSortedPairs(flagged, keys = Seq("blk", "h"),
       item = struct(col("doc_id"), col("n"), col("__delta")),
       capCol = "posting_n",
@@ -1138,14 +951,7 @@ object Dedup {
       .groupBy(col("blk"), col("a.doc_id").as("doc_a"),
         col("b.doc_id").as("doc_b"), col("a.n").as("na"), col("b.n").as("nb"))
       .agg(count(lit(1)).as("i"))
-    val fa = deltaIds.select(col("doc_id").as("doc_a"))
-      .withColumn("fa", lit(1))
-    val fb = deltaIds.select(col("doc_id").as("doc_b"))
-      .withColumn("fb", lit(1))
-    pairs
-      .join(broadcast(fa), Seq("doc_a"), "left")
-      .join(broadcast(fb), Seq("doc_b"), "left")
-      .filter(col("fa").isNotNull || col("fb").isNotNull)
+    withDeltaEndpoint(pairs, deltaIds)
       .select(col("blk"), col("doc_a"), col("doc_b"),
         col("na"), col("nb"), col("i"))
   }
@@ -1169,22 +975,6 @@ object Dedup {
       .filter(greatest(col("cont_ab"), col("cont_ba")) >= threshold)
       .select(col("blk"), col("doc_a"), col("doc_b"),
         col("cont_ab"), col("cont_ba"))
-  }
-
-  /** Incremental [[ngramJaccardPairs]] off the same indexed core. */
-  def ngramJaccardPairsIndexed(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      deltaDocs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, threshold: Double = 0.5,
-      maxPostingSize: Int = 10000): DataFrame = {
-    require(threshold > 0,
-      "inverted-index jaccard only surfaces pairs sharing >=1 shingle")
-    ngramIntersectionsIndexed(spark, path, deltaDocs, idCol, textCol,
-        shingleN, maxPostingSize)
-      .withColumn("jaccard",
-        round(col("i").cast("double") / (col("na") + col("nb") - col("i")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select(col("blk"), col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
   // ------------------------------------------------------------------
@@ -1321,18 +1111,17 @@ object Dedup {
           " ").as("text_deduped"))
 
   /** Materializes the block-fingerprint index as a WRITTEN,
-    * shard-pruned layout — the SUB-DOCUMENT member of the
-    * incremental-dedup family (whole-document: exact q160, MinHash
-    * q159, containment q161, SimHash q168): `blocks/` = (doc_id,
-    * block_idx, fingerprint) PARTITIONED BY the fingerprint's first
-    * 2 hex chars. The block TEXT stays OUT of the index — keep-first
-    * only needs the winner's coordinates, so the layout is
-    * md5-per-block sized whatever the corpus, and both columns are
-    * per-document facts (append-stable).
+    * shard-pruned layout — the SUB-DOCUMENT dedup member (q172):
+    * `blocks/` = (doc_id, block_idx, fingerprint) PARTITIONED BY the
+    * fingerprint's first 2 hex chars. The block TEXT stays OUT of the
+    * index — keep-first only needs the winner's coordinates, so the
+    * layout is md5-per-block sized whatever the corpus, and both
+    * columns are per-document facts (append-stable).
     */
   def blockWriteIndex(df: DataFrame, path: String, idCol: String,
       textCol: String, blockTokens: Int): Unit =
-    writeBlockGeneration(df, path, idCol, textCol, blockTokens, "overwrite")
+    IndexLayout.Block.write(df, path, None,
+      blockFingerprintRows(df, idCol, textCol, blockTokens))
 
   /** Appends a NEW-DOCUMENT snapshot's block fingerprints —
     * delta-sized, zero base reads; the usual new-ids / exactly-once
@@ -1340,25 +1129,14 @@ object Dedup {
     */
   def blockAppendIndex(df: DataFrame, path: String, idCol: String,
       textCol: String, blockTokens: Int): Unit =
-    writeBlockGeneration(df, path, idCol, textCol, blockTokens, "append")
+    IndexLayout.Block.append(path,
+      blockFingerprintRows(df, idCol, textCol, blockTokens))
 
-  private def writeBlockGeneration(df: DataFrame, path: String,
-      idCol: String, textCol: String, blockTokens: Int,
-      mode: String): Unit = {
-    // scale-adaptive shard count (guide §6, IndexShards)
-    val nSh =
-      if (mode == "append")
-        IndexShards.forAppend(df.sparkSession, s"$path/blocks")
-      else IndexShards.pick(df)
+  private def blockFingerprintRows(df: DataFrame, idCol: String,
+      textCol: String, blockTokens: Int): DataFrame =
     docBlocks(df, idCol, textCol, blockTokens)
       .select(col("doc_id"), col("block_idx"),
         md5(col("block")).as("fingerprint"))
-      .withColumn("shard", IndexShards.hexShard(col("fingerprint"), nSh))
-      .repartition(col("shard"))
-      .write.mode(mode).partitionBy("shard").parquet(s"$path/blocks")
-    if (mode != "append")
-      IndexShards.publish(df.sparkSession, s"$path/blocks", nSh)
-  }
 
   /** Incremental block-level exact dedup: [[blockDedup]]'s outputs
     * for a new snapshot, computed against a [[blockWriteIndex]]
@@ -1384,15 +1162,7 @@ object Dedup {
     val blocks = docBlocks(deltaDocs, idCol, textCol, blockTokens)
       .withColumn("fingerprint", md5(col("block")))
       .localCheckpoint()
-    val blocksScan = spark.read.parquet(s"$path/blocks")
-    // prune with the layout's persisted shard derivation (IndexShards)
-    val mins = IndexShards.read(spark, s"$path/blocks").fold(blocksScan) {
-      nSh =>
-        val shards = blocks
-          .select(IndexShards.hexShard(col("fingerprint"), nSh).as("shard"))
-          .distinct().collect().map(_.getString(0))
-        blocksScan.filter(col("shard").isin(shards.toSeq: _*))
-    }
+    val mins = IndexLayout.Block.prunedScan(spark, path, blocks)
       .join(broadcast(blocks.select(col("fingerprint")).distinct()),
         Seq("fingerprint"), "leftsemi")
       .groupBy(col("fingerprint"))
@@ -1503,51 +1273,29 @@ object Dedup {
     */
   def winnowWriteIndex(df: DataFrame, path: String, idCol: String,
       textCol: String, blockCol: String, k: Int = 7, w: Int = 4): Unit =
-    writeWinnowGeneration(df, path, idCol, textCol, blockCol, k, w,
-      "overwrite")
+    IndexLayout.Winnow.write(df, path, None,
+      winnowPostingRows(df, idCol, textCol, blockCol, k, w))
 
   /** Appends a NEW-DOCUMENT snapshot's postings — delta-sized, zero
     * base reads; the standard new-ids / exactly-once append contract
     * (a replayed append doubles pair multiplicities = intersection
-    * counts; [[winnowAuditIndex]] localizes that damage).
+    * counts; `IndexLayout.Winnow.audit` localizes that damage).
     */
   def winnowAppendIndex(df: DataFrame, path: String, idCol: String,
       textCol: String, blockCol: String, k: Int = 7, w: Int = 4): Unit =
-    writeWinnowGeneration(df, path, idCol, textCol, blockCol, k, w,
-      "append")
+    IndexLayout.Winnow.append(path,
+      winnowPostingRows(df, idCol, textCol, blockCol, k, w))
 
-  private def writeWinnowGeneration(df: DataFrame, path: String,
-      idCol: String, textCol: String, blockCol: String, k: Int, w: Int,
-      mode: String): Unit = {
-    // scale-adaptive shard count (guide §6, IndexShards)
-    val nSh =
-      if (mode == "append")
-        IndexShards.forAppend(df.sparkSession, s"$path/postings")
-      else IndexShards.pick(df)
+  // the layout h-clusters each shard's files (guide §6): the partitioned
+  // writer sorts by the partition column anyway, so (shard, h) costs
+  // ~nothing and makes h delta-encoding-friendly — smaller files,
+  // cheaper probes
+  private def winnowPostingRows(df: DataFrame, idCol: String,
+      textCol: String, blockCol: String, k: Int, w: Int): DataFrame =
     winnowSets(df, idCol, textCol, blockCol, k, w)
       .filter(col("blk").isNotNull)
       .select(col("blk"), col("doc_id"), col("n"),
         explode(col("hs")).as("h"))
-      .withColumn("shard", IndexShards.modShard(col("h"), nSh))
-      .repartition(col("shard"))
-      // h-clustered files (guide §6): the partitioned writer sorts by
-      // the partition column anyway, so (shard, h) costs ~nothing and
-      // makes h delta-encoding-friendly — smaller files, cheaper probes
-      .sortWithinPartitions(col("shard"), col("h"))
-      .write.mode(mode).partitionBy("shard").parquet(s"$path/postings")
-    if (mode != "append")
-      IndexShards.publish(df.sparkSession, s"$path/postings", nSh)
-  }
-
-  /** Replay audit of a [[winnowWriteIndex]] layout: duplicate
-    * (blk, doc_id, h) posting rows. One narrow grouped scan.
-    */
-  def winnowAuditIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.parquet(s"$path/postings")
-      .groupBy(col("blk"), col("doc_id"), col("h"))
-      .agg(count(lit(1)).as("n_copies"))
-      .filter(col("n_copies") > 1)
 
   /** Incremental [[winnowPairs]] of a new snapshot against
     * (base ∪ snapshot), from a written layout that already holds the
@@ -1579,18 +1327,11 @@ object Dedup {
     val qsets = winnowSets(deltaDocs, idCol, textCol, blockCol, k, w)
       .select(col("blk"), col("doc_id"), explode(col("hs")).as("h"))
       .distinct().localCheckpoint()
-    val nShOpt = IndexShards.read(spark, s"$path/postings")
-    val info = qsets.agg(
-      collect_set(IndexShards.modShard(col("h"),
-        nShOpt.getOrElse(IndexShards.Wide))).as("shards"),
-      count(lit(1)).as("n")).head()
-    val shards = info.getSeq[Int](0)
-    val nRows = info.getLong(1)
+    val (postingsScan, nRows) =
+      IndexLayout.Winnow.prunedScanCounted(spark, path, qsets)
     val qfps = qsets.select(col("blk"), col("h")).distinct().localCheckpoint()
     val deltaIds = qsets.select(col("doc_id")).distinct().localCheckpoint()
-    val postingsScan = spark.read.parquet(s"$path/postings")
-    val probe = nShOpt.fold(postingsScan)(_ =>
-        postingsScan.filter(col("shard").isin(shards.toSeq: _*)))
+    val probe = postingsScan
       // the PRUNED-REGIME join: keep only posting groups whose (blk, h)
       // is one of the delta's own fingerprints. EXACT by the same
       // argument as the shard pruning one level up — every shared
@@ -1622,10 +1363,7 @@ object Dedup {
     // membership, order (doc_id is unique per group, so the extra
     // struct field never reorders), and the cap count are all
     // unchanged; only already-doomed (base, base) rows skip the wire.
-    val flagged = probe
-      .join(broadcast(deltaIds.withColumn("__delta", lit(true))),
-        Seq("doc_id"), "left")
-      .withColumn("__delta", coalesce(col("__delta"), lit(false)))
+    val flagged = flagDelta(probe, deltaIds)
     val pairs = emitSortedPairs(flagged, keys = Seq("blk", "h"),
       item = struct(col("doc_id"), col("n"), col("__delta")),
       capCol = "posting_n",
@@ -1637,14 +1375,7 @@ object Dedup {
         col("b.n").as("nb"))
       .agg(count(lit(1)).as("i"))
       .filter(col("i") >= minShared)
-    val fa = deltaIds.select(col("doc_id").as("doc_a"))
-      .withColumn("fa", lit(1))
-    val fb = deltaIds.select(col("doc_id").as("doc_b"))
-      .withColumn("fb", lit(1))
-    pairs
-      .join(broadcast(fa), Seq("doc_a"), "left")
-      .join(broadcast(fb), Seq("doc_b"), "left")
-      .filter(col("fa").isNotNull || col("fb").isNotNull)
+    withDeltaEndpoint(pairs, deltaIds)
       .select(col("blk"), col("doc_a"), col("doc_b"),
         col("na"), col("nb"), col("i"))
   }

@@ -1,14 +1,15 @@
 package graft.operators
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 
 /** ATOMIC SERVE-PATH CUTOVER for the written-index families — the
-  * missing piece between a `*CompactIndex` repair (which writes a
-  * REPAIRED index to a fresh directory) and a STANDING reader: a
-  * pointer file `<root>/_current` names the live generation directory
-  * under `<root>/_gens/`, is swapped by one atomic rename, and every
-  * serve/audit/append entrypoint resolves it first.
+  * missing piece between a compacting repair (`IndexLayout.compact`,
+  * which writes a REPAIRED index to a fresh directory) and a STANDING
+  * reader: a pointer file `<root>/_current` names the live generation
+  * directory under `<root>/_gens/`, is swapped by one atomic rename,
+  * and every serve/audit/append entrypoint resolves it first.
   *
   * Layout ("`root`" is the index path callers have always passed):
   * {{{
@@ -83,18 +84,28 @@ object IndexPaths {
     require(fs.exists(genDir),
       s"IndexPaths.swap: generation directory $genDir does not exist — " +
         "write the compacted index there first")
-    val p = pointer(root)
-    val tmp = new Path(s"$root/._current.swap-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(gen.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = FileContext.getFileContext(fs.getUri,
-      spark.sparkContext.hadoopConfiguration)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(p),
-      Options.Rename.OVERWRITE)
+    atomicWrite(fs, spark.sparkContext.hadoopConfiguration, pointer(root),
+      gen)
   }
 
-  /** The compact-and-cutover composition every repair member exposes:
+  /** Atomically replaces the file at `p` with one holding `content` —
+    * write-to-sibling-temp + FileContext rename with OVERWRITE (atomic
+    * on HDFS and local fs), so a reader observes the old content or the
+    * new, never a torn read. The pointer swap and the ingest ledger's
+    * claim supersede both use it.
+    */
+  private[graft] def atomicWrite(fs: FileSystem, conf: Configuration,
+      p: Path, content: String): Unit = {
+    val tmp = new Path(p.getParent,
+      s".${p.getName}.replace-${java.util.UUID.randomUUID()}")
+    val out = fs.create(tmp, true)
+    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    FileContext.getFileContext(fs.getUri, conf).rename(
+      fs.makeQualified(tmp), fs.makeQualified(p), Options.Rename.OVERWRITE)
+  }
+
+  /** The compact-and-cutover composition ([[IndexLayout.compactSwap]]):
     * compacts the CURRENT live layout (pointer-resolved) into the next
     * generation directory and atomically swaps the pointer to it.
     * Returns the new generation's directory (callers rarely need it —
@@ -136,13 +147,9 @@ object IndexPaths {
     else {
       val listed = fs.listStatus(gens).toSeq.map(_.getPath)
         .filter(_.getName.startsWith("gen-"))
-      // re-read AFTER listing: a compactSwap landing mid-gc creates a
-      // generation the first read did not see — keep BOTH pointer
-      // values explicitly (a standing reader that resolved the
-      // pre-swap pointer moments before a mid-gc swap may still be
-      // reading that generation) plus anything newer than the newest
-      // of them (lexicographic = numeric for gen-%06d names); a
-      // pointerless root keeps nothing, as before
+      // re-read AFTER listing (the guard above): keep BOTH pointer
+      // values (a reader that resolved the pre-swap pointer may still
+      // read it) plus anything newer (gen-%06d sorts numerically)
       val after = currentGeneration(spark, root)
       val keep = before.toSet ++ after.toSet
       val newest = keep.toSeq.sorted.lastOption
@@ -181,8 +188,9 @@ object IndexPaths {
     * writes the flat day-1 layout at the root, so a pointer left by a
     * previous life would redirect readers to a generation that no
     * longer matches. Rebuild-in-place is NOT concurrent-reader-safe
-    * (the reader-safe path is [[compactSwap]]); every `*WriteIndex`
-    * calls this so a rebuilt index serves what was just written.
+    * (the reader-safe path is [[compactSwap]]); every fresh build
+    * ([[IndexLayout.write]]) calls this so a rebuilt index serves what
+    * was just written.
     */
   def clearPointer(spark: SparkSession, root: String): Unit = {
     val fs = fsOf(spark, root)
@@ -190,17 +198,13 @@ object IndexPaths {
     if (fs.exists(p)) fs.delete(p, false)
   }
 
-  private def readSmall(fs: FileSystem, p: Path): Option[String] =
+  /** The whole content of a small control file, if it exists. */
+  private[graft] def readSmall(fs: FileSystem, p: Path): Option[String] =
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val tmp = new Array[Byte](256)
-        var n = in.read(tmp)
-        while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-        Some(new String(buf.toByteArray,
-          java.nio.charset.StandardCharsets.UTF_8))
-      } finally in.close()
+      try Some(new String(in.readAllBytes(),
+        java.nio.charset.StandardCharsets.UTF_8))
+      finally in.close()
     }
 }

@@ -74,17 +74,9 @@ object IndexShards {
   /** The layout's persisted shard count, if any. */
   def read(spark: SparkSession, layoutDir: String): Option[Int] = {
     val p = new Path(s"$layoutDir/_shards")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new Array[Byte](64)
-        val n = in.read(buf)
-        new String(buf, 0, math.max(n, 0),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toIntOption
-      } finally in.close()
-    }
+    IndexPaths.readSmall(
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      .flatMap(_.trim.toIntOption)
   }
 
   /** Shard count for APPENDING into an existing layout: the persisted

@@ -219,7 +219,7 @@ object Multimodal {
     * directory and each micro-batch carries the newly-landed files
     * (`maxFilesPerTrigger` bounds the batch). Same projection, same
     * stray-file tolerance; feeds
-    * [[graft.streaming.IndexIngest.startAssets]].
+    * [[graft.streaming.IndexIngest.assetBatch]].
     */
   def streamBinaryDir(spark: org.apache.spark.sql.SparkSession,
       dir: String, maxFilesPerTrigger: Int): DataFrame = {
@@ -275,7 +275,7 @@ object Multimodal {
     * newly-landed PACKED files (`maxFilesPerTrigger` bounds the batch
     * in files, each holding many assets — the batch-size unit a
     * packed pipeline actually provisions for). Feeds the same
-    * [[graft.streaming.IndexIngest.startAssets]] ledger sink.
+    * [[graft.streaming.IndexIngest.assetBatch]] ledger sink.
     */
   def streamPackedDir(spark: org.apache.spark.sql.SparkSession,
       dir: String, maxFilesPerTrigger: Int): DataFrame = {
@@ -330,113 +330,32 @@ object Multimodal {
     * duplicates against everything ever indexed by probing
     * ~|snapshot shards|/256 of the layout (q194 gates the probe
     * against the fresh whole-corpus oracle restricted to
-    * snapshot-touched fingerprints).
+    * snapshot-touched fingerprints). Repair is `IndexLayout.Asset`'s
+    * compact: a media REBUILD must re-read and re-hash every payload
+    * byte, so compacting only the fingerprint rows (no payload reads)
+    * is the 100 TB repair.
     */
   def assetWriteIndex(assets: DataFrame, path: String,
       idCol: String = "asset_id", payloadCol: String = "payload",
-      shards: Option[Int] = None): Unit = {
-    IndexPaths.clearPointer(assets.sparkSession, path)
-    writeAssetFpGeneration(assets, path, idCol, payloadCol, "overwrite",
-      shards)
-  }
+      shards: Option[Int] = None): Unit =
+    // q206's amplification gate measures the historical WIDE geometry
+    // and pins it explicitly
+    IndexLayout.Asset.write(assets, path, shards,
+      assetRows(assets, idCol, payloadCol))
 
   /** Appends a NEW-ASSET snapshot's fingerprints — delta-sized, zero
     * base reads; the usual new-ids / exactly-once append contract (a
     * replayed append inflates cluster_size counts, which
-    * [[assetAuditIndex]] localizes).
+    * `IndexLayout.Asset`'s audit localizes).
     */
   def assetAppendIndex(assets: DataFrame, path: String,
       idCol: String = "asset_id", payloadCol: String = "payload"): Unit =
-    writeAssetFpGeneration(assets,
-      IndexPaths.resolve(assets.sparkSession, path), idCol, payloadCol,
-      "append")
+    IndexLayout.Asset.append(path, assetRows(assets, idCol, payloadCol))
 
-  private def writeAssetFpGeneration(assets: DataFrame, path: String,
-      idCol: String, payloadCol: String, mode: String,
-      shards: Option[Int] = None): Unit = {
-    // scale-adaptive shard count (guide §6, IndexShards); q206's
-    // amplification gate measures the historical WIDE geometry and
-    // pins it explicitly
-    val nSh =
-      if (mode == "append")
-        IndexShards.forAppend(assets.sparkSession, s"$path/fingerprints")
-      else shards.getOrElse(IndexShards.pick(assets))
+  private def assetRows(assets: DataFrame, idCol: String,
+      payloadCol: String): DataFrame =
     assets.select(col(idCol).cast("long").as("asset_id"),
-        md5(col(payloadCol)).as("fingerprint"))
-      .withColumn("shard", IndexShards.hexShard(col("fingerprint"), nSh))
-      .repartition(col("shard"))
-      .write.mode(mode).partitionBy("shard").parquet(s"$path/fingerprints")
-    if (mode != "append")
-      IndexShards.publish(assets.sparkSession, s"$path/fingerprints", nSh)
-  }
-
-  /** Replay audit of an [[assetWriteIndex]] layout — the
-    * [[Dedup.exactAuditIndex]] taxonomy on the asset side: ids present
-    * more than once; `n_payloads` = 1 means a replayed append
-    * (bit-identical copies), > 1 means the id was re-appended with
-    * DIFFERENT bytes (payload divergence — a rebuild signal).
-    */
-  def assetAuditIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.parquet(s"${IndexPaths.resolve(spark, path)}/fingerprints")
-      .groupBy(col("asset_id"))
-      .agg(count(lit(1)).as("n_copies"),
-        count_distinct(col("fingerprint")).as("n_payloads"))
-      .filter(col("n_copies") > 1)
-
-  /** Compacting repair of [[assetAuditIndex]]-localized replay damage
-    * — the asset member of the repair family (IVF-PQ
-    * `ivfPqCompactIndex`, BM25 `bm25CompactIndex` shape, semantic
-    * `semanticCompactIndex`, mixture `mixtureCompactIndex`): replayed
-    * appends land bit-identical (asset_id, fingerprint) rows, which a
-    * `dropDuplicates` rewrite removes exactly. The TEXT exact member
-    * deliberately ships no compact twin (a rebuild there is one cheap
-    * re-hash of the text column); for MEDIA the equation flips — a
-    * rebuild must re-read and re-hash every payload byte in the
-    * corpus, so a compaction that touches only the fingerprint rows
-    * (id + 32 hex chars per asset, no payload reads) is the 100 TB
-    * repair. REFUSES payload divergence (same id, different
-    * fingerprint — re-ingested bytes, a rebuild signal): silently
-    * picking a copy would move [[assetDedupIndexed]] verdicts.
-    * Stage-then-swap to a NEW path, the family's idiom.
-    */
-  def assetCompactIndex(spark: org.apache.spark.sql.SparkSession,
-      srcPath0: String, dstPath: String): Unit = {
-    val srcPath = IndexPaths.resolve(spark, srcPath0)
-    val rows = spark.read.parquet(s"$srcPath/fingerprints")
-      .select(col("asset_id"), col("fingerprint"), col("shard"))
-      .dropDuplicates()
-      .localCheckpoint()
-    // divergence probe and rewrite both consume the one checkpointed
-    // frame — overlap them (guide §2.6); a refusal still throws and the
-    // staged dst is never live until the caller's swap
-    Parallelism.inParallel(
-      () => {
-        val divergent = rows.groupBy(col("asset_id"))
-          .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1).collect()
-        require(divergent.isEmpty, {
-          val d = divergent.head
-          s"assetCompactIndex: asset ${d.get(0)} has payload-divergent " +
-            "copies (same id, different content bytes) — not " +
-            "append-replay damage; re-ingest the asset and rebuild instead"
-        })
-      },
-      () => rows.repartition(col("shard"))
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(s"$dstPath/fingerprints"))
-    // the rewrite carries src's shard values verbatim — carry its
-    // persisted shard count too (IndexShards)
-    IndexShards.mirror(spark, s"$srcPath/fingerprints",
-      s"$dstPath/fingerprints")
-  }
-
-  /** ONLINE repair: [[assetCompactIndex]] into the next generation
-    * under the same root + the atomic [[IndexPaths.compactSwap]]
-    * pointer cutover. Returns the new generation dir.
-    */
-  def assetCompactSwap(spark: org.apache.spark.sql.SparkSession,
-      root: String): String =
-    IndexPaths.compactSwap(spark, root)(assetCompactIndex(spark, _, _))
+      md5(col(payloadCol)).as("fingerprint"))
 
   /** Incremental exact-dup clustering of a new asset snapshot against
     * an [[assetWriteIndex]] layout that already contains it — the
@@ -452,18 +371,9 @@ object Multimodal {
       path: String, deltaAssets: DataFrame,
       idCol: String = "asset_id", payloadCol: String = "payload")
       : DataFrame = {
-    val root = IndexPaths.resolve(spark, path)
     val deltaFp = deltaAssets
       .select(md5(col(payloadCol)).as("fingerprint")).distinct()
-    val fpDir = s"$root/fingerprints"
-    val fpScan = spark.read.parquet(fpDir)
-    // prune with the layout's persisted shard derivation (IndexShards)
-    IndexShards.read(spark, fpDir).fold(fpScan) { nSh =>
-      val shards = deltaFp
-        .select(IndexShards.hexShard(col("fingerprint"), nSh).as("shard"))
-        .distinct().collect().map(_.getString(0))
-      fpScan.filter(col("shard").isin(shards.toSeq: _*))
-    }
+    IndexLayout.Asset.prunedScan(spark, path, deltaFp)
       .join(broadcast(deltaFp), Seq("fingerprint"), "leftsemi")
       .groupBy(col("fingerprint"))
       .agg(min(col("asset_id")).as("kept_id"),
@@ -544,99 +454,19 @@ object Multimodal {
     * the payload sizes.
     */
   def frameWriteIndex(assets: DataFrame, path: String, frameBytes: Int,
-      idCol: String = "asset_id"): Unit = {
-    IndexPaths.clearPointer(assets.sparkSession, path)
-    writeFrameGeneration(assets, path, frameBytes, idCol, "overwrite")
-  }
+      idCol: String = "asset_id"): Unit =
+    // sized from the pre-explode asset input — conservative, an object
+    // barrier with no estimate counts as big
+    IndexLayout.Frame.write(assets, path, None,
+      frameFingerprints(assets, idCol, frameBytes))
 
   /** Appends a NEW-ASSET snapshot's frame fingerprints — delta-sized,
     * zero base reads; the usual new-ids / exactly-once append contract.
     */
   def frameAppendIndex(assets: DataFrame, path: String, frameBytes: Int,
       idCol: String = "asset_id"): Unit =
-    writeFrameGeneration(assets,
-      IndexPaths.resolve(assets.sparkSession, path), frameBytes, idCol,
-      "append")
-
-  private def writeFrameGeneration(assets: DataFrame, path: String,
-      frameBytes: Int, idCol: String, mode: String): Unit = {
-    // scale-adaptive shard count (guide §6, IndexShards): sized from
-    // the pre-explode asset input — conservative, an object barrier
-    // with no estimate counts as big
-    val nSh =
-      if (mode == "append")
-        IndexShards.forAppend(assets.sparkSession, s"$path/frames")
-      else IndexShards.pick(assets)
-    frameFingerprints(assets, idCol, frameBytes)
-      .withColumn("shard", IndexShards.hexShard(col("fingerprint"), nSh))
-      .repartition(col("shard"))
-      .write.mode(mode).partitionBy("shard").parquet(s"$path/frames")
-    if (mode != "append")
-      IndexShards.publish(assets.sparkSession, s"$path/frames", nSh)
-  }
-
-  /** Replay audit of a [[frameWriteIndex]] layout — the family
-    * taxonomy on the frame level: (asset_id, frame_no) coordinates
-    * present more than once; `n_payloads` = 1 means a replayed append
-    * (bit-identical copies), > 1 means the same coordinate was
-    * re-appended with DIFFERENT bytes (payload divergence — a rebuild
-    * signal). One narrow grouped scan; never reads payloads.
-    */
-  def frameAuditIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.parquet(s"${IndexPaths.resolve(spark, path)}/frames")
-      .groupBy(col("asset_id"), col("frame_no"))
-      .agg(count(lit(1)).as("n_copies"),
-        count_distinct(col("fingerprint")).as("n_payloads"))
-      .filter(col("n_copies") > 1)
-
-  /** Compacting repair of [[frameAuditIndex]]-localized replay damage
-    * — the frame member of the repair family ([[assetCompactIndex]]'s
-    * contract one level down): replayed appends land bit-identical
-    * (asset_id, frame_no, fingerprint) rows, removed exactly by a
-    * whole-row dedup rewrite; if coordinates still collide after
-    * (payload divergence), compaction REFUSES — silently picking a
-    * fingerprint would move [[frameDedupIndexed]] keep-first verdicts.
-    * Touches only the 40-byte fingerprint rows — NO payload re-read
-    * (the 100 TB media-repair argument, ×frames-per-asset sharper
-    * here). Stage-then-swap to a NEW path, the family's idiom.
-    */
-  def frameCompactIndex(spark: org.apache.spark.sql.SparkSession,
-      srcPath0: String, dstPath: String): Unit = {
-    val srcPath = IndexPaths.resolve(spark, srcPath0)
-    val rows = spark.read.parquet(s"$srcPath/frames")
-      .select(col("asset_id"), col("frame_no"), col("fingerprint"),
-        col("shard"))
-      .dropDuplicates()
-      .localCheckpoint()
-    // same check∥write overlap as [[assetCompactIndex]]
-    Parallelism.inParallel(
-      () => {
-        val divergent = rows.groupBy(col("asset_id"), col("frame_no"))
-          .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1).collect()
-        require(divergent.isEmpty, {
-          val d = divergent.head
-          s"frameCompactIndex: frame (${d.get(0)}, ${d.get(1)}) has " +
-            "payload-divergent copies (same coordinate, different bytes) " +
-            "— not append-replay damage; re-ingest the asset and rebuild " +
-            "instead"
-        })
-      },
-      () => rows.repartition(col("shard"))
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(s"$dstPath/frames"))
-    // the rewrite carries src's shard values verbatim — carry its
-    // persisted shard count too (IndexShards)
-    IndexShards.mirror(spark, s"$srcPath/frames", s"$dstPath/frames")
-  }
-
-  /** ONLINE repair: [[frameCompactIndex]] into the next generation
-    * under the same root + the atomic [[IndexPaths.compactSwap]]
-    * pointer cutover. Returns the new generation dir.
-    */
-  def frameCompactSwap(spark: org.apache.spark.sql.SparkSession,
-      root: String): String =
-    IndexPaths.compactSwap(spark, root)(frameCompactIndex(spark, _, _))
+    IndexLayout.Frame.append(path,
+      frameFingerprints(assets, idCol, frameBytes))
 
   /** Incremental frame-level exact dedup of a new asset snapshot
     * against a [[frameWriteIndex]] layout AFTER the snapshot was
@@ -658,16 +488,7 @@ object Multimodal {
       idCol: String = "asset_id"): DataFrame = {
     val frames = frameFingerprints(deltaAssets, idCol, frameBytes)
       .localCheckpoint()
-    val framesDir = s"${IndexPaths.resolve(spark, path)}/frames"
-    val framesScan = spark.read.parquet(framesDir)
-    // prune with the layout's persisted shard derivation (IndexShards);
-    // no persisted count → scan unpruned (pruning is never correctness)
-    val mins = IndexShards.read(spark, framesDir).fold(framesScan) { nSh =>
-      val shards = frames
-        .select(IndexShards.hexShard(col("fingerprint"), nSh).as("shard"))
-        .distinct().collect().map(_.getString(0))
-      framesScan.filter(col("shard").isin(shards.toSeq: _*))
-    }
+    val mins = IndexLayout.Frame.prunedScan(spark, path, frames)
       .join(broadcast(frames.select(col("fingerprint")).distinct()),
         Seq("fingerprint"), "leftsemi")
       .groupBy(col("fingerprint"))
@@ -711,15 +532,7 @@ object Multimodal {
       idCol: String = "asset_id"): DataFrame = {
     val frames = frameFingerprints(evalAssets, idCol, frameBytes)
       .localCheckpoint()
-    val framesDir = s"${IndexPaths.resolve(spark, path)}/frames"
-    val framesScan = spark.read.parquet(framesDir)
-    // prune with the layout's persisted shard derivation (IndexShards)
-    val hits = IndexShards.read(spark, framesDir).fold(framesScan) { nSh =>
-      val shards = frames
-        .select(IndexShards.hexShard(col("fingerprint"), nSh).as("shard"))
-        .distinct().collect().map(_.getString(0))
-      framesScan.filter(col("shard").isin(shards.toSeq: _*))
-    }
+    val hits = IndexLayout.Frame.prunedScan(spark, path, frames)
       .join(broadcast(frames.select(col("fingerprint")).distinct()),
         Seq("fingerprint"), "leftsemi")
       .select(col("fingerprint")).distinct()
@@ -870,40 +683,6 @@ object Multimodal {
         (col("doc_b") % FrameIdStride).as("frame_b"),
         col("hamming"))
 
-  /** Replay audit of a [[frameSimhashWriteIndex]] band layout —
-    * [[Dedup.simhashAuditIndex]] with the packed doc_id decoded back
-    * to (asset_id, frame_no) coordinates; the band index's taxonomy:
-    * `n_payloads` = 1 is a replayed append (bit-identical band rows —
-    * harmless to pairs but inflating bucket counts toward the cap),
-    * > 1 is payload divergence (a rebuild signal).
-    */
-  def frameSimhashAuditIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    Dedup.simhashAuditIndex(spark, path)
-      .select(expr(s"doc_id div $FrameIdStride").as("asset_id"),
-        (col("doc_id") % FrameIdStride).as("frame_no"),
-        col("bidx"), col("n_copies"), col("n_payloads"))
-
-  /** Compacting repair of the frame band index —
-    * [[Dedup.simhashCompactIndex]] verbatim (the packed doc_id needs
-    * no decoding to dedup whole rows): stage-then-swap whole-row
-    * dedup of the ~40-byte band rows, refusing payload divergence;
-    * payload bytes are never re-read.
-    */
-  def frameSimhashCompactIndex(spark: org.apache.spark.sql.SparkSession,
-      srcPath: String, dstPath: String): Unit =
-    Dedup.simhashCompactIndex(spark, srcPath, dstPath)
-
-  /** ONLINE repair: [[frameSimhashCompactIndex]] into the next
-    * generation under the same root + the atomic
-    * [[IndexPaths.compactSwap]] pointer cutover. Returns the new
-    * generation dir.
-    */
-  def frameSimhashCompactSwap(spark: org.apache.spark.sql.SparkSession,
-      root: String): String =
-    IndexPaths.compactSwap(spark, root)(
-      frameSimhashCompactIndex(spark, _, _))
-
   /** Release MANIFEST of a media corpus — [[Curation.releaseManifest]]'s
     * contract (q184's release family) on assets: per key-shard (md5 of
     * the asset id — uniform regardless of payload-size skew) the asset
@@ -941,7 +720,7 @@ object Multimodal {
     */
   def assetManifestFromIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    spark.read.parquet(s"${IndexPaths.resolve(spark, path)}/fingerprints")
+    spark.read.parquet(IndexLayout.Asset.live(spark, path))
       .select(
         substring(md5(col("asset_id").cast("string")), 1, 2).as("shard"),
         TextOps.hash60(concat(col("asset_id").cast("string"),
@@ -962,9 +741,8 @@ object Multimodal {
     */
   def manifestAppendGeneration(assets: DataFrame, path: String,
       idCol: String = "asset_id", payloadCol: String = "payload"): Unit =
-    assetReleaseManifest(assets, idCol, payloadCol)
-      .write.mode("append")
-      .parquet(s"${IndexPaths.resolve(assets.sparkSession, path)}/manifest")
+    IndexLayout.Manifest.append(path,
+      assetReleaseManifest(assets, idCol, payloadCol))
 
   /** Serves the standing release manifest from its generation
     * contribution rows: counts/bytes sum, checksums XOR — the same
@@ -973,7 +751,7 @@ object Multimodal {
     */
   def assetManifestServe(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    spark.read.parquet(s"${IndexPaths.resolve(spark, path)}/manifest")
+    spark.read.parquet(IndexLayout.Manifest.live(spark, path))
       .groupBy(col("shard"))
       .agg(sum(col("n_assets")).as("n_assets"),
         sum(col("n_bytes")).as("n_bytes"),

@@ -572,81 +572,6 @@ object Pq {
         round(min(col("cn")), 6).as("min_cn"),
         round(max(col("cn")), 6).as("max_cn"))
 
-  /** Duplicate-id audit of a self-contained index's code layout — the
-    * full-resolution follow-up to [[ivfPqIndexStats]] when a bucket
-    * count looks wrong: one grouped scan of `codes/` emitting the ids
-    * present more than once, with copy and bucket counts. Non-empty
-    * output means the [[ivfPqAppendIndex]] exactly-once contract was
-    * violated (a retried append) — or worse, `n_buckets > 1` means the
-    * SAME id was appended under different assignments (payload
-    * divergence: not replay damage, a rebuild signal). Narrow scan
-    * (id + bucket only), partial-aggregated; shuffles id-cardinality
-    * rows, emits only the damage.
-    */
-  def ivfPqAuditIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String = "vec_id"): DataFrame =
-    spark.read.parquet(s"${IndexPaths.resolve(spark, path)}/codes")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_copies"),
-        count_distinct(col("bucket")).as("n_buckets"))
-      .filter(col("n_copies") > 1)
-
-  /** REPAIR for a double-appended index ([[ivfPqAuditIndex]] hits):
-    * compact `src` into a fresh self-contained index at `dst`,
-    * dropping the replayed rows. Dedup is on WHOLE rows — a replayed
-    * append lands bit-identical (id, bucket, codes, cn) rows, so
-    * exact-row dedup removes precisely the replay; if ids still
-    * collide after (payload-divergent copies — encoded under different
-    * metadata), compaction REFUSES: that index needs a rebuild, and
-    * silently keeping one arbitrary payload would turn corruption
-    * deterministic instead of fixing it. Metadata is carried verbatim
-    * (compaction must not retrain, the append-semantics rule).
-    *
-    * Writes to a NEW path by design: an in-place rewrite would read
-    * and overwrite the same parquet directories (self-clobber), and
-    * the stage-then-swap this enables is the atomic-repair idiom. Cost
-    * is one full read + one write of the CODE rows (m codes + a norm
-    * per vector — the compacted payload, never the raw vectors), as a
-    * repair op should be; day-1 builds and day-2 appends never pay it.
-    */
-  def ivfPqCompactIndex(spark: org.apache.spark.sql.SparkSession,
-      srcPath0: String, dstPath: String, idCol: String = "vec_id"): Unit = {
-    val srcPath = IndexPaths.resolve(spark, srcPath0)
-    val codes = spark.read.parquet(s"$srcPath/codes").dropDuplicates()
-    // divergence probe, code rewrite, and the two tiny meta copies are
-    // mutually independent — overlap them (guide §2.6); refusal still
-    // throws and dst stays staged until the caller's swap
-    Parallelism.inParallel(
-      () => {
-        val divergent = codes.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
-          .filter(col("n") > 1).limit(1).collect()
-        require(divergent.isEmpty, {
-          val d = divergent.head
-          s"ivfPqCompactIndex: id ${d.get(0)} has payload-divergent " +
-            "copies (different codes/bucket under one id) — not " +
-            "append-replay damage; rebuild the index instead"
-        })
-      },
-      () => ivfPqWriteIndex(codes.repartition(col("bucket")),
-        s"$dstPath/codes"),
-      () => spark.read.parquet(s"$srcPath/meta/centroids")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$dstPath/meta/centroids"),
-      () => spark.read.parquet(s"$srcPath/meta/codebook")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$dstPath/meta/codebook"))
-  }
-
-  /** ONLINE repair: [[ivfPqCompactIndex]] into the next generation
-    * under the same root + the atomic [[IndexPaths.compactSwap]]
-    * pointer cutover ([[ivfPqTopKFromIndex]] / append / audit resolve
-    * it). Returns the new generation dir.
-    */
-  def ivfPqCompactSwap(spark: org.apache.spark.sql.SparkSession,
-      root: String, idCol: String = "vec_id"): String =
-    IndexPaths.compactSwap(spark, root)(
-      ivfPqCompactIndex(spark, _, _, idCol))
-
   /** IVF-PQ serving with EXACT re-ranking (the standard two-stage ANN
     * serve, Jégou et al. §V.C): ADC ranks a `shortlist` of R ≥ k
     * candidates per query from the code rows — cheap, approximate —

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -125,8 +125,8 @@ object Retrieval {
 
   /** Materializes a BM25 inverted index as the WRITTEN, shard-pruned
     * serving layout — the lexical twin of the IVF-PQ index lifecycle
-    * (q139/q141), with a DAY-2 story ([[bm25AppendIndex]] /
-    * [[bm25AuditIndex]] / [[bm25CompactIndex]]). Three pieces, all
+    * (q139/q141), with a DAY-2 story ([[bm25AppendIndex]], then
+    * `IndexLayout.Bm25`'s audit / compact). Three pieces, all
     * keyed by the same 256-way md5(term) shard (the q131 shard idiom):
     *
     *  - `postings/` (doc_id, term, tf, dl), PARTITIONED BY shard: tf
@@ -159,8 +159,9 @@ object Retrieval {
   def bm25WriteIndex(docs: DataFrame, path: String,
       idCol: String = "doc_id", textCol: String = "text",
       shards: Option[Int] = None): Unit = {
-    IndexPaths.clearPointer(docs.sparkSession, path)
-    writeIndexGeneration(docs, path, idCol, textCol, "overwrite", shards)
+    val (postings, terms, stats) = generationRows(docs, idCol, textCol)
+    IndexLayout.Bm25.write(docs, path, shards, postings,
+      IndexLayout.Bm25Terms -> terms, IndexLayout.Bm25Stats -> stats)
   }
 
   /** Appends a NEW-DOCUMENT generation to a [[bm25WriteIndex]] layout
@@ -177,56 +178,43 @@ object Retrieval {
     * would double its postings — and the append is
     * caller-owns-exactly-once: a blind retry replays every delta row
     * and every df/stats contribution. Both damages are what
-    * [[bm25AuditIndex]] detects and [[bm25CompactIndex]] repairs.
+    * `IndexLayout.Bm25`'s audit detects and its compact repairs.
     */
   def bm25AppendIndex(docs: DataFrame, path: String,
-      idCol: String = "doc_id", textCol: String = "text"): Unit =
-    writeIndexGeneration(docs,
-      IndexPaths.resolve(docs.sparkSession, path), idCol, textCol, "append")
+      idCol: String = "doc_id", textCol: String = "text"): Unit = {
+    val (postings, terms, stats) = generationRows(docs, idCol, textCol)
+    IndexLayout.Bm25.append(path, postings,
+      IndexLayout.Bm25Terms -> terms, IndexLayout.Bm25Stats -> stats)
+  }
 
-  private def writeIndexGeneration(docs: DataFrame, path: String,
-      idCol: String, textCol: String, mode: String,
-      shards: Option[Int] = None): Unit = {
-    // scale-adaptive shard count (guide §6, IndexShards): fresh builds
-    // size the alphabet from the input (or an explicit caller pin —
-    // the amplification/stats gates measure the historical WIDE
-    // geometry and build their layouts pinned to it); appends follow
-    // the layout's persisted choice. postings/ and terms/ always agree.
-    val nSh =
-      if (mode == "append")
-        IndexShards.forAppend(docs.sparkSession, s"$path/postings")
-      else shards.getOrElse(IndexShards.pick(docs))
-    val toks = docs
+  /** One generation's (postings, terms, stats) rows. All three derive
+    * from the one materialized tf frame and land in three DISJOINT
+    * directories, so the lifecycle overlaps their write jobs (guide
+    * §2.6): each is floor-bound (a partitioned write is commit
+    * machinery at any data size), so a build/append pays ~one floor
+    * instead of three. postings/ and terms/ share one shard count.
+    */
+  private def generationRows(docs: DataFrame, idCol: String,
+      textCol: String): (DataFrame, DataFrame, DataFrame) = {
+    val tf = docs
       .select(col(idCol).as("doc_id"),
         explode(TextOps.tokens(col(textCol))).as("term"))
       .filter(col("term") =!= "")
-    val tf = toks.groupBy(col("doc_id"), col("term"))
+      .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
       .localCheckpoint()
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    // the three layout pieces all derive from the one materialized tf
-    // frame and land in three DISJOINT directories — overlap the write
-    // jobs (guide §2.6): each is floor-bound (a partitioned write is
-    // commit machinery at any data size), so a build/append pays ~one
-    // floor instead of three
-    Parallelism.inParallel(
-      () => tf.join(dl, "doc_id")
-        .withColumn("shard", IndexShards.hexShard(md5(col("term")), nSh))
-        .repartition(col("shard"))
-        .write.mode(mode).partitionBy("shard")
-        .parquet(s"$path/postings"),
-      () => tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .withColumn("shard", IndexShards.hexShard(md5(col("term")), nSh))
-        .repartition(col("shard"))
-        .write.mode(mode).partitionBy("shard")
-        .parquet(s"$path/terms"),
-      () => dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total"))
-        .coalesce(1).write.mode(mode).parquet(s"$path/meta/stats"))
-    if (mode != "append") {
-      IndexShards.publish(docs.sparkSession, s"$path/postings", nSh)
-      IndexShards.publish(docs.sparkSession, s"$path/terms", nSh)
-    }
+    (tf.join(dl, "doc_id"), dfRows(tf), statsRows(dl))
   }
+
+  /** df contributions: one row per term of the (tf or posting) rows. */
+  private def dfRows(postings: DataFrame): DataFrame =
+    postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
+
+  /** The corpus scalars of per-document lengths, one row. */
+  private def statsRows(dl: DataFrame): DataFrame =
+    dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total"))
+      .coalesce(1)
 
   /** Serves BM25 top-k from a [[bm25WriteIndex]] layout: the query
     * terms' shards push into BOTH the postings and terms scans as
@@ -249,7 +237,7 @@ object Retrieval {
     // no persisted count → scan unpruned (pruning is never correctness)
     val nShOpt = IndexShards.read(spark, s"$path/postings")
     val shards = nShOpt.map { nSh =>
-      qt.select(IndexShards.hexShard(md5(col("term")), nSh).as("shard"))
+      qt.select(IndexLayout.Bm25.shardAt(nSh).as("shard"))
         .distinct().collect().map(_.getString(0)).toSeq
     }
     def pruned(df: DataFrame): DataFrame =
@@ -292,84 +280,28 @@ object Retrieval {
         col("sum_tf"), col("df_total"))
   }
 
-  /** Duplicate-posting audit of a written BM25 index — the lexical
-    * `ivfPqAuditIndex`: one grouped scan of `postings/` emitting the
-    * (doc_id, term) keys present more than once. Non-empty output
-    * means the [[bm25AppendIndex]] exactly-once contract was violated
-    * (a retried append — `n_payloads` = 1, the copies bit-identical)
-    * or the same doc id was appended with DIFFERENT text
-    * (`n_payloads` > 1: payload divergence — a rebuild signal, not
-    * replay damage). Narrow scan, partial-aggregated; shuffles
-    * posting-cardinality keys, emits only the damage. A duplicated
-    * posting also means that generation's df/stats contributions
-    * double-counted — [[bm25CompactIndex]] repairs both, because it
-    * REDERIVES terms/ and meta/ from the deduped postings.
+  /** BM25's extra compact steps over the deduped posting rows
+    * (`IndexLayout.Bm25`'s `compactAlso`). The generic key check
+    * refuses (doc_id, term) collisions; it misses a doc id re-appended
+    * with DIFFERENT text sharing NO term with the original — no key
+    * collides, but the deduped postings then carry two distinct dl
+    * values, and even a same-length disjoint rewrite fails the
+    * per-document invariant Σtf = dl (a clean index satisfies it by
+    * construction; any extra surviving posting breaks it), so the
+    * per-doc check here catches every divergent re-append. `terms/`
+    * and `meta/stats` are REDERIVED from the deduped postings (df =
+    * posting count per term, n_docs/total = distinct docs and their
+    * summed lengths) — aggregates over rows already in hand, NO corpus
+    * re-tokenize — which repairs the doubled df/stats contributions
+    * in the same pass; the terms rewrite derives shards as `src` did.
     */
-  def bm25AuditIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.parquet(s"${IndexPaths.resolve(spark, path)}/postings")
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("n_copies"),
-        count_distinct(struct(col("tf"), col("dl"))).as("n_payloads"))
-      .filter(col("n_copies") > 1)
-
-  /** REPAIR for a double-appended BM25 index ([[bm25AuditIndex]]
-    * hits): compact `src` into a fresh index at `dst`, dropping the
-    * replayed rows. Dedup is on WHOLE posting rows — a replayed
-    * append lands bit-identical (doc_id, term, tf, dl, shard) rows —
-    * and if (doc_id, term) keys still collide after (payload
-    * divergence), compaction REFUSES: that index needs a rebuild.
-    * The refusal also covers divergence that shares NO key: a doc id
-    * re-appended with DIFFERENT text whose terms are disjoint from
-    * the original leaves no (doc_id, term) collision, but its deduped
-    * postings then carry two distinct dl values — and even a
-    * same-length disjoint rewrite fails the per-document invariant
-    * Σtf = dl (a clean index satisfies it by construction; any extra
-    * surviving posting breaks it), so the per-doc consistency check
-    * below catches every divergent re-append, not just term-sharing
-    * ones.
-    * `terms/` and `meta/stats` are REDERIVED from the deduped
-    * postings (df = posting count per term, n_docs/total = distinct
-    * docs and their summed lengths) — vocabulary/doc-keyed aggregates
-    * over rows already in hand, NO corpus re-tokenize — which repairs
-    * the doubled df/stats contributions in the same pass. Writes to a
-    * NEW path (stage-then-swap, the `ivfPqCompactIndex` idiom); cost
-    * is one read + one write of the posting rows, as a repair op
-    * should be.
-    */
-  def bm25CompactIndex(spark: org.apache.spark.sql.SparkSession,
-      srcPath0: String, dstPath: String): Unit = {
-    val srcPath = IndexPaths.resolve(spark, srcPath0)
-    // the postings rewrite carries src's shard values verbatim; the
-    // terms recompute must derive shards the same way src did
-    // (IndexShards; Wide for layouts without a persisted count)
-    val nSh = IndexShards.read(spark, s"$srcPath/postings")
+  private[operators] def bm25Rederive(spark: SparkSession,
+      postings: DataFrame, src: String, dst: String): Seq[() => Unit] = {
+    import IndexLayout.{Bm25, Bm25Stats, Bm25Terms}
+    val nSh = IndexShards.read(spark, Bm25.at(src))
       .getOrElse(IndexShards.Wide)
-    val postings = spark.read.parquet(s"$srcPath/postings")
-      .select(col("doc_id"), col("term"), col("tf"), col("dl"), col("shard"))
-      .dropDuplicates()
-      .localCheckpoint()
-    // the five jobs below (two divergence probes, three layout writes)
-    // all consume the ONE checkpointed posting frame and have no
-    // ordering dependency — overlap them (guide §2.6). A failed check
-    // still REFUSES (inParallel propagates it); the staged dst is never
-    // live until the caller's swap, so write-vs-check ordering is
-    // unobservable outside the refused attempt's abandoned directory.
-    Parallelism.inParallel(
+    Seq(
       () => {
-        val divergent = postings.groupBy(col("doc_id"), col("term"))
-          .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1).collect()
-        require(divergent.isEmpty, {
-          val d = divergent.head
-          s"bm25CompactIndex: (doc ${d.get(0)}, term ${d.get(1)}) has " +
-            "payload-divergent copies (same key, different tf/dl) — not " +
-            "append-replay damage; rebuild the index instead"
-        })
-      },
-      () => {
-        // the key check misses a doc re-appended with DIFFERENT text
-        // sharing no term with the original — per-doc dl uniqueness and
-        // the Σtf = dl invariant catch that class (see the scaladoc)
         val inconsistent = postings.groupBy(col("doc_id"))
           .agg(count_distinct(col("dl")).as("n_dl"),
             sum(col("tf")).as("sum_tf"), first(col("dl")).as("dl"))
@@ -377,40 +309,23 @@ object Retrieval {
           .limit(1).collect()
         require(inconsistent.isEmpty, {
           val d = inconsistent.head
-          s"bm25CompactIndex: doc ${d.get(0)} has inconsistent postings " +
+          s"bm25 compact: doc ${d.get(0)} has inconsistent postings " +
             "(multiple distinct dl values, or summed tf not equal to dl) " +
             "— a doc id was re-appended with different text, or posting " +
             "rows were lost/corrupted by partial-write damage; not " +
             "append-replay damage; rebuild the index instead"
         })
       },
-      () => postings
-        .repartition(col("shard"))
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(s"$dstPath/postings"),
-      () => postings.groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .withColumn("shard", IndexShards.hexShard(md5(col("term")), nSh))
-        .repartition(col("shard"))
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(s"$dstPath/terms"),
-      () => postings.groupBy(col("doc_id")).agg(first(col("dl")).as("dl"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dstPath/meta/stats"))
-    // carry the src derivation into the compacted layout (IndexShards)
-    IndexShards.mirror(spark, s"$srcPath/postings", s"$dstPath/postings")
-    IndexShards.mirror(spark, s"$srcPath/terms", s"$dstPath/terms")
+      () => {
+        Bm25Terms.writeRows(dfRows(postings), Bm25Terms.at(dst),
+          "overwrite", Some(nSh))
+        IndexShards.mirror(spark, Bm25Terms.at(src), Bm25Terms.at(dst))
+      },
+      () => Bm25Stats.writeRows(
+        statsRows(postings.groupBy(col("doc_id"))
+          .agg(first(col("dl")).as("dl"))),
+        Bm25Stats.at(dst), "overwrite", None))
   }
-
-  /** ONLINE repair: [[bm25CompactIndex]] into the next generation
-    * directory under the SAME root, then an atomic pointer cutover
-    * ([[IndexPaths.compactSwap]]) — standing readers that resolved
-    * before the swap keep serving the old generation unharmed; every
-    * later [[bm25TopKIndexed]]/append through `root` resolves to the
-    * repaired one. Returns the new generation's directory.
-    */
-  def bm25CompactSwap(spark: org.apache.spark.sql.SparkSession,
-      root: String): String =
-    IndexPaths.compactSwap(spark, root)(bm25CompactIndex(spark, _, _))
 
   /** DuckDB twin of [[bm25TopK]] as a WITH-clause body (no trailing
     * SELECT): defines CTEs `bm25` = (query_id, rnk, doc_id, score_fp)

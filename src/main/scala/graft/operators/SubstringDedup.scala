@@ -149,7 +149,8 @@ object SubstringDedup {
     */
   def substringWriteIndex(df: DataFrame, path: String, idCol: String,
       textCol: String, minLen: Int): Unit =
-    writeWindowGeneration(df, path, idCol, textCol, minLen, "overwrite")
+    IndexLayout.Substring.write(df, path, None,
+      substringWindows(df, idCol, textCol, minLen))
 
   /** Appends a NEW-DOCUMENT snapshot's window postings — delta-sized,
     * zero base reads; the usual new-ids / exactly-once contract (a
@@ -159,28 +160,8 @@ object SubstringDedup {
     */
   def substringAppendIndex(df: DataFrame, path: String, idCol: String,
       textCol: String, minLen: Int): Unit =
-    writeWindowGeneration(df, path, idCol, textCol, minLen, "append")
-
-  private def writeWindowGeneration(df: DataFrame, path: String,
-      idCol: String, textCol: String, minLen: Int, mode: String): Unit = {
-    // scale-adaptive shard count (guide §6, IndexShards)
-    val nSh =
-      if (mode == "append")
-        IndexShards.forAppend(df.sparkSession, s"$path/postings")
-      else IndexShards.pick(df)
-    substringWindows(df, idCol, textCol, minLen)
-      .withColumn("shard", IndexShards.hexShard(col("h"), nSh))
-      .repartition(col("shard"))
-      // h-clustered files (guide §6 "sort order on write"): the
-      // partitioned writer sorts each task by the partition column
-      // anyway (sort-based write path), so extending the key to
-      // (shard, h) costs ~nothing and makes the h column
-      // delta/dictionary-friendly — smaller files, cheaper probe scans
-      .sortWithinPartitions(col("shard"), col("h"))
-      .write.mode(mode).partitionBy("shard").parquet(s"$path/postings")
-    if (mode != "append")
-      IndexShards.publish(df.sparkSession, s"$path/postings", nSh)
-  }
+    IndexLayout.Substring.append(path,
+      substringWindows(df, idCol, textCol, minLen))
 
   /** Incremental [[substringPairs]] of a new snapshot against
     * (base ∪ snapshot), served from a written layout that already
@@ -212,36 +193,21 @@ object SubstringDedup {
     // the broadcast sides re-checkpoint cheap in-memory projections so
     // the served plan keeps the r21 shape (checkpoint-scan broadcast
     // sides, no extra distinct exchanges)
-    val nShOpt = IndexShards.read(spark, s"$path/postings")
-    val info = qsets.agg(
-      collect_set(IndexShards.hexShard(col("h"),
-        nShOpt.getOrElse(IndexShards.Wide))).as("shards"),
-      count(lit(1)).as("n")).head()
-    val shards = info.getSeq[String](0)
-    val nRows = info.getLong(1)
+    val (postingsScan, nRows) =
+      IndexLayout.Substring.prunedScanCounted(spark, path, qsets)
     val qw = qsets.select(col("h")).distinct().localCheckpoint()
     val snapIds = qsets.select(col("doc_id")).distinct().localCheckpoint()
-    val postingsScan = spark.read.parquet(s"$path/postings")
-    val probe = nShOpt.fold(postingsScan)(_ =>
-        postingsScan.filter(col("shard").isin(shards.toSeq: _*)))
+    val probe = postingsScan
       // bounded-delta broadcast for the (h) semi prune — same rationale
       // as [[Dedup.winnowPairsIndexed]]: keep the corpus-sized postings
       // scan out of any shuffle by construction (guide §3.1)
       .join(Parallelism.boundedBroadcast(qw, nRows), Seq("h"), "leftsemi")
-      // ride the snapshot-endpoint flag so pairsFromWindows can drop
-      // (base, base) pairs at emission instead of after the run merge
-      .join(broadcast(snapIds.withColumn("__delta", lit(true))),
-        Seq("doc_id"), "left")
-      .withColumn("__delta", coalesce(col("__delta"), lit(false)))
+    // ride the snapshot-endpoint flag so pairsFromWindows can drop
+    // (base, base) pairs at emission instead of after the run merge
+    val flagged = Dedup.flagDelta(probe, snapIds)
       .select(col("doc_id"), col("pos"), col("h"), col("__delta"))
-    pairsFromWindows(probe, minLen, maxPostingSize)
-      .join(broadcast(snapIds.select(col("doc_id").as("doc_a"))
-          .withColumn("fa", lit(1))),
-        Seq("doc_a"), "left")
-      .join(broadcast(snapIds.select(col("doc_id").as("doc_b"))
-          .withColumn("fb", lit(1))),
-        Seq("doc_b"), "left")
-      .filter(col("fa").isNotNull || col("fb").isNotNull)
+    Dedup.withDeltaEndpoint(pairsFromWindows(flagged, minLen,
+        maxPostingSize), snapIds)
       .select(col("doc_a"), col("doc_b"), col("pos_a"), col("pos_b"),
         col("len"))
   }

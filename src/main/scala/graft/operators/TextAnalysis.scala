@@ -621,7 +621,7 @@ object TextAnalysis {
   /** Drift audit of a WRITTEN bigram model ([[bigramWriteModel]])
     * against a new snapshot — the model's staleness signal, the
     * lexical-model member of the audit family (`bm25IndexStats`' df
-    * drift, `ivfPqAuditIndex`): per source, how much of the
+    * drift, `IndexLayout.ivfPq(idCol).audit`): per source, how much of the
     * snapshot's bigram mass the model has never seen. `unseen_big`
     * counts occurrences whose (w1,w2) is absent from the model (they
     * score through smoothing — fine in isolation, but a RATE trending

@@ -93,10 +93,9 @@ object TextOps {
   def hash60Sql(s: String): String =
     s"CAST(concat('0x', substr(md5($s), 1, 15)) AS BIGINT)"
 
-  /** i-th universal hash of a 32-bit value: (a_i*(h mod P) + b_i) mod P. */
-  def universalHash(h: Column, a: Long, b: Long): Column =
-    (lit(a) * (h % HashP) + lit(b)) % HashP
-
+  /** i-th universal hash of a 32-bit value, as SQL:
+    * (a_i*(h mod P) + b_i) mod P.
+    */
   def universalHashSql(h: String, a: Long, b: Long): String =
     s"(($a * ($h % $HashP) + $b) % $HashP)"
 

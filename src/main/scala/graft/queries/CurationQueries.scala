@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Curation, Dedup, TextAnalysis, TextOps}
+import graft.operators.{Curation, Dedup, IndexLayout, TextAnalysis, TextOps}
+import graft.streaming.IndexIngest
 import org.apache.spark.sql.functions._
 
 /** Training-data curation surface: deterministic sampling, PII
@@ -790,15 +791,15 @@ object CurationQueries {
         .orderBy(col("doc_id")),
     Some(mixtureManifestOracleSql))
 
-  /** The ingest loop's DERIVED-ARTIFACT member ([[graft.streaming
-    * .IndexIngest.startMixture]]): the corpus arrives as a stream in
-    * micro-batches, each batch tokenized once and appended as a
-    * mixture-payload generation, then the standing admission manifest
-    * is served from stored counts alone — and must hash-equal the
-    * fresh whole-corpus q179 derivation (same oracle text). Source
-    * masses are exact long sums, so generations add; draws are frozen
-    * per-key hashes; batch boundaries provably cannot move a rate or
-    * an admission.
+  /** The ingest loop's DERIVED-ARTIFACT member
+    * ([[graft.streaming.IndexIngest.mixtureBatch]]): the corpus arrives
+    * as a stream in micro-batches, each batch tokenized once and
+    * appended as a mixture-payload generation, then the standing
+    * admission manifest is served from stored counts alone — and must
+    * hash-equal the fresh whole-corpus q179 derivation (same oracle
+    * text). Source masses are exact long sums, so generations add;
+    * draws are frozen per-key hashes; batch boundaries provably cannot
+    * move a rate or an admission.
     */
   val q185StreamingMixtureIngest: QueryDef = QueryDef(
     "q185_streaming_mixture_ingest",
@@ -813,10 +814,10 @@ object CurationQueries {
       }
       val path = graft.operators.TmpWorkspaces
         .pidScoped("graft_miximidx_q185_", dir)
-      graft.streaming.IndexIngest.ingestMixtureDocs(
+      IndexIngest.drain(IndexIngest.start(
         s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inPath.toString),
-        path.toString)
+          .option("maxFilesPerTrigger", 1).parquet(inPath.toString), None)(
+        IndexIngest.mixtureBatch(path.toString, "source", "doc_id", "text")))
       Curation.mixtureServeIndex(s, path.toString, "source", "doc_id",
           budget = MixtureBudget)
         .orderBy(col("doc_id"))
@@ -1122,9 +1123,9 @@ object CurationQueries {
     * mixture artifact): base payload ingested, snapshot appended, then
     * the injected failure — a blind retry replays the snapshot append,
     * silently doubling its documents' mass and moving EVERY source's
-    * rate. [[graft.operators.Curation.mixtureAuditIndex]] must
+    * rate. `IndexLayout.mixture(stratum, key).audit` must
     * localize the damage as bit-identical copies,
-    * [[graft.operators.Curation.mixtureCompactIndex]] stage-and-swaps
+    * `IndexLayout.mixture(stratum, key).compact` stage-and-swaps
     * the dedup, and the served manifest from the REPAIRED payload must
     * hash-equal the clean fresh derivation (the q179/q185 oracle
     * verbatim) — a missed duplicate or a dropped legitimate row moves
@@ -1144,7 +1145,8 @@ object CurationQueries {
       // the injected failure: a blind retry replays the same append
       Curation.mixtureAppendIndex(snapshot, path.toString,
         "source", "doc_id", "text")
-      val damage = Curation.mixtureAuditIndex(s, path.toString)
+      val layout = IndexLayout.mixture("source", "doc_id")
+      val damage = layout.audit(s, path.toString)
         .agg(count(lit(1)).as("n"),
           max(col("n_copies")).as("mc"), max(col("n_payloads")).as("mp"))
         .collect()(0)
@@ -1153,7 +1155,7 @@ object CurationQueries {
         s"audit must localize the replay as bit-identical pairs, got $damage")
       val repaired = graft.operators.TmpWorkspaces
         .pidScoped("graft_miximidx_q192r_", dir)
-      Curation.mixtureCompactIndex(s, path.toString, repaired.toString)
+      layout.compact(s, path.toString, repaired.toString)
       Curation.mixtureServeIndex(s, repaired.toString, "source", "doc_id",
           budget = MixtureBudget)
         .orderBy(col("doc_id"))

@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Bpe, Clustering, Curation, Dedup, IndexShards, IndexStats, Multimodal, Pq, Retrieval, Similarity, TextAnalysis, TextOps}
+import graft.operators.{Bpe, Clustering, Curation, Dedup, IndexLayout, IndexShards, IndexStats, Multimodal, Pq, Retrieval, Similarity, TextAnalysis, TextOps}
+import graft.streaming.IndexIngest
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -622,7 +623,7 @@ object PipelineQueries {
     Some(winnowPairOracleSql("doc_a % 97 = 5 OR doc_b % 97 = 5")))
 
   /** Streaming ingest into the winnowing postings index
-    * ([[graft.streaming.IndexIngest.startWinnow]]): the % 3 = 0
+    * ([[graft.streaming.IndexIngest.winnowBatch]]): the % 3 = 0
     * snapshot arrives as a stream in micro-batch chunks, each appended
     * as its own posting generation, and the standing probe must
     * hash-equal the SAME fresh-restricted oracle as q190 — posting
@@ -646,10 +647,10 @@ object PipelineQueries {
         snapshot.filter(p).coalesce(1)
           .write.mode("append").parquet(inPath.toString)
       }
-      graft.streaming.IndexIngest.ingestWinnowDocs(
+      IndexIngest.drain(IndexIngest.start(
         s.readStream.schema(snapshot.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inPath.toString),
-        path.toString)
+          .option("maxFilesPerTrigger", 1).parquet(inPath.toString), None)(
+        IndexIngest.winnowBatch(path.toString, "doc_id", "text", "source")))
       Dedup.winnowPairsIndexed(s, path.toString, snapshot,
           "doc_id", "text", "source")
         .orderBy(col("blk"), col("doc_a"), col("doc_b"))
@@ -1930,17 +1931,16 @@ object PipelineQueries {
         "text", 20).orderBy(col("rk")),
     Some(TextAnalysis.bpePairCountsSql("documents", "text", 20)))
 
-  /** The index REPAIR path ([[graft.operators.Pq.ivfPqCompactIndex]]):
+  /** The index REPAIR path (`IndexLayout.ivfPq(idCol).compact`):
     * q143's cold lifecycle with the failure the append contract warns
     * about INJECTED — the delta append runs twice (a blind retry), so
     * every delta row sits in its bucket twice and a direct serve would
-    * score duplicates. The audit ([[graft.operators.Pq
-    * .ivfPqAuditIndex]]) localizes the damage, compaction rewrites the
-    * layout minus the replay into a fresh self-contained index, and
-    * serving THAT must hash-equal the same clean frozen-codebook
-    * union-encode oracle as q140/q143 — a compaction that missed a
-    * duplicate, dropped a legitimate row, or perturbed the metadata
-    * hash-fails.
+    * score duplicates. The audit (`IndexLayout.ivfPq(idCol).audit`)
+    * localizes the damage, compaction rewrites the layout minus the
+    * replay into a fresh self-contained index, and serving THAT must
+    * hash-equal the same clean frozen-codebook union-encode oracle as
+    * q140/q143 — a compaction that missed a duplicate, dropped a
+    * legitimate row, or perturbed the metadata hash-fails.
     */
   val q151IvfPqRepair: QueryDef = QueryDef(
     "q151_ivfpq_repair",
@@ -1958,7 +1958,7 @@ object PipelineQueries {
       Pq.ivfPqAppendToIndex(s, path.toString, emb.filter(!basePred))
       val repaired = graft.operators.TmpWorkspaces
         .pidScoped("graft_ivfpqidx_q151r_", dir)
-      Pq.ivfPqCompactIndex(s, path.toString, repaired.toString)
+      IndexLayout.ivfPq("vec_id").compact(s, path.toString, repaired.toString)
       val queries = emb.filter(col("vec_id") < 10)
       withExactRecall3(
         Pq.ivfPqTopKFromIndex(s, repaired.toString, queries,
@@ -2129,19 +2129,18 @@ object PipelineQueries {
     },
     Some(bm25Top10OracleSql))
 
-  /** The BM25 index REPAIR path ([[graft.operators.Retrieval
-    * .bm25AuditIndex]] / [[graft.operators.Retrieval
-    * .bm25CompactIndex]]) — the lexical q151: q155's lifecycle with
-    * the failure the append contract warns about INJECTED (the delta
-    * append runs twice — a blind retry), so every delta posting sits
-    * in its shard twice and that generation's df/stats contributions
-    * double-count. The audit must localize EXACTLY the replayed
-    * postings (asserted in the closure — bit-identical copies, no
-    * payload divergence), compaction rewrites the layout minus the
+  /** The BM25 index REPAIR path (`IndexLayout.Bm25.audit` /
+    * `IndexLayout.Bm25.compact`) — the lexical q151: q155's lifecycle
+    * with the failure the append contract warns about INJECTED (the
+    * delta append runs twice — a blind retry), so every delta posting
+    * sits in its shard twice and that generation's df/stats
+    * contributions double-count. The audit must localize EXACTLY the
+    * replayed postings (asserted in the closure — bit-identical copies,
+    * no payload divergence), compaction rewrites the layout minus the
     * replay into a fresh index REDERIVING df/stats from the deduped
-    * postings, and serving THAT must hash-equal the clean
-    * whole-corpus oracle — a missed duplicate, a dropped legitimate
-    * posting, or an unrepaired df double-count all hash-fail.
+    * postings, and serving THAT must hash-equal the clean whole-corpus
+    * oracle — a missed duplicate, a dropped legitimate posting, or an
+    * unrepaired df double-count all hash-fail.
     */
   val q156Bm25Repair: QueryDef = QueryDef(
     "q156_bm25_repair",
@@ -2155,7 +2154,7 @@ object PipelineQueries {
       Retrieval.bm25AppendIndex(delta, path.toString)
       // the injected failure: a blind retry replays the same append
       Retrieval.bm25AppendIndex(delta, path.toString)
-      val damage = Retrieval.bm25AuditIndex(s, path.toString)
+      val damage = IndexLayout.Bm25.audit(s, path.toString)
         .agg(count(lit(1)).as("n"),
           max(col("n_copies")).as("mc"), max(col("n_payloads")).as("mp"))
         .collect()(0)
@@ -2164,7 +2163,7 @@ object PipelineQueries {
         s"audit must localize the replay as bit-identical pairs, got $damage")
       val repaired = graft.operators.TmpWorkspaces
         .pidScoped("graft_bm25idx_q156r_", dir)
-      Retrieval.bm25CompactIndex(s, path.toString, repaired.toString)
+      IndexLayout.Bm25.compact(s, path.toString, repaired.toString)
       Retrieval.bm25TopKIndexed(s, repaired.toString,
           docs.filter(col("doc_id") < 8), k = 10)
         .orderBy(col("query_id"), col("rnk"))
@@ -2977,10 +2976,10 @@ object PipelineQueries {
         snapshot.filter(col("doc_id") % 2 === c).coalesce(1)
           .write.mode("append").parquet(inPath.toString)
       }
-      graft.streaming.IndexIngest.ingestExactFingerprints(
+      IndexIngest.drain(IndexIngest.start(
         s.readStream.schema(snapshot.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inPath.toString),
-        idxPath.toString, "doc_id", "text")
+          .option("maxFilesPerTrigger", 1).parquet(inPath.toString), None)(
+        IndexIngest.exactBatch(idxPath.toString, "doc_id", "text")))
       Dedup.exactClustersIndexed(s, idxPath.toString, snapshot,
           "doc_id", "text")
         .orderBy(col("fingerprint"))
@@ -3108,7 +3107,7 @@ object PipelineQueries {
     * Structured Streaming file source in two single-file micro-batches
     * (`maxFilesPerTrigger = 1`), each batch assigned against the
     * FROZEN centroid family and appended as one generation via
-    * `foreachBatch` ([[graft.streaming.IndexIngest.ingestIvfVectors]]).
+    * `foreachBatch` ([[graft.streaming.IndexIngest.ivfBatch]]).
     * The served top-3 must then HASH-EQUAL the fresh-build-on-union
     * oracle ([[ivfIndexOracleSql]], shared verbatim with q134/q137) —
     * batch boundaries CANNOT move the result, because per-vector
@@ -3137,10 +3136,10 @@ object PipelineQueries {
         delta.filter(p).coalesce(1)
           .write.mode("append").parquet(inPath.toString)
       }
-      graft.streaming.IndexIngest.ingestIvfVectors(
+      IndexIngest.drain(IndexIngest.start(
         s.readStream.schema(delta.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inPath.toString),
-        path.toString, centroids)
+          .option("maxFilesPerTrigger", 1).parquet(inPath.toString), None)(
+        IndexIngest.ivfBatch(path.toString, centroids, "vec_id", "embedding")))
       Similarity.ivfTopKIndexed(s, path.toString, centroids,
           emb.filter(col("vec_id") < 10).select(col("vec_id"), col("embedding")),
           k = 3, nprobe = 2)
@@ -3274,10 +3273,11 @@ object PipelineQueries {
                 snapDocs.filter(p).coalesce(1)
                   .write.mode("append").parquet(inPath.toString)
               }
-            graft.streaming.IndexIngest.ingestExactFingerprints(
+            IndexIngest.drain(IndexIngest.start(
               s.readStream.schema(snapDocs.schema)
                 .option("maxFilesPerTrigger", 1).parquet(inPath.toString),
-              fpPath.toString, "doc_id", "text")
+              None)(
+              IndexIngest.exactBatch(fpPath.toString, "doc_id", "text")))
             exactKept = snapDocs
               .withColumn("fingerprint", md5(TextOps.normalize(col("text"))))
               .join(Dedup.exactClustersIndexed(s, fpPath.toString, snapDocs,
@@ -3352,7 +3352,7 @@ object PipelineQueries {
   }
 
   /** STREAMING day-2 ingest into the written BM25 index
-    * ([[graft.streaming.IndexIngest.startBm25]]) — the LEXICAL member
+    * ([[graft.streaming.IndexIngest.bm25Batch]]) — the LEXICAL member
     * closing the streaming ingest loop at 3/3 index modalities
     * (fingerprint q171, vector q174, lexical here): the snapshot
     * third arrives as a file source in two single-file micro-batches,
@@ -3380,32 +3380,31 @@ object PipelineQueries {
         snapshot.filter(p).coalesce(1)
           .write.mode("append").parquet(inPath.toString)
       }
-      graft.streaming.IndexIngest.ingestBm25Docs(
+      IndexIngest.drain(IndexIngest.start(
         s.readStream.schema(snapshot.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inPath.toString),
-        path.toString)
+          .option("maxFilesPerTrigger", 1).parquet(inPath.toString), None)(
+        IndexIngest.bm25Batch(path.toString, "doc_id", "text")))
       Retrieval.bm25TopKIndexed(s, path.toString,
           docs.filter(col("doc_id") < 8), k = 10)
         .orderBy(col("query_id"), col("rnk"))
     },
     Some(bm25Top10OracleSql))
 
-  /** The semantic index REPAIR path ([[graft.operators.Clustering
-    * .semanticAuditIndex]] / [[graft.operators.Clustering
-    * .semanticCompactIndex]]) — the cluster-layout member closing the
-    * audit/repair family at 4/4 (exact, lexical q156, PQ q151,
-    * semantic here): q173's lifecycle with the exactly-once failure
-    * INJECTED (the snapshot append runs twice — a blind retry), so
-    * every snapshot member row sits in its cluster directory twice,
+  /** The semantic index REPAIR path
+    * (`IndexLayout.semantic(idCol).audit` /
+    * `IndexLayout.semantic(idCol).compact`) — the cluster-layout member
+    * closing the audit/repair family at 4/4 (exact, lexical q156, PQ
+    * q151, semantic here): q173's lifecycle with the exactly-once
+    * failure INJECTED (the snapshot append runs twice — a blind retry),
+    * so every snapshot member row sits in its cluster directory twice,
     * inflating union sizes toward the probe cap and double-counting
-    * drift shares. The audit must localize EXACTLY the replayed
-    * members (asserted in the closure: bit-identical copies, no
-    * payload divergence), compaction stage-and-swaps the deduped rows
-    * into a fresh cid-partitioned layout, and the incremental SemDeDup
-    * probe over THAT must hash-equal the clean fresh-union oracle
-    * (shared with q173 verbatim) — a missed duplicate, a dropped
-    * legitimate member, or a verdict moved by the inflated sizes all
-    * hash-fail.
+    * drift shares. The audit must localize EXACTLY the replayed members
+    * (asserted in the closure: bit-identical copies, no payload
+    * divergence), compaction stage-and-swaps the deduped rows into a
+    * fresh cid-partitioned layout, and the incremental SemDeDup probe
+    * over THAT must hash-equal the clean fresh-union oracle (shared
+    * with q173 verbatim) — a missed duplicate, a dropped legitimate
+    * member, or a verdict moved by the inflated sizes all hash-fail.
     */
   val q178SemanticRepair: QueryDef = QueryDef(
     "q178_semantic_repair",
@@ -3418,7 +3417,7 @@ object PipelineQueries {
       Clustering.semanticAppendIndex(snap, path, gen = 1)
       // the injected failure: a blind retry replays the same append
       Clustering.semanticAppendIndex(snap, path, gen = 1)
-      val damage = Clustering.semanticAuditIndex(s, path)
+      val damage = IndexLayout.semantic("vec_id").audit(s, path)
         .agg(count(lit(1)).as("n"),
           max(col("n_copies")).as("mc"), max(col("n_payloads")).as("mp"))
         .collect()(0)
@@ -3427,14 +3426,14 @@ object PipelineQueries {
         s"audit must localize the replay as bit-identical pairs, got $damage")
       val repaired = graft.operators.TmpWorkspaces
         .pidScoped("graft_semidx_q178r_", dir)
-      Clustering.semanticCompactIndex(s, path, repaired.toString)
+      IndexLayout.semantic("vec_id").compact(s, path, repaired.toString)
       Clustering.semDedupIndexed(s, repaired.toString, snap, threshold = 0.3)
         .orderBy(col("cid"), col("vec_id"))
     },
     Some(semanticIncrementalOracleSql))
 
   /** STREAMING day-2 ingest into the written SEMANTIC index
-    * ([[graft.streaming.IndexIngest.startSemantic]]) — the fourth and
+    * ([[graft.streaming.IndexIngest.semanticBatch]]) — the fourth and
     * final written index family on the streaming ingest loop
     * (fingerprint q171, vector q174, lexical q177, semantic here):
     * the snapshot quarter arrives as a file source in two single-file
@@ -3460,10 +3459,11 @@ object PipelineQueries {
         delta.filter(p).coalesce(1)
           .write.mode("append").parquet(inPath.toString)
       }
-      graft.streaming.IndexIngest.ingestSemanticVectors(
+      IndexIngest.drain(IndexIngest.start(
         s.readStream.schema(delta.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inPath.toString),
-        path, cent)
+          .option("maxFilesPerTrigger", 1).parquet(inPath.toString), None)(
+        IndexIngest.semanticBatch(path, cent, "vec_id", "embedding",
+          startGen = 1)))
       Clustering.semDedupIndexed(s, path,
           Clustering.assignL2(delta, cent), threshold = 0.3)
         .orderBy(col("cid"), col("vec_id"))
@@ -3482,7 +3482,7 @@ object PipelineQueries {
     * ([[graft.streaming.IndexIngest.exactBatch]], the function the
     * running stream itself executes) under their original batchIds.
     * The batchId-keyed commit ledger must skip both replays, so (a)
-    * the replay audit ([[graft.operators.Dedup.exactAuditIndex]]) is
+    * the replay audit (`IndexLayout.Exact.audit`) is
     * EMPTY — emitted as the `n_replay_dups` scalar, which the oracle
     * pins to 0 — and (b) the served probe still hash-equals the same
     * fresh-union oracle as q171 (a replay that landed would double
@@ -3507,20 +3507,20 @@ object PipelineQueries {
         snapshot.filter(col("doc_id") % 2 === c).coalesce(1)
           .write.mode("append").parquet(inPath.toString)
       }
-      graft.streaming.IndexIngest.ingestExactFingerprints(
+      IndexIngest.drain(IndexIngest.start(
         s.readStream.schema(snapshot.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inPath.toString),
-        idxPath.toString, "doc_id", "text")
+          .option("maxFilesPerTrigger", 1).parquet(inPath.toString), None)(
+        IndexIngest.exactBatch(idxPath.toString, "doc_id", "text")))
       // the sink retry: re-deliver both batches under their original
       // (epoch, batchId) keys through the sink's own body — the
       // ledger must skip them (any execution doubles cluster sizes
       // and the audit scalar → hash-fail)
       (0 until 2).foreach { c =>
-        graft.streaming.IndexIngest.exactBatch(
+        IndexIngest.exactBatch(
           idxPath.toString, "doc_id", "text")(
           snapshot.filter(col("doc_id") % 2 === c), c.toLong)
       }
-      val audit = Dedup.exactAuditIndex(s, idxPath.toString)
+      val audit = IndexLayout.Exact.audit(s, idxPath.toString)
         .agg(count(lit(1)).as("n_replay_dups"))
       Dedup.exactClustersIndexed(s, idxPath.toString, snapshot,
           "doc_id", "text")
@@ -3751,9 +3751,9 @@ object PipelineQueries {
     * asset index — the repair family's non-text member (IVF-PQ q151,
     * BM25 q156, semantic q178, mixture q192): the snapshot quarter is
     * appended TWICE (the ledger-less retry the exactly-once contract
-    * warns about), [[graft.operators.Multimodal.assetAuditIndex]]
+    * warns about), `IndexLayout.Asset.audit`
     * localizes exactly the doubled ids, and
-    * [[graft.operators.Multimodal.assetCompactIndex]] rewrites the
+    * `IndexLayout.Asset.compact` rewrites the
     * fingerprint rows (id + hash only — NO payload bytes re-read: the
     * 100 TB media-repair argument) to a staged path whose probe must
     * hash-equal the clean fresh-corpus oracle. Two damage scalars ride
@@ -3776,12 +3776,12 @@ object PipelineQueries {
       val snapshot = assets.filter(col("asset_id") % 4 === 3)
       Multimodal.assetAppendIndex(snapshot, path.toString)
       Multimodal.assetAppendIndex(snapshot, path.toString) // the blind retry
-      val damaged = Multimodal.assetAuditIndex(s, path.toString)
+      val damaged = IndexLayout.Asset.audit(s, path.toString)
         .agg(count(lit(1)).as("n_damaged"))
       val repaired = graft.operators.TmpWorkspaces
         .pidScoped("graft_assetidx_q198r_", dir)
-      Multimodal.assetCompactIndex(s, path.toString, repaired.toString)
-      val after = Multimodal.assetAuditIndex(s, repaired.toString)
+      IndexLayout.Asset.compact(s, path.toString, repaired.toString)
+      val after = IndexLayout.Asset.audit(s, repaired.toString)
         .agg(count(lit(1)).as("n_after"))
       Multimodal.assetDedupIndexed(s, repaired.toString, snapshot)
         .crossJoin(broadcast(damaged)).crossJoin(broadcast(after))
@@ -3831,10 +3831,10 @@ object PipelineQueries {
       // two micro-batches, sized from one FS metadata listing of the
       // landing dir — no Spark count() action in the gate body
       val half = Multimodal.dirFileCount(s, deltaDir.toString) / 2 + 1
-      graft.streaming.IndexIngest.ingestAssets(
+      IndexIngest.drain(IndexIngest.start(
         Multimodal.streamBinaryDir(s, deltaDir.toString,
-          maxFilesPerTrigger = half),
-        path.toString)
+          maxFilesPerTrigger = half), None)(
+        IndexIngest.assetBatch(path.toString)))
       Multimodal.assetDedupIndexed(s, path.toString, snapshot)
         .orderBy(col("fingerprint"))
     },
@@ -3953,10 +3953,10 @@ object PipelineQueries {
       val snapDocs = docs.filter(col("doc_id") % 4 === 3)
       Multimodal.writeAssets(snapDocs, "doc_id", "text", deltaDir.toString)
       val half = Multimodal.dirFileCount(s, deltaDir.toString) / 2 + 1
-      graft.streaming.IndexIngest.ingestAssetSemantic(
+      IndexIngest.drain(IndexIngest.start(
         Multimodal.streamBinaryDir(s, deltaDir.toString,
-          maxFilesPerTrigger = half),
-        path.toString, cents)
+          maxFilesPerTrigger = half), None)(
+        IndexIngest.assetSemanticBatch(path.toString, cents, startGen = 1)))
       val snap = Clustering.assignL2(
         feats.filter(col("vec_id") % 4 === 3), cents).localCheckpoint()
       Clustering.semDedupIndexed(s, path.toString, snap, threshold = 0.999)
@@ -4229,10 +4229,10 @@ object PipelineQueries {
       Multimodal.writeAssets(docs.filter(col("doc_id") % 4 === 1),
         "doc_id", "text", deltaDir.toString)
       val half = Multimodal.dirFileCount(s, deltaDir.toString) / 2 + 1
-      graft.streaming.IndexIngest.ingestFrames(
+      IndexIngest.drain(IndexIngest.start(
         Multimodal.streamBinaryDir(s, deltaDir.toString,
-          maxFilesPerTrigger = half),
-        path.toString, frameBytes = 64)
+          maxFilesPerTrigger = half), None)(
+        IndexIngest.frameBatch(path.toString, frameBytes = 64)))
       Multimodal.frameDedupIndexed(s, path.toString, snapshot,
           frameBytes = 64)
         .orderBy(col("asset_id"))
@@ -4253,7 +4253,7 @@ object PipelineQueries {
     * two thirds appended), each adding one parquet file per touched
     * term shard to `postings/` AND `terms/` plus one stats row file —
     * the per-micro-batch growth a standing ingest pays — then
-    * [[graft.operators.Retrieval.bm25CompactIndex]] collapses the
+    * `IndexLayout.Bm25.compact` collapses the
     * layout to one file per live shard. BOTH counts are first-class
     * output columns and the oracle RE-DERIVES them from the data
     * (files per generation = 2 × distinct md5-prefix shards of the
@@ -4283,7 +4283,7 @@ object PipelineQueries {
       val before = IndexStats.dataFileCount(s, path.toString)
       val compacted = graft.operators.TmpWorkspaces
         .pidScoped("graft_bm25idx_q205c_", dir)
-      Retrieval.bm25CompactIndex(s, path.toString, compacted.toString)
+      IndexLayout.Bm25.compact(s, path.toString, compacted.toString)
       val after = IndexStats.dataFileCount(s, compacted.toString)
       Retrieval.bm25TopKIndexed(s, compacted.toString,
           docs.filter(col("doc_id") < 8), k = 10)
@@ -4313,7 +4313,7 @@ object PipelineQueries {
     * whose per-document arrival files make file counts THE scale
     * ceiling): base + two appended generations each add one file per
     * touched fingerprint shard,
-    * [[graft.operators.Multimodal.assetCompactIndex]] collapses to
+    * `IndexLayout.Asset.compact` collapses to
     * one file per live shard, the counts ride every row, and the
     * compacted index must serve the exact q194 snapshot clustering.
     */
@@ -4339,7 +4339,7 @@ object PipelineQueries {
       val before = IndexStats.dataFileCount(s, path.toString)
       val compacted = graft.operators.TmpWorkspaces
         .pidScoped("graft_assetidx_q206c_", dir)
-      Multimodal.assetCompactIndex(s, path.toString, compacted.toString)
+      IndexLayout.Asset.compact(s, path.toString, compacted.toString)
       val after = IndexStats.dataFileCount(s, compacted.toString)
       Multimodal.assetDedupIndexed(s, compacted.toString, snapshot)
         .withColumn("n_files_before", lit(before))
@@ -4375,7 +4375,7 @@ object PipelineQueries {
     * the columnar read, the delta quarter lands as packed files and
     * STREAMS through the same batchId-keyed commit ledger
     * ([[graft.operators.Multimodal.streamPackedDir]] →
-    * [[graft.streaming.IndexIngest.startAssets]], two micro-batches),
+    * [[graft.streaming.IndexIngest.assetBatch]], two micro-batches),
     * and the standing probe must hash-equal the SAME fresh
     * whole-corpus oracle as q194/q199 — the layout change moves file
     * counts (O(corpus/fileSize) opens instead of O(corpus) — the
@@ -4406,10 +4406,10 @@ object PipelineQueries {
         .pidScoped("graft_assetidx_q207_", dir)
       Multimodal.assetWriteIndex(
         Multimodal.readPackedAssets(s, basePacked.toString), path.toString)
-      graft.streaming.IndexIngest.ingestAssets(
+      IndexIngest.drain(IndexIngest.start(
         Multimodal.streamPackedDir(s, deltaPacked.toString,
-          maxFilesPerTrigger = 2),
-        path.toString)
+          maxFilesPerTrigger = 2), None)(
+        IndexIngest.assetBatch(path.toString)))
       Multimodal.assetDedupIndexed(s, path.toString,
           Multimodal.readPackedAssets(s, deltaPacked.toString))
         .orderBy(col("fingerprint"))
@@ -4711,10 +4711,10 @@ object PipelineQueries {
     * granularity (IVF-PQ q151, BM25 q156, semantic q178, mixture
     * q192, assets q198): the snapshot quarter's frames are appended
     * TWICE (the ledger-less blind retry),
-    * [[graft.operators.Multimodal.frameAuditIndex]] localizes exactly
+    * `IndexLayout.Frame.audit` localizes exactly
     * the doubled coordinates (asserted bit-identical in the closure —
     * no payload divergence), and
-    * [[graft.operators.Multimodal.frameCompactIndex]] rewrites the
+    * `IndexLayout.Frame.compact` rewrites the
     * fingerprint rows (coordinates + 32 hex chars — NO payload bytes
     * re-read: the media-repair argument is ×frames-per-asset sharper
     * here) to a staged path whose novelty probe must hash-equal the
@@ -4737,12 +4737,12 @@ object PipelineQueries {
       val snapshot = assets.filter(col("asset_id") % 4 === 1)
       Multimodal.frameAppendIndex(snapshot, path.toString, frameBytes = 64)
       Multimodal.frameAppendIndex(snapshot, path.toString, frameBytes = 64)
-      val damaged = Multimodal.frameAuditIndex(s, path.toString)
+      val damaged = IndexLayout.Frame.audit(s, path.toString)
         .agg(count(lit(1)).as("n_damaged"))
       val repaired = graft.operators.TmpWorkspaces
         .pidScoped("graft_frameidx_q211r_", dir)
-      Multimodal.frameCompactIndex(s, path.toString, repaired.toString)
-      val after = Multimodal.frameAuditIndex(s, repaired.toString)
+      IndexLayout.Frame.compact(s, path.toString, repaired.toString)
+      val after = IndexLayout.Frame.audit(s, repaired.toString)
         .agg(count(lit(1)).as("n_after"))
       Multimodal.frameDedupIndexed(s, repaired.toString, snapshot,
           frameBytes = 64)
@@ -4816,11 +4816,11 @@ object PipelineQueries {
         .pidScoped("graft_packed_in_q212_", dir)
       val snapshot = assets.filter(col("asset_id") % 4 === 3)
       Multimodal.packAssets(snapshot, landing.toString, nFiles = 4)
-      graft.streaming.IndexIngest.ingestFrameSimhash(
+      IndexIngest.drain(IndexIngest.start(
         Multimodal.streamPackedDir(s, landing.toString,
-          maxFilesPerTrigger = 2),
-        path.toString, frameBytes = 64,
-        blockOf = assets.select(col("asset_id"), col("source")))
+          maxFilesPerTrigger = 2), None)(
+        IndexIngest.frameSimhashBatch(path.toString, frameBytes = 64,
+          blockOf = assets.select(col("asset_id"), col("source")))))
       Multimodal.frameSimhashPairsIndexed(s, path.toString, snapshot,
           frameBytes = 64)
         .orderBy(col("blk"), col("asset_a"), col("frame_a"),
@@ -4869,13 +4869,13 @@ object PipelineQueries {
     * of every written-index layout (IVF-PQ q151, BM25 q156, semantic
     * q178, mixture q192, assets q198, frames q211, bands HERE): the
     * snapshot quarter's band rows are appended TWICE (the ledger-less
-    * blind retry), [[graft.operators.Multimodal.frameSimhashAuditIndex]]
+    * blind retry), `IndexLayout.FrameSimhash.audit`
     * localizes exactly the doubled (asset, frame, band) coordinates —
     * band-row duplication is NOT harmless even though the pair tail
     * distincts: raw bucket counts inflate toward `maxBucketSize`, so
     * a doubled viral bucket can spuriously cross the cap and DROP
     * true pairs — and
-    * [[graft.operators.Multimodal.frameSimhashCompactIndex]] rewrites
+    * `IndexLayout.FrameSimhash.compact` rewrites
     * the ~40-byte band rows (whole-row dedup, payload divergence
     * refused; payload bytes never re-read) to a staged path whose
     * pair probe must hash-equal q208's fresh whole-corpus oracle.
@@ -4901,13 +4901,13 @@ object PipelineQueries {
         frameBytes = 64)
       Multimodal.frameSimhashAppendIndex(snapshot, path.toString,
         frameBytes = 64)
-      val damaged = Multimodal.frameSimhashAuditIndex(s, path.toString)
+      val damaged = IndexLayout.FrameSimhash.audit(s, path.toString)
         .agg(count(lit(1)).as("n_damaged"))
       val repaired = graft.operators.TmpWorkspaces
         .pidScoped("graft_frsim_q213r_", dir)
-      Multimodal.frameSimhashCompactIndex(s, path.toString,
+      IndexLayout.FrameSimhash.compact(s, path.toString,
         repaired.toString)
-      val after = Multimodal.frameSimhashAuditIndex(s, repaired.toString)
+      val after = IndexLayout.FrameSimhash.audit(s, repaired.toString)
         .agg(count(lit(1)).as("n_after"))
       Multimodal.frameSimhashPairsIndexed(s, repaired.toString, snapshot,
           frameBytes = 64)
@@ -5050,10 +5050,10 @@ object PipelineQueries {
         .pidScoped("graft_packed_in_q215_", dir)
       Multimodal.packAssets(assets.filter(col("asset_id") % 4 === 3),
         landing.toString, nFiles = 4)
-      graft.streaming.IndexIngest.ingestAssetManifest(
+      IndexIngest.drain(IndexIngest.start(
         Multimodal.streamPackedDir(s, landing.toString,
-          maxFilesPerTrigger = 2),
-        path.toString)
+          maxFilesPerTrigger = 2), None)(
+        IndexIngest.assetManifestBatch(path.toString)))
       Multimodal.assetManifestServe(s, path.toString)
         .orderBy(col("shard"))
     },
@@ -5078,7 +5078,7 @@ object PipelineQueries {
 
   /** STREAMING day-2 form of the q202 flagship: the snapshot quarter
     * arrives PACKED in two micro-batches, and ONE standing pipeline
-    * ([[graft.streaming.IndexIngest.startMedia]]) feeds all three
+    * ([[graft.streaming.IndexIngest.mediaBatch]]) feeds all three
     * asset-side indexes per batch — exact payload hash, frozen-
     * centroid featurized near-dup, frame fingerprints — with the
     * batch localCheckpoint'ed so payload bytes are read once per
@@ -5128,11 +5128,11 @@ object PipelineQueries {
           frameBytes = 64),
         () => Multimodal.packAssets(snap, landing.toString, nFiles = 4))
       // day-2: ONE stream maintains all three
-      graft.streaming.IndexIngest.ingestMedia(
+      IndexIngest.drain(IndexIngest.start(
         Multimodal.streamPackedDir(s, landing.toString,
-          maxFilesPerTrigger = 2),
-        fpPath.toString, semPath.toString, frPath.toString, cents,
-        frameBytes = 64)
+          maxFilesPerTrigger = 2), None)(
+        IndexIngest.mediaBatch(fpPath.toString, semPath.toString,
+          frPath.toString, cents, frameBytes = 64)))
       // consistency scalar: every delivery landed in all three members
       val inconsistent = graft.streaming.IndexIngest
         .mediaConsistencyAudit(s, fpPath.toString, semPath.toString,
@@ -5176,7 +5176,7 @@ object PipelineQueries {
     * ([[graft.operators.IndexPaths]]) — q156's replay-damage lifecycle
     * with the repair CUT OVER IN PLACE instead of handed to the
     * caller as a second path: the blind-retry damage lands, the audit
-    * localizes it, and [[graft.operators.Retrieval.bm25CompactSwap]]
+    * localizes it, and `IndexLayout.Bm25.compactSwap`
     * compacts into `<root>/_gens/gen-000001` and atomically repoints
     * `<root>/_current` — after which serving THROUGH THE ORIGINAL
     * ROOT (the path a standing service configured once) resolves the
@@ -5198,17 +5198,17 @@ object PipelineQueries {
       Retrieval.bm25AppendIndex(deltaA, root.toString)
       // the injected failure: a blind retry replays the same append
       Retrieval.bm25AppendIndex(deltaA, root.toString)
-      require(!Retrieval.bm25AuditIndex(s, root.toString).isEmpty,
+      require(!IndexLayout.Bm25.audit(s, root.toString).isEmpty,
         "the replay damage must be visible before the repair")
       // ONLINE repair: compact + atomic pointer cutover, same root
-      val gen = Retrieval.bm25CompactSwap(s, root.toString)
+      val gen = IndexLayout.Bm25.compactSwap(s, root.toString)
       require(graft.operators.IndexPaths.resolve(s, root.toString) == gen,
         s"the pointer must resolve to the repaired generation $gen")
       // day-2 continues THROUGH the root: the append must land in the
       // live generation, not the stale flat layout
       Retrieval.bm25AppendIndex(docs.filter(col("doc_id") % 3 === 0),
         root.toString)
-      require(Retrieval.bm25AuditIndex(s, root.toString).isEmpty,
+      require(IndexLayout.Bm25.audit(s, root.toString).isEmpty,
         "the repaired+appended layout must audit clean")
       Retrieval.bm25TopKIndexed(s, root.toString,
           docs.filter(col("doc_id") < 8), k = 10)
@@ -5219,7 +5219,7 @@ object PipelineQueries {
   /** AUTO-COMPACTION in the standing ingest loop — the op that ACTS
     * on q205's read-amplification measurement: q177's streaming BM25
     * ingest with the opt-in post-commit hook armed
-    * ([[graft.streaming.IndexIngest.startBm25]] `maxDataFiles` →
+    * ([[graft.streaming.IndexIngest.bm25Batch]] `maxDataFiles` →
     * [[graft.operators.IndexPaths.maybeCompact]]), a threshold set
     * just above the base build's file floor so the growing per-batch
     * generations CROSS it mid-stream: the hook compact-swaps behind
@@ -5255,10 +5255,12 @@ object PipelineQueries {
       val fresh = graft.operators.TmpWorkspaces
         .pidScoped("graft_bm25idx_q218f_", dir)
       graft.operators.Parallelism.inParallel(
-        () => graft.streaming.IndexIngest.ingestBm25Docs(
+        () => IndexIngest.drain(IndexIngest.start(
           s.readStream.schema(snapshot.schema)
             .option("maxFilesPerTrigger", 1).parquet(inPath.toString),
-          root.toString, maxDataFiles = Some(floor + 2)),
+          None)(
+          IndexIngest.bm25Batch(root.toString, "doc_id", "text",
+            maxDataFiles = Some(floor + 2)))),
         () => Retrieval.bm25WriteIndex(docs, fresh.toString))
       require(graft.operators.IndexPaths
           .currentGeneration(s, root.toString).nonEmpty,

@@ -1,19 +1,46 @@
 package graft.streaming
 
+import graft.operators.{Clustering, Curation, Dedup, IndexLayout, IndexPaths, IndexShards, Multimodal, Parallelism, Retrieval, Similarity}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Streaming DAY-2 ingest into the written dedup-index family: each
-  * micro-batch of newly-arrived documents appends ONE GENERATION of
-  * fingerprints to a written exact-dedup index
-  * ([[graft.operators.Dedup.exactAppendIndex]]) — the q160 append
-  * contract mapped onto Structured Streaming's unit of progress, so
-  * the standing curation pipeline's ingest loop is an actual streaming
-  * sink, not a scheduled batch job. `foreachBatch` is the idiomatic
-  * shape (the [[UpsertSink]]/[[FanOut]] precedent): the batch frame is
-  * a normal DataFrame, so the append is the SAME code the batch path
-  * runs, and the probe serving afterwards is unchanged.
+/** Streaming DAY-2 ingest into the written index families: each
+  * micro-batch of newly-arrived rows appends ONE GENERATION to a
+  * written index — the batch append contract mapped onto Structured
+  * Streaming's unit of progress, so a standing pipeline's ingest loop
+  * is an actual streaming sink, not a scheduled batch job.
+  * `foreachBatch` is the idiomatic shape (the [[UpsertSink]]/[[FanOut]]
+  * precedent): the batch frame is a normal DataFrame, so the append is
+  * the SAME code the batch path runs, and the probe serving afterwards
+  * is unchanged. Every member is a per-batch body (`*Batch`) — shared
+  * verbatim by the sink and by the replay gates, so a replay exercises
+  * the REAL commit path — run by the one [[start]] and bounded by the
+  * one [[drain]].
+  *
+  * {{{
+  *   member          per-batch body        IndexLayout            gate
+  *   exact           exactBatch            Exact                  q171, q193
+  *   ivf             ivfBatch              (Similarity IVF)       q174
+  *   bm25            bm25Batch             Bm25                   q177, q218
+  *   semantic        semanticBatch         semantic(idCol)        q180
+  *   winnow          winnowBatch           Winnow                 q191
+  *   mixture         mixtureBatch          mixture(stratum, key)  q185
+  *   asset           assetBatch            Asset                  q199, q207
+  *   asset_semantic  assetSemanticBatch    semantic("vec_id")     q201
+  *   frame           frameBatch            Frame                  q204
+  *   frame_simhash   frameSimhashBatch     FrameSimhash           q212
+  *   manifest        assetManifestBatch    Manifest               q215
+  *   (media)         mediaBatch            Asset + semantic       q216
+  *                                         + Frame
+  * }}}
+  *
+  * Batch boundaries cannot move a served result: rows are per-item
+  * facts (a vector's frozen-centroid assignment, a document's tf/dl, a
+  * payload's frames) or ADDITIVE per-generation contributions (BM25 df
+  * and corpus scalars, mixture masses, manifest counts and XOR
+  * checksums), and every probe reads the union — each gate checks the
+  * streamed index against its batch twin's fresh whole-corpus oracle.
   *
   * Delivery contract — EXACTLY-ONCE ACROSS SINK RETRIES (the
   * reference's `StreamingFileSink` commits atomically per checkpoint,
@@ -30,15 +57,17 @@ import org.apache.spark.sql.Row
   * retry purges the crashed attempt's staged and half-published files
   * before publishing its own, so sequential crash-retry lands every
   * generation exactly once with no audit damage. Two caller
-  * obligations remain, both documented per member: (1) restarts must
-  * reuse the run's `checkpointLocation` (pass it to `start*`) —
-  * restarting WITHOUT one re-delivers data under fresh batchIds,
-  * which the ledger cannot distinguish from new data (that damage is
-  * what the audit/compact pair localizes and repairs); (2) a NEW
-  * logical backfill onto the same index must pass a new `epoch`
-  * (markers are keyed (member, epoch, batchId); temp-checkpoint runs
-  * restart batchIds at 0, so reusing an epoch would silently skip
-  * the new run's batches).
+  * obligations remain: (1) restarts must reuse the run's
+  * `checkpointLocation` (pass it to [[start]]) — restarting WITHOUT
+  * one re-delivers data under fresh batchIds, which the ledger cannot
+  * distinguish from new data (that damage is what the layout's
+  * audit/compact pair localizes and repairs); (2) a NEW logical
+  * backfill onto the same index must pass a new `epoch` (markers are
+  * keyed (member, epoch, batchId); temp-checkpoint runs restart
+  * batchIds at 0, so reusing an epoch would silently skip the new
+  * run's batches). Members that append documents (exact, bm25,
+  * winnow, mixture) also need NEW ids: a document re-sent under a new
+  * batch doubles its rows.
   */
 object IndexIngest {
 
@@ -46,9 +75,8 @@ object IndexIngest {
 
   /** Where a delivery stages its generation before publishing. */
   private[graft] def stagingPath(indexPath: String, member: String,
-      epoch: String, batchId: Long): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      s"$indexPath/_tmp/$member-$epoch-$batchId")
+      epoch: String, batchId: Long): Path =
+    new Path(s"$indexPath/_tmp/$member-$epoch-$batchId")
 
   /** The deterministic live-file prefix of one generation's files —
     * what makes a retry able to PURGE a crashed attempt's partial
@@ -60,9 +88,8 @@ object IndexIngest {
     s"gen-$member-$epoch-$batchId-"
 
   private def markerPath(indexPath: String, member: String,
-      epoch: String, batchId: Long): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      s"$indexPath/_ingest_commits/$member/epoch=$epoch/batch-$batchId")
+      epoch: String, batchId: Long): Path =
+    new Path(s"$indexPath/_ingest_commits/$member/epoch=$epoch/batch-$batchId")
 
   /** The publish claim for (member, epoch, batchId) — created
     * atomically BEFORE any live-tree mutation, so of two concurrent
@@ -72,9 +99,8 @@ object IndexIngest {
     * predecessor by atomically replacing the claim with its id.
     */
   private[graft] def claimPath(indexPath: String, member: String,
-      epoch: String, batchId: Long): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      s"$indexPath/_ingest_claims/$member/epoch=$epoch/batch-$batchId")
+      epoch: String, batchId: Long): Path =
+    new Path(s"$indexPath/_ingest_claims/$member/epoch=$epoch/batch-$batchId")
 
   /** Create-if-absent write of `content` at `p`; true iff THIS call
     * created the file (the atomic-claim primitive). Atomic where the
@@ -84,8 +110,8 @@ object IndexIngest {
     * degrades to best-effort there — the supersede + read-back in
     * [[committedAppend]] narrows but does not close that window.
     */
-  private def tryCreateFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, content: String): Boolean = {
+  private def tryCreateFile(fs: FileSystem, p: Path,
+      content: String): Boolean = {
     fs.mkdirs(p.getParent)
     try {
       val out = fs.create(p, false)
@@ -93,42 +119,9 @@ object IndexIngest {
       finally out.close()
       true
     } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+      case _: FileAlreadyExistsException => false
       case _: java.io.IOException if fs.exists(p) => false
     }
-  }
-
-  private def readSmall(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Option[String] =
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val tmp = new Array[Byte](256)
-        var n = in.read(tmp)
-        while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-        Some(new String(buf.toByteArray,
-          java.nio.charset.StandardCharsets.UTF_8))
-      } finally in.close()
-    }
-
-  /** Atomically replaces the file at `p` with one containing
-    * `content` — write-to-sibling-temp + FileContext rename with
-    * OVERWRITE (atomic on HDFS and local fs). The supersede primitive:
-    * a retry takes the claim over from its crashed predecessor.
-    */
-  private def atomicReplace(fs: org.apache.hadoop.fs.FileSystem,
-      conf: org.apache.hadoop.conf.Configuration,
-      p: org.apache.hadoop.fs.Path, content: String): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-      s".${p.getName}.replace-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(p),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
   /** Thrown when a publish observes mid-flight that it no longer owns
@@ -157,11 +150,9 @@ object IndexIngest {
     * fence throws [[LostPublishRace]] and leaves the remaining
     * directories untouched.
     */
-  private[graft] def publishStaged(fs: org.apache.hadoop.fs.FileSystem,
-      stagingRoot: org.apache.hadoop.fs.Path,
-      liveRoot: org.apache.hadoop.fs.Path, genKey: String,
+  private[graft] def publishStaged(fs: FileSystem, stagingRoot: Path,
+      liveRoot: Path, genKey: String,
       stillOwned: () => Boolean = () => true): Unit = {
-    import org.apache.hadoop.fs.Path
     val leaves = scala.collection.mutable.ArrayBuffer.empty[(String, Path)]
     def walk(dir: Path, rel: String): Unit =
       fs.listStatus(dir).foreach { st =>
@@ -200,17 +191,14 @@ object IndexIngest {
     * staged copy is invisible to [[publishStaged]] (underscore) and
     * dies with the staging dir.
     */
-  private def seedShardMeta(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      liveRoot: org.apache.hadoop.fs.Path,
-      stagingRoot: org.apache.hadoop.fs.Path): Unit =
+  private def seedShardMeta(spark: SparkSession, fs: FileSystem,
+      liveRoot: Path, stagingRoot: Path): Unit =
     if (fs.exists(liveRoot))
       fs.listStatus(liveRoot).foreach { st =>
         val n = st.getPath.getName
         if (st.isDirectory && !n.startsWith("_") && !n.startsWith("."))
-          graft.operators.IndexShards.mirror(spark,
-            st.getPath.toString,
-            new org.apache.hadoop.fs.Path(stagingRoot, n).toString)
+          IndexShards.mirror(spark, st.getPath.toString,
+            new Path(stagingRoot, n).toString)
       }
 
   /** Batch-commit ledger with STAGE-AND-RENAME generation commits:
@@ -283,8 +271,8 @@ object IndexIngest {
         // plausible; the loser aborts here or at the fence below)
         if (fs.exists(marker)) false
         else {
-          atomicReplace(fs, conf, claim, attemptId)
-          readSmall(fs, claim).contains(attemptId)
+          IndexPaths.atomicWrite(fs, conf, claim, attemptId)
+          IndexPaths.readSmall(fs, claim).contains(attemptId)
         }
       }
       if (!owned) {
@@ -293,25 +281,16 @@ object IndexIngest {
       } else {
         val staging = stagingPath(indexPath, member, epoch, batchId)
         if (fs.exists(staging)) fs.delete(staging, true) // crashed attempt
-        // seed the staging tree with the live layouts' persisted shard
-        // derivations (IndexShards): the staged generation's files are
-        // renamed INTO those layouts, so its writer must shard exactly
-        // as the layout it lands in — a staged append deriving Wide
-        // into a Narrow layout would land rows the layout's pruned
-        // probes never scan
+        // the staged writer must shard exactly as the live layouts its
+        // files are renamed into (a Wide append into a Narrow layout
+        // lands rows the pruned probes never scan)
         seedShardMeta(spark, fs,
-          new org.apache.hadoop.fs.Path(
-            graft.operators.IndexPaths.resolve(spark, indexPath)),
-          staging)
+          new Path(IndexPaths.resolve(spark, indexPath)), staging)
         stage(staging.toString)
         beforePublish()
-        // the fence: marker absent AND the claim still carries this
-        // attempt's id — re-read before the publish and before every
-        // destructive purge inside it (a marker appearing means a
-        // concurrent delivery COMMITTED; purging then would delete
-        // committed data)
-        def fenced(): Boolean =
-          !fs.exists(marker) && readSmall(fs, claim).contains(attemptId)
+        // the fence, re-read before the publish and every purge in it
+        def fenced(): Boolean = !fs.exists(marker) &&
+          IndexPaths.readSmall(fs, claim).contains(attemptId)
         if (!fenced()) {
           fs.delete(staging, true)
           warnLostClaim(member, epoch, batchId)
@@ -332,18 +311,12 @@ object IndexIngest {
             // the in-loop post-commit hook (maybeCompact) is sequential
             // with deliveries, so the ledgered members never hit this.
             publishStaged(fs, staging,
-              new org.apache.hadoop.fs.Path(
-                graft.operators.IndexPaths.resolve(spark, indexPath)),
+              new Path(IndexPaths.resolve(spark, indexPath)),
               generationKey(member, epoch, batchId), fenced _)
             fs.delete(staging, true)
             fs.mkdirs(marker.getParent)
-            // re-check the fence immediately before the marker: a
-            // superseded claim here means a concurrent duplicate took
-            // over and may purge this attempt's files — writing the
-            // marker anyway could record "committed" for a generation
-            // the superseder is about to delete (and whose own publish
-            // may then crash). Aborting instead leaves the superseder
-            // to republish and write the marker itself.
+            // a superseded claim here means a duplicate took over and may
+            // purge this attempt's files: leave the marker to it
             if (!fenced())
               throw new LostPublishRace(
                 s"ownership lost after publish, before the marker")
@@ -352,7 +325,7 @@ object IndexIngest {
               try out.write(Array.emptyByteArray) finally out.close()
               true
             } catch {
-              case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
+              case _: FileAlreadyExistsException =>
                 warnLostRace(member, epoch, batchId); false
               case _: java.io.IOException if fs.exists(marker) =>
                 warnLostRace(member, epoch, batchId); false
@@ -384,526 +357,162 @@ object IndexIngest {
       "AFTER publishing — duplicate rows may be live; run the member's " +
       "audit/compact repair")
 
-  private def withCheckpoint(w: DataStreamWriter[Row],
-      checkpointLocation: Option[String]): DataStreamWriter[Row] =
-    checkpointLocation.fold(w)(w.option("checkpointLocation", _))
-
-  /** The exact-fingerprint member's per-batch body — shared verbatim
-    * by the sink and by q193's replayed-delivery gate, so the replay
-    * exercises the REAL commit path, not a re-implementation.
+  /** Starts the ingest of `stream` through one member's per-batch
+    * body; callers drive the micro-batches. Pass `checkpointLocation`
+    * in production so a restart resumes with stable batchIds.
     */
+  def start(stream: DataFrame, checkpointLocation: Option[String])(
+      batchBody: (DataFrame, Long) => Unit): StreamingQuery = {
+    val w = stream.writeStream.foreachBatch(batchBody)
+    checkpointLocation.fold(w)(w.option("checkpointLocation", _))
+      .outputMode("append")
+      .start()
+  }
+
+  /** Runs a started ingest over all currently-available input, then
+    * stops it — the bounded-backfill form the gates drive.
+    */
+  def drain(q: StreamingQuery): Unit =
+    try q.processAllAvailable()
+    finally q.stop()
+
+  /** One delivery of a compactable member: the ledgered commit under
+    * `layout.member`, then the opt-in auto-compaction
+    * ([[IndexPaths.maybeCompact]]): a LANDED delivery whose live layout
+    * crossed `maxDataFiles` compact-swaps it. It runs after the marker,
+    * sequentially within the delivery, so a swap never interleaves
+    * with a publish.
+    */
+  private def deliver(layout: IndexLayout, path: String, epoch: String,
+      maxDataFiles: Option[Long], batch: DataFrame, batchId: Long)(
+      stage: String => Unit): Unit = {
+    val spark = batch.sparkSession
+    if (committedAppend(spark, path, layout.member, epoch, batchId)(stage))
+      maxDataFiles.foreach { m =>
+        IndexPaths.maybeCompact(spark, path, m)(layout.compactSwap(spark, path))
+      }
+  }
+
+  /** Exact text fingerprints ([[graft.operators.Dedup.exactAppendIndex]]). */
   def exactBatch(path: String, idCol: String, textCol: String,
       epoch: String = "0")(batch: DataFrame, batchId: Long): Unit =
     committedAppend(batch.sparkSession, path, "exact", epoch, batchId) {
-      staged =>
-        graft.operators.Dedup.exactAppendIndex(batch, staged, idCol, textCol)
+      staged => Dedup.exactAppendIndex(batch, staged, idCol, textCol)
     }
 
-  /** Starts the ingest and returns the query — callers drive the
-    * micro-batches (specs force multi-batch delivery this way). Pass
-    * `checkpointLocation` in production so a restart resumes with
-    * stable batchIds (the replay-safety contract above).
+  /** IVF vectors, assigned against the FROZEN centroid family
+    * ([[graft.operators.Similarity.ivfAssign]] — a bounded K-row
+    * centroid collect per batch, the literal-plan contract).
     */
-  def start(docsStream: DataFrame, path: String,
-      idCol: String, textCol: String, epoch: String = "0",
-      checkpointLocation: Option[String] = None): StreamingQuery =
-    withCheckpoint(docsStream.writeStream
-        .foreachBatch(exactBatch(path, idCol, textCol, epoch) _),
-        checkpointLocation)
-      .outputMode("append")
-      .start()
-
-  /** Runs the ingest over all currently-available input, then stops —
-    * the bounded-backfill form the q171 gate drives.
-    */
-  def ingestExactFingerprints(docsStream: DataFrame, path: String,
-      idCol: String, textCol: String, epoch: String = "0"): Unit = {
-    val q = start(docsStream, path, idCol, textCol, epoch)
-    try q.processAllAvailable()
-    finally q.stop()
-  }
-
-  /** IVF member's per-batch body ([[startIvf]] + replay gates). */
   def ivfBatch(path: String, centroids: DataFrame, idCol: String,
       vecCol: String, epoch: String = "0")(
       batch: DataFrame, batchId: Long): Unit =
     committedAppend(batch.sparkSession, path, "ivf", epoch, batchId) {
-      staged =>
-        graft.operators.Similarity.ivfAppendIndex(
-          graft.operators.Similarity.ivfAssign(batch, centroids, idCol, vecCol),
-          staged)
+      staged => Similarity.ivfAppendIndex(
+        Similarity.ivfAssign(batch, centroids, idCol, vecCol), staged)
     }
 
-  /** Vector-side twin of [[start]]: each micro-batch of newly-arrived
-    * embeddings is assigned against the FROZEN centroid family
-    * ([[graft.operators.Similarity.ivfAssign]] — a bounded K-row
-    * centroid collect per batch, the literal-plan contract) and
-    * appended as ONE GENERATION of the written IVF index
-    * ([[graft.operators.Similarity.ivfAppendIndex]]) — the q137 append
-    * contract mapped onto Structured Streaming's unit of progress.
-    * Batch boundaries cannot move results: per-vector assignment is
-    * independent of every other vector, so any micro-batch split of
-    * the delta composes to the same index as the fresh union build
-    * (q174 gates served top-k against the q134/q137 fresh-build
-    * oracle). Delivery contract as [[start]]: replay-safe via the
-    * batchId-keyed commit ledger.
-    */
-  def startIvf(vecStream: DataFrame, path: String, centroids: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      epoch: String = "0",
-      checkpointLocation: Option[String] = None): StreamingQuery =
-    withCheckpoint(vecStream.writeStream
-        .foreachBatch(ivfBatch(path, centroids, idCol, vecCol, epoch) _),
-        checkpointLocation)
-      .outputMode("append")
-      .start()
-
-  /** Runs the vector ingest over all currently-available input, then
-    * stops — the bounded-backfill form the q174 gate drives.
-    */
-  def ingestIvfVectors(vecStream: DataFrame, path: String,
-      centroids: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding", epoch: String = "0"): Unit = {
-    val q = startIvf(vecStream, path, centroids, idCol, vecCol, epoch)
-    try q.processAllAvailable()
-    finally q.stop()
-  }
-
-  /** BM25 member's per-batch body ([[startBm25]] + replay gates).
-    * `maxDataFiles` opts into the post-commit auto-compaction hook
-    * ([[graft.operators.IndexPaths.maybeCompact]]): after a landed
-    * delivery, if the live layout's file count crossed the threshold,
-    * compact-swap it ([[graft.operators.Retrieval.bm25CompactSwap]] —
-    * atomic pointer cutover; the ledger and later appends resolve it).
-    * Runs AFTER the marker, sequentially within the delivery, so the
-    * swap never interleaves with a publish; a replayed/lost delivery
-    * (landed = false) never compacts.
+  /** BM25 postings, df contributions and a stats row
+    * ([[graft.operators.Retrieval.bm25AppendIndex]] — zero base reads;
+    * a replayed batch would otherwise DOUBLE df and the corpus
+    * scalars). `maxDataFiles` opts into the auto-compaction hook.
     */
   def bm25Batch(path: String, idCol: String, textCol: String,
       epoch: String = "0", maxDataFiles: Option[Long] = None)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val landed =
-      committedAppend(batch.sparkSession, path, "bm25", epoch, batchId) {
-        staged =>
-          graft.operators.Retrieval.bm25AppendIndex(batch, staged, idCol,
-            textCol)
-      }
-    if (landed) maxDataFiles.foreach { m =>
-      graft.operators.IndexPaths.maybeCompact(batch.sparkSession, path, m)(
-        graft.operators.Retrieval.bm25CompactSwap(batch.sparkSession, path))
+      batch: DataFrame, batchId: Long): Unit =
+    deliver(IndexLayout.Bm25, path, epoch, maxDataFiles, batch, batchId) {
+      staged => Retrieval.bm25AppendIndex(batch, staged, idCol, textCol)
     }
-  }
 
-  /** Lexical twin of [[start]]/[[startIvf]] — the THIRD index modality
-    * on the streaming ingest loop: each micro-batch of newly-arrived
-    * documents appends ONE GENERATION to a written BM25 index
-    * ([[graft.operators.Retrieval.bm25AppendIndex]] — delta postings,
-    * df contributions, and a stats row; zero base reads). Batch
-    * boundaries cannot move served rankings: tf and dl are per-document
-    * facts computed wholly within their batch, and df / the corpus
-    * scalars are ADDITIVE per-generation contributions summed at serve
-    * time (the r12 layout invariant), so any micro-batch split of the
-    * delta sums to the fresh whole-corpus statistics — q177 gates the
-    * served top-10 against the same q146/q154/q155 fresh-corpus
-    * oracle. Delivery contract as [[start]]: replay-safe via the
-    * batchId-keyed commit ledger (a replayed batch would otherwise
-    * DOUBLE df and the corpus scalars — the doubled-generation damage
-    * [[graft.operators.Retrieval.bm25AuditIndex]] localizes now only
-    * arises from the documented caller-error paths). Same new-ids
-    * contract as the batch append: a stream that re-sends an
-    * already-indexed document under a NEW batch doubles its postings —
-    * feed this sink NEW documents only.
-    */
-  def startBm25(docsStream: DataFrame, path: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      epoch: String = "0",
-      checkpointLocation: Option[String] = None,
-      maxDataFiles: Option[Long] = None): StreamingQuery =
-    withCheckpoint(docsStream.writeStream
-        .foreachBatch(bm25Batch(path, idCol, textCol, epoch,
-          maxDataFiles) _),
-        checkpointLocation)
-      .outputMode("append")
-      .start()
-
-  /** Runs the lexical ingest over all currently-available input, then
-    * stops — the bounded-backfill form the q177 gate drives.
-    */
-  def ingestBm25Docs(docsStream: DataFrame, path: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      epoch: String = "0", maxDataFiles: Option[Long] = None): Unit = {
-    val q = startBm25(docsStream, path, idCol, textCol, epoch,
-      maxDataFiles = maxDataFiles)
-    try q.processAllAvailable()
-    finally q.stop()
-  }
-
-  /** Semantic member's per-batch body ([[startSemantic]] + replay
-    * gates). Generation = startGen + batchId: batchIds are contiguous
-    * from 0 within a run and stable across retries/checkpointed
-    * restarts, so a replayed delivery is SKIPPED by the ledger before
-    * the gen is even derived — the gen-shift divergence a
-    * ledger-less replay could produce (classified as payload
-    * divergence by [[graft.operators.Clustering.semanticAuditIndex]])
-    * now requires the documented caller errors (restart without
-    * checkpoint, epoch reuse).
+  /** Semantic cluster members, assigned against the FROZEN centroid
+    * family ([[graft.operators.Clustering.assignL2]]), generation
+    * startGen + batchId (≥ 1): batchIds are stable across retries and
+    * checkpointed restarts, so the ledger skips a replay before its gen
+    * is derived — a gen-shifted copy (payload divergence to the audit)
+    * needs one of the documented caller errors.
     */
   def semanticBatch(path: String, centroids: DataFrame, idCol: String,
       vecCol: String, startGen: Int, epoch: String = "0",
       maxDataFiles: Option[Long] = None)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val landed =
-      committedAppend(batch.sparkSession, path, "semantic", epoch, batchId) {
-        staged =>
-          graft.operators.Clustering.semanticAppendIndex(
-            graft.operators.Clustering.assignL2(batch, centroids, idCol,
-              vecCol),
-            staged, gen = Math.toIntExact(startGen.toLong + batchId), idCol)
-      }
-    if (landed) maxDataFiles.foreach { m =>
-      graft.operators.IndexPaths.maybeCompact(batch.sparkSession, path, m)(
-        graft.operators.Clustering.semanticCompactSwap(batch.sparkSession,
-          path, idCol))
+      batch: DataFrame, batchId: Long): Unit =
+    deliver(IndexLayout.semantic(idCol), path, epoch, maxDataFiles, batch,
+        batchId) { staged =>
+      Clustering.semanticAppendIndex(
+        Clustering.assignL2(batch, centroids, idCol, vecCol),
+        staged, gen = Math.toIntExact(startGen.toLong + batchId), idCol)
     }
-  }
 
-  /** Semantic-cluster twin of [[startIvf]], completing the streaming
-    * ingest loop over ALL FOUR written index families (exact
-    * fingerprint, IVF, BM25, semantic cluster): each micro-batch of
-    * newly-arrived embeddings is assigned against the FROZEN centroid
-    * family ([[graft.operators.Clustering.assignL2]] — bounded K-row
-    * centroid collect per batch, the literal-plan contract) and
-    * appended as one generation of the written semantic index
-    * ([[graft.operators.Clustering.semanticAppendIndex]]). Generation
-    * numbers advance per batch (`startGen + batchId` — foreachBatch
-    * batch ids are contiguous from 0 within a run), satisfying the
-    * gen > 0 append contract. Batch boundaries cannot move
-    * [[graft.operators.Clustering.semDedupIndexed]] verdicts: per-
-    * vector assignment is independent, generations partition the
-    * delta, and the probe reads their union — q180 gates the standing
-    * probe against the same fresh-union oracle as q173. Delivery
-    * contract as the other members: replay-safe via the batchId-keyed
-    * commit ledger (see [[semanticBatch]] for the gen-stability
-    * argument).
-    */
-  def startSemantic(vecStream: DataFrame, path: String,
-      centroids: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding", startGen: Int = 1,
-      epoch: String = "0",
-      checkpointLocation: Option[String] = None,
-      maxDataFiles: Option[Long] = None): StreamingQuery = {
-    require(startGen > 0, s"append generations start at 1, got $startGen")
-    withCheckpoint(vecStream.writeStream
-        .foreachBatch(
-          semanticBatch(path, centroids, idCol, vecCol, startGen, epoch,
-            maxDataFiles) _),
-        checkpointLocation)
-      .outputMode("append")
-      .start()
-  }
-
-  /** Runs the semantic ingest over all currently-available input, then
-    * stops — the bounded-backfill form the q180 gate drives.
-    */
-  def ingestSemanticVectors(vecStream: DataFrame, path: String,
-      centroids: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding", epoch: String = "0"): Unit = {
-    val q = startSemantic(vecStream, path, centroids, idCol, vecCol,
-      epoch = epoch)
-    try q.processAllAvailable()
-    finally q.stop()
-  }
-
-  /** Winnow member's per-batch body ([[startWinnow]] + replay gates). */
+  /** Winnowing postings ([[graft.operators.Dedup.winnowAppendIndex]]). */
   def winnowBatch(path: String, idCol: String, textCol: String,
       blockCol: String, epoch: String = "0")(
       batch: DataFrame, batchId: Long): Unit =
     committedAppend(batch.sparkSession, path, "winnow", epoch, batchId) {
       staged =>
-        graft.operators.Dedup.winnowAppendIndex(batch, staged, idCol,
-          textCol, blockCol)
+        Dedup.winnowAppendIndex(batch, staged, idCol, textCol, blockCol)
     }
 
-  /** Winnowing twin of [[start]] — the pair-index families' streaming
-    * member alongside the exact-fingerprint one: each micro-batch of
-    * newly-arrived documents appends ONE GENERATION of winnowing
-    * postings ([[graft.operators.Dedup.winnowAppendIndex]] — fingerprints
-    * computed wholly within the batch, shard = h mod 256). Batch
-    * boundaries cannot move pair results: a posting row depends only on
-    * its own document, generations partition the delta, and the probe
-    * ([[graft.operators.Dedup.winnowPairsIndexed]]) reads their union —
-    * q191 gates the standing probe against the same fresh-restricted
-    * oracle as q190. Delivery contract as the other members:
-    * replay-safe via the batchId-keyed commit ledger (a replayed
-    * batch would otherwise double pair multiplicities — what
-    * [[graft.operators.Dedup.winnowAuditIndex]] localizes).
-    */
-  def startWinnow(docsStream: DataFrame, path: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      blockCol: String = "source", epoch: String = "0",
-      checkpointLocation: Option[String] = None): StreamingQuery =
-    withCheckpoint(docsStream.writeStream
-        .foreachBatch(winnowBatch(path, idCol, textCol, blockCol, epoch) _),
-        checkpointLocation)
-      .outputMode("append")
-      .start()
-
-  /** Runs the winnowing ingest over all currently-available input,
-    * then stops — the bounded-backfill form the q191 gate drives.
-    */
-  def ingestWinnowDocs(docsStream: DataFrame, path: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      blockCol: String = "source", epoch: String = "0"): Unit = {
-    val q = startWinnow(docsStream, path, idCol, textCol, blockCol, epoch)
-    try q.processAllAvailable()
-    finally q.stop()
-  }
-
-  /** Mixture member's per-batch body ([[startMixture]] + replay
-    * gates).
+  /** Mixture-manifest payload: each document tokenized ONCE at ingest
+    * ([[graft.operators.Curation.mixtureAppendIndex]]); the standing
+    * manifest is served from stored counts alone
+    * ([[graft.operators.Curation.mixtureServeIndex]]).
     */
   def mixtureBatch(path: String, stratumCol: String, idCol: String,
       textCol: String, epoch: String = "0",
       maxDataFiles: Option[Long] = None)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val landed =
-      committedAppend(batch.sparkSession, path, "mixture", epoch, batchId) {
-        staged =>
-          graft.operators.Curation.mixtureAppendIndex(batch, staged,
-            stratumCol, idCol, textCol)
-      }
-    if (landed) maxDataFiles.foreach { m =>
-      graft.operators.IndexPaths.maybeCompact(batch.sparkSession, path, m)(
-        graft.operators.Curation.mixtureCompactSwap(batch.sparkSession,
-          path, stratumCol, idCol))
+      batch: DataFrame, batchId: Long): Unit =
+    deliver(IndexLayout.mixture(stratumCol, idCol), path, epoch,
+        maxDataFiles, batch, batchId) { staged =>
+      Curation.mixtureAppendIndex(batch, staged, stratumCol, idCol, textCol)
     }
-  }
 
-  /** The DERIVED-ARTIFACT member of the ingest loop: where the four
-    * index sinks above maintain retrieval/dedup state, this one
-    * maintains the mixture manifest ([[graft.operators.Curation
-    * .mixtureAppendIndex]]) — each micro-batch of newly-arrived
-    * documents is tokenized ONCE and its (source, key, n_toks) payload
-    * appended as one generation; the standing admission manifest is
-    * then served from stored counts alone
-    * ([[graft.operators.Curation.mixtureServeIndex]]), re-deriving
-    * rates as the corpus grows without ever re-reading text. Batch
-    * boundaries cannot move a rate or a draw: source masses are exact
-    * long sums (additive over any generation split) and draws are
-    * frozen per-key hashes — q185 gates the streamed ingest's serve
-    * against the fresh whole-corpus q179 derivation. Delivery contract
-    * as the other members: replay-safe via the batchId-keyed commit
-    * ledger (a replayed batch would otherwise double its documents'
-    * mass and duplicate keys — what the `groupBy(key).count > 1`
-    * audit and q192's repair lifecycle handle).
-    */
-  def startMixture(docsStream: DataFrame, path: String,
-      stratumCol: String = "source", idCol: String = "doc_id",
-      textCol: String = "text", epoch: String = "0",
-      checkpointLocation: Option[String] = None,
-      maxDataFiles: Option[Long] = None): StreamingQuery =
-    withCheckpoint(docsStream.writeStream
-        .foreachBatch(mixtureBatch(path, stratumCol, idCol, textCol, epoch,
-          maxDataFiles) _),
-        checkpointLocation)
-      .outputMode("append")
-      .start()
-
-  /** Runs the mixture-manifest ingest over all currently-available
-    * input, then stops — the bounded-backfill form the q185 gate
-    * drives.
-    */
-  def ingestMixtureDocs(docsStream: DataFrame, path: String,
-      stratumCol: String = "source", idCol: String = "doc_id",
-      textCol: String = "text", epoch: String = "0"): Unit = {
-    val q = startMixture(docsStream, path, stratumCol, idCol, textCol, epoch)
-    try q.processAllAvailable()
-    finally q.stop()
-  }
-
-  /** Asset member's per-batch body ([[startAssets]] + replay gates).
-    * `maxDataFiles` opts into the post-commit auto-compaction hook —
-    * [[bm25Batch]]'s contract on the media fingerprint index
-    * ([[graft.operators.Multimodal.assetCompactSwap]]; fingerprint
-    * rows only, payloads never re-read).
+  /** Media payload hashes ([[graft.operators.Multimodal.assetAppendIndex]]);
+    * the expected source is a `binaryFile` stream over the landing
+    * directory ([[graft.operators.Multimodal.streamBinaryDir]]).
     */
   def assetBatch(path: String, epoch: String = "0",
       maxDataFiles: Option[Long] = None)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val landed =
-      committedAppend(batch.sparkSession, path, "asset", epoch, batchId) {
-        staged =>
-          graft.operators.Multimodal.assetAppendIndex(batch, staged)
-      }
-    if (landed) maxDataFiles.foreach { m =>
-      graft.operators.IndexPaths.maybeCompact(batch.sparkSession, path, m)(
-        graft.operators.Multimodal.assetCompactSwap(batch.sparkSession,
-          path))
+      batch: DataFrame, batchId: Long): Unit =
+    deliver(IndexLayout.Asset, path, epoch, maxDataFiles, batch, batchId) {
+      staged => Multimodal.assetAppendIndex(batch, staged)
     }
-  }
 
-  /** The NON-TEXT member of the streaming ingest loop — binary media
-    * arriving as files ([[graft.operators.Multimodal.streamBinaryDir]]
-    * is the expected source: the `binaryFile` stream watches the
-    * landing directory) with each micro-batch's payload hashes
-    * appended as one generation of the written asset-fingerprint
-    * index ([[graft.operators.Multimodal.assetAppendIndex]] — md5 of
-    * the content bytes, the q194 layout). Batch boundaries cannot
-    * move dedup verdicts: a fingerprint row depends only on its own
-    * payload and the probe reads the union — q199 gates the standing
-    * probe against the same fresh whole-corpus oracle as q194.
-    * Delivery contract as the other six members: replay-safe via the
-    * batchId-keyed commit ledger (a replayed batch would otherwise
-    * double cluster sizes — what
-    * [[graft.operators.Multimodal.assetAuditIndex]] localizes and
-    * [[graft.operators.Multimodal.assetCompactIndex]] repairs).
-    */
-  def startAssets(assetStream: DataFrame, path: String,
-      epoch: String = "0",
-      checkpointLocation: Option[String] = None,
-      maxDataFiles: Option[Long] = None): StreamingQuery =
-    withCheckpoint(assetStream.writeStream
-        .foreachBatch(assetBatch(path, epoch, maxDataFiles) _),
-        checkpointLocation)
-      .outputMode("append")
-      .start()
-
-  /** Runs the asset ingest over all currently-available input, then
-    * stops — the bounded-backfill form the q199 gate drives.
-    */
-  def ingestAssets(assetStream: DataFrame, path: String,
-      epoch: String = "0"): Unit = {
-    val q = startAssets(assetStream, path, epoch)
-    try q.processAllAvailable()
-    finally q.stop()
-  }
-
-  /** Frame member's per-batch body ([[startFrames]] + replay gates).
-    * `maxDataFiles` opts into the post-commit auto-compaction hook —
-    * [[bm25Batch]]'s contract on the frame-fingerprint index
-    * ([[graft.operators.Multimodal.frameCompactSwap]]).
+  /** Media frame fingerprints, framed and hashed in the batch body
+    * ([[graft.operators.Multimodal.frameAppendIndex]]).
     */
   def frameBatch(path: String, frameBytes: Int, epoch: String = "0",
       maxDataFiles: Option[Long] = None)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val landed =
-      committedAppend(batch.sparkSession, path, "frame", epoch, batchId) {
-        staged =>
-          graft.operators.Multimodal.frameAppendIndex(batch, staged,
-            frameBytes)
-      }
-    if (landed) maxDataFiles.foreach { m =>
-      graft.operators.IndexPaths.maybeCompact(batch.sparkSession, path, m)(
-        graft.operators.Multimodal.frameCompactSwap(batch.sparkSession,
-          path))
+      batch: DataFrame, batchId: Long): Unit =
+    deliver(IndexLayout.Frame, path, epoch, maxDataFiles, batch, batchId) {
+      staged => Multimodal.frameAppendIndex(batch, staged, frameBytes)
     }
-  }
 
-  /** The NINTH ingest member — the frame-fingerprint index maintained
-    * by a standing media pipeline: each micro-batch of binary payloads
-    * is framed and hashed in the batch body
-    * ([[graft.operators.Multimodal.frameAppendIndex]]) and lands as
-    * one generation of the written frame layout; the standing
-    * [[graft.operators.Multimodal.frameDedupIndexed]] probe serves the
-    * q200 novelty counts — q204 gates it against the same fresh
-    * whole-corpus oracle. Batch boundaries cannot move a verdict:
-    * frame rows depend only on their own payload, the keep-first rule
-    * reads the union.
-    */
-  def startFrames(assetStream: DataFrame, path: String, frameBytes: Int,
-      epoch: String = "0",
-      checkpointLocation: Option[String] = None,
-      maxDataFiles: Option[Long] = None): StreamingQuery =
-    withCheckpoint(assetStream.writeStream
-        .foreachBatch(frameBatch(path, frameBytes, epoch, maxDataFiles) _),
-        checkpointLocation)
-      .outputMode("append")
-      .start()
-
-  /** Runs the frame ingest over all currently-available input, then
-    * stops — the bounded-backfill form the q204 gate drives.
-    */
-  def ingestFrames(assetStream: DataFrame, path: String, frameBytes: Int,
-      epoch: String = "0"): Unit = {
-    val q = startFrames(assetStream, path, frameBytes, epoch)
-    try q.processAllAvailable()
-    finally q.stop()
-  }
-
-  /** Frame-SimHash member's per-batch body ([[startFrameSimhash]] +
-    * replay gates): the arriving payload batch is enriched with its
-    * blocking key from the STATIC asset-metadata frame (a broadcast
-    * stream-static join inside the batch — the crawler's metadata
-    * table supplies `source`; assets absent from it drop, the
-    * NULL-block convention), framed, fingerprinted, and appended as
-    * one generation of the written band index.
+  /** Frame-SimHash band rows: the arriving payload batch is enriched
+    * with its blocking key from the STATIC asset-metadata frame (a
+    * broadcast stream-static join inside the batch — the crawler's
+    * metadata table supplies `source`; assets absent from it drop, the
+    * NULL-block convention), framed, fingerprinted and banded.
     */
   def frameSimhashBatch(path: String, frameBytes: Int,
       blockOf: DataFrame, epoch: String = "0",
       maxDataFiles: Option[Long] = None)(
-      batch: DataFrame, batchId: Long): Unit = {
-    val landed =
-      committedAppend(batch.sparkSession, path, "frame_simhash", epoch,
-          batchId) { staged =>
-        graft.operators.Multimodal.frameSimhashAppendIndex(
-          batch.join(
-            org.apache.spark.sql.functions.broadcast(blockOf), "asset_id"),
-          staged, frameBytes)
-      }
-    if (landed) maxDataFiles.foreach { m =>
-      graft.operators.IndexPaths.maybeCompact(batch.sparkSession, path, m)(
-        graft.operators.Multimodal.frameSimhashCompactSwap(
-          batch.sparkSession, path))
+      batch: DataFrame, batchId: Long): Unit =
+    deliver(IndexLayout.FrameSimhash, path, epoch, maxDataFiles, batch,
+        batchId) { staged =>
+      Multimodal.frameSimhashAppendIndex(
+        batch.join(
+          org.apache.spark.sql.functions.broadcast(blockOf), "asset_id"),
+        staged, frameBytes)
     }
-  }
 
-  /** The TENTH ingest member — q208's frame-SimHash band index
-    * maintained by a standing media pipeline: each micro-batch of
-    * binary payloads (the packed landing layout via
-    * [[graft.operators.Multimodal.streamPackedDir]], or the per-file
-    * edge) is block-enriched, framed, and banded in the batch body
-    * and lands as one generation of the written `pshard` layout; the
-    * standing [[graft.operators.Multimodal.frameSimhashPairsIndexed]]
-    * probe serves the near-dup pairs — q212 gates it against the
-    * same fresh whole-corpus oracle as q208. Batch boundaries cannot
-    * move a pair: band rows depend only on their own payload,
-    * generations partition the delta, the probe reads their union
-    * (and the bucket cap applies to the bucket's full post-append
-    * membership, same as the fresh run). Delivery contract as the
-    * other members: replay-safe via the batchId-keyed commit ledger.
-    */
-  def startFrameSimhash(assetStream: DataFrame, path: String,
-      frameBytes: Int, blockOf: DataFrame, epoch: String = "0",
-      checkpointLocation: Option[String] = None,
-      maxDataFiles: Option[Long] = None): StreamingQuery =
-    withCheckpoint(assetStream.writeStream
-        .foreachBatch(frameSimhashBatch(path, frameBytes, blockOf, epoch,
-          maxDataFiles) _),
-        checkpointLocation)
-      .outputMode("append")
-      .start()
-
-  /** Runs the frame-SimHash ingest over all currently-available
-    * input, then stops — the bounded-backfill form the q212 gate
-    * drives.
-    */
-  def ingestFrameSimhash(assetStream: DataFrame, path: String,
-      frameBytes: Int, blockOf: DataFrame, epoch: String = "0"): Unit = {
-    val q = startFrameSimhash(assetStream, path, frameBytes, blockOf, epoch)
-    try q.processAllAvailable()
-    finally q.stop()
-  }
-
-  /** COMBINED media pipeline's per-batch body ([[startMedia]] +
-    * healing/replay gates): ONE arriving payload batch feeds ALL
-    * THREE asset-side indexes — exact payload hash
-    * ([[assetBatch]]), frozen-centroid featurized near-dup
-    * ([[assetSemanticBatch]]), and frame fingerprints
-    * ([[frameBatch]]) — the q202 flagship's index set maintained by a
-    * single standing stream. The batch is localCheckpoint'ed first so
-    * payload bytes are read ONCE per micro-batch and all three
-    * derivations (hash, featurize, frame) reuse the materialized
-    * rows, q202's read-once shape at the micro-batch grain.
+  /** COMBINED media pipeline: ONE arriving payload batch feeds ALL
+    * THREE asset-side indexes — exact payload hash ([[assetBatch]]),
+    * frozen-centroid featurized near-dup ([[assetSemanticBatch]]), and
+    * frame fingerprints ([[frameBatch]]) — the q202 flagship's index
+    * set maintained by a single standing stream. The batch is
+    * localCheckpoint'ed first so payload bytes are read ONCE per
+    * micro-batch and all three derivations (hash, featurize, frame)
+    * reuse the materialized rows, q202's read-once shape at the
+    * micro-batch grain.
     *
     * Cross-index atomicity: the three appends commit through THREE
     * ledger members keyed by the SAME batchId, so a crash between
@@ -918,50 +527,14 @@ object IndexIngest {
       centroids: DataFrame, frameBytes: Int, startGen: Int = 1,
       epoch: String = "0")(batch: DataFrame, batchId: Long): Unit = {
     val b = batch.localCheckpoint()
-    // the three members commit to three DISJOINT index roots through
-    // three independent ledgers — overlap the deliveries (guide §2.6):
-    // each is floor-bound (staged 256-dir write + publish renames +
-    // marker), so one delivery pays ~one floor instead of three. The
-    // crash contract is unchanged: a crash mid-delivery leaves an
-    // arbitrary SUBSET of members committed (exactly as the sequential
-    // form could), each member's retry skips-or-lands independently,
-    // and [[mediaConsistencyAudit]] localizes any in-between state.
-    graft.operators.Parallelism.inParallel(
+    // three DISJOINT roots, three independent ledgers: overlap the
+    // floor-bound deliveries (guide §2.6) — a crash still leaves some
+    // SUBSET committed, healed member-by-member by the retry
+    Parallelism.inParallel(
       () => assetBatch(exactPath, epoch)(b, batchId),
       () => assetSemanticBatch(semPath, centroids, startGen, epoch)(b,
         batchId),
       () => frameBatch(framePath, frameBytes, epoch)(b, batchId))
-  }
-
-  /** The combined-media standing pipeline — q202's three asset-side
-    * indexes maintained by ONE stream (q216 gates the served
-    * admission manifest against q202's fresh whole-corpus oracle).
-    * Batch boundaries cannot move any verdict: all three members'
-    * rows are per-payload facts, generations partition the delta,
-    * every probe reads the union.
-    */
-  def startMedia(assetStream: DataFrame, exactPath: String,
-      semPath: String, framePath: String, centroids: DataFrame,
-      frameBytes: Int, startGen: Int = 1, epoch: String = "0",
-      checkpointLocation: Option[String] = None): StreamingQuery =
-    withCheckpoint(assetStream.writeStream
-        .foreachBatch(mediaBatch(exactPath, semPath, framePath, centroids,
-          frameBytes, startGen, epoch) _),
-        checkpointLocation)
-      .outputMode("append")
-      .start()
-
-  /** Runs the combined media ingest over all currently-available
-    * input, then stops — the bounded-backfill form the q216 gate
-    * drives.
-    */
-  def ingestMedia(assetStream: DataFrame, exactPath: String,
-      semPath: String, framePath: String, centroids: DataFrame,
-      frameBytes: Int, startGen: Int = 1, epoch: String = "0"): Unit = {
-    val q = startMedia(assetStream, exactPath, semPath, framePath,
-      centroids, frameBytes, startGen, epoch)
-    try q.processAllAvailable()
-    finally q.stop()
   }
 
   /** Cross-index CONSISTENCY audit for the combined media pipeline:
@@ -977,14 +550,14 @@ object IndexIngest {
   def mediaConsistencyAudit(spark: SparkSession, exactPath: String,
       semPath: String, framePath: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    def ids(df: DataFrame, idCol: String, flag: String) =
-      df.select(col(idCol).as("asset_id")).distinct()
+    def ids(dir: String, idCol: String, flag: String) =
+      spark.read.parquet(dir).select(col(idCol).as("asset_id")).distinct()
         .withColumn(flag, lit(true))
-    ids(spark.read.parquet(s"$exactPath/fingerprints"), "asset_id",
-        "in_exact")
-      .join(ids(spark.read.parquet(semPath), "vec_id", "in_semantic"),
+    ids(IndexLayout.Asset.live(spark, exactPath), "asset_id", "in_exact")
+      .join(ids(IndexLayout.semantic("vec_id").live(spark, semPath),
+          "vec_id", "in_semantic"),
         Seq("asset_id"), "full_outer")
-      .join(ids(spark.read.parquet(s"$framePath/frames"), "asset_id",
+      .join(ids(IndexLayout.Frame.live(spark, framePath), "asset_id",
           "in_frames"),
         Seq("asset_id"), "full_outer")
       .filter(col("in_exact").isNull || col("in_semantic").isNull ||
@@ -995,105 +568,37 @@ object IndexIngest {
         coalesce(col("in_frames"), lit(false)).as("in_frames"))
   }
 
-  /** Release-manifest member's per-batch body
-    * ([[startAssetManifest]] + replay gates): the arriving payload
-    * batch is reduced to its S manifest contribution rows
-    * ([[graft.operators.Multimodal.manifestAppendGeneration]]) and
-    * appended as one generation through the ledger.
+  /** Release-manifest contributions: the arriving payload batch is
+    * reduced to its S manifest rows (per-shard count, byte mass, XOR
+    * checksum — [[graft.operators.Multimodal.manifestAppendGeneration]])
+    * and [[graft.operators.Multimodal.assetManifestServe]] folds the
+    * generations into the released corpus's manifest — maintained at
+    * S-rows-per-batch cost, never recomputed from payloads. Counts ride
+    * next to the checksums because a replayed batch would cancel its
+    * XOR contribution (even-multiplicity blindness).
     */
   def assetManifestBatch(path: String, epoch: String = "0")(
       batch: DataFrame, batchId: Long): Unit =
     committedAppend(batch.sparkSession, path, "manifest", epoch, batchId) {
-      staged =>
-        graft.operators.Multimodal.manifestAppendGeneration(batch, staged)
+      staged => Multimodal.manifestAppendGeneration(batch, staged)
     }
 
-  /** The ELEVENTH ingest member — the release manifest maintained by
-    * the standing pipeline: each micro-batch of binary payloads
-    * contributes S manifest rows (per-shard count, byte mass, XOR
-    * checksum) as one ledger-committed generation, and
-    * [[graft.operators.Multimodal.assetManifestServe]] folds the
-    * generations into the released corpus's manifest. Batch
-    * boundaries cannot move it: counts/bytes are additive and XOR is
-    * associative-commutative, so ANY split of the delta sums to the
-    * fresh whole-corpus derivation (q215 gates serve ≡ the q214
-    * oracle). This is the day-2 form of the release-verification
-    * story: the manifest a replica is checked against is maintained
-    * at S-rows-per-batch cost, never recomputed from payloads.
-    * Delivery contract as every member: replay-safe via the
-    * batchId-keyed commit ledger (a replayed batch would otherwise
-    * double its shard masses and cancel its checksum contribution —
-    * XOR's even-multiplicity blindness — which is exactly why the
-    * counts ride next to the checksums).
-    */
-  def startAssetManifest(assetStream: DataFrame, path: String,
-      epoch: String = "0",
-      checkpointLocation: Option[String] = None): StreamingQuery =
-    withCheckpoint(assetStream.writeStream
-        .foreachBatch(assetManifestBatch(path, epoch) _),
-        checkpointLocation)
-      .outputMode("append")
-      .start()
-
-  /** Runs the manifest ingest over all currently-available input,
-    * then stops — the bounded-backfill form the q215 gate drives.
-    */
-  def ingestAssetManifest(assetStream: DataFrame, path: String,
-      epoch: String = "0"): Unit = {
-    val q = startAssetManifest(assetStream, path, epoch)
-    try q.processAllAvailable()
-    finally q.stop()
-  }
-
-  /** Featurized-asset member's per-batch body ([[startAssetSemantic]]
-    * + replay gates): each micro-batch of binary payloads is
+  /** Featurized media: each micro-batch of binary payloads is
     * featurized ([[graft.operators.Multimodal.featurizeVector]] — one
     * narrow pass, payloads never leave the batch), assigned against
-    * the FROZEN centroid family, and appended as one generation of
-    * the written semantic index — [[semanticBatch]]'s contract with
-    * the embedding column derived from media bytes instead of arriving
-    * precomputed. Same gen-stability and replay-ledger arguments.
+    * the FROZEN centroid family, and appended as one generation of the
+    * written semantic index — [[semanticBatch]]'s contract (same
+    * gen-stability and replay-ledger arguments) with the embedding
+    * derived from media bytes instead of arriving precomputed.
     */
   def assetSemanticBatch(path: String, centroids: DataFrame,
       startGen: Int, epoch: String = "0")(
       batch: DataFrame, batchId: Long): Unit =
     committedAppend(batch.sparkSession, path, "asset_semantic", epoch,
         batchId) { staged =>
-      graft.operators.Clustering.semanticAppendIndex(
-        graft.operators.Clustering.assignL2(
-          graft.operators.Multimodal.featurizeVector(batch, "asset_id"),
+      Clustering.semanticAppendIndex(
+        Clustering.assignL2(Multimodal.featurizeVector(batch, "asset_id"),
           centroids),
         staged, gen = Math.toIntExact(startGen.toLong + batchId))
     }
-
-  /** The EIGHTH ingest member, closing the multimodal near-dup
-    * lifecycle: binary media files stream in
-    * ([[graft.operators.Multimodal.streamBinaryDir]]), each
-    * micro-batch is featurized and appended as one frozen-centroid
-    * generation, and the standing [[graft.operators.Clustering
-    * .semDedupIndexed]] probe serves the q197 verdicts — q201 gates
-    * it against the same fresh whole-corpus oracle. Batch boundaries
-    * cannot move verdicts: featurization and assignment are per-asset,
-    * generations partition the delta, the probe reads their union.
-    */
-  def startAssetSemantic(assetStream: DataFrame, path: String,
-      centroids: DataFrame, startGen: Int = 1, epoch: String = "0",
-      checkpointLocation: Option[String] = None): StreamingQuery =
-    withCheckpoint(assetStream.writeStream
-        .foreachBatch(assetSemanticBatch(path, centroids, startGen, epoch) _),
-        checkpointLocation)
-      .outputMode("append")
-      .start()
-
-  /** Runs the featurized-asset semantic ingest over all
-    * currently-available input, then stops — the bounded-backfill
-    * form the q201 gate drives.
-    */
-  def ingestAssetSemantic(assetStream: DataFrame, path: String,
-      centroids: DataFrame, startGen: Int = 1,
-      epoch: String = "0"): Unit = {
-    val q = startAssetSemantic(assetStream, path, centroids, startGen, epoch)
-    try q.processAllAvailable()
-    finally q.stop()
-  }
 }

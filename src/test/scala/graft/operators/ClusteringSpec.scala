@@ -156,7 +156,7 @@ class ClusteringSpec extends AnyFunSuite {
       idx.toString)
     val snap = Clustering.assignL2(snap2, cents2).localCheckpoint()
     Clustering.semanticAppendIndex(snap, idx.toString, gen = 1)
-    assert(Clustering.semanticAuditIndex(spark, idx.toString).isEmpty,
+    assert(IndexLayout.semantic("vec_id").audit(spark, idx.toString).isEmpty,
       "a clean build+append must audit empty")
     val clean = Clustering.semDedupIndexed(spark, idx.toString, snap,
         threshold = 0.95)
@@ -164,15 +164,17 @@ class ClusteringSpec extends AnyFunSuite {
 
     // the injected failure: the same append replays
     Clustering.semanticAppendIndex(snap, idx.toString, gen = 1)
-    val dmg = Clustering.semanticAuditIndex(spark, idx.toString)
+    val dmg = IndexLayout.semantic("vec_id").audit(spark, idx.toString)
       .as[(Long, Long, Long)].collect().toSet
     // exactly the 5 snapshot members, each twice, bit-identical copies
     assert(dmg == Set((10L, 2L, 1L), (11L, 2L, 1L), (12L, 2L, 1L),
       (13L, 2L, 1L), (14L, 2L, 1L)), s"got $dmg")
 
     val repaired = TmpWorkspaces.pidScoped("graft_semidx_spec_", "repaired")
-    Clustering.semanticCompactIndex(spark, idx.toString, repaired.toString)
-    assert(Clustering.semanticAuditIndex(spark, repaired.toString).isEmpty,
+    IndexLayout.semantic("vec_id").compact(spark, idx.toString,
+      repaired.toString)
+    assert(IndexLayout.semantic("vec_id").audit(spark, repaired.toString)
+        .isEmpty,
       "compaction must drop every replayed copy")
     val served = Clustering.semDedupIndexed(spark, repaired.toString, snap,
         threshold = 0.95)
@@ -189,11 +191,11 @@ class ClusteringSpec extends AnyFunSuite {
     // same members re-appended under gen = 2: copies DISAGREE on gen —
     // divergence, not replay; the audit flags it and compact refuses
     Clustering.semanticAppendIndex(snap, idx.toString, gen = 2)
-    val dmg = Clustering.semanticAuditIndex(spark, idx.toString)
+    val dmg = IndexLayout.semantic("vec_id").audit(spark, idx.toString)
       .select("n_copies", "n_payloads").as[(Long, Long)].collect().toSet
     assert(dmg == Set((2L, 2L)), s"copies must show 2 distinct payloads: $dmg")
     val ex = intercept[IllegalArgumentException] {
-      Clustering.semanticCompactIndex(spark, idx.toString,
+      IndexLayout.semantic("vec_id").compact(spark, idx.toString,
         TmpWorkspaces.pidScoped("graft_semidx_spec_", "divdst").toString)
     }
     assert(ex.getMessage.contains("rebuild"), ex.getMessage)

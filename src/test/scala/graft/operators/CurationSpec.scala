@@ -347,15 +347,18 @@ class CurationSpec extends AnyFunSuite {
     ).toDF("doc_id", "source", "text")
     val path = TmpWorkspaces.pidScoped("graft_miximidx_spec_", "mix")
     Curation.mixtureAppendIndex(docs, path.toString, "source", "doc_id", "text")
-    assert(Curation.mixtureAuditIndex(spark, path.toString).isEmpty)
+    assert(IndexLayout.mixture("source", "doc_id").audit(spark,
+      path.toString).isEmpty)
     // a blind retry: every key doubled, payloads bit-identical
     Curation.mixtureAppendIndex(docs, path.toString, "source", "doc_id", "text")
-    val damage = Curation.mixtureAuditIndex(spark, path.toString)
+    val damage = IndexLayout.mixture("source", "doc_id").audit(spark,
+        path.toString)
       .as[(Long, Long, Long)].collect().toSet
     assert(damage == Set((0L, 2L, 1L), (1L, 2L, 1L), (2L, 2L, 1L)), s"got $damage")
     // compaction repairs: the served manifest equals the fresh derivation
     val repaired = TmpWorkspaces.pidScoped("graft_miximidx_spec_", "rep")
-    Curation.mixtureCompactIndex(spark, path.toString, repaired.toString)
+    IndexLayout.mixture("source", "doc_id").compact(spark, path.toString,
+      repaired.toString)
     val served = Curation.mixtureServeIndex(spark, repaired.toString,
         "source", "doc_id", budget = 40L)
       .as[(String, Long, Long, Double, Boolean)].collect().toSet
@@ -369,10 +372,11 @@ class CurationSpec extends AnyFunSuite {
     Curation.mixtureAppendIndex(
       docs.withColumn("text", concat(col("text"), lit(" extra"))),
       divPath.toString, "source", "doc_id", "text")
-    assert(Curation.mixtureAuditIndex(spark, divPath.toString)
+    assert(IndexLayout.mixture("source", "doc_id").audit(spark,
+        divPath.toString)
       .filter(col("n_payloads") > 1).count() == 3L)
     val e = intercept[IllegalArgumentException] {
-      Curation.mixtureCompactIndex(spark, divPath.toString,
+      IndexLayout.mixture("source", "doc_id").compact(spark, divPath.toString,
         TmpWorkspaces.pidScoped("graft_miximidx_spec_", "nope").toString)
     }
     assert(e.getMessage.contains("payload-divergent"), e.getMessage)

@@ -226,30 +226,30 @@ class DedupSpec extends AnyFunSuite {
     val mh = TmpWorkspaces.pidScoped("graft_mhidx_spec_", "audit")
     Dedup.minhashWriteIndex(base, mh.toString, "doc_id", "text")
     Dedup.minhashAppendIndex(snap, mh.toString, "doc_id", "text")
-    assert(Dedup.minhashAuditIndex(spark, mh.toString).isEmpty)
+    assert(IndexLayout.MinhashBands.audit(spark, mh.toString).isEmpty)
     Dedup.minhashAppendIndex(snap, mh.toString, "doc_id", "text") // retry
-    val mhDup = Dedup.minhashAuditIndex(spark, mh.toString)
+    val mhDup = IndexLayout.MinhashBands.audit(spark, mh.toString)
       .select($"doc_id").distinct().as[Long].collect().toSet
     assert(mhDup == Set(4L), s"minhash audit drifted: $mhDup")
 
     val ng = TmpWorkspaces.pidScoped("graft_ngidx_spec_", "audit")
     Dedup.ngramWriteIndex(base, ng.toString, "doc_id", "text", "source")
     Dedup.ngramAppendIndex(snap, ng.toString, "doc_id", "text", "source")
-    assert(Dedup.ngramAuditIndex(spark, ng.toString).isEmpty)
+    assert(IndexLayout.Ngram.audit(spark, ng.toString).isEmpty)
     Dedup.ngramAppendIndex(snap, ng.toString, "doc_id", "text", "source")
-    val ngDup = Dedup.ngramAuditIndex(spark, ng.toString)
+    val ngDup = IndexLayout.Ngram.audit(spark, ng.toString)
       .select($"doc_id").distinct().as[Long].collect().toSet
     assert(ngDup == Set(4L), s"ngram audit drifted: $ngDup")
 
     val fp = TmpWorkspaces.pidScoped("graft_fpidx_spec_", "audit")
     Dedup.exactWriteIndex(base, fp.toString, "doc_id", "text")
     Dedup.exactAppendIndex(snap, fp.toString, "doc_id", "text")
-    assert(Dedup.exactAuditIndex(spark, fp.toString).isEmpty)
+    assert(IndexLayout.Exact.audit(spark, fp.toString).isEmpty)
     // divergent re-append: same id, different text
     Dedup.exactAppendIndex(
       Seq((4L, "changed text entirely")).toDF("doc_id", "text"),
       fp.toString, "doc_id", "text")
-    val fpDup = Dedup.exactAuditIndex(spark, fp.toString)
+    val fpDup = IndexLayout.Exact.audit(spark, fp.toString)
       .select($"doc_id", $"n_copies", $"n_payloads")
       .as[(Long, Long, Long)].collect().toSet
     assert(fpDup == Set((4L, 2L, 2L)), s"exact audit drifted: $fpDup")
@@ -316,21 +316,21 @@ class DedupSpec extends AnyFunSuite {
     val path = TmpWorkspaces.pidScoped("graft_shrep_spec_", "repair")
     Dedup.simhashWriteIndex(base, path.toString, "doc_id", "text", "source")
     Dedup.simhashAppendIndex(snap, path.toString, "doc_id", "text", "source")
-    assert(Dedup.simhashAuditIndex(spark, path.toString).isEmpty,
+    assert(IndexLayout.Simhash.audit(spark, path.toString).isEmpty,
       "a clean append-once layout must audit empty")
     Dedup.simhashAppendIndex(snap, path.toString, "doc_id", "text", "source")
 
     // the blind retry doubled exactly doc 4's four band coordinates,
     // bit-identically (n_payloads = 1)
-    val dmg = Dedup.simhashAuditIndex(spark, path.toString)
+    val dmg = IndexLayout.Simhash.audit(spark, path.toString)
       .select($"doc_id", $"bidx", $"n_copies", $"n_payloads")
       .as[(Long, Int, Long, Long)].collect().toSet
     assert(dmg == (0 until 4).map(j => (4L, j, 2L, 1L)).toSet,
       s"audit drifted: $dmg")
 
     val repaired = TmpWorkspaces.pidScoped("graft_shrep_spec_r_", "repair")
-    Dedup.simhashCompactIndex(spark, path.toString, repaired.toString)
-    assert(Dedup.simhashAuditIndex(spark, repaired.toString).isEmpty,
+    IndexLayout.Simhash.compact(spark, path.toString, repaired.toString)
+    assert(IndexLayout.Simhash.audit(spark, repaired.toString).isEmpty,
       "the compacted layout must audit clean")
     val got = Dedup
       .simhashNearDupIndexed(spark, repaired.toString, snap, "doc_id",
@@ -344,7 +344,7 @@ class DedupSpec extends AnyFunSuite {
       path.toString, "doc_id", "text", "source")
     val refuse = TmpWorkspaces.pidScoped("graft_shrep_spec_x_", "repair")
     val e = intercept[IllegalArgumentException] {
-      Dedup.simhashCompactIndex(spark, path.toString, refuse.toString)
+      IndexLayout.Simhash.compact(spark, path.toString, refuse.toString)
     }
     assert(e.getMessage.contains("payload-divergent"))
   }
@@ -458,7 +458,7 @@ class DedupSpec extends AnyFunSuite {
     val path = TmpWorkspaces.pidScoped("graft_wnidx_spec_", "incr")
     Dedup.winnowWriteIndex(base, path.toString, "doc_id", "text", "source")
     Dedup.winnowAppendIndex(snap, path.toString, "doc_id", "text", "source")
-    assert(Dedup.winnowAuditIndex(spark, path.toString).isEmpty)
+    assert(IndexLayout.Winnow.audit(spark, path.toString).isEmpty)
     val got = Dedup.winnowPairsIndexed(spark, path.toString, snap,
         "doc_id", "text", "source")
       .select($"doc_a", $"doc_b", $"i")
@@ -473,6 +473,6 @@ class DedupSpec extends AnyFunSuite {
     assert(got == want, s"incremental drifted:\n$got\nvs\n$want")
     // a doubled append is exactly what the audit localizes
     Dedup.winnowAppendIndex(snap, path.toString, "doc_id", "text", "source")
-    assert(!Dedup.winnowAuditIndex(spark, path.toString).isEmpty)
+    assert(!IndexLayout.Winnow.audit(spark, path.toString).isEmpty)
   }
 }

@@ -52,7 +52,7 @@ class IndexPathsSpec extends AnyFunSuite {
       (5L, "spark keyed shuffles again")).toDF("doc_id", "text")
     Retrieval.bm25AppendIndex(delta, root)
     Retrieval.bm25AppendIndex(delta, root) // the injected blind retry
-    assert(!Retrieval.bm25AuditIndex(spark, root).isEmpty,
+    assert(!IndexLayout.Bm25.audit(spark, root).isEmpty,
       "the replay damage must be visible pre-repair")
 
     val qs = Seq((0L, "spark shuffles keyed data")).toDF("doc_id", "text")
@@ -74,7 +74,7 @@ class IndexPathsSpec extends AnyFunSuite {
       .as[(Long, Long, Long, Double)].collect().toSet
 
     // ONLINE repair: compact into the next generation + atomic cutover
-    val gen = Retrieval.bm25CompactSwap(spark, root)
+    val gen = IndexLayout.Bm25.compactSwap(spark, root)
     assert(gen == s"$root/_gens/gen-000001")
     assert(IndexPaths.resolve(spark, root) == gen)
 
@@ -86,7 +86,7 @@ class IndexPathsSpec extends AnyFunSuite {
     // serving THROUGH the root resolves the repaired generation and
     // hash-equals the clean fresh build
     assert(serveThroughRoot() == want && want.nonEmpty)
-    assert(Retrieval.bm25AuditIndex(spark, root).isEmpty,
+    assert(IndexLayout.Bm25.audit(spark, root).isEmpty,
       "the audit through the root must see the repaired generation")
 
     // a post-swap append lands IN the live generation and serves
@@ -128,11 +128,11 @@ class IndexPathsSpec extends AnyFunSuite {
     Multimodal.assetWriteIndex(base, root)
     Multimodal.assetAppendIndex(snap, root)
     Multimodal.assetAppendIndex(snap, root) // the injected blind retry
-    assert(!Multimodal.assetAuditIndex(spark, root).isEmpty)
+    assert(!IndexLayout.Asset.audit(spark, root).isEmpty)
 
-    val gen = Multimodal.assetCompactSwap(spark, root)
+    val gen = IndexLayout.Asset.compactSwap(spark, root)
     assert(IndexPaths.resolve(spark, root) == gen)
-    assert(Multimodal.assetAuditIndex(spark, root).isEmpty,
+    assert(IndexLayout.Asset.audit(spark, root).isEmpty,
       "the audit through the root must see the repaired generation")
     val got = Multimodal.assetDedupIndexed(spark, root, snap)
       .as[(String, Long, Long)].collect().toSet
@@ -158,7 +158,7 @@ class IndexPathsSpec extends AnyFunSuite {
       fail("below the threshold the thunk must not run")).isEmpty)
     // force the policy to fire
     val gen = IndexPaths.maybeCompact(spark, root, maxDataFiles = 0)(
-      Retrieval.bm25CompactSwap(spark, root))
+      IndexLayout.Bm25.compactSwap(spark, root))
     assert(gen.contains(s"$root/_gens/gen-000001"))
     assert(IndexPaths.resolve(spark, root) == s"$root/_gens/gen-000001")
     assert(IndexStats.dataFileCount(spark,

@@ -39,7 +39,7 @@ class IndexStatsSpec extends AnyFunSuite {
         "even where the shard already has base files")
 
     val compacted = TmpWorkspaces.pidScoped("graft_ixstats_spec_", "c")
-    Multimodal.assetCompactIndex(spark, idx.toString, compacted.toString)
+    IndexLayout.Asset.compact(spark, idx.toString, compacted.toString)
     val after = IndexStats.dataFileCount(spark, compacted.toString)
     val dsAll = distinctShards((base ++ delta).map(_._2))
     assert(after == dsAll && after < before,

@@ -51,7 +51,7 @@ class MultimodalSpec extends AnyFunSuite {
       idx.toString)
     val snapshot = assets.filter($"asset_id" > 2)
     Multimodal.assetAppendIndex(snapshot, idx.toString)
-    assert(Multimodal.assetAuditIndex(spark, idx.toString).isEmpty,
+    assert(IndexLayout.Asset.audit(spark, idx.toString).isEmpty,
       "a clean build+append must audit clean")
 
     def md5Of(s: String) = java.security.MessageDigest.getInstance("MD5")
@@ -77,7 +77,7 @@ class MultimodalSpec extends AnyFunSuite {
 
     // a replayed append is exactly what the audit localizes
     Multimodal.assetAppendIndex(snapshot, idx.toString)
-    val dups = Multimodal.assetAuditIndex(spark, idx.toString)
+    val dups = IndexLayout.Asset.audit(spark, idx.toString)
       .as[(Long, Long, Long)].collect().toSet
     assert(dups == Set((7L, 2L, 1L), (8L, 2L, 1L), (9L, 2L, 1L)),
       s"replay damage must be 2 bit-identical copies per snapshot id: $dups")
@@ -86,8 +86,8 @@ class MultimodalSpec extends AnyFunSuite {
     // pre-damage verdicts, and the rewrite touched no payload bytes
     // (it reads only the fingerprint rows)
     val repaired = TmpWorkspaces.pidScoped("graft_mm_spec_", "repaired")
-    Multimodal.assetCompactIndex(spark, idx.toString, repaired.toString)
-    assert(Multimodal.assetAuditIndex(spark, repaired.toString).isEmpty,
+    IndexLayout.Asset.compact(spark, idx.toString, repaired.toString)
+    assert(IndexLayout.Asset.audit(spark, repaired.toString).isEmpty,
       "compaction must clear the audit")
     val served = Multimodal.assetDedupIndexed(spark, repaired.toString,
         snapshot)
@@ -101,7 +101,7 @@ class MultimodalSpec extends AnyFunSuite {
         concat($"payload", lit("corrupted".getBytes("UTF-8")))),
       idx.toString)
     val e = intercept[IllegalArgumentException] {
-      Multimodal.assetCompactIndex(spark, idx.toString,
+      IndexLayout.Asset.compact(spark, idx.toString,
         TmpWorkspaces.pidScoped("graft_mm_spec_", "refuse").toString)
     }
     assert(e.getMessage.contains("payload-divergent"))
@@ -224,10 +224,10 @@ class MultimodalSpec extends AnyFunSuite {
     Multimodal.packAssets(delta.toDF("asset_id", "payload"),
       landing.toString, nFiles = 3)
     assert(IndexStats.dataFileCount(spark, landing.toString) == 3L)
-    graft.streaming.IndexIngest.ingestAssets(
+    graft.streaming.IndexIngest.drain(graft.streaming.IndexIngest.start(
       Multimodal.streamPackedDir(spark, landing.toString,
-        maxFilesPerTrigger = 1),
-      idx.toString)
+        maxFilesPerTrigger = 1), None)(
+      graft.streaming.IndexIngest.assetBatch(idx.toString)))
     // one ledger marker per file-batch, no replay damage
     import org.apache.hadoop.fs.Path
     val fs = new Path(idx.toString)
@@ -235,7 +235,7 @@ class MultimodalSpec extends AnyFunSuite {
     val markers = fs.listStatus(
       new Path(s"$idx/_ingest_commits/asset/epoch=0")).length
     assert(markers == 3, s"3 packed files = 3 committed batches, got $markers")
-    assert(Multimodal.assetAuditIndex(spark, idx.toString).isEmpty)
+    assert(IndexLayout.Asset.audit(spark, idx.toString).isEmpty)
     val got = Multimodal.assetDedupIndexed(spark, idx.toString,
         delta.toDF("asset_id", "payload"))
       .as[(String, Long, Long)].collect().toSet
@@ -326,13 +326,13 @@ class MultimodalSpec extends AnyFunSuite {
     Multimodal.frameAppendIndex(snap, idx.toString, frameBytes = 4)
     Multimodal.frameAppendIndex(snap, idx.toString, frameBytes = 4) // retry
     // audit: exactly the snapshot's 3 coordinates, bit-identical pairs
-    val dmg = Multimodal.frameAuditIndex(spark, idx.toString)
+    val dmg = IndexLayout.Frame.audit(spark, idx.toString)
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(dmg == Set((11L, 0L, 2L, 1L), (11L, 1L, 2L, 1L),
       (13L, 0L, 2L, 1L)), s"got $dmg")
     val repaired = TmpWorkspaces.pidScoped("graft_mm_spec_", "frrepC")
-    Multimodal.frameCompactIndex(spark, idx.toString, repaired.toString)
-    assert(Multimodal.frameAuditIndex(spark, repaired.toString).isEmpty)
+    IndexLayout.Frame.compact(spark, idx.toString, repaired.toString)
+    assert(IndexLayout.Frame.audit(spark, repaired.toString).isEmpty)
     // the repaired probe serves the clean q200-shape verdicts: 11's
     // cccc lost to (2,1), aaaa lost to (1,0); 13's dddd globally first
     val got = Multimodal.frameDedupIndexed(spark, repaired.toString, snap,
@@ -345,7 +345,7 @@ class MultimodalSpec extends AnyFunSuite {
       idx.toString, frameBytes = 4)
     val refused = TmpWorkspaces.pidScoped("graft_mm_spec_", "frrepR")
     val e = intercept[IllegalArgumentException] {
-      Multimodal.frameCompactIndex(spark, idx.toString, refused.toString)
+      IndexLayout.Frame.compact(spark, idx.toString, refused.toString)
     }
     assert(e.getMessage.contains("payload-divergent"))
   }

@@ -360,10 +360,10 @@ class PqSpec extends AnyFunSuite {
       centroids, cb, path.toString)
     val delta = df.filter(col("vec_id") % 4 === 0)
     Pq.ivfPqAppendToIndex(spark, path.toString, delta)
-    assert(Pq.ivfPqAuditIndex(spark, path.toString).isEmpty,
+    assert(IndexLayout.ivfPq("vec_id").audit(spark, path.toString).isEmpty,
       "a single clean append must audit clean")
     Pq.ivfPqAppendToIndex(spark, path.toString, delta)   // the blind retry
-    val hits = Pq.ivfPqAuditIndex(spark, path.toString)
+    val hits = IndexLayout.ivfPq("vec_id").audit(spark, path.toString)
       .as[(Long, Long, Long)].collect().toSeq.sortBy(_._1)
     assert(hits.map(_._1) == delta.select("vec_id").as[Long].collect().toSeq.sorted,
       s"audit must localize exactly the replayed ids, got $hits")
@@ -381,8 +381,8 @@ class PqSpec extends AnyFunSuite {
     assert(serve(path.toString) != clean,
       "the corrupted index must actually mis-serve, or this test has no power")
     val repaired = TmpWorkspaces.pidScoped("graft_ivfpqidx_spec_", "repaired")
-    Pq.ivfPqCompactIndex(spark, path.toString, repaired.toString)
-    assert(Pq.ivfPqAuditIndex(spark, repaired.toString).isEmpty,
+    IndexLayout.ivfPq("vec_id").compact(spark, path.toString, repaired.toString)
+    assert(IndexLayout.ivfPq("vec_id").audit(spark, repaired.toString).isEmpty,
       "compaction must clear the audit")
     assert(serve(repaired.toString) == clean,
       "the repaired index must serve exactly like a clean build")
@@ -393,7 +393,7 @@ class PqSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.transform(col("embedding"),
           x => x * lit(-1.0f))))
     val e = intercept[IllegalArgumentException] {
-      Pq.ivfPqCompactIndex(spark, path.toString,
+      IndexLayout.ivfPq("vec_id").compact(spark, path.toString,
         TmpWorkspaces.pidScoped("graft_ivfpqidx_spec_", "refuse").toString)
     }
     assert(e.getMessage.contains("payload-divergent"))

@@ -79,7 +79,7 @@ class RetrievalSpec extends AnyFunSuite {
     Retrieval.bm25WriteIndex(base, path.toString)
     Retrieval.bm25AppendIndex(delta, path.toString)
     Retrieval.bm25AppendIndex(delta, path.toString) // the blind retry
-    val audit = Retrieval.bm25AuditIndex(spark, path.toString)
+    val audit = IndexLayout.Bm25.audit(spark, path.toString)
       .select($"doc_id", $"term", $"n_copies", $"n_payloads")
       .as[(Long, String, Long, Long)].collect().toSet
     // exactly the delta's (doc, term) keys, each a bit-identical pair
@@ -87,8 +87,8 @@ class RetrievalSpec extends AnyFunSuite {
       (2L, "banana", 2L, 1L), (2L, "cherry", 2L, 1L), (2L, "date", 2L, 1L),
       (3L, "date", 2L, 1L)), s"audit drifted: $audit")
     val repaired = TmpWorkspaces.pidScoped("graft_bm25idx_spec_", "repaired")
-    Retrieval.bm25CompactIndex(spark, path.toString, repaired.toString)
-    assert(Retrieval.bm25AuditIndex(spark, repaired.toString).isEmpty)
+    IndexLayout.Bm25.compact(spark, path.toString, repaired.toString)
+    assert(IndexLayout.Bm25.audit(spark, repaired.toString).isEmpty)
     val fresh = TmpWorkspaces.pidScoped("graft_bm25idx_spec_", "freshr")
     Retrieval.bm25WriteIndex(corpus, fresh.toString)
     val q = corpus.filter($"doc_id" === 0L)
@@ -124,12 +124,12 @@ class RetrievalSpec extends AnyFunSuite {
     // contract violation: doc 2 re-appended with DIFFERENT text
     Retrieval.bm25AppendIndex(
       Seq(2L -> "banana banana").toDF("doc_id", "text"), path.toString)
-    val audit = Retrieval.bm25AuditIndex(spark, path.toString)
+    val audit = IndexLayout.Bm25.audit(spark, path.toString)
       .filter($"n_payloads" > 1).count()
     assert(audit > 0, "audit must flag the divergent copies")
     val dst = TmpWorkspaces.pidScoped("graft_bm25idx_spec_", "divergedst")
     val e = intercept[IllegalArgumentException] {
-      Retrieval.bm25CompactIndex(spark, path.toString, dst.toString)
+      IndexLayout.Bm25.compact(spark, path.toString, dst.toString)
     }
     assert(e.getMessage.contains("rebuild"))
   }
@@ -143,11 +143,11 @@ class RetrievalSpec extends AnyFunSuite {
     // dl/Σtf consistency check must
     Retrieval.bm25AppendIndex(
       Seq(3L -> "elderberry fig grape").toDF("doc_id", "text"), path.toString)
-    assert(Retrieval.bm25AuditIndex(spark, path.toString).count() == 0,
+    assert(IndexLayout.Bm25.audit(spark, path.toString).count() == 0,
       "the key-based audit is blind to disjoint-term divergence by design")
     val dst = TmpWorkspaces.pidScoped("graft_bm25idx_spec_", "disjointdst")
     val e = intercept[IllegalArgumentException] {
-      Retrieval.bm25CompactIndex(spark, path.toString, dst.toString)
+      IndexLayout.Bm25.compact(spark, path.toString, dst.toString)
     }
     assert(e.getMessage.contains("re-appended with different text"))
   }

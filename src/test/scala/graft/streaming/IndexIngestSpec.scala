@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkTestSession
-import graft.operators.{Dedup, TmpWorkspaces}
+import graft.operators.{Dedup, IndexLayout, TmpWorkspaces}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,8 +25,8 @@ class IndexIngestSpec extends AnyFunSuite {
     // adds so each chunk is its own generation append
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, String)]
-    val q = IndexIngest.start(
-      in.toDS().toDF("doc_id", "text"), idx.toString, "doc_id", "text")
+    val q = IndexIngest.start(in.toDS().toDF("doc_id", "text"), None)(
+      IndexIngest.exactBatch(idx.toString, "doc_id", "text"))
     try {
       Seq(Seq(4L -> a), Seq(5L -> b, 6L -> "something else entirely new"),
           Seq(7L -> a)).foreach { chunk =>
@@ -38,7 +38,7 @@ class IndexIngestSpec extends AnyFunSuite {
     } finally q.stop()
 
     // replayed-append damage did NOT occur: the audit is empty
-    assert(Dedup.exactAuditIndex(spark, idx.toString).isEmpty)
+    assert(IndexLayout.Exact.audit(spark, idx.toString).isEmpty)
 
     val snap = Seq((4L, a), (5L, b), (6L, "something else entirely new"),
       (7L, a)).toDF("doc_id", "text")
@@ -49,6 +49,29 @@ class IndexIngestSpec extends AnyFunSuite {
     // cluster of `a`: {0, 4, 7} -> kept 0, size 3; `b`: {1, 5} -> kept 1,
     // size 2; the new text is its own singleton kept at 6
     assert(got == Set((0L, 3L), (1L, 2L), (6L, 1L)), s"got $got")
+  }
+
+  test("a ledgered exact delivery after a compact-swap lands where the probe reads") {
+    import graft.operators.{IndexPaths, IndexShards}
+    val a = "the quick brown fox jumps over the lazy dog"
+    val base = Seq((0L, a), (1L, "pack my box with five dozen liquor jugs"))
+      .toDF("doc_id", "text")
+    val idx = TmpWorkspaces.pidScoped("graft_ingest_spec_", "swapped")
+    Dedup.exactWriteIndex(base, idx.toString, "doc_id", "text")
+    // cut over to a copy of the live layout: the root now carries
+    // `_current`, and the ledger publishes into that generation
+    IndexPaths.compactSwap(spark, idx.toString) { (src, dst) =>
+      spark.read.parquet(s"$src/fingerprints")
+        .write.partitionBy("shard").parquet(s"$dst/fingerprints")
+      IndexShards.mirror(spark, s"$src/fingerprints", s"$dst/fingerprints")
+    }
+    val delta = Seq((4L, a)).toDF("doc_id", "text")
+    IndexIngest.exactBatch(idx.toString, "doc_id", "text")(delta, 0L)
+    val got = Dedup.exactClustersIndexed(spark, idx.toString, delta,
+        "doc_id", "text")
+      .select($"kept_id", $"cluster_size")
+      .as[(Long, Long)].collect().toSet
+    assert(got == Set((0L, 2L)), s"the delivered row must be served: $got")
   }
 
   test("replayed delivery of a committed batchId is skipped: audit clean, serve unchanged") {
@@ -75,7 +98,7 @@ class IndexIngestSpec extends AnyFunSuite {
       s"got $first")
     // the sink retry: same batch, same batchId — must be a no-op
     IndexIngest.exactBatch(idx.toString, "doc_id", "text")(delta, 0L)
-    assert(Dedup.exactAuditIndex(spark, idx.toString).isEmpty,
+    assert(IndexLayout.Exact.audit(spark, idx.toString).isEmpty,
       "a skipped replay must leave zero duplicate ids")
     assert(serve() == first, "serve must be bit-identical after the replay")
     // a NEW batchId is a genuine delivery and must land
@@ -118,12 +141,12 @@ class IndexIngestSpec extends AnyFunSuite {
     // the crash left ZERO live damage: the index serves the base only
     assert(spark.read.parquet(s"$idx/fingerprints").count() == 2,
       "staged-but-unpublished files must be invisible to readers")
-    assert(Dedup.exactAuditIndex(spark, idx.toString).isEmpty)
+    assert(IndexLayout.Exact.audit(spark, idx.toString).isEmpty)
 
     // the retry (same batchId, the real body) re-stages and publishes
     IndexIngest.exactBatch(idx.toString, "doc_id", "text")(delta, 0L)
     assert(!fs.exists(staging), "retry must clear the crashed staging")
-    assert(Dedup.exactAuditIndex(spark, idx.toString).isEmpty,
+    assert(IndexLayout.Exact.audit(spark, idx.toString).isEmpty,
       "crash-retry must land the generation without duplicates")
     val got = Dedup.exactClustersIndexed(spark, idx.toString, delta,
         "doc_id", "text")
@@ -183,7 +206,7 @@ class IndexIngestSpec extends AnyFunSuite {
     // retry: same batchId, the real body — purges the partial rename,
     // re-stages, republishes; NO duplicate rows anywhere
     IndexIngest.exactBatch(idx.toString, "doc_id", "text")(delta, 0L)
-    assert(Dedup.exactAuditIndex(spark, idx.toString).isEmpty,
+    assert(IndexLayout.Exact.audit(spark, idx.toString).isEmpty,
       "retry after a mid-publish crash must not duplicate rows")
     assert(spark.read.parquet(s"$idx/fingerprints").count() == 4,
       "base 2 + delta 2, each exactly once")
@@ -245,7 +268,7 @@ class IndexIngestSpec extends AnyFunSuite {
     }
     assert(bWon, "the interleaved twin must win the superseded claim")
     assert(!aWon, "the fenced delivery must abort pre-publish")
-    assert(Dedup.exactAuditIndex(spark, idx.toString).isEmpty,
+    assert(IndexLayout.Exact.audit(spark, idx.toString).isEmpty,
       "zero duplicate rows after the interleave")
     assert(spark.read.parquet(s"$idx/fingerprints").count() == 4,
       "base 2 + delta 2, each exactly once")
@@ -282,7 +305,7 @@ class IndexIngestSpec extends AnyFunSuite {
 
     // the retry: the real body under the same (member, epoch, batchId)
     IndexIngest.exactBatch(idx.toString, "doc_id", "text")(delta, 0L)
-    assert(Dedup.exactAuditIndex(spark, idx.toString).isEmpty)
+    assert(IndexLayout.Exact.audit(spark, idx.toString).isEmpty)
     assert(spark.read.parquet(s"$idx/fingerprints").count() == 4,
       "the superseding retry must land the generation exactly once")
     // and the claim now names the retry's attempt, not the dead one
@@ -319,8 +342,8 @@ class IndexIngestSpec extends AnyFunSuite {
       (7L, "spark keyed shuffles again"))
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, String)]
-    val q = IndexIngest.startBm25(
-      in.toDS().toDF("doc_id", "text"), idx.toString)
+    val q = IndexIngest.start(in.toDS().toDF("doc_id", "text"), None)(
+      IndexIngest.bm25Batch(idx.toString, "doc_id", "text"))
     try {
       Seq(delta.take(1), delta.slice(1, 3), delta.drop(3)).foreach { chunk =>
         in.addData(chunk)
@@ -331,7 +354,7 @@ class IndexIngestSpec extends AnyFunSuite {
     } finally q.stop()
 
     // no replayed-batch damage
-    assert(Retrieval.bm25AuditIndex(spark, idx.toString).isEmpty)
+    assert(IndexLayout.Bm25.audit(spark, idx.toString).isEmpty)
 
     // served ranking ≡ the fresh whole-union build's: df and the
     // corpus scalars summed over 4 generations must equal one build
@@ -361,8 +384,9 @@ class IndexIngestSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, String)]
     // threshold just above the fresh build's floor: the growing
     // generation files must cross it mid-stream and trigger the hook
-    val q = IndexIngest.startBm25(in.toDS().toDF("doc_id", "text"),
-      idx.toString, maxDataFiles = Some(floor + 2))
+    val q = IndexIngest.start(in.toDS().toDF("doc_id", "text"), None)(
+      IndexIngest.bm25Batch(idx.toString, "doc_id", "text",
+        maxDataFiles = Some(floor + 2)))
     try {
       Seq(delta.take(1), delta.slice(1, 3), delta.drop(3)).foreach { chunk =>
         in.addData(chunk)
@@ -385,7 +409,7 @@ class IndexIngestSpec extends AnyFunSuite {
         IndexPaths.resolve(spark, idx.toString)) <= freshCount + 2,
       "serve cost must return to the compacted baseline")
     // and the audit + serve through the root are exactly the fresh run's
-    assert(Retrieval.bm25AuditIndex(spark, idx.toString).isEmpty)
+    assert(IndexLayout.Bm25.audit(spark, idx.toString).isEmpty)
     val qs = Seq((0L, "spark shuffles keyed data")).toDF("doc_id", "text")
     def serve(path: String) =
       Retrieval.bm25TopKIndexed(spark, path, qs, k = 10)
@@ -404,9 +428,9 @@ class IndexIngestSpec extends AnyFunSuite {
 
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, Array[Byte])]
-    val q = IndexIngest.startFrames(
-      in.toDS().toDF("asset_id", "payload"), idx.toString, frameBytes = 4,
-      maxDataFiles = Some(0L)) // force the policy every batch
+    val q = IndexIngest.start(in.toDS().toDF("asset_id", "payload"), None)(
+      IndexIngest.frameBatch(idx.toString, frameBytes = 4,
+        maxDataFiles = Some(0L))) // force the policy every batch
     val delta = Seq(11L -> b("ccccaaaa"), 13L -> b("dddd"))
     try {
       delta.foreach { row =>
@@ -417,7 +441,7 @@ class IndexIngestSpec extends AnyFunSuite {
 
     assert(IndexPaths.currentGeneration(spark, idx.toString).nonEmpty,
       "the hook must have compact-swapped")
-    assert(Multimodal.frameAuditIndex(spark, idx.toString).isEmpty)
+    assert(IndexLayout.Frame.audit(spark, idx.toString).isEmpty)
     val fresh = TmpWorkspaces.pidScoped("graft_autoframe_spec_", "fresh")
     Multimodal.frameWriteIndex(
       base.union(delta.toDF("asset_id", "payload")), fresh.toString,
@@ -450,8 +474,9 @@ class IndexIngestSpec extends AnyFunSuite {
       (12L, Array(5.0f, -5.0f)), (13L, Array(-5.0f, 5.1f)))
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, Array[Float])]
-    val q = IndexIngest.startSemantic(
-      in.toDS().toDF("vec_id", "embedding"), idx.toString, cents)
+    val q = IndexIngest.start(in.toDS().toDF("vec_id", "embedding"), None)(
+      IndexIngest.semanticBatch(idx.toString, cents, "vec_id", "embedding",
+        startGen = 1))
     try {
       Seq(delta.take(1), delta.slice(1, 3), delta.drop(3)).foreach { chunk =>
         in.addData(chunk)
@@ -466,7 +491,7 @@ class IndexIngestSpec extends AnyFunSuite {
       .filter($"gen" > 0).select("gen").distinct()
       .as[Int].collect().toSet
     assert(gens == Set(1, 2, 3), s"got $gens")
-    assert(Clustering.semanticAuditIndex(spark, idx.toString).isEmpty)
+    assert(IndexLayout.semantic("vec_id").audit(spark, idx.toString).isEmpty)
 
     // verdicts equal the single-batch append path over the same delta
     val snap = Clustering.assignL2(
@@ -498,8 +523,8 @@ class IndexIngestSpec extends AnyFunSuite {
       (6L, Array(0.7f, 0.6f)), (7L, Array(1.0f, 0.0f)))
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, Array[Float])]
-    val q = IndexIngest.startIvf(
-      in.toDS().toDF("vec_id", "embedding"), idx.toString, cents)
+    val q = IndexIngest.start(in.toDS().toDF("vec_id", "embedding"), None)(
+      IndexIngest.ivfBatch(idx.toString, cents, "vec_id", "embedding"))
     try {
       // three EXPLICIT micro-batches, each its own generation append
       Seq(delta.take(1), delta.slice(1, 3), delta.drop(3)).foreach { chunk =>
@@ -543,8 +568,9 @@ class IndexIngestSpec extends AnyFunSuite {
       (6L, "s", "completely different sentence about winter weather patterns"))
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, String, String)]
-    val q = IndexIngest.startWinnow(
-      in.toDS().toDF("doc_id", "source", "text"), idx.toString)
+    val q = IndexIngest.start(
+      in.toDS().toDF("doc_id", "source", "text"), None)(
+      IndexIngest.winnowBatch(idx.toString, "doc_id", "text", "source"))
     try {
       Seq(delta.take(1), delta.slice(1, 2), delta.drop(2)).foreach { chunk =>
         in.addData(chunk)
@@ -554,7 +580,7 @@ class IndexIngestSpec extends AnyFunSuite {
         "each add must arrive as its own micro-batch")
     } finally q.stop()
 
-    assert(Dedup.winnowAuditIndex(spark, idx.toString).isEmpty)
+    assert(IndexLayout.Winnow.audit(spark, idx.toString).isEmpty)
 
     // pairs equal the single-batch append path over the same delta
     val snap = delta.toDF("doc_id", "source", "text")
@@ -584,8 +610,8 @@ class IndexIngestSpec extends AnyFunSuite {
       (7L, b("alpha")))
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, Array[Byte])]
-    val q = IndexIngest.startAssets(
-      in.toDS().toDF("asset_id", "payload"), idx.toString)
+    val q = IndexIngest.start(in.toDS().toDF("asset_id", "payload"), None)(
+      IndexIngest.assetBatch(idx.toString))
     try {
       Seq(delta.take(1), delta.slice(1, 3), delta.drop(3)).foreach { chunk =>
         in.addData(chunk)
@@ -596,7 +622,7 @@ class IndexIngestSpec extends AnyFunSuite {
     } finally q.stop()
 
     // no replayed-batch damage
-    assert(Multimodal.assetAuditIndex(spark, idx.toString).isEmpty)
+    assert(IndexLayout.Asset.audit(spark, idx.toString).isEmpty)
 
     // probe verdicts equal the single-batch append path over the delta
     val snap = delta.toDF("asset_id", "payload")
@@ -626,8 +652,8 @@ class IndexIngestSpec extends AnyFunSuite {
       (15L, b("aaaadddd")))
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, Array[Byte])]
-    val q = IndexIngest.startFrames(
-      in.toDS().toDF("asset_id", "payload"), idx.toString, frameBytes = 4)
+    val q = IndexIngest.start(in.toDS().toDF("asset_id", "payload"), None)(
+      IndexIngest.frameBatch(idx.toString, frameBytes = 4))
     try {
       Seq(delta.take(1), delta.slice(1, 2), delta.drop(2)).foreach { chunk =>
         in.addData(chunk)
@@ -670,9 +696,9 @@ class IndexIngestSpec extends AnyFunSuite {
       (99L, b(shared)))
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, Array[Byte])]
-    val q = IndexIngest.startFrameSimhash(
-      in.toDS().toDF("asset_id", "payload"), idx.toString,
-      frameBytes = 1024, blockOf = blockOf)
+    val q = IndexIngest.start(in.toDS().toDF("asset_id", "payload"), None)(
+      IndexIngest.frameSimhashBatch(idx.toString, frameBytes = 1024,
+        blockOf = blockOf))
     try {
       Seq(delta.take(1), delta.slice(1, 2), delta.drop(2)).foreach { chunk =>
         in.addData(chunk)
@@ -721,8 +747,9 @@ class IndexIngestSpec extends AnyFunSuite {
 
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, Array[Byte])]
-    val q = IndexIngest.startMedia(in.toDS().toDF("asset_id", "payload"),
-      fp.toString, sem.toString, fr.toString, cents, frameBytes = 1024)
+    val q = IndexIngest.start(in.toDS().toDF("asset_id", "payload"), None)(
+      IndexIngest.mediaBatch(fp.toString, sem.toString, fr.toString, cents,
+        frameBytes = 1024))
     try {
       Seq(Seq((21L, b("aaaa"))), Seq((23L, b("zzzz")))).foreach { chunk =>
         in.addData(chunk)
@@ -777,8 +804,8 @@ class IndexIngestSpec extends AnyFunSuite {
 
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, Array[Byte])]
-    val q = IndexIngest.startAssetManifest(
-      in.toDS().toDF("asset_id", "payload"), idx.toString)
+    val q = IndexIngest.start(in.toDS().toDF("asset_id", "payload"), None)(
+      IndexIngest.assetManifestBatch(idx.toString))
     try {
       Seq(all.slice(1, 2), all.slice(2, 4)).foreach { chunk =>
         in.addData(chunk)
@@ -830,8 +857,8 @@ class IndexIngestSpec extends AnyFunSuite {
     val delta = Seq((3L, b("aaaa")), (4L, b("iiio")), (5L, b("iiii")))
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, Array[Byte])]
-    val q = IndexIngest.startAssetSemantic(
-      in.toDS().toDF("asset_id", "payload"), idx.toString, cents)
+    val q = IndexIngest.start(in.toDS().toDF("asset_id", "payload"), None)(
+      IndexIngest.assetSemanticBatch(idx.toString, cents, startGen = 1))
     try {
       Seq(delta.take(1), delta.slice(1, 2), delta.drop(2)).foreach { chunk =>
         in.addData(chunk)
@@ -846,7 +873,7 @@ class IndexIngestSpec extends AnyFunSuite {
       .filter($"gen" > 0).select("gen").distinct()
       .as[Int].collect().toSet
     assert(gens == Set(1, 2, 3), s"got $gens")
-    assert(Clustering.semanticAuditIndex(spark, idx.toString).isEmpty)
+    assert(IndexLayout.semantic("vec_id").audit(spark, idx.toString).isEmpty)
 
     // hand verdicts through the standing probe: 3 dups 0 (kept=false),
     // 4 is a true near-miss (kept), 5 dups 1 (kept=false)
@@ -872,8 +899,9 @@ class IndexIngestSpec extends AnyFunSuite {
     val idx = TmpWorkspaces.pidScoped("graft_mixingest_spec_", "mix")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, String, String)]
-    val q = IndexIngest.startMixture(
-      in.toDS().toDF("doc_id", "source", "text"), idx.toString)
+    val q = IndexIngest.start(
+      in.toDS().toDF("doc_id", "source", "text"), None)(
+      IndexIngest.mixtureBatch(idx.toString, "source", "doc_id", "text"))
     try {
       Seq(docs.take(1), docs.slice(1, 2), docs.drop(2)).foreach { chunk =>
         in.addData(chunk)

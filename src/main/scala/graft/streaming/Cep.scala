@@ -39,8 +39,9 @@ import org.apache.spark.sql.streaming.{OutputMode, TimeMode, ValueState}
   * SKIP_PAST_LAST mode a flush also clears partials that started at or
   * before the flushed match's end.
   *
-  * Mechanics mirror CepOperator: events buffer in ListState until the
-  * watermark passes them (an event-time timer at each event's ts), are
+  * Mechanics mirror CepOperator: events buffer in the key's pending-row
+  * state until the watermark passes them (one event-time timer per
+  * batch, at its min ts — [[WatermarkReplayProcessor]]), are
   * then replayed in (ts, id) order through the partial-match set, and
   * completed matches emit downstream. State is bounded by the
   * out-of-orderness window (buffer) plus `within` (partials) per key —

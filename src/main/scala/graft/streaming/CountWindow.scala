@@ -11,8 +11,9 @@ import org.apache.spark.sql.streaming.{OutputMode, TimeMode, ValueState}
   * count-window semantics.
   *
   * Determinism over an out-of-order stream: same watermark-ordered
-  * replay as [[StreamingOver]] — rows buffer in ListState with an
-  * event-time timer each; when the watermark passes they replay in
+  * replay as [[StreamingOver]] — rows buffer in the key's pending-row
+  * state under one event-time timer per batch; when the watermark
+  * passes them they replay in
   * (ts, id) order through a per-key (windowSeq, count, sumCents)
   * accumulator. State is O(out-of-orderness) buffered rows plus one
   * accumulator per key. Money accumulates in exact long cents.

@@ -4,7 +4,7 @@ import graft.SparkTestSession
 import graft.streaming.TemporalSort.SortEvent
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, StreamingQueryException, TimeMode, TimerValues, TTLConfig, ValueState}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fixtures for the state-variable versioning test: two processors that
@@ -44,6 +44,33 @@ object StateRenameFixtures {
       st.update(cur)
       Iterator.single((key, cur.length.toLong))
     }
+  }
+}
+
+/** The replay buffer's old shape: rows appended one by one to a
+  * `ListState` named `buf`, drained by an event-time timer — what
+  * [[WatermarkReplayProcessor]] kept before the buffer became one
+  * `ValueState[Seq[_]]` under the same name.
+  */
+class ListBufferSort extends StatefulProcessor[Long, SortEvent,
+    TemporalSort.SortedRow] {
+  @transient private var buf: ListState[SortEvent] = _
+  override def init(om: OutputMode, tm: TimeMode): Unit =
+    buf = getHandle.getListState[SortEvent]("buf",
+      Encoders.product[SortEvent], TTLConfig.NONE)
+  override def handleInputRows(key: Long, rows: Iterator[SortEvent],
+      tv: TimerValues): Iterator[TemporalSort.SortedRow] = {
+    rows.foreach { e =>
+      buf.appendValue(e)
+      getHandle.registerTimer(e.tsMs)
+    }
+    Iterator.empty
+  }
+  override def handleExpiredTimer(key: Long, tv: TimerValues,
+      info: ExpiredTimerInfo): Iterator[TemporalSort.SortedRow] = {
+    val rows = buf.get().toList
+    buf.clear()
+    rows.iterator.map(e => TemporalSort.SortedRow(key, e.id, e.tsMs, 0L))
   }
 }
 
@@ -152,5 +179,48 @@ class RecoverySpec extends AnyFunSuite {
     // v1 emitted 1 then 2; v2's fresh variable restarts at 1 — a count
     // of 3 would mean old-shape state leaked into the new variable
     assert(counts == Seq(1L, 1L, 2L), s"got $counts")
+  }
+
+  test("a checkpoint holding the old ListState buffer refuses to restore") {
+    // Rows buffered by the old buffer shape must not vanish on restart:
+    // the ValueState that replaced it keeps the variable name `buf`, so
+    // Spark's state-schema check rejects the old checkpoint instead of
+    // starting the replay buffer empty.
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    StreamRunner.requireRocksDb(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft_buf_shape")
+    val (ckpt, sink) = (s"$dir/ckpt", s"$dir/sink")
+
+    val in = MemoryStream[SortEvent]
+    def start(old: Boolean) = {
+      val events = in.toDS().withWatermark("ts", "1 hour").as[SortEvent]
+      val out =
+        if (old) events.groupByKey(_.key).transformWithState(
+          new ListBufferSort, TimeMode.EventTime(), OutputMode.Append())
+        else TemporalSort(events)
+      out.toDF().writeStream.format("parquet")
+        .option("checkpointLocation", ckpt).option("path", sink)
+        .outputMode("append").start()
+    }
+
+    // phase 1 (old shape): two rows stay buffered under the 1 h delay
+    val q1 = start(old = true)
+    try {
+      in.addData(ev(1, 0, 10), ev(1, 10, 11))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    assert(spark.read.parquet(sink).count() == 0)
+
+    // phase 2: TemporalSort from the same checkpoint
+    val q2 = start(old = false)
+    try {
+      in.addData(ev(1, 20, 12))
+      val err = intercept[StreamingQueryException](q2.processAllAvailable())
+      val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toList
+      assert(msgs.exists(_.contains("STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE")),
+        s"got ${msgs.mkString(" <- ")}")
+    } finally q2.stop()
   }
 }

@@ -3,7 +3,9 @@ package graft.streaming
 import graft.SparkTestSession
 import graft.streaming.TemporalSort.SortEvent
 import graft.streaming.RetractableAgg.{RaEvent, RaRow}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import scala.reflect.runtime.universe.TypeTag
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Batching must not change results: the watermark-replay operators
@@ -260,5 +262,114 @@ class ReplayConsistencySpec extends AnyFunSuite {
     val split = runCepOptional(Seq(optionalEvents.take(2), optionalEvents.drop(2)))
     assert(one == Seq(Seq(1L, 2L), Seq(7L, 8L, 9L), Seq(10L, 11L)), s"got $one")
     assert(each == one && split == one)
+  }
+
+  // The remaining replay processors through one harness: every event
+  // type carries `key` and `tsMs`, and every output `key`; the check is
+  // on the whole emitted multiset, so an emission that moves, doubles
+  // or vanishes across a batch boundary fails it.
+  private def runReplay[E <: Product : TypeTag](batches: Seq[Seq[E]],
+      flush: E)(op: Dataset[E] => Dataset[_]): Seq[String] = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    StreamRunner.requireRocksDb(spark)
+    val in = MemoryStream[E]
+    val name = s"rc_replay_${System.nanoTime()}"
+    val stream = in.toDS()
+      .withColumn("wm_ts", org.apache.spark.sql.functions.timestamp_millis($"tsMs"))
+      .withWatermark("wm_ts", "30 seconds")
+      .drop("wm_ts").as[E]
+    val q = op(stream).toDF()
+      .writeStream.format("memory").queryName(name)
+      .outputMode("append").start()
+    try {
+      batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+      in.addData(flush)
+      q.processAllAvailable()
+      spark.table(name).filter($"key" =!= 999L)
+        .collect().map(_.toString).toSeq.sorted
+    } finally q.stop()
+  }
+
+  private def assertBatchingInvariant[E <: Product : TypeTag](events: Seq[E],
+      perBatch: Int, flush: E)(op: Dataset[E] => Dataset[_]): Unit = {
+    val one = runReplay(Seq(events), flush)(op)
+    val three = runReplay(events.grouped(perBatch).toSeq, flush)(op)
+    val shuffled = runReplay(events.grouped(perBatch).map(_.reverse).toSeq,
+      flush)(op)
+    assert(one.nonEmpty, "no output")
+    assert(three == one, s"split batches differ: $three vs $one")
+    assert(shuffled == one, s"shuffled batches differ: $shuffled vs $one")
+  }
+
+  // two rows per timestamp, so OVER RANGE peer groups span rows
+  private val overEvents = (1 to 24).map { i =>
+    val t = ts((i / 2) * 10)
+    StreamingOver.OverEvent(i % 3, t.getTime, i.toLong, i * 1.5, t)
+  }
+  private val overFlush =
+    StreamingOver.OverEvent(999L, ts(3599).getTime, 0L, 0.0, ts(3599))
+
+  test("streaming over (rows): one batch == three batches == shuffled batches") {
+    assertBatchingInvariant(overEvents, 8, overFlush)(StreamingOver(_, 2))
+  }
+
+  test("streaming over (range): one batch == three batches == shuffled batches") {
+    assertBatchingInvariant(overEvents, 8, overFlush)(
+      StreamingOverRange(_, 25000L))
+  }
+
+  test("count window: one batch == three batches == shuffled batches") {
+    val events = (1 to 24).map { i =>
+      CountWindow.CwEvent(i % 2, ts(i * 10).getTime, i.toLong, i * 1.25)
+    }
+    assertBatchingInvariant(events, 8,
+      CountWindow.CwEvent(999L, ts(3599).getTime, 0L, 0.0))(CountWindow(_, 3))
+  }
+
+  private val trEvents = (1 to 24).map { i =>
+    Triggers.TrEvent(i % 2, ts(i * 10).getTime, i.toLong, ((i * 7) % 13).toDouble)
+  }
+  private val trFlush = Triggers.TrEvent(999L, ts(3599).getTime, 0L, 0.0)
+
+  test("delta trigger: one batch == three batches == shuffled batches") {
+    assertBatchingInvariant(trEvents, 8, trFlush)(
+      Triggers.deltaTrigger(_, 4.0, purge = true))
+  }
+
+  test("continuous trigger: one batch == three batches == shuffled batches") {
+    assertBatchingInvariant(trEvents, 8, trFlush)(
+      Triggers.continuousTrigger(_, 60000L, 20000L))
+  }
+
+  test("retracting join: one batch == three batches == shuffled batches") {
+    // inserts on alternating sides, then updates and deletes of
+    // earlier rows of the same key and side
+    val events = (1 to 24).flatMap { i =>
+      val (k, side) = (i % 2L, (i / 2) % 2)
+      val ins = RetractingJoin.RjEvent(k, side, "I", ts(i * 10).getTime,
+        i.toLong, i * 1.0)
+      val upd =
+        if (i % 5 == 0) Seq(ins.copy(kind = "U", tsMs = ts(i * 10 + 5).getTime,
+          value = i + 100.0))
+        else Nil
+      val del =
+        if (i % 7 == 0) Seq(ins.copy(kind = "D", tsMs = ts(i * 10 + 7).getTime))
+        else Nil
+      ins +: (upd ++ del)
+    }
+    assertBatchingInvariant(events, 9,
+      RetractingJoin.RjEvent(999L, 0, "I", ts(3599).getTime, 0L, 0.0))(
+      RetractingJoin(_))
+  }
+
+  test("twin-state join: one batch == three batches == shuffled batches") {
+    val events = (1 to 24).map { i =>
+      TwinStateJoin.TsjEvent(i % 2, (i / 2) % 2, ts(i * 10).getTime,
+        i.toLong, i * 1.0)
+    }
+    assertBatchingInvariant(events, 8,
+      TwinStateJoin.TsjEvent(999L, 0, ts(3599).getTime, 0L, 0.0))(
+      TwinStateJoin(_))
   }
 }

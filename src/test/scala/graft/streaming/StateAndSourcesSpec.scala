@@ -4,7 +4,8 @@ import graft.SparkTestSession
 import graft.sources.DataGen
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.graftshim.{ManualClockStreams, StreamManualClock}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Per-key running count whose ValueState expires after `ttlMs` of
@@ -36,6 +37,9 @@ class StateAndSourcesSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("ValueState with TTL expires between micro-batches") {
+    // processing time comes from a manual trigger clock: each batch's
+    // timestamp (the TTL clock) is exactly the trigger time the test
+    // advanced to, so expiry does not depend on how fast the box runs
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     StreamRunner.requireRocksDb(spark)
@@ -43,38 +47,25 @@ class StateAndSourcesSpec extends AnyFunSuite {
     val out = in.toDS().map(k => (k, 1L)).groupByKey(_._1)
       .transformWithState(new TtlCounter(ttlMs = 5000L),
         TimeMode.ProcessingTime(), OutputMode.Append())
-    val q = out.toDF().toDF("key", "cnt")
-      .writeStream.format("memory").queryName("ttl_spec")
-      .outputMode("append").start()
-    // NOTE: processAllAvailable never settles for processing-time TWS
-    // queries (the operator keeps scheduling work), so poll the sink.
-    def waitRows(n: Long): Unit = {
-      val deadline = System.currentTimeMillis() + 30000
-      while (spark.table("ttl_spec").count() < n &&
-        System.currentTimeMillis() < deadline) Thread.sleep(100)
-      assert(spark.table("ttl_spec").count() >= n, s"timed out waiting $n")
+    val clock = new StreamManualClock()
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_ttl")
+    val (q, sink) = ManualClockStreams.startToMemory(out.toDF("key", "cnt"),
+      ckpt.toString, OutputMode.Append(), Trigger.ProcessingTime(1000L),
+      clock)
+    // one batch per step: add the row, trigger at time `t`, wait for
+    // that batch to finish
+    def batchAt(t: Long): Unit = {
+      in.addData(1L)
+      clock.setTime(t)
+      clock.awaitStreamWaitingAt(t)
     }
     try {
-      val t0 = System.currentTimeMillis()
-      in.addData(1L)
-      waitRows(1)
-      in.addData(1L) // within TTL → count continues
-      waitRows(2)
-      // deflake guard: the "count continues" half is only sound when
-      // both batches landed within the TTL window — an overloaded box
-      // can stall past it and expire the state early (the r21 one-red-
-      // test flake). CANCEL (not fail) when the premise broke.
-      val withinTtl = System.currentTimeMillis() - t0
-      Thread.sleep(7000) // let the state expire
-      in.addData(1L) // expired → count restarts
-      waitRows(3)
-      val counts = spark.table("ttl_spec").collect()
-        .map(_.getLong(1)).toSeq.sorted
-      assume(withinTtl < 4000,
-        s"box too loaded for the 5s TTL window (first two batches took " +
-          s"$withinTtl ms) — timing premise broken, not a product bug")
-      assert(counts.take(2) == Seq(1L, 1L) && counts.max == 2L,
-        s"expected restart after TTL, got $counts")
+      clock.awaitStreamWaitingAt(0L)
+      batchAt(1000L)  // count 1, expires at 6000
+      batchAt(2000L)  // within TTL: count 2, expires at 7000
+      batchAt(12000L) // expired: count restarts at 1
+      val counts = sink.allData.map(_.getLong(1))
+      assert(counts == Seq(1L, 2L, 1L), s"expected restart after TTL, got $counts")
     } finally q.stop()
   }
 

@@ -43,7 +43,6 @@ object CepQueries {
   val q61CepAllMatches: QueryDef = QueryDef(
     "q61_cep_all_matches",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       val m = Cep(cepStream(s, dir), pattern(skipPastLast = false)).toDF()
       StreamRunner.runToTable(m
           .select(col("key").as("user_id"),
@@ -86,7 +85,6 @@ object CepQueries {
   val q62CepSkipPastLast: QueryDef = QueryDef(
     "q62_cep_skip_past_last",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       val m = Cep(cepStream(s, dir), pattern(skipPastLast = true)).toDF()
       StreamRunner.runToTable(m
           .select(col("key").as("user_id"),
@@ -149,7 +147,6 @@ object CepQueries {
   val q78MatchRecognize: QueryDef = QueryDef(
     "q78_match_recognize",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       graft.MatchRecognizeSql.run(s, dir, """
         SELECT * FROM events MATCH_RECOGNIZE (
           PARTITION BY user_id
@@ -198,7 +195,6 @@ object CepQueries {
   val q88MatchRecognizeVShape: QueryDef = QueryDef(
     "q88_mr_vshape",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       graft.MatchRecognizeSql.run(s, dir, """
         SELECT * FROM events MATCH_RECOGNIZE (
           PARTITION BY user_id
@@ -273,7 +269,6 @@ object CepQueries {
   val q89CepOneOrMore: QueryDef = QueryDef(
     "q89_cep_one_or_more",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       val pat = Pattern(
         steps = Seq(
           Step("signup", _.tag == "signup"),
@@ -357,7 +352,6 @@ object CepQueries {
   val q95CepNotFollowedBy: QueryDef = QueryDef(
     "q95_cep_not_followed_by",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       val pat = Pattern(
         steps = Seq(
           Step("signup", _.tag == "signup"),
@@ -407,7 +401,6 @@ object CepQueries {
   val q101MrOptional: QueryDef = QueryDef(
     "q101_mr_optional",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       graft.MatchRecognizeSql.run(s, dir, """
         SELECT * FROM events MATCH_RECOGNIZE (
           PARTITION BY user_id
@@ -461,7 +454,6 @@ object CepQueries {
   val q102MrSkipToLast: QueryDef = QueryDef(
     "q102_mr_skip_to_last",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       graft.MatchRecognizeSql.run(s, dir, """
         SELECT * FROM events MATCH_RECOGNIZE (
           PARTITION BY user_id
@@ -540,7 +532,6 @@ object CepQueries {
   val q115MrTrailingOptional: QueryDef = QueryDef(
     "q115_mr_trailing_optional",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       graft.MatchRecognizeSql.run(s, dir, """
         SELECT * FROM events MATCH_RECOGNIZE (
           PARTITION BY user_id
@@ -592,7 +583,6 @@ object CepQueries {
   val q120CepSkipToNext: QueryDef = QueryDef(
     "q120_cep_skip_to_next",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       val pat = Pattern(
         steps = Seq(
           Step("signup", _.tag == "signup"),

@@ -23,7 +23,6 @@ object CoverageQueries2 {
   val q69CountWindow: QueryDef = QueryDef(
     "q69_count_window",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       import s.implicits._
       val ev = StreamRunner.eventsStream(s, dir)
         .filter(col("event_type") === "purchase")
@@ -114,7 +113,6 @@ object CoverageQueries2 {
   val q71BroadcastEnrich: QueryDef = QueryDef(
     "q71_broadcast_enrich",
     (s, dir) => {
-      StreamRunner.useHeapState(s)
       val dim = broadcast(
         Tables.load(s, dir, "customer")
           .join(Tables.load(s, dir, "nation"),
@@ -224,7 +222,6 @@ object CoverageQueries2 {
   val q74StreamUnion: QueryDef = QueryDef(
     "q74_stream_union",
     (s, dir) => {
-      StreamRunner.useHeapState(s)
       val src = StreamRunner.eventsStream(s, dir)
       val purchases = src.filter(col("event_type") === "purchase")
         .select(col("ts"), lit("rev").as("tag"))

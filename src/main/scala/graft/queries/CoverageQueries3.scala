@@ -155,7 +155,6 @@ object CoverageQueries3 {
   val q83DynamicSession: QueryDef = QueryDef(
     "q83_dynamic_session",
     (s, dir) => {
-      graft.streaming.StreamRunner.useHeapState(s)
       // make_interval → CalendarIntervalType (ANSI INTERVAL literals are
       // DayTimeIntervalType, which session_window rejects)
       val gap = when(col("event_type") === "purchase",

@@ -253,7 +253,6 @@ object OperatorQueries {
   val q50FlinkSqlTumble: QueryDef = QueryDef(
     "q50_flink_sql_tumble",
     (s, dir) => {
-      graft.streaming.StreamRunner.useHeapState(s)
       Tables.registerAll(s, dir)
       FlinkSql.sql(s, """
         SELECT unix_timestamp(TUMBLE_START(ts, INTERVAL '1' DAY)) AS day_start,
@@ -323,7 +322,6 @@ object OperatorQueries {
   val q97CdcRetractPipeline: QueryDef = QueryDef(
     "q97_cdc_retract_pipeline",
     (s, dir) => {
-      graft.streaming.StreamRunner.requireRocksDb(s)
       import s.implicits._
       val ord = graft.streaming.StreamRunner.tableStream(s, dir, "orders")
       val pay = struct(col("o_orderkey"), col("o_custkey"),

@@ -36,7 +36,6 @@ object StreamingQueries {
   val q40StreamTumble: QueryDef = QueryDef(
     "q40_stream_tumble",
     (s, dir) => {
-      StreamRunner.useHeapState(s)
       val ev = StreamRunner.eventsStream(s, dir).withWatermark("ts", Wm)
       val agg = ev
         .groupBy(window(col("ts"), "1 day"), col("event_type"))
@@ -66,7 +65,6 @@ object StreamingQueries {
   val q41StreamSession: QueryDef = QueryDef(
     "q41_stream_session",
     (s, dir) => {
-      StreamRunner.useHeapState(s)
       val ev = StreamRunner.eventsStream(s, dir).withWatermark("ts", Wm)
       val agg = ev
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
@@ -111,7 +109,6 @@ object StreamingQueries {
   val q42StreamDedup: QueryDef = QueryDef(
     "q42_stream_dedup",
     (s, dir) => {
-      StreamRunner.useHeapState(s)
       val ev = StreamRunner.eventsStream(s, dir)
         .select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
@@ -133,7 +130,6 @@ object StreamingQueries {
   val q43StreamIntervalJoin: QueryDef = QueryDef(
     "q43_stream_interval_join",
     (s, dir) => {
-      StreamRunner.useHeapState(s)
       val clicks = StreamRunner.eventsStream(s, dir)
         .filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
@@ -167,7 +163,6 @@ object StreamingQueries {
   val q44StreamTopN: QueryDef = QueryDef(
     "q44_stream_topn",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       import s.implicits._
       val ev = StreamRunner.eventsStream(s, dir)
         .select(

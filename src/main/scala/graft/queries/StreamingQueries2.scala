@@ -22,7 +22,6 @@ object StreamingQueries2 {
   val q63StreamHop: QueryDef = QueryDef(
     "q63_stream_hop",
     (s, dir) => {
-      StreamRunner.useHeapState(s)
       val ev = StreamRunner.eventsStream(s, dir).withWatermark("ts", Wm)
       val agg = ev
         .groupBy(window(col("ts"), "1 day", "12 hours"), col("event_type"))
@@ -57,7 +56,6 @@ object StreamingQueries2 {
   val q64StreamOver: QueryDef = QueryDef(
     "q64_stream_over",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       import s.implicits._
       // Catalyst pushes the filter below EventTimeWatermark, so the
       // watermark tracks max *purchase* ts — the oracle cuts there too.
@@ -103,7 +101,6 @@ object StreamingQueries2 {
   val q65UpsertMaterialize: QueryDef = QueryDef(
     "q65_upsert_materialize",
     (s, dir) => {
-      StreamRunner.useHeapState(s)
       val log = graft.operators.TmpWorkspaces
         .pidScoped("graft_upsert_log_q65_", dir).toString
       val changelog = StreamRunner.eventsStream(s, dir)
@@ -141,7 +138,6 @@ object StreamingQueries2 {
   val q81StreamOverRange: QueryDef = QueryDef(
     "q81_stream_over_range",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       import s.implicits._
       val ev = StreamRunner.eventsStream(s, dir)
         .filter(col("event_type") === "purchase")
@@ -186,7 +182,6 @@ object StreamingQueries2 {
   val q82TwinStateJoin: QueryDef = QueryDef(
     "q82_twin_state_join",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       import s.implicits._
       import graft.streaming.TwinStateJoin.TsjEvent
       val ev = StreamRunner.eventsStream(s, dir)
@@ -230,7 +225,6 @@ object StreamingQueries2 {
   val q85RefiringWindow: QueryDef = QueryDef(
     "q85_refiring_window",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       import s.implicits._
       import graft.streaming.RefiringWindow.RwEvent
       val ev = StreamRunner.eventsStream(s, dir)
@@ -273,7 +267,6 @@ object StreamingQueries2 {
     "q86_temporal_sort_limit",
     (s, dir) => {
       import s.implicits._
-      StreamRunner.requireRocksDb(s)
       val ev = StreamRunner.eventsStream(s, dir)
         .withWatermark("ts", "1 hour")
         .select(col("user_id").as("key"),
@@ -317,7 +310,6 @@ object StreamingQueries2 {
   val q87RetractingJoin: QueryDef = QueryDef(
     "q87_retracting_join",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       import s.implicits._
       val raw = StreamRunner.eventsStream(s, dir)
         .filter(col("event_type").isin("purchase", "click"))
@@ -433,7 +425,6 @@ object StreamingQueries2 {
   val q90RetractableAgg: QueryDef = QueryDef(
     "q90_retractable_agg",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       import s.implicits._
       val p = StreamRunner.eventsStream(s, dir)
         .filter(col("event_type") === "purchase")
@@ -505,7 +496,6 @@ object StreamingQueries2 {
   val q91EvictingWindow: QueryDef = QueryDef(
     "q91_evicting_window",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       import s.implicits._
       val ev = StreamRunner.eventsStream(s, dir)
         .filter(col("event_type") === "purchase")
@@ -551,7 +541,6 @@ object StreamingQueries2 {
   val q103DeltaTrigger: QueryDef = QueryDef(
     "q103_delta_trigger",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       import s.implicits._
       import graft.streaming.Triggers
       val ev = StreamRunner.eventsStream(s, dir)
@@ -601,7 +590,6 @@ object StreamingQueries2 {
   val q104ContinuousTrigger: QueryDef = QueryDef(
     "q104_continuous_trigger",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       import s.implicits._
       import graft.streaming.Triggers
       val ev = StreamRunner.eventsStream(s, dir)
@@ -656,7 +644,6 @@ object StreamingQueries2 {
   val q105DeltaEvictor: QueryDef = QueryDef(
     "q105_delta_evictor",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       import s.implicits._
       val ev = StreamRunner.eventsStream(s, dir)
         .filter(col("event_type") === "purchase")
@@ -704,7 +691,6 @@ object StreamingQueries2 {
   val q106PurgingDeltaTrigger: QueryDef = QueryDef(
     "q106_purging_delta_trigger",
     (s, dir) => {
-      StreamRunner.requireRocksDb(s)
       import s.implicits._
       import graft.streaming.Triggers
       val ev = StreamRunner.eventsStream(s, dir)
@@ -766,7 +752,6 @@ object StreamingQueries2 {
     "q121_punctuated_sort",
     (s, dir) => {
       import s.implicits._
-      StreamRunner.requireRocksDb(s)
       val ev = StreamRunner.eventsStream(s, dir)
         .withWatermark("ts", "2000 hours")
         .select(col("user_id").as("key"),

@@ -2,8 +2,13 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, TransformWithState}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSessionBridge
 import org.apache.spark.sql.types.LongType
 
 /** Drives Structured Streaming pipelines over the driver-provided
@@ -27,55 +32,62 @@ object StreamRunner {
 
   private val nameCounter = new AtomicInteger
 
-  /** Data-scaled state-partition count derived by [[tableStream]] for
-    * the NEXT [[runToTable]] on this thread — see
-    * [[adaptiveStatePartitions]].
+  /** The state store a plan runs on: RocksDB (the reference's RocksDB
+    * keyed-state backend, SURVEY.md §2.10) iff the plan holds a
+    * `transformWithState` node, whose column families fail on the heap
+    * store at the first batch with
+    * `UNSUPPORTED_FEATURE.STATE_STORE_MULTIPLE_COLUMN_FAMILIES`. Native
+    * windowed aggs, joins and dedup keep the heap store, the reference's
+    * default: a RocksDB instance costs real startup time per (operator ×
+    * partition), waste for a few counters per window.
     */
-  private val derivedPartitions = new ThreadLocal[Option[Int]] {
-    override def initialValue(): Option[Int] = None
+  private def providerFor(plan: LogicalPlan): String = {
+    val store =
+      if (plan.exists(_.isInstanceOf[TransformWithState])) "RocksDB" else "HDFSBacked"
+    s"org.apache.spark.sql.execution.streaming.state.${store}StateStoreProvider"
   }
 
-  /** DATA-SCALED state/shuffle partition count for a fixture-driven
-    * streaming query (optimization guide §2: make partitioning scale
-    * with data, not with the machine). Stateful streaming operators
-    * instantiate one state store per shuffle partition and pay its
-    * open/commit/snapshot machinery EVERY micro-batch, so partitions
-    * beyond what the state volume needs are a per-batch tax — the r21
-    * scaling block measured several streaming queries running ~2-3x
-    * FASTER at 8 cores than 32 (q115 ratio 0.35, q43 0.48, q71 0.38)
-    * because `spark.sql.shuffle.partitions = cores` scales that tax
-    * with the machine while the state stays tiny.
+  /** DATA-SCALED state/shuffle partition count (make partitioning scale
+    * with data, not with the machine). A stateful operator opens and
+    * commits one state store per shuffle partition EVERY micro-batch,
+    * so stores beyond what the state needs are a per-batch tax: the
+    * r21 scaling block measured q115, q43 and q71 2-3x FASTER at 8
+    * cores than at 32 with tiny state.
     *
-    * Rule: ceil(input bytes / `spark.graft.stream.bytesPerStatePartition`,
-    * default 256 KB of compressed source) clamped to
-    * [1, defaultParallelism] — i.e. never MORE state instances than
-    * the session runs today (at production volume the data term
-    * exceeds any core count and this is exactly the current
-    * behavior), and never more than the data justifies (a small
-    * corpus or replayed fixture gets a handful of stores instead of
-    * one per core). The divisor sits well below the first cut's
-    * 32 MB because the tax being removed is the PER-CORE store count
-    * while per-EVENT work still needs parallelism: with 32 MB every
-    * MB-scale fixture stream collapsed to ONE partition, and q97's
-    * ~160k-event retractable-agg micro-batch ran serial (profiled
-    * 11.6 s in a 2-task job; 4.9 s at 11 partitions), while the r21
-    * anti-scaling trio measures the same-or-better at 8-11 stores as
-    * at 1 (q115 was already flat between 1 and 8 in the r21 scaling
-    * block — the cliff is at ~cores). 256 KB compressed ≈ tens of
-    * thousands of events per store per batch. Conf-overridable;
-    * derived per source table from one fs metadata call.
+    * Rule: ceil(source bytes / `spark.graft.stream.bytesPerStatePartition`,
+    * default 256 KB of compressed source) clamped to [1,
+    * defaultParallelism]: never more stores than the session runs
+    * without it (at production volume the data term exceeds any core
+    * count), never more than the data justifies. 256 KB, not 32 MB,
+    * because per-event work still needs parallelism: at 32 MB q97's
+    * ~160k-event batch ran serial (11.6 s; 4.9 s at 11 partitions).
+    *
+    * The sources are the plan's file streams (a `StreamingRelation`
+    * with a `path` option, narrowed by its `pathGlobFilter`), one fs
+    * metadata call per matched path. Several sources take the MAXIMUM,
+    * not the sum: q43 streams `events` twice and keeps the one-source
+    * count. `None` without a file source (MemoryStream, rate): the
+    * session value stays.
     */
-  private def adaptiveStatePartitions(spark: SparkSession,
-      path: String): Int = {
+  private def statePartitions(spark: SparkSession,
+      plan: LogicalPlan): Option[Int] = {
     val target = spark.conf
       .get("spark.graft.stream.bytesPerStatePartition",
         (256L << 10).toString).toLong
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(p).getLength
-    val byData = math.ceil(bytes.toDouble / math.max(target, 1L)).toLong
-    math.max(1L,
-      math.min(byData, spark.sparkContext.defaultParallelism.toLong)).toInt
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val sources = plan.collect {
+      case r: StreamingRelation => CaseInsensitiveMap(r.dataSource.options)
+    }.filter(_.contains("path"))
+    sources.map { opts =>
+      val dir = new Path(opts("path"))
+      val fs = dir.getFileSystem(hadoopConf)
+      val paths = opts.get("pathGlobFilter").fold(Seq(dir))(glob =>
+        Option(fs.globStatus(new Path(dir, glob))).toSeq.flatten.map(_.getPath))
+      val bytes = paths.map(fs.getContentSummary(_).getLength).sum
+      val byData = math.ceil(bytes.toDouble / math.max(target, 1L)).toLong
+      math.max(1L,
+        math.min(byData, spark.sparkContext.defaultParallelism.toLong)).toInt
+    }.maxOption
   }
 
   /** Any fixture table as a real file-source stream (the file stream
@@ -86,7 +98,6 @@ object StreamRunner {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/$table.parquet"
     val schema = spark.read.parquet(path).schema
-    derivedPartitions.set(Some(adaptiveStatePartitions(spark, path)))
     spark.readStream.schema(schema)
       .option("pathGlobFilter", s"$table.parquet").parquet(dir)
   }
@@ -112,12 +123,23 @@ object StreamRunner {
     * processed (including trailing no-data micro-batches that advance
     * the watermark), then returns the accumulated sink contents.
     *
-    * The result is eagerly materialized (localCheckpoint) and the
-    * memory-sink temp view dropped before returning: a long-lived
-    * session running many streaming queries (Verify, Bench) would
-    * otherwise accumulate every sink table in driver memory for its
-    * whole lifetime. Results are small (aggregates / top-ns), never raw
-    * input, so the checkpoint is cheap.
+    * The query runs in its OWN session, a clone of the caller's (same
+    * SparkContext; a copy of its conf, temp views, functions and
+    * query-execution listeners). Only the clone gets the per-query
+    * settings: the state store ([[providerFor]]) and, with file
+    * sources, the state partitions ([[statePartitions]]). So the
+    * caller's conf is never written or restored, and no query sees
+    * settings of one that ran before or beside it
+    * (`Parallelism.inParallel`). The clone does not copy streaming
+    * listeners, so the caller's are forwarded onto it. Partition count
+    * cannot move a result: state is keyed, the sink collects every
+    * partition, and oracle comparisons are order-insensitive.
+    *
+    * The result is materialized (localCheckpoint) and bound back to the
+    * caller's session, so later batch work on it runs under the
+    * caller's conf; the memory-sink view is dropped, or a long-lived
+    * session (Verify, Bench) would keep every sink table in driver
+    * memory. Results are small (aggregates / top-ns), never raw input.
     */
   def runToTable(stream: DataFrame, outputMode: String): DataFrame =
     runToTableImpl(stream, outputMode, maxDataBatches = None)
@@ -137,30 +159,21 @@ object StreamRunner {
   private def runToTableImpl(stream: DataFrame, outputMode: String,
       maxDataBatches: Option[Int]): DataFrame = {
     val spark = stream.sparkSession
+    val plan = stream.queryExecution.analyzed
+    val scoped = GraftSessionBridge.cloneSession(spark)
+    scoped.conf.set("spark.sql.streaming.stateStore.providerClass",
+      providerFor(plan))
+    statePartitions(spark, plan).foreach(n =>
+      scoped.conf.set("spark.sql.shuffle.partitions", n.toString))
+    spark.streams.listListeners().foreach(scoped.streams.addListener)
     val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-    // apply the data-scaled state-partition count the source derivation
-    // left for this thread ([[adaptiveStatePartitions]]): streaming
-    // queries freeze shuffle partitions at start(), so set just before
-    // and RESTORE right after — batch queries in the same session never
-    // see the streaming value. Partition count cannot move any result:
-    // stateful operators are keyed, the sink collects all partitions,
-    // and every oracle comparison is order-insensitive.
-    val derived = derivedPartitions.get()
-    derivedPartitions.remove()
-    val savedSp = spark.conf.get("spark.sql.shuffle.partitions")
-    derived.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString))
-    val query = stream.writeStream
+    val query = GraftSessionBridge.ofRows(scoped, plan).writeStream
       .format("memory")
       .queryName(name)
       .outputMode(outputMode)
       .start()
     try query.processAllAvailable()
-    finally {
-      query.stop()
-      derived.foreach(_ =>
-        spark.conf.set("spark.sql.shuffle.partitions", savedSp))
-    }
+    finally query.stop()
     maxDataBatches.foreach { max =>
       val progress = query.recentProgress
       // recentProgress is a RING BUFFER capped by
@@ -182,31 +195,10 @@ object StreamRunner {
           s"query's oracle is only engine-equivalent up to $max (fixture " +
           "or source-trigger configuration changed?)")
     }
-    val out = stream.sparkSession.table(name).localCheckpoint(true)
-    spark.catalog.dropTempView(name)
-    out
+    val out = scoped.table(name).localCheckpoint(true)
+    scoped.catalog.dropTempView(name)
+    GraftSessionBridge.ofRows(spark, out.queryExecution.analyzed)
   }
-
-  /** Enables the RocksDB state store provider required by
-    * `transformWithState` (SURVEY.md §2.10 state row — the analog of the
-    * reference's RocksDB keyed-state backend).
-    */
-  def requireRocksDb(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
-  /** Heap-backed state store for native streaming operators with
-    * modest per-key state (windowed aggs, bounded joins, dedup) — the
-    * same backend split the reference ships: heap/Fs backend by
-    * default, RocksDB where state outgrows memory. Native instances
-    * cost real startup time per (operator × partition); paying it for
-    * a few counters per window is waste at any scale. Each streaming
-    * query sets its provider explicitly because the session conf
-    * persists across queries in a long-lived session.
-    */
-  def useHeapState(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
 
   /** Watermark-idleness analog (reference: `flink-core/…/eventtime/
     * WatermarksWithIdleness.java`, SURVEY.md §2.10 idleness row). Two

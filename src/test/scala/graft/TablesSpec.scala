@@ -13,6 +13,10 @@ object SparkTestSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
+      // specs that start their own transformWithState queries need it;
+      // StreamRunner.runToTable picks its provider from the plan
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // text-expression registration is unconditional here: languageId/

@@ -15,6 +15,7 @@ import org.apache.hadoop.fs.{ChecksumFs, CreateFlag, FileContext, FileSystem,
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSessionBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The fork-free local file system: what `file:` resolves to, the same
@@ -157,11 +158,13 @@ class LocalFileSystemsSpec extends AnyFunSuite {
       h.endsWith("chmod") || h.endsWith("readlink")))
 
   test("a RocksDB streaming query and a parquet write start no chmod or readlink") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    try withTempDir { dir =>
+    // RocksDB set explicitly, in a session of the test's own
+    val rocks = GraftSessionBridge.cloneSession(spark)
+    rocks.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    import rocks.implicits._
+    implicit val sqlCtx = rocks.sqlContext
+    withTempDir { dir =>
       // control: the stock file system forks, and the recording sees it
       val stockForks = forks(processStarts {
         val fs = FileSystem.newInstance(LocalUri, stockConf)
@@ -170,7 +173,6 @@ class LocalFileSystemsSpec extends AnyFunSuite {
       })
       assert(stockForks.nonEmpty)
       val commands = processStarts {
-        graft.streaming.StreamRunner.requireRocksDb(spark)
         val in = MemoryStream[Int]
         val q = in.toDF().groupBy(col("value") % 3).count()
           .writeStream.format("memory").queryName("localfs_spec")
@@ -184,14 +186,11 @@ class LocalFileSystemsSpec extends AnyFunSuite {
           q.processAllAvailable()
         } finally q.stop()
         assert(q.recentProgress.count(_.numInputRows > 0) == 2)
-        spark.table("localfs_spec").write.parquet(dir.resolve("out").toString)
+        rocks.table("localfs_spec").write.parquet(dir.resolve("out").toString)
       }
       assert(forks(commands).isEmpty, commands.mkString("\n"))
-      assert(spark.read.parquet(dir.resolve("out").toString)
+      assert(rocks.read.parquet(dir.resolve("out").toString)
         .agg(sum("count")).as[Long].head() == 5)
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 }

@@ -21,7 +21,6 @@ class CepSpec extends AnyFunSuite {
   private def run(pattern: Pattern, events: Seq[CepEvent]): Seq[Seq[Long]] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
     val in = MemoryStream[CepEvent]
     val stream = in.toDS().withWatermark("ts", "0 seconds")
     val name = s"cep_spec_${System.nanoTime()}"

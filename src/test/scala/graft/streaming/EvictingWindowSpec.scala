@@ -18,7 +18,6 @@ class EvictingWindowSpec extends AnyFunSuite {
       events: Seq[EwEvent]): Seq[EwOut] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
     val in = MemoryStream[EwEvent]
     val stream = in.toDS()
       .withColumn("ts", org.apache.spark.sql.functions.timestamp_millis($"tsMs"))

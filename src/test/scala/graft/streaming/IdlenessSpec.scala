@@ -4,6 +4,7 @@ import graft.SparkTestSession
 import graft.streaming.TemporalSort.SortEvent
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSessionBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Watermark idleness (Flink `WatermarksWithIdleness`): proves the two
@@ -21,7 +22,6 @@ class IdlenessSpec extends AnyFunSuite {
   test("an idle key's buffered rows flush when other keys advance the watermark") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
     val in = MemoryStream[SortEvent]
     val name = s"idle_key_${System.nanoTime()}"
     val q = TemporalSort(
@@ -47,13 +47,13 @@ class IdlenessSpec extends AnyFunSuite {
 
   test("idle union branch stalls the min-combined watermark; max policy unsticks it") {
     def run(policy: Option[String]): Seq[(Long, Long)] = {
-      import spark.implicits._
-      implicit val sqlCtx = spark.sqlContext
-      val before = spark.conf.getOption("spark.sql.streaming.multipleWatermarkPolicy")
+      // a session of the run's own: the policy needs no restoring
+      val s = GraftSessionBridge.cloneSession(spark)
+      import s.implicits._
+      implicit val sqlCtx = s.sqlContext
       policy match {
-        case Some(_) => StreamRunner.allowIdleSources(spark)
-        case None =>
-          spark.conf.set("spark.sql.streaming.multipleWatermarkPolicy", "min")
+        case Some(_) => StreamRunner.allowIdleSources(s)
+        case None => s.conf.set("spark.sql.streaming.multipleWatermarkPolicy", "min")
       }
       val inA = MemoryStream[(java.sql.Timestamp, Long)]
       val inB = MemoryStream[(java.sql.Timestamp, Long)]
@@ -72,16 +72,8 @@ class IdlenessSpec extends AnyFunSuite {
         // branch B goes idle; branch A keeps advancing
         inA.addData((ts(100), 3L))
         q.processAllAvailable()
-        spark.table(name).as[(Long, Long)].collect().toSeq.sortBy(_._1)
-      } finally {
-        q.stop()
-        before match {
-          case Some(v) => spark.conf.set(
-            "spark.sql.streaming.multipleWatermarkPolicy", v)
-          case None => spark.conf.unset(
-            "spark.sql.streaming.multipleWatermarkPolicy")
-        }
-      }
+        s.table(name).as[(Long, Long)].collect().toSeq.sortBy(_._1)
+      } finally q.stop()
     }
     // default min policy: B's watermark is stuck at 5s, the [0,10s)
     // window never closes → nothing emits

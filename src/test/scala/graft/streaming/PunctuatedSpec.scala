@@ -29,7 +29,6 @@ class PunctuatedSpec extends AnyFunSuite {
   private def run(events: Seq[SortEvent]): Seq[(Long, Long)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
     val in = MemoryStream[SortEvent]
     val stream = in.toDS().withWatermark("ts", "1 hour").as[SortEvent]
     val name = s"punct_spec_${System.nanoTime()}"

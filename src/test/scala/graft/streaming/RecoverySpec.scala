@@ -91,7 +91,6 @@ class RecoverySpec extends AnyFunSuite {
   test("TemporalSort sequence state survives a checkpoint restart") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_recovery")
     val (ckpt, sink) = (s"$dir/ckpt", s"$dir/sink")
 
@@ -139,7 +138,6 @@ class RecoverySpec extends AnyFunSuite {
     import SparkTestSession.spark
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_rename")
     val (ckpt, sink) = (s"$dir/ckpt", s"$dir/sink")
 
@@ -188,7 +186,6 @@ class RecoverySpec extends AnyFunSuite {
     // starting the replay buffer empty.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_buf_shape")
     val (ckpt, sink) = (s"$dir/ckpt", s"$dir/sink")
 

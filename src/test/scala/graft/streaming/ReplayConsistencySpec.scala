@@ -3,8 +3,9 @@ package graft.streaming
 import graft.SparkTestSession
 import graft.streaming.TemporalSort.SortEvent
 import graft.streaming.RetractableAgg.{RaEvent, RaRow}
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.timestamp_millis
 import scala.reflect.runtime.universe.TypeTag
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,50 +22,50 @@ class ReplayConsistencySpec extends AnyFunSuite {
   private def ts(sec: Int) = java.sql.Timestamp.valueOf(
     f"2024-01-01 00:${sec / 60}%02d:${sec % 60}%02d")
 
-  private def runSort(batches: Seq[Seq[SortEvent]]): Seq[(Long, Long, Long)] = {
+  /** Runs `op` over `batches`, then over `flush` (key 999 at the end of
+    * the hour, past every window and timer), into a memory sink;
+    * `read` gets the sink without the flush key's rows.
+    */
+  private def runBatches[E <: Product : TypeTag, R](batches: Seq[Seq[E]],
+      flush: E)(op: Dataset[E] => Dataset[_])(read: DataFrame => R): R = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
-    val in = MemoryStream[SortEvent]
-    val name = s"rc_sort_${System.nanoTime()}"
-    val q = TemporalSort(
-        in.toDS().withWatermark("ts", "30 seconds").as[SortEvent]).toDF()
+    val in = MemoryStream[E]
+    val name = s"rc_${System.nanoTime()}"
+    val q = op(in.toDS()).toDF()
       .writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     try {
       batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
-      in.addData(SortEvent(999L, ts(3599).getTime, 0L, ts(3599)))
+      in.addData(flush)
       q.processAllAvailable()
-      spark.table(name).filter($"key" =!= 999L)
-        .select($"key", $"id", $"seq").as[(Long, Long, Long)]
-        .collect().toSeq.sorted
+      read(spark.table(name).filter($"key" =!= 999L))
     } finally q.stop()
+  }
+
+  /** `ds` under a 30 s watermark on its epoch-millisecond `tsMs`. */
+  private def byTsMs[E <: Product : TypeTag](ds: Dataset[E]): Dataset[E] = {
+    import spark.implicits._
+    ds.withColumn("wm_ts", timestamp_millis($"tsMs"))
+      .withWatermark("wm_ts", "30 seconds").drop("wm_ts").as[E]
+  }
+
+  private def runSort(batches: Seq[Seq[SortEvent]]): Seq[(Long, Long, Long)] = {
+    import spark.implicits._
+    runBatches(batches, SortEvent(999L, ts(3599).getTime, 0L, ts(3599)))(in =>
+      TemporalSort(in.withWatermark("ts", "30 seconds").as[SortEvent]))(
+      _.select($"key", $"id", $"seq").as[(Long, Long, Long)].collect().toSeq.sorted)
   }
 
   private def runAgg(batches: Seq[Seq[RaEvent]]): Seq[(Long, Long, Long)] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
-    val in = MemoryStream[RaEvent]
-    val name = s"rc_agg_${System.nanoTime()}"
-    val stream = in.toDS()
-      .withColumn("ts", org.apache.spark.sql.functions.timestamp_millis($"tsMs"))
-      .withWatermark("ts", "30 seconds")
-      .drop("ts").as[RaEvent]
-    val q = RetractableAgg(stream).toDF()
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
-      in.addData(RaEvent(999L, "+I", ts(3599).getTime, 0L, 0.0))
-      q.processAllAvailable()
+    runBatches(batches, RaEvent(999L, "+I", ts(3599).getTime, 0L, 0.0))(in =>
+      RetractableAgg(byTsMs(in)))(
       // final state per key is the sequence-max row
-      spark.table(name).filter($"key" =!= 999L).as[RaRow].collect().toSeq
-        .groupBy(_.key).map { case (k, rows) =>
-          val last = rows.maxBy(_.seq)
-          (k, last.cnt, last.sumCents)
-        }.toSeq.sorted
-    } finally q.stop()
+      _.as[RaRow].collect().toSeq.groupBy(_.key).map { case (k, rows) =>
+        val last = rows.maxBy(_.seq)
+        (k, last.cnt, last.sumCents)
+      }.toSeq.sorted)
   }
 
   private val sortEvents = (1 to 20).map { i =>
@@ -97,26 +98,10 @@ class ReplayConsistencySpec extends AnyFunSuite {
   private def runEvict(batches: Seq[Seq[EvictingWindow.EwEvent]])
       : Seq[(Long, Long, Long, Double)] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
-    val in = MemoryStream[EvictingWindow.EwEvent]
-    val name = s"rc_ew_${System.nanoTime()}"
-    val stream = in.toDS()
-      .withColumn("ts", org.apache.spark.sql.functions.timestamp_millis($"tsMs"))
-      .withWatermark("ts", "30 seconds")
-      .drop("ts").as[EvictingWindow.EwEvent]
-    val q = EvictingWindow(stream, 60000L,
-        EvictingWindow.Evictor.CountEvictor(3)).toDF()
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
-      in.addData(EvictingWindow.EwEvent(999L, ts(3599).getTime, 0L, 0.0))
-      q.processAllAvailable()
-      spark.table(name).filter($"key" =!= 999L)
-        .select($"key", $"winStart", $"cnt", $"sum")
-        .as[(Long, Long, Long, Double)].collect().toSeq.sorted
-    } finally q.stop()
+    runBatches(batches, EvictingWindow.EwEvent(999L, ts(3599).getTime, 0L, 0.0))(
+      in => EvictingWindow(byTsMs(in), 60000L, EvictingWindow.Evictor.CountEvictor(3)))(
+      _.select($"key", $"winStart", $"cnt", $"sum")
+        .as[(Long, Long, Long, Double)].collect().toSeq.sorted)
   }
 
   private val ewEvents = (1 to 24).map { i =>
@@ -130,29 +115,19 @@ class ReplayConsistencySpec extends AnyFunSuite {
     assert(one.nonEmpty && one == three && one == shuffled)
   }
 
-  private def runCep(batches: Seq[Seq[Cep.CepEvent]]): Seq[Seq[Long]] = {
+  private def runCep(pat: Cep.Pattern)(batches: Seq[Seq[Cep.CepEvent]])
+      : Seq[Seq[Long]] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
-    val in = MemoryStream[Cep.CepEvent]
-    val name = s"rc_cep_${System.nanoTime()}"
-    val pat = Cep.Pattern(Seq(
-      Cep.Step("a", _.tag == "A"),
-      Cep.Step("b", _.tag == "B").oneOrMore,
-      Cep.Step("c", _.tag == "C")), withinMs = 600000, skipPastLast = true)
-    val q = Cep(in.toDS().withWatermark("ts", "30 seconds").as[Cep.CepEvent],
-        pat).toDF()
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
-      in.addData(Cep.CepEvent(999L, ts(3599).getTime, "flush", 0L, ts(3599)))
-      q.processAllAvailable()
-      spark.table(name).filter($"key" =!= 999L).orderBy($"startTsMs")
-        .collect().map(_.getAs[scala.collection.Seq[Long]]("ids").toSeq)
-        .toSeq
-    } finally q.stop()
+    runBatches(batches, Cep.CepEvent(999L, ts(3599).getTime, "flush", 0L, ts(3599)))(
+      in => Cep(in.withWatermark("ts", "30 seconds").as[Cep.CepEvent], pat))(
+      _.orderBy($"startTsMs")
+        .collect().map(_.getAs[scala.collection.Seq[Long]]("ids").toSeq).toSeq)
   }
+
+  private val runCepQuantifiers = runCep(Cep.Pattern(Seq(
+    Cep.Step("a", _.tag == "A"),
+    Cep.Step("b", _.tag == "B").oneOrMore,
+    Cep.Step("c", _.tag == "C")), withinMs = 600000, skipPastLast = true)) _
 
   private val cepEvents = (1 to 24).map { i =>
     val tag = i % 6 match {
@@ -162,9 +137,9 @@ class ReplayConsistencySpec extends AnyFunSuite {
   }
 
   test("cep quantifiers: one batch == three batches == shuffled batches") {
-    val one = runCep(Seq(cepEvents))
-    val three = runCep(cepEvents.grouped(8).toSeq)
-    val shuffled = runCep(cepEvents.grouped(8).map(_.reverse).toSeq)
+    val one = runCepQuantifiers(Seq(cepEvents))
+    val three = runCepQuantifiers(cepEvents.grouped(8).toSeq)
+    val shuffled = runCepQuantifiers(cepEvents.grouped(8).map(_.reverse).toSeq)
     assert(one.nonEmpty && one == three && one == shuffled)
   }
 
@@ -172,35 +147,16 @@ class ReplayConsistencySpec extends AnyFunSuite {
   // prune position is sweep-transient); splitting the stream so a
   // match emits in an earlier batch than the partials it must prune
   // exercises the persisted-state hand-off
-  private def runCepSkipTo(batches: Seq[Seq[Cep.CepEvent]]): Seq[Seq[Long]] = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
-    val in = MemoryStream[Cep.CepEvent]
-    val name = s"rc_cepst_${System.nanoTime()}"
-    val pat = Cep.Pattern(Seq(
-      Cep.Step("s", _ => true, strict = true),
-      Cep.Step("down", _ => true, strict = true, minTimes = 1,
-        maxTimes = Int.MaxValue,
-        ctxWhere = (e, m) => m.prev.exists(e.num < _.num)),
-      Cep.Step("up", _ => true, strict = true, minTimes = 1,
-        maxTimes = Int.MaxValue,
-        ctxWhere = (e, m) => m.prev.exists(e.num > _.num))),
-      withinMs = 600000, skipPastLast = false, skipToVar = "down",
-      skipToFirst = false)
-    val q = Cep(in.toDS().withWatermark("ts", "30 seconds").as[Cep.CepEvent],
-        pat).toDF()
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
-      in.addData(Cep.CepEvent(999L, ts(3599).getTime, "flush", 0L, ts(3599)))
-      q.processAllAvailable()
-      spark.table(name).filter($"key" =!= 999L).orderBy($"startTsMs")
-        .collect().map(_.getAs[scala.collection.Seq[Long]]("ids").toSeq)
-        .toSeq
-    } finally q.stop()
-  }
+  private val runCepSkipTo = runCep(Cep.Pattern(Seq(
+    Cep.Step("s", _ => true, strict = true),
+    Cep.Step("down", _ => true, strict = true, minTimes = 1,
+      maxTimes = Int.MaxValue,
+      ctxWhere = (e, m) => m.prev.exists(e.num < _.num)),
+    Cep.Step("up", _ => true, strict = true, minTimes = 1,
+      maxTimes = Int.MaxValue,
+      ctxWhere = (e, m) => m.prev.exists(e.num > _.num))),
+    withinMs = 600000, skipPastLast = false, skipToVar = "down",
+    skipToFirst = false)) _
 
   private val zigzagEvents = (1 to 24).map { i =>
     Cep.CepEvent(i % 2, ts(i * 10).getTime, "V", i.toLong, ts(i * 10),
@@ -219,30 +175,11 @@ class ReplayConsistencySpec extends AnyFunSuite {
   // strict-entry attempt exercises the flag's round-trip through the
   // state store (a sweep-transient flag would wrongly re-admit the
   // strict transition after the batch boundary)
-  private def runCepOptional(batches: Seq[Seq[Cep.CepEvent]]): Seq[Seq[Long]] = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
-    val in = MemoryStream[Cep.CepEvent]
-    val name = s"rc_cep_opt_${System.nanoTime()}"
-    val pat = Cep.Pattern(Seq(
-      Cep.Step("a", _.tag == "A", strict = true),
-      Cep.Step("b", _.tag == "B").optional,
-      Cep.Step("c", _.tag == "C", strict = true)),
-      withinMs = 600000, skipPastLast = false)
-    val q = Cep(in.toDS().withWatermark("ts", "30 seconds").as[Cep.CepEvent],
-        pat).toDF()
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
-      in.addData(Cep.CepEvent(999L, ts(3599).getTime, "flush", 0L, ts(3599)))
-      q.processAllAvailable()
-      spark.table(name).filter($"key" =!= 999L).orderBy($"startTsMs")
-        .collect().map(_.getAs[scala.collection.Seq[Long]]("ids").toSeq)
-        .toSeq
-    } finally q.stop()
-  }
+  private val runCepOptional = runCep(Cep.Pattern(Seq(
+    Cep.Step("a", _.tag == "A", strict = true),
+    Cep.Step("b", _.tag == "B").optional,
+    Cep.Step("c", _.tag == "C", strict = true)),
+    withinMs = 600000, skipPastLast = false)) _
 
   // gap-flag-sensitive shapes, one scenario per key so the relaxed
   // A→B edge cannot link events across scenarios
@@ -269,27 +206,9 @@ class ReplayConsistencySpec extends AnyFunSuite {
   // on the whole emitted multiset, so an emission that moves, doubles
   // or vanishes across a batch boundary fails it.
   private def runReplay[E <: Product : TypeTag](batches: Seq[Seq[E]],
-      flush: E)(op: Dataset[E] => Dataset[_]): Seq[String] = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
-    val in = MemoryStream[E]
-    val name = s"rc_replay_${System.nanoTime()}"
-    val stream = in.toDS()
-      .withColumn("wm_ts", org.apache.spark.sql.functions.timestamp_millis($"tsMs"))
-      .withWatermark("wm_ts", "30 seconds")
-      .drop("wm_ts").as[E]
-    val q = op(stream).toDF()
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
-      in.addData(flush)
-      q.processAllAvailable()
-      spark.table(name).filter($"key" =!= 999L)
-        .collect().map(_.toString).toSeq.sorted
-    } finally q.stop()
-  }
+      flush: E)(op: Dataset[E] => Dataset[_]): Seq[String] =
+    runBatches(batches, flush)(in => op(byTsMs(in)))(
+      _.collect().map(_.toString).toSeq.sorted)
 
   private def assertBatchingInvariant[E <: Product : TypeTag](events: Seq[E],
       perBatch: Int, flush: E)(op: Dataset[E] => Dataset[_]): Unit = {

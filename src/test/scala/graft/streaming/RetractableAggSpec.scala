@@ -18,7 +18,6 @@ class RetractableAggSpec extends AnyFunSuite {
   private def run(events: Seq[RaEvent]): Seq[RaRow] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
     val in = MemoryStream[RaEvent]
     val stream = in.toDS()
       .withColumn("ts", org.apache.spark.sql.functions.timestamp_millis($"tsMs"))
@@ -78,7 +77,6 @@ class RetractableAggSpec extends AnyFunSuite {
   test("snapshot emission: one row per fire, same final state") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
     val events = Seq(
       ev(1, "+I", 0, 1, 10.0),
       ev(1, "+I", 10, 2, 5.0),

@@ -19,7 +19,6 @@ class RetractingJoinSpec extends AnyFunSuite {
   private def run(events: Seq[RjEvent]): Seq[(String, Long, Long, Double, Double)] = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
     val in = MemoryStream[RjEvent]
     val stream = in.toDS()
       .withColumn("ts", org.apache.spark.sql.functions.timestamp_millis($"tsMs"))

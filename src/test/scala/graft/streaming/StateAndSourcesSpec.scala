@@ -42,7 +42,6 @@ class StateAndSourcesSpec extends AnyFunSuite {
     // advanced to, so expiry does not depend on how fast the box runs
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
     val in = MemoryStream[Long]
     val out = in.toDS().map(k => (k, 1L)).groupByKey(_._1)
       .transformWithState(new TtlCounter(ttlMs = 5000L),

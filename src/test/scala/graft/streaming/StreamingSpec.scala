@@ -50,7 +50,6 @@ class StreamingSpec extends AnyFunSuite {
   test("WindowedTopN emits final per-window top-n when the timer fires") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
     val in = MemoryStream[(Timestamp, String, Long, Double)]
     val winSec = 600L
     val ev = in.toDF().toDF("ts", "grp", "id", "value")
@@ -81,7 +80,6 @@ class StreamingSpec extends AnyFunSuite {
   test("LateSplit tags ontime/late/dropped against the per-key watermark") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
     val in = MemoryStream[(Long, Long, Long)] // (key, tsMs, id)
     val ev = in.toDF().toDF("key", "tsMs", "id")
       .as[LateSplit.LsEvent]
@@ -162,7 +160,6 @@ class StreamingSpec extends AnyFunSuite {
   test("RefiringWindow: +I on close, +U re-fire on late rows, L beyond lateness") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
     val in = MemoryStream[(Long, Long, Long, Double)] // key, tsMs, id, value
     val ev = in.toDF().toDF("key", "tsMs", "id", "value")
       .withColumn("ts", timestamp_millis(col("tsMs")))

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkTestSession
 import graft.streaming.Triggers.{CtFire, DtFire, TrEvent}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,50 +15,41 @@ class TriggersSpec extends AnyFunSuite {
   private def ev(key: Long, sec: Int, id: Long, v: Double) =
     TrEvent(key, ts(sec).getTime, id, v)
 
-  private def stream(in: MemoryStream[TrEvent]) = {
-    import spark.implicits._
-    in.toDS()
-      .withColumn("ts", org.apache.spark.sql.functions.timestamp_millis($"tsMs"))
-      .withWatermark("ts", "30 seconds")
-      .drop("ts").as[TrEvent]
-  }
-
-  private def runDelta(batches: Seq[Seq[TrEvent]], threshold: Double)
-      : Seq[DtFire] = {
+  /** Runs `op` over `batches`, then over a key-999 flush at the end of
+    * the hour, into a memory sink; `read` gets the sink.
+    */
+  private def run[R](batches: Seq[Seq[TrEvent]])(
+      op: Dataset[TrEvent] => Dataset[_])(read: DataFrame => R): R = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
     val in = MemoryStream[TrEvent]
-    val name = s"tr_delta_${System.nanoTime()}"
-    val q = Triggers.deltaTrigger(stream(in), threshold).toDF()
+    val name = s"tr_${System.nanoTime()}"
+    val q = op(in.toDS()
+        .withColumn("ts", org.apache.spark.sql.functions.timestamp_millis($"tsMs"))
+        .withWatermark("ts", "30 seconds")
+        .drop("ts").as[TrEvent]).toDF()
       .writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     try {
       batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
       in.addData(ev(999L, 3599, 0L, 0.0))
       q.processAllAvailable()
-      spark.table(name).as[DtFire].collect().toSeq
-        .filter(_.key != 999L).sortBy(f => (f.key, f.n))
+      read(spark.table(name))
     } finally q.stop()
+  }
+
+  private def runDelta(batches: Seq[Seq[TrEvent]], threshold: Double,
+      purge: Boolean = false): Seq[DtFire] = {
+    import spark.implicits._
+    run(batches)(Triggers.deltaTrigger(_, threshold, purge))(_.as[DtFire]
+      .collect().toSeq.filter(_.key != 999L).sortBy(f => (f.key, f.n)))
   }
 
   private def runCont(batches: Seq[Seq[TrEvent]], winMs: Long,
       intervalMs: Long): Seq[CtFire] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
-    val in = MemoryStream[TrEvent]
-    val name = s"tr_cont_${System.nanoTime()}"
-    val q = Triggers.continuousTrigger(stream(in), winMs, intervalMs).toDF()
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
-      in.addData(ev(999L, 3599, 0L, 0.0))
-      q.processAllAvailable()
-      spark.table(name).as[CtFire].collect().toSeq
-        .filter(_.key != 999L).sortBy(f => (f.key, f.winStart, f.fireMs))
-    } finally q.stop()
+    run(batches)(Triggers.continuousTrigger(_, winMs, intervalMs))(_.as[CtFire]
+      .collect().toSeq.filter(_.key != 999L).sortBy(f => (f.key, f.winStart, f.fireMs)))
   }
 
   test("delta trigger fires when the value exceeds the seed by > threshold") {
@@ -69,25 +61,10 @@ class TriggersSpec extends AnyFunSuite {
   }
 
   test("purging delta trigger resets the aggregate on fire, keeps the seed") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    StreamRunner.requireRocksDb(spark)
-    val in = MemoryStream[TrEvent]
-    val name = s"tr_purge_${System.nanoTime()}"
-    val q = Triggers.deltaTrigger(stream(in), 100.0, purge = true).toDF()
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try {
-      in.addData(ev(1, 0, 1, 10.0), ev(1, 10, 2, 120.0),
-        ev(1, 20, 3, 50.0), ev(1, 30, 4, 260.0))
-      q.processAllAvailable()
-      in.addData(ev(999L, 3599, 0L, 0.0))
-      q.processAllAvailable()
-      val out = spark.table(name).as[DtFire].collect().toSeq
-        .filter(_.key != 999L).sortBy(_.n)
-      // fire at 120 (n=2, 10+120), purge; fire at 260 (n=2, 50+260)
-      assert(out.toSet == Set(DtFire(1, 2, 2, 13000), DtFire(1, 4, 2, 31000)))
-    } finally q.stop()
+    val out = runDelta(Seq(Seq(ev(1, 0, 1, 10.0), ev(1, 10, 2, 120.0),
+      ev(1, 20, 3, 50.0), ev(1, 30, 4, 260.0))), 100.0, purge = true)
+    // fire at 120 (n=2, 10+120), purge; fire at 260 (n=2, 50+260)
+    assert(out.toSet == Set(DtFire(1, 2, 2, 13000), DtFire(1, 4, 2, 31000)))
   }
 
   test("continuous trigger fires each boundary with rows ts <= boundary") {

@@ -1,8 +1,9 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Curation, Dedup, IndexLayout, TextAnalysis, TextOps}
+import graft.operators.{Curation, Dedup, TextAnalysis, TextOps}
 import graft.streaming.IndexIngest
+import Scenario.{BlindRetry, Split}
 import org.apache.spark.sql.functions._
 
 /** Training-data curation surface: deterministic sampling, PII
@@ -737,7 +738,7 @@ object CurationQueries {
   /** The shared q179/q181 budget: ~45% of the sf0.01 gate corpus's
     * token mass, so admission is properly mixed per source.
     */
-  private val MixtureBudget = 12000L
+  private[queries] val MixtureBudget = 12000L
 
   /** DuckDB replay of [[graft.operators.Curation.temperatureMixture]]
     * as a WITH-clause body: CTEs tm (per-doc token counts) → ms
@@ -806,19 +807,14 @@ object CurationQueries {
     (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
         .select(col("source"), col("doc_id"), col("text")).localCheckpoint()
-      val inPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ingest_in_q185_", dir)
-      Seq(col("doc_id") % 3 === 0, col("doc_id") % 3 =!= 0).foreach { p =>
-        docs.filter(p).coalesce(1)
-          .write.mode("append").parquet(inPath.toString)
-      }
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_miximidx_q185_", dir)
-      IndexIngest.drain(IndexIngest.start(
-        s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inPath.toString), None)(
-        IndexIngest.mixtureBatch(path.toString, "source", "doc_id", "text")))
-      Curation.mixtureServeIndex(s, path.toString, "source", "doc_id",
+      val landed = Scenario.landChunks(s,
+        Scenario.workspace("q185_streaming_mixture_ingest", "in", dir), docs,
+        col("doc_id") % 3 === 0)
+      val path = Scenario.workspace("q185_streaming_mixture_ingest", "index",
+        dir)
+      Scenario.deliver(landed)(
+        IndexIngest.mixtureBatch(path, "source", "doc_id", "text"))
+      Curation.mixtureServeIndex(s, path, "source", "doc_id",
           budget = MixtureBudget)
         .orderBy(col("doc_id"))
     },
@@ -1131,35 +1127,8 @@ object CurationQueries {
     * verbatim) — a missed duplicate or a dropped legitimate row moves
     * a rate and hash-fails.
     */
-  val q192MixtureRepair: QueryDef = QueryDef(
-    "q192_mixture_repair",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_miximidx_q192_", dir)
-      Curation.mixtureAppendIndex(docs.filter(col("doc_id") % 3 =!= 0),
-        path.toString, "source", "doc_id", "text")
-      val snapshot = docs.filter(col("doc_id") % 3 === 0).localCheckpoint()
-      Curation.mixtureAppendIndex(snapshot, path.toString,
-        "source", "doc_id", "text")
-      // the injected failure: a blind retry replays the same append
-      Curation.mixtureAppendIndex(snapshot, path.toString,
-        "source", "doc_id", "text")
-      val layout = IndexLayout.mixture("source", "doc_id")
-      val damage = layout.audit(s, path.toString)
-        .agg(count(lit(1)).as("n"),
-          max(col("n_copies")).as("mc"), max(col("n_payloads")).as("mp"))
-        .collect()(0)
-      require(damage.getLong(0) > 0 && damage.getLong(1) == 2L &&
-          damage.getLong(2) == 1L,
-        s"audit must localize the replay as bit-identical pairs, got $damage")
-      val repaired = graft.operators.TmpWorkspaces
-        .pidScoped("graft_miximidx_q192r_", dir)
-      layout.compact(s, path.toString, repaired.toString)
-      Curation.mixtureServeIndex(s, repaired.toString, "source", "doc_id",
-          budget = MixtureBudget)
-        .orderBy(col("doc_id"))
-    },
+  val q192MixtureRepair: QueryDef = Scenario(
+    "q192_mixture_repair", Scenario.Mixture, Split(3, 0), BlindRetry(),
     Some(mixtureManifestOracleSql))
 
   val all: Seq[QueryDef] =

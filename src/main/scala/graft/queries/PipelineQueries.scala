@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import graft.operators.{Bpe, Clustering, Curation, Dedup, IndexLayout, IndexShards, IndexStats, Multimodal, Pq, Retrieval, Similarity, TextAnalysis, TextOps}
 import graft.streaming.IndexIngest
+import Scenario.{Append, BlindRetry, Split, Stream}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -11,6 +12,12 @@ import org.apache.spark.sql.functions._
   * `documents` / `embeddings` tables, each with a DuckDB oracle that
   * reproduces the exact same deterministic hash/float math (see
   * [[graft.operators.TextOps]] for the shared primitives).
+  *
+  * The written-index lifecycle queries (build a base index, deliver the
+  * delta by an append, a blind retry or a ledgered stream, probe) are
+  * declared as [[Scenario]] values: a family, a split and a mode next
+  * to their oracle SQL. Queries whose script needs something no other
+  * query does stay hand-written; [[Scenario]]'s scaladoc lists them.
   */
 object PipelineQueries {
 
@@ -573,21 +580,8 @@ object PipelineQueries {
     * the pairs the day-2 run owes. Oracle: the fresh q189 replay
     * restricted to snapshot-endpoint pairs.
     */
-  val q190WinnowIncremental: QueryDef = QueryDef(
-    "q190_winnow_incremental",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_wnidx_q190_", dir)
-      Dedup.winnowWriteIndex(docs.filter(col("doc_id") % 3 =!= 0),
-        path.toString, "doc_id", "text", "source")
-      val snapshot = docs.filter(col("doc_id") % 3 === 0)
-      Dedup.winnowAppendIndex(snapshot, path.toString, "doc_id", "text",
-        "source")
-      Dedup.winnowPairsIndexed(s, path.toString, snapshot,
-          "doc_id", "text", "source")
-        .orderBy(col("blk"), col("doc_a"), col("doc_b"))
-    },
+  val q190WinnowIncremental: QueryDef = Scenario(
+    "q190_winnow_incremental", Scenario.Winnow, Split(3, 0), Append,
     Some(winnowPairOracleSql("doc_a % 3 = 0 OR doc_b % 3 = 0")))
 
   /** The PRUNED REGIME of the winnowing probe — q190's lifecycle with
@@ -605,21 +599,8 @@ object PipelineQueries {
     * fresh whole-corpus replay restricted to snapshot-endpoint pairs,
     * exactly q190's equality at the new split.
     */
-  val q219WinnowSmallDelta: QueryDef = QueryDef(
-    "q219_winnow_small_delta",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_wnidx_q219_", dir)
-      Dedup.winnowWriteIndex(docs.filter(col("doc_id") % 97 =!= 5),
-        path.toString, "doc_id", "text", "source")
-      val snapshot = docs.filter(col("doc_id") % 97 === 5)
-      Dedup.winnowAppendIndex(snapshot, path.toString, "doc_id", "text",
-        "source")
-      Dedup.winnowPairsIndexed(s, path.toString, snapshot,
-          "doc_id", "text", "source")
-        .orderBy(col("blk"), col("doc_a"), col("doc_b"))
-    },
+  val q219WinnowSmallDelta: QueryDef = Scenario(
+    "q219_winnow_small_delta", Scenario.Winnow, Split(97, 5), Append,
     Some(winnowPairOracleSql("doc_a % 97 = 5 OR doc_b % 97 = 5")))
 
   /** Streaming ingest into the winnowing postings index
@@ -631,30 +612,8 @@ object PipelineQueries {
     * delta, and the probe reads their union, so batch boundaries
     * provably cannot move a pair.
     */
-  val q191StreamingWinnowIngest: QueryDef = QueryDef(
-    "q191_streaming_winnow_ingest",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_wnidx_q191_", dir)
-      Dedup.winnowWriteIndex(docs.filter(col("doc_id") % 3 =!= 0),
-        path.toString, "doc_id", "text", "source")
-      val snapshot = docs.filter(col("doc_id") % 3 === 0)
-        .select(col("doc_id"), col("source"), col("text")).localCheckpoint()
-      val inPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ingest_in_q191_", dir)
-      Seq(col("doc_id") % 9 === 0, col("doc_id") % 9 =!= 0).foreach { p =>
-        snapshot.filter(p).coalesce(1)
-          .write.mode("append").parquet(inPath.toString)
-      }
-      IndexIngest.drain(IndexIngest.start(
-        s.readStream.schema(snapshot.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inPath.toString), None)(
-        IndexIngest.winnowBatch(path.toString, "doc_id", "text", "source")))
-      Dedup.winnowPairsIndexed(s, path.toString, snapshot,
-          "doc_id", "text", "source")
-        .orderBy(col("blk"), col("doc_a"), col("doc_b"))
-    },
+  val q191StreamingWinnowIngest: QueryDef = Scenario(
+    "q191_streaming_winnow_ingest", Scenario.Winnow, Split(3, 0), Stream,
     Some(winnowPairOracleSql("doc_a % 3 = 0 OR doc_b % 3 = 0")))
 
   /** The q220/q221 oracle: maximal cross-document repeated substrings
@@ -731,22 +690,8 @@ object PipelineQueries {
     * fresh whole-corpus replay restricted to snapshot-endpoint pairs
     * — q190's family equality on the arbitrary-offset member.
     */
-  val q221SubstringIncremental: QueryDef = QueryDef(
-    "q221_substring_incremental",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ssidx_q221_", dir)
-      graft.operators.SubstringDedup.substringWriteIndex(
-        docs.filter(col("doc_id") % 3 =!= 0), path.toString,
-        "doc_id", "text", minLen = 12)
-      val snapshot = docs.filter(col("doc_id") % 3 === 0)
-      graft.operators.SubstringDedup.substringAppendIndex(snapshot,
-        path.toString, "doc_id", "text", minLen = 12)
-      graft.operators.SubstringDedup.substringPairsIndexed(s,
-          path.toString, snapshot, "doc_id", "text", minLen = 12)
-        .orderBy(col("doc_a"), col("doc_b"), col("pos_a"), col("pos_b"))
-    },
+  val q221SubstringIncremental: QueryDef = Scenario(
+    "q221_substring_incremental", Scenario.Substring, Split(3, 0), Append,
     Some(substringPairOracleSql(12, "doc_a % 3 = 0 OR doc_b % 3 = 0")))
 
   // ------------------------------------------------------------------
@@ -1254,11 +1199,10 @@ object PipelineQueries {
       val emb = Tables.load(s, dir, "embeddings")
       val centroids = emb.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("centroid_id"), col("embedding"))
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ivfidx_q134_", dir)
+      val path = Scenario.workspace("q134_ivf_index", "ivfidx", dir)
       Similarity.ivfWriteIndex(Similarity.ivfAssign(emb, centroids),
-        path.toString)
-      Similarity.ivfTopKIndexed(s, path.toString, centroids,
+        path)
+      Similarity.ivfTopKIndexed(s, path, centroids,
           emb.filter(col("vec_id") < 10).select(col("vec_id"), col("embedding")),
           k = 3, nprobe = 2)
         .withColumnRenamed("rank", "rnk")
@@ -1281,26 +1225,8 @@ object PipelineQueries {
     * partition-value corruption, a schema drift between write and
     * append, or an overwrite-instead-of-append all hash-fail).
     */
-  val q137IvfAppend: QueryDef = QueryDef(
-    "q137_ivf_append",
-    (s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val centroids = emb.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("centroid_id"), col("embedding"))
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ivfidx_q137_", dir)
-      val base = emb.filter(col("vec_id") % 4 =!= 0)
-      val delta = emb.filter(col("vec_id") % 4 === 0)
-      Similarity.ivfWriteIndex(Similarity.ivfAssign(base, centroids),
-        path.toString)
-      Similarity.ivfAppendIndex(Similarity.ivfAssign(delta, centroids),
-        path.toString)
-      Similarity.ivfTopKIndexed(s, path.toString, centroids,
-          emb.filter(col("vec_id") < 10).select(col("vec_id"), col("embedding")),
-          k = 3, nprobe = 2)
-        .withColumnRenamed("rank", "rnk")
-        .orderBy(col("query_id"), col("rnk"))
-    },
+  val q137IvfAppend: QueryDef = Scenario(
+    "q137_ivf_append", Scenario.Ivf, Split(4, 0), Append,
     Some(ivfIndexOracleSql))
 
   // ------------------------------------------------------------------
@@ -1325,11 +1251,10 @@ object PipelineQueries {
       val emb = Tables.load(s, dir, "embeddings")
       val centroids = emb.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("centroid_id"), col("embedding"))
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ivfidx_q183_", dir)
+      val path = Scenario.workspace("q183_ivf_recall", "ivfidx", dir)
       Similarity.ivfWriteIndex(Similarity.ivfAssign(emb, centroids),
-        path.toString)
-      Similarity.ivfRecallAudit(s, path.toString, centroids,
+        path)
+      Similarity.ivfRecallAudit(s, path, centroids,
           emb.filter(col("vec_id") < 10).select(col("vec_id"), col("embedding")),
           k = 5, nprobe = 2)
         .orderBy(col("query_id"))
@@ -1422,7 +1347,7 @@ object PipelineQueries {
     * `in_exact`/`recall3` columns of the q133 pattern. `approx` is a
     * (query_id, rank, neighbor_id, sim) top-3 frame.
     */
-  private def withExactRecall3(approx: DataFrame, emb: DataFrame,
+  private[queries] def withExactRecall3(approx: DataFrame, emb: DataFrame,
       queries: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val exact = Similarity.bruteForceTopK(emb, queries, k = 3)
@@ -1563,7 +1488,7 @@ object PipelineQueries {
     * (q140 trains on the base split only — the frozen-codebook append
     * semantic); assignment/encoding always cover the caller's corpus.
     */
-  private def ivfPqBuild(emb: DataFrame, trainFilter: Column)
+  private[queries] def ivfPqBuild(emb: DataFrame, trainFilter: Column)
       : (DataFrame, DataFrame, DataFrame) = {
     val centroids = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("centroid_id"), col("embedding"))
@@ -1761,13 +1686,12 @@ object PipelineQueries {
     (s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
       val (assigned, centroids, cb) = ivfPqBuild(emb, lit(true))
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ivfpqidx_q139_", dir)
+      val path = Scenario.workspace("q139_ivfpq_index", "ivfpqidx", dir)
       Pq.ivfPqWriteIndex(Pq.ivfPqEncode(assigned, centroids, cb),
-        path.toString)
+        path)
       val queries = emb.filter(col("vec_id") < 10)
       withExactRecall3(
-        Pq.ivfPqTopKIndexed(s, path.toString, centroids, cb, queries,
+        Pq.ivfPqTopKIndexed(s, path, centroids, cb, queries,
           k = 3, nprobe = 2),
         emb, queries)
     },
@@ -1784,26 +1708,8 @@ object PipelineQueries {
     * training predicate) — an append that re-trained, dropped the
     * stored norms, or corrupted a bucket directory hash-fails.
     */
-  val q140IvfPqAppend: QueryDef = QueryDef(
-    "q140_ivfpq_append",
-    (s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val basePred = col("vec_id") % 4 =!= 0
-      val (assigned, centroids, cb) = ivfPqBuild(emb, basePred)
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ivfpqidx_q140_", dir)
-      Pq.ivfPqWriteIndex(
-        Pq.ivfPqEncode(assigned.filter(basePred), centroids, cb),
-        path.toString)
-      Pq.ivfPqAppendIndex(
-        Pq.ivfPqEncode(assigned.filter(!basePred), centroids, cb),
-        path.toString)
-      val queries = emb.filter(col("vec_id") < 10)
-      withExactRecall3(
-        Pq.ivfPqTopKIndexed(s, path.toString, centroids, cb, queries,
-          k = 3, nprobe = 2),
-        emb, queries)
-    },
+  val q140IvfPqAppend: QueryDef = Scenario(
+    "q140_ivfpq_append", Scenario.IvfPq, Split(4, 0), Append,
     Some(ivfPqOracleSql("vec_id % 4 <> 0")))
 
   /** The q139 layout made SELF-CONTAINED: codes, coarse centroids, and
@@ -1820,13 +1726,12 @@ object PipelineQueries {
     (s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
       val (assigned, centroids, cb) = ivfPqBuild(emb, lit(true))
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ivfpqidx_q141_", dir)
+      val path = Scenario.workspace("q141_ivfpq_selfindex", "ivfpqidx", dir)
       Pq.ivfPqWriteIndexFull(Pq.ivfPqEncode(assigned, centroids, cb),
-        centroids, cb, path.toString)
+        centroids, cb, path)
       val queries = emb.filter(col("vec_id") < 10)
       withExactRecall3(
-        Pq.ivfPqTopKFromIndex(s, path.toString, queries, k = 3, nprobe = 2),
+        Pq.ivfPqTopKFromIndex(s, path, queries, k = 3, nprobe = 2),
         emb, queries)
     },
     Some(ivfPqOracleSql("TRUE")))
@@ -1871,16 +1776,15 @@ object PipelineQueries {
       val emb = Tables.load(s, dir, "embeddings")
       val basePred = col("vec_id") % 4 =!= 0
       val (assigned, centroids, cb) = ivfPqBuild(emb, basePred)
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ivfpqidx_q143_", dir)
+      val path = Scenario.workspace("q143_ivfpq_cold_append", "ivfpqidx", dir)
       Pq.ivfPqWriteIndexFull(
         Pq.ivfPqEncode(assigned.filter(basePred), centroids, cb),
-        centroids, cb, path.toString)
+        centroids, cb, path)
       // day-2: append the delta with ONLY the path in hand
-      Pq.ivfPqAppendToIndex(s, path.toString, emb.filter(!basePred))
+      Pq.ivfPqAppendToIndex(s, path, emb.filter(!basePred))
       val queries = emb.filter(col("vec_id") < 10)
       withExactRecall3(
-        Pq.ivfPqTopKFromIndex(s, path.toString, queries, k = 3, nprobe = 2),
+        Pq.ivfPqTopKFromIndex(s, path, queries, k = 3, nprobe = 2),
         emb, queries)
     },
     Some(ivfPqOracleSql("vec_id % 4 <> 0")))
@@ -1899,11 +1803,10 @@ object PipelineQueries {
     (s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
       val (assigned, centroids, cb) = ivfPqBuild(emb, lit(true))
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ivfpqidx_q145_", dir)
+      val path = Scenario.workspace("q145_ivfpq_stats", "ivfpqidx", dir)
       Pq.ivfPqWriteIndexFull(Pq.ivfPqEncode(assigned, centroids, cb),
-        centroids, cb, path.toString)
-      Pq.ivfPqIndexStats(s, s"${path.toString}/codes").orderBy(col("bucket"))
+        centroids, cb, path)
+      Pq.ivfPqIndexStats(s, s"${path}/codes").orderBy(col("bucket"))
     },
     Some(s"""
         WITH ${ivfPqOracleCtes("TRUE")}
@@ -1948,20 +1851,18 @@ object PipelineQueries {
       val emb = Tables.load(s, dir, "embeddings")
       val basePred = col("vec_id") % 4 =!= 0
       val (assigned, centroids, cb) = ivfPqBuild(emb, basePred)
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ivfpqidx_q151_", dir)
+      val path = Scenario.workspace("q151_ivfpq_repair", "ivfpqidx", dir)
       Pq.ivfPqWriteIndexFull(
         Pq.ivfPqEncode(assigned.filter(basePred), centroids, cb),
-        centroids, cb, path.toString)
-      Pq.ivfPqAppendToIndex(s, path.toString, emb.filter(!basePred))
+        centroids, cb, path)
+      Pq.ivfPqAppendToIndex(s, path, emb.filter(!basePred))
       // the injected failure: a blind retry replays the same append
-      Pq.ivfPqAppendToIndex(s, path.toString, emb.filter(!basePred))
-      val repaired = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ivfpqidx_q151r_", dir)
-      IndexLayout.ivfPq("vec_id").compact(s, path.toString, repaired.toString)
+      Pq.ivfPqAppendToIndex(s, path, emb.filter(!basePred))
+      val repaired = Scenario.workspace("q151_ivfpq_repair", "repaired", dir)
+      IndexLayout.ivfPq("vec_id").compact(s, path, repaired)
       val queries = emb.filter(col("vec_id") < 10)
       withExactRecall3(
-        Pq.ivfPqTopKFromIndex(s, repaired.toString, queries,
+        Pq.ivfPqTopKFromIndex(s, repaired, queries,
           k = 3, nprobe = 2),
         emb, queries)
     },
@@ -2091,10 +1992,9 @@ object PipelineQueries {
     "q154_bm25_indexed",
     (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_bm25idx_q154_", dir)
-      Retrieval.bm25WriteIndex(docs, path.toString)
-      Retrieval.bm25TopKIndexed(s, path.toString,
+      val path = Scenario.workspace("q154_bm25_indexed", "bm25idx", dir)
+      Retrieval.bm25WriteIndex(docs, path)
+      Retrieval.bm25TopKIndexed(s, path,
           docs.filter(col("doc_id") < 8), k = 10)
         .orderBy(col("query_id"), col("rnk"))
     },
@@ -2113,20 +2013,8 @@ object PipelineQueries {
     * (df inline) would have served stale scores for every pre-append
     * posting here and hash-failed.
     */
-  val q155Bm25Append: QueryDef = QueryDef(
-    "q155_bm25_append",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_bm25idx_q155_", dir)
-      Retrieval.bm25WriteIndex(docs.filter(col("doc_id") % 3 =!= 0),
-        path.toString)
-      Retrieval.bm25AppendIndex(docs.filter(col("doc_id") % 3 === 0),
-        path.toString)
-      Retrieval.bm25TopKIndexed(s, path.toString,
-          docs.filter(col("doc_id") < 8), k = 10)
-        .orderBy(col("query_id"), col("rnk"))
-    },
+  val q155Bm25Append: QueryDef = Scenario(
+    "q155_bm25_append", Scenario.Bm25, Split(3, 0), Append,
     Some(bm25Top10OracleSql))
 
   /** The BM25 index REPAIR path (`IndexLayout.Bm25.audit` /
@@ -2134,40 +2022,16 @@ object PipelineQueries {
     * with the failure the append contract warns about INJECTED (the
     * delta append runs twice — a blind retry), so every delta posting
     * sits in its shard twice and that generation's df/stats
-    * contributions double-count. The audit must localize EXACTLY the
-    * replayed postings (asserted in the closure — bit-identical copies,
-    * no payload divergence), compaction rewrites the layout minus the
+    * contributions double-count. The audit localizes EXACTLY the
+    * replayed postings ([[Scenario]] asserts bit-identical copies, no
+    * payload divergence), compaction rewrites the layout minus the
     * replay into a fresh index REDERIVING df/stats from the deduped
     * postings, and serving THAT must hash-equal the clean whole-corpus
     * oracle — a missed duplicate, a dropped legitimate posting, or an
     * unrepaired df double-count all hash-fail.
     */
-  val q156Bm25Repair: QueryDef = QueryDef(
-    "q156_bm25_repair",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_bm25idx_q156_", dir)
-      Retrieval.bm25WriteIndex(docs.filter(col("doc_id") % 3 =!= 0),
-        path.toString)
-      val delta = docs.filter(col("doc_id") % 3 === 0)
-      Retrieval.bm25AppendIndex(delta, path.toString)
-      // the injected failure: a blind retry replays the same append
-      Retrieval.bm25AppendIndex(delta, path.toString)
-      val damage = IndexLayout.Bm25.audit(s, path.toString)
-        .agg(count(lit(1)).as("n"),
-          max(col("n_copies")).as("mc"), max(col("n_payloads")).as("mp"))
-        .collect()(0)
-      require(damage.getLong(0) > 0 && damage.getLong(1) == 2L &&
-          damage.getLong(2) == 1L,
-        s"audit must localize the replay as bit-identical pairs, got $damage")
-      val repaired = graft.operators.TmpWorkspaces
-        .pidScoped("graft_bm25idx_q156r_", dir)
-      IndexLayout.Bm25.compact(s, path.toString, repaired.toString)
-      Retrieval.bm25TopKIndexed(s, repaired.toString,
-          docs.filter(col("doc_id") < 8), k = 10)
-        .orderBy(col("query_id"), col("rnk"))
-    },
+  val q156Bm25Repair: QueryDef = Scenario(
+    "q156_bm25_repair", Scenario.Bm25, Split(3, 0), BlindRetry(),
     Some(bm25Top10OracleSql))
 
   /** Per-shard stats of the WRITTEN BM25 index after a build + append
@@ -2180,21 +2044,8 @@ object PipelineQueries {
     * terms rows, or posting/terms drift between the two layouts all
     * hash-fail.
     */
-  val q162Bm25Stats: QueryDef = QueryDef(
-    "q162_bm25_stats",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_bm25idx_q162_", dir)
-      // the stats rows ARE the layout's shard alphabet and the oracle
-      // re-derives them from the historical 2-hex contract — build
-      // pinned WIDE (appends follow the persisted choice)
-      Retrieval.bm25WriteIndex(docs.filter(col("doc_id") % 3 =!= 0),
-        path.toString, shards = Some(IndexShards.Wide))
-      Retrieval.bm25AppendIndex(docs.filter(col("doc_id") % 3 === 0),
-        path.toString)
-      Retrieval.bm25IndexStats(s, path.toString).orderBy(col("shard"))
-    },
+  val q162Bm25Stats: QueryDef = Scenario(
+    "q162_bm25_stats", Scenario.Bm25Stats, Split(3, 0), Append,
     Some(s"""
       WITH toks AS (SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS term
                     FROM documents),
@@ -2308,21 +2159,8 @@ object PipelineQueries {
     * is COMPLETE for exactly the pairs the day-2 run owes. Oracle:
     * the fresh q153 replay restricted to snapshot-endpoint pairs.
     */
-  val q161ContainmentIncremental: QueryDef = QueryDef(
-    "q161_containment_incremental",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ngidx_q161_", dir)
-      Dedup.ngramWriteIndex(docs.filter(col("doc_id") % 3 =!= 0),
-        path.toString, "doc_id", "text", "source", ShingleN)
-      val snapshot = docs.filter(col("doc_id") % 3 === 0)
-      Dedup.ngramAppendIndex(snapshot, path.toString, "doc_id", "text",
-        "source", ShingleN)
-      Dedup.ngramContainmentPairsIndexed(s, path.toString, snapshot,
-          "doc_id", "text", ShingleN, threshold = 0.6)
-        .orderBy(col("blk"), col("doc_a"), col("doc_b"))
-    },
+  val q161ContainmentIncremental: QueryDef = Scenario(
+    "q161_containment_incremental", Scenario.Ngram, Split(3, 0), Append,
     Some(containmentOracleSql("doc_a % 3 = 0 OR doc_b % 3 = 0")))
 
   /** Flagship curation v4 — the session-2 operators composed into one
@@ -2404,21 +2242,8 @@ object PipelineQueries {
     * finds (same buckets, same caps, same verify arithmetic), having
     * recomputed only the snapshot's signatures.
     */
-  val q159MinhashIncremental: QueryDef = QueryDef(
-    "q159_minhash_incremental",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_mhidx_q159_", dir)
-      Dedup.minhashWriteIndex(docs.filter(col("doc_id") % 4 =!= 0),
-        path.toString, "doc_id", "text", NumHashes, Bands, ShingleN)
-      val snapshot = docs.filter(col("doc_id") % 4 === 0)
-      Dedup.minhashAppendIndex(snapshot, path.toString, "doc_id", "text",
-        NumHashes, Bands, ShingleN)
-      Dedup.minhashDedupIndexed(s, path.toString, snapshot, "doc_id",
-          "text", NumHashes, Bands, ShingleN, threshold = 0.8)
-        .orderBy(col("doc_a"), col("doc_b"))
-    },
+  val q159MinhashIncremental: QueryDef = Scenario(
+    "q159_minhash_incremental", Scenario.Minhash, Split(4, 0), Append,
     Some(s"""
       WITH $minhashPairCtes
       SELECT doc_a, doc_b, jaccard FROM pairs
@@ -2437,19 +2262,8 @@ object PipelineQueries {
     * oracle is the fresh whole-corpus replay restricted to
     * snapshot-touched fingerprints.
     */
-  val q160ExactIncremental: QueryDef = QueryDef(
-    "q160_exact_incremental",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_fpidx_q160_", dir)
-      Dedup.exactWriteIndex(docs.filter(col("doc_id") % 4 =!= 0),
-        path.toString, "doc_id", "text")
-      val snapshot = docs.filter(col("doc_id") % 4 === 0)
-      Dedup.exactAppendIndex(snapshot, path.toString, "doc_id", "text")
-      Dedup.exactClustersIndexed(s, path.toString, snapshot, "doc_id", "text")
-        .orderBy(col("fingerprint"))
-    },
+  val q160ExactIncremental: QueryDef = Scenario(
+    "q160_exact_incremental", Scenario.Exact, Split(4, 0), Append,
     Some(s"""
       WITH fp AS (SELECT doc_id, md5(${TextOps.normalizeSql("text")}) AS fingerprint
                   FROM documents)
@@ -2551,25 +2365,23 @@ object PipelineQueries {
     (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
       val emb = Tables.load(s, dir, "embeddings")
-      val lexPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_bm25idx_q163_", dir)
-      val semPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ivfpqidx_q163_", dir)
+      val lexPath = Scenario.workspace("q163_retrieval_stack", "bm25idx", dir)
+      val semPath = Scenario.workspace("q163_retrieval_stack", "ivfpqidx", dir)
       // the lexical and semantic index builds are independent stacks
       // into disjoint paths — parallel sections (guide §2.6)
       graft.operators.Parallelism.inParallel(
-        () => Retrieval.bm25WriteIndex(docs, lexPath.toString),
+        () => Retrieval.bm25WriteIndex(docs, lexPath),
         () => {
           val (assigned, centroids, cb) = ivfPqBuild(emb, lit(true))
           Pq.ivfPqWriteIndexFull(Pq.ivfPqEncode(assigned, centroids, cb),
-            centroids, cb, semPath.toString)
+            centroids, cb, semPath)
         })
       val lex = Retrieval
-        .bm25TopKIndexed(s, lexPath.toString,
+        .bm25TopKIndexed(s, lexPath,
           docs.filter(col("doc_id") < 8), k = 20)
         .select(col("query_id"), col("doc_id").as("neighbor_id"), col("rnk"))
       val sem = Pq
-        .ivfPqTopKFromIndex(s, semPath.toString,
+        .ivfPqTopKFromIndex(s, semPath,
           emb.filter(col("vec_id") < 8), k = 20, nprobe = 2)
         .select(col("query_id"), col("neighbor_id"),
           col("rank").cast("long").as("rnk"))
@@ -2607,10 +2419,9 @@ object PipelineQueries {
       val wf = Bpe.wordFreq(docs, "text").localCheckpoint()
       val ms = Bpe.trainMergesFromWordFreq(wf, nMerges = 6)
       val v = Bpe.vocab(ms)
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_bpetok_q164_", dir)
-      Bpe.writeTokenizer(s, path.toString, ms, v)
-      Bpe.encodeIdsFromTokenizer(s, path.toString,
+      val path = Scenario.workspace("q164_bpe_tokenizer_index", "bpetok", dir)
+      Bpe.writeTokenizer(s, path, ms, v)
+      Bpe.encodeIdsFromTokenizer(s, path,
           docs.filter(col("doc_id") >= 40 && col("doc_id") < 80),
           "doc_id", "text")
         .select(col("doc_id"),
@@ -2690,30 +2501,27 @@ object PipelineQueries {
     (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
       val base = docs.filter(col("doc_id") % 3 =!= 0)
-      val fpPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_fpidx_q166_", dir)
-      val lmPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_bigram_q166_", dir)
-      val tokPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_bpetok_q166_", dir)
+      val fpPath = Scenario.workspace("q166_curation_v6", "fpidx", dir)
+      val lmPath = Scenario.workspace("q166_curation_v6", "bigram", dir)
+      val tokPath = Scenario.workspace("q166_curation_v6", "bpetok", dir)
       // the three day-1 artifacts (exact index, bigram LM, BPE
       // tokenizer) are independent builds into disjoint paths — run
       // them as parallel sections (guide §2.6), the q176/q202 idiom
       graft.operators.Parallelism.inParallel(
-        () => Dedup.exactWriteIndex(base, fpPath.toString,
+        () => Dedup.exactWriteIndex(base, fpPath,
           "doc_id", "text"),
-        () => TextAnalysis.bigramWriteModel(base, lmPath.toString,
+        () => TextAnalysis.bigramWriteModel(base, lmPath,
           "doc_id", "text"),
         () => {
           val wf = Bpe.wordFreq(base, "text").localCheckpoint()
           val ms = Bpe.trainMergesFromWordFreq(wf, nMerges = 4)
-          Bpe.writeTokenizer(s, tokPath.toString, ms, Bpe.vocab(ms))
+          Bpe.writeTokenizer(s, tokPath, ms, Bpe.vocab(ms))
         })
       // ---- day-2: snapshot + written artifacts only ----
       val snapshot = docs.filter(col("doc_id") % 3 === 0)
         .select(col("doc_id"), col("text")).localCheckpoint()
-      Dedup.exactAppendIndex(snapshot, fpPath.toString, "doc_id", "text")
-      val clusters = Dedup.exactClustersIndexed(s, fpPath.toString,
+      Dedup.exactAppendIndex(snapshot, fpPath, "doc_id", "text")
+      val clusters = Dedup.exactClustersIndexed(s, fpPath,
         snapshot, "doc_id", "text")
       val surv = snapshot
         .withColumn("fingerprint", md5(TextOps.normalize(col("text"))))
@@ -2721,11 +2529,11 @@ object PipelineQueries {
         .filter(col("doc_id") === col("kept_id"))
         .select(col("doc_id"), col("text"))
         .localCheckpoint()
-      val keptIds = TextAnalysis.bigramNllFromModel(s, lmPath.toString,
+      val keptIds = TextAnalysis.bigramNllFromModel(s, lmPath,
           surv, "doc_id", "text", BigramNllMedian)
         .filter(col("kept")).select(col("doc_id"))
       val kept = surv.join(keptIds, "doc_id").localCheckpoint()
-      val counts = Bpe.encodeTokenCountsFromTokenizer(s, tokPath.toString,
+      val counts = Bpe.encodeTokenCountsFromTokenizer(s, tokPath,
         kept, "doc_id", "text")
       Curation.packSequencesByCount(counts, "doc_id", "n_bpe", seqLen = 256)
         .orderBy(col("shard"), col("seq_idx"), col("doc_id"))
@@ -2851,21 +2659,8 @@ object PipelineQueries {
     * band-shard-pruned probe. Oracle: the fresh q167 replay
     * restricted to snapshot-endpoint pairs.
     */
-  val q168SimhashIncremental: QueryDef = QueryDef(
-    "q168_simhash_incremental",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_shidx_q168_", dir)
-      Dedup.simhashWriteIndex(docs.filter(col("doc_id") % 4 =!= 0),
-        path.toString, "doc_id", "text", "source")
-      val snapshot = docs.filter(col("doc_id") % 4 === 0)
-      Dedup.simhashAppendIndex(snapshot, path.toString, "doc_id", "text",
-        "source")
-      Dedup.simhashNearDupIndexed(s, path.toString, snapshot, "doc_id",
-          "text", "source")
-        .orderBy(col("blk"), col("doc_a"), col("doc_b"))
-    },
+  val q168SimhashIncremental: QueryDef = Scenario(
+    "q168_simhash_incremental", Scenario.Simhash, Split(4, 0), Append,
     Some(simhashPairsOracleSql("doc_a % 4 = 0 OR doc_b % 4 = 0")))
 
   /** Drift audit of the q166 standing bigram model
@@ -2881,11 +2676,10 @@ object PipelineQueries {
     "q169_bigram_drift",
     (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
-      val lmPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_bigram_q169_", dir)
+      val lmPath = Scenario.workspace("q169_bigram_drift", "bigram", dir)
       TextAnalysis.bigramWriteModel(docs.filter(col("doc_id") % 3 =!= 0),
-        lmPath.toString, "doc_id", "text")
-      TextAnalysis.bigramModelAudit(s, lmPath.toString,
+        lmPath, "doc_id", "text")
+      TextAnalysis.bigramModelAudit(s, lmPath,
           docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", "source")
         .orderBy(col("source"))
     },
@@ -2958,32 +2752,8 @@ object PipelineQueries {
     * generations partition the corpus and the probe reads their union
     * (the q160 semantics, delivered incrementally).
     */
-  val q171StreamingIngest: QueryDef = QueryDef(
-    "q171_streaming_ingest",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val idxPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_fpidx_q171_", dir)
-      Dedup.exactWriteIndex(docs.filter(col("doc_id") % 5 =!= 1),
-        idxPath.toString, "doc_id", "text")
-      val snapshot = docs.filter(col("doc_id") % 5 === 1)
-        .select(col("doc_id"), col("text")).localCheckpoint()
-      val inPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ingest_in_q171_", dir)
-      // two single-file chunks → two micro-batches (the spec drives a
-      // 3-batch MemoryStream; the gate needs multi-batch, not many)
-      (0 until 2).foreach { c =>
-        snapshot.filter(col("doc_id") % 2 === c).coalesce(1)
-          .write.mode("append").parquet(inPath.toString)
-      }
-      IndexIngest.drain(IndexIngest.start(
-        s.readStream.schema(snapshot.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inPath.toString), None)(
-        IndexIngest.exactBatch(idxPath.toString, "doc_id", "text")))
-      Dedup.exactClustersIndexed(s, idxPath.toString, snapshot,
-          "doc_id", "text")
-        .orderBy(col("fingerprint"))
-    },
+  val q171StreamingIngest: QueryDef = Scenario(
+    "q171_streaming_ingest", Scenario.Exact, Split(5, 1), Stream,
     Some(s"""
       WITH fp AS (SELECT doc_id, md5(${TextOps.normalizeSql("text")}) AS fingerprint
                   FROM documents)
@@ -3004,21 +2774,8 @@ object PipelineQueries {
     * a text-free index (fingerprint + coordinates only). Oracle: the
     * fresh whole-corpus q123 replay restricted to snapshot docs.
     */
-  val q172BlockIncremental: QueryDef = QueryDef(
-    "q172_block_incremental",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_blkidx_q172_", dir)
-      Dedup.blockWriteIndex(docs.filter(col("doc_id") % 4 =!= 2),
-        path.toString, "doc_id", "text", blockTokens = 12)
-      val snapshot = docs.filter(col("doc_id") % 4 === 2)
-      Dedup.blockAppendIndex(snapshot, path.toString, "doc_id", "text",
-        blockTokens = 12)
-      Dedup.blockDedupIndexed(s, path.toString, snapshot, "doc_id",
-          "text", blockTokens = 12)
-        .orderBy(col("doc_id"))
-    },
+  val q172BlockIncremental: QueryDef = Scenario(
+    "q172_block_incremental", Scenario.Block, Split(4, 2), Append,
     Some(s"""
       WITH ${blockDedupCtesFrom("documents", 12)}
       SELECT doc_id, n_blocks, n_kept, text_deduped
@@ -3031,19 +2788,17 @@ object PipelineQueries {
     * five semantic gates (q173/q175/q176/q178/q180) share, so it can
     * never drift from [[kmeansBaseTrainCtes]], its oracle twin:
     * 2 Lloyd rounds on the base slice (init = base ∩ vec_id < 8), the
-    * base assignment written cid-partitioned. Returns the index path
-    * and the frozen centroid frame the delta must be assigned with.
+    * base assignment written cid-partitioned at `path`. Returns the
+    * frozen centroid frame the delta must be assigned with.
     */
-  private def buildSemanticIndex(s: org.apache.spark.sql.SparkSession,
-      dir: String, basePred: Column, prefix: String): (String, DataFrame) = {
+  private[queries] def buildSemanticIndex(s: org.apache.spark.sql.SparkSession,
+      dir: String, basePred: Column, path: String): DataFrame = {
     val base = Tables.load(s, dir, "embeddings").filter(basePred)
     val init = base.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("embedding").as("centroid"))
     val cent = Clustering.lloydCentroids(base, init, iters = 2)
-    val path = graft.operators.TmpWorkspaces.pidScoped(prefix, dir)
-    Clustering.semanticWriteIndex(Clustering.assignL2(base, cent),
-      path.toString)
-    (path.toString, cent)
+    Clustering.semanticWriteIndex(Clustering.assignL2(base, cent), path)
+    cent
   }
 
   /** Shared fresh-union SemDeDup replay (q173 AND q178's repair gate):
@@ -3086,20 +2841,8 @@ object PipelineQueries {
     * proof that build→append→probe composes to the fresh run (the
     * q137/q160 append-commutes contract, on the embedding side).
     */
-  val q173SemanticIncremental: QueryDef = QueryDef(
-    "q173_semantic_incremental",
-    (s, dir) => {
-      val (path, cent) = buildSemanticIndex(s, dir,
-        col("vec_id") % 4 =!= 0, "graft_semidx_q173_")
-      // one delta assignment scan: the append write AND the probe
-      // both read the checkpoint (the q166 snapshot idiom)
-      val snap = Clustering.assignL2(
-        Tables.load(s, dir, "embeddings").filter(col("vec_id") % 4 === 0),
-        cent).localCheckpoint()
-      Clustering.semanticAppendIndex(snap, path, gen = 1)
-      Clustering.semDedupIndexed(s, path, snap, threshold = 0.3)
-        .orderBy(col("cid"), col("vec_id"))
-    },
+  val q173SemanticIncremental: QueryDef = Scenario(
+    "q173_semantic_incremental", Scenario.Semantic, Split(4, 0), Append,
     Some(semanticIncrementalOracleSql))
 
   /** STREAMING day-2 ingest into the written IVF index — the vector
@@ -3115,37 +2858,8 @@ object PipelineQueries {
     * partition the delta (the q137 append contract delivered one
     * micro-batch at a time).
     */
-  val q174StreamingIvfIngest: QueryDef = QueryDef(
-    "q174_streaming_ivf_ingest",
-    (s, dir) => {
-      val emb = Tables.load(s, dir, "embeddings")
-      val centroids = emb.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("centroid_id"), col("embedding"))
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ivfidx_q174_", dir)
-      Similarity.ivfWriteIndex(
-        Similarity.ivfAssign(emb.filter(col("vec_id") % 4 =!= 0), centroids),
-        path.toString)
-      val delta = emb.filter(col("vec_id") % 4 === 0)
-        .select(col("vec_id"), col("embedding")).localCheckpoint()
-      val inPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ingest_in_q174_", dir)
-      // two single-file chunks → two micro-batches (the spec drives a
-      // 3-batch MemoryStream; the gate needs multi-batch, not many)
-      Seq(col("vec_id") % 8 === 0, col("vec_id") % 8 =!= 0).foreach { p =>
-        delta.filter(p).coalesce(1)
-          .write.mode("append").parquet(inPath.toString)
-      }
-      IndexIngest.drain(IndexIngest.start(
-        s.readStream.schema(delta.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inPath.toString), None)(
-        IndexIngest.ivfBatch(path.toString, centroids, "vec_id", "embedding")))
-      Similarity.ivfTopKIndexed(s, path.toString, centroids,
-          emb.filter(col("vec_id") < 10).select(col("vec_id"), col("embedding")),
-          k = 3, nprobe = 2)
-        .withColumnRenamed("rank", "rnk")
-        .orderBy(col("query_id"), col("rnk"))
-    },
+  val q174StreamingIvfIngest: QueryDef = Scenario(
+    "q174_streaming_ivf_ingest", Scenario.Ivf, Split(4, 0), Stream,
     Some(ivfIndexOracleSql))
 
   /** CENTROID-STALENESS drift audit of the written semantic index
@@ -3165,8 +2879,8 @@ object PipelineQueries {
     "q175_semantic_drift",
     (s, dir) => {
       val e1 = element_at(col("embedding"), 1).cast("double")
-      val (path, cent) = buildSemanticIndex(s, dir, e1 <= 0.0,
-        "graft_semidx_q175_")
+      val path = Scenario.workspace("q175_semantic_drift", "index", dir)
+      val cent = buildSemanticIndex(s, dir, e1 <= 0.0, path)
       Clustering.semanticAppendIndex(
         Clustering.assignL2(
           Tables.load(s, dir, "embeddings").filter(e1 > 0.0), cent),
@@ -3262,44 +2976,36 @@ object PipelineQueries {
         graft.operators.Parallelism.inParallel(
           // ---- fingerprint modality: day-1 build, STREAMING day-2 ----
           () => {
-            val fpPath = graft.operators.TmpWorkspaces
-              .pidScoped("graft_fpidx_q176_", dir)
-            Dedup.exactWriteIndex(baseDocs, fpPath.toString, "doc_id",
+            val fpPath = Scenario.workspace("q176_curation_v7", "fpidx", dir)
+            Dedup.exactWriteIndex(baseDocs, fpPath, "doc_id",
               "text")
-            val inPath = graft.operators.TmpWorkspaces
-              .pidScoped("graft_ingest_in_q176_", dir)
-            Seq(col("doc_id") % 2 === 0, col("doc_id") % 2 =!= 0)
-              .foreach { p =>
-                snapDocs.filter(p).coalesce(1)
-                  .write.mode("append").parquet(inPath.toString)
-              }
-            IndexIngest.drain(IndexIngest.start(
-              s.readStream.schema(snapDocs.schema)
-                .option("maxFilesPerTrigger", 1).parquet(inPath.toString),
-              None)(
-              IndexIngest.exactBatch(fpPath.toString, "doc_id", "text")))
+            Scenario.deliver(Scenario.landChunks(s,
+                Scenario.workspace("q176_curation_v7", "in", dir), snapDocs,
+                col("doc_id") % 2 === 0))(
+              IndexIngest.exactBatch(fpPath, "doc_id", "text"))
             exactKept = snapDocs
               .withColumn("fingerprint", md5(TextOps.normalize(col("text"))))
-              .join(Dedup.exactClustersIndexed(s, fpPath.toString, snapDocs,
+              .join(Dedup.exactClustersIndexed(s, fpPath, snapDocs,
                 "doc_id", "text"), "fingerprint")
               .select(col("doc_id"),
                 (col("doc_id") === col("kept_id")).as("exact_kept"))
           },
           // ---- lexical modality: day-1 build, generation append ----
           () => {
-            val lexPath = graft.operators.TmpWorkspaces
-              .pidScoped("graft_bm25idx_q176_", dir)
-            Retrieval.bm25WriteIndex(baseDocs, lexPath.toString)
-            Retrieval.bm25AppendIndex(snapDocs, lexPath.toString)
-            lexRank = Retrieval.bm25TopKIndexed(s, lexPath.toString,
+            val lexPath = Scenario.workspace("q176_curation_v7", "bm25idx", dir)
+            Retrieval.bm25WriteIndex(baseDocs, lexPath)
+            Retrieval.bm25AppendIndex(snapDocs, lexPath)
+            lexRank = Retrieval.bm25TopKIndexed(s, lexPath,
                 docs.filter(col("doc_id") < 8), k = 10)
               .groupBy(col("doc_id"))
               .agg(min(col("rnk")).as("lex_best_rank"))
           },
           // ---- semantic modality: frozen-centroid append + probe ----
           () => {
-            val (semPath, cent) = buildSemanticIndex(s, dir,
-              col("vec_id") % 3 =!= 0, "graft_semidx_q176_")
+            val semPath = Scenario.workspace("q176_curation_v7", "semantic",
+              dir)
+            val cent = buildSemanticIndex(s, dir, col("vec_id") % 3 =!= 0,
+              semPath)
             val snapEmb = Clustering.assignL2(
               emb.filter(col("vec_id") % 3 === 0), cent).localCheckpoint()
             Clustering.semanticAppendIndex(snapEmb, semPath, gen = 1)
@@ -3364,30 +3070,8 @@ object PipelineQueries {
     * their batch, df and the corpus scalars sum over generations at
     * serve, so batch boundaries provably cannot move a score.
     */
-  val q177StreamingBm25Ingest: QueryDef = QueryDef(
-    "q177_streaming_bm25_ingest",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_bm25idx_q177_", dir)
-      Retrieval.bm25WriteIndex(docs.filter(col("doc_id") % 3 =!= 0),
-        path.toString)
-      val snapshot = docs.filter(col("doc_id") % 3 === 0)
-        .select(col("doc_id"), col("text")).localCheckpoint()
-      val inPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ingest_in_q177_", dir)
-      Seq(col("doc_id") % 2 === 0, col("doc_id") % 2 =!= 0).foreach { p =>
-        snapshot.filter(p).coalesce(1)
-          .write.mode("append").parquet(inPath.toString)
-      }
-      IndexIngest.drain(IndexIngest.start(
-        s.readStream.schema(snapshot.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inPath.toString), None)(
-        IndexIngest.bm25Batch(path.toString, "doc_id", "text")))
-      Retrieval.bm25TopKIndexed(s, path.toString,
-          docs.filter(col("doc_id") < 8), k = 10)
-        .orderBy(col("query_id"), col("rnk"))
-    },
+  val q177StreamingBm25Ingest: QueryDef = Scenario(
+    "q177_streaming_bm25_ingest", Scenario.Bm25, Split(3, 0), Stream,
     Some(bm25Top10OracleSql))
 
   /** The semantic index REPAIR path
@@ -3398,38 +3082,16 @@ object PipelineQueries {
     * failure INJECTED (the snapshot append runs twice — a blind retry),
     * so every snapshot member row sits in its cluster directory twice,
     * inflating union sizes toward the probe cap and double-counting
-    * drift shares. The audit must localize EXACTLY the replayed members
-    * (asserted in the closure: bit-identical copies, no payload
+    * drift shares. The audit localizes EXACTLY the replayed members
+    * ([[Scenario]] asserts bit-identical copies, no payload
     * divergence), compaction stage-and-swaps the deduped rows into a
     * fresh cid-partitioned layout, and the incremental SemDeDup probe
     * over THAT must hash-equal the clean fresh-union oracle (shared
     * with q173 verbatim) — a missed duplicate, a dropped legitimate
     * member, or a verdict moved by the inflated sizes all hash-fail.
     */
-  val q178SemanticRepair: QueryDef = QueryDef(
-    "q178_semantic_repair",
-    (s, dir) => {
-      val (path, cent) = buildSemanticIndex(s, dir,
-        col("vec_id") % 4 =!= 0, "graft_semidx_q178_")
-      val snap = Clustering.assignL2(
-        Tables.load(s, dir, "embeddings").filter(col("vec_id") % 4 === 0),
-        cent).localCheckpoint()
-      Clustering.semanticAppendIndex(snap, path, gen = 1)
-      // the injected failure: a blind retry replays the same append
-      Clustering.semanticAppendIndex(snap, path, gen = 1)
-      val damage = IndexLayout.semantic("vec_id").audit(s, path)
-        .agg(count(lit(1)).as("n"),
-          max(col("n_copies")).as("mc"), max(col("n_payloads")).as("mp"))
-        .collect()(0)
-      require(damage.getLong(0) > 0 && damage.getLong(1) == 2L &&
-          damage.getLong(2) == 1L,
-        s"audit must localize the replay as bit-identical pairs, got $damage")
-      val repaired = graft.operators.TmpWorkspaces
-        .pidScoped("graft_semidx_q178r_", dir)
-      IndexLayout.semantic("vec_id").compact(s, path, repaired.toString)
-      Clustering.semDedupIndexed(s, repaired.toString, snap, threshold = 0.3)
-        .orderBy(col("cid"), col("vec_id"))
-    },
+  val q178SemanticRepair: QueryDef = Scenario(
+    "q178_semantic_repair", Scenario.Semantic, Split(4, 0), BlindRetry(),
     Some(semanticIncrementalOracleSql))
 
   /** STREAMING day-2 ingest into the written SEMANTIC index
@@ -3445,29 +3107,8 @@ object PipelineQueries {
     * per-vector assignment is independent, generations partition the
     * delta, and the probe reads their union.
     */
-  val q180StreamingSemanticIngest: QueryDef = QueryDef(
-    "q180_streaming_semantic_ingest",
-    (s, dir) => {
-      val (path, cent) = buildSemanticIndex(s, dir,
-        col("vec_id") % 4 =!= 0, "graft_semidx_q180_")
-      val delta = Tables.load(s, dir, "embeddings")
-        .filter(col("vec_id") % 4 === 0)
-        .select(col("vec_id"), col("embedding")).localCheckpoint()
-      val inPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ingest_in_q180_", dir)
-      Seq(col("vec_id") % 8 === 0, col("vec_id") % 8 =!= 0).foreach { p =>
-        delta.filter(p).coalesce(1)
-          .write.mode("append").parquet(inPath.toString)
-      }
-      IndexIngest.drain(IndexIngest.start(
-        s.readStream.schema(delta.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inPath.toString), None)(
-        IndexIngest.semanticBatch(path, cent, "vec_id", "embedding",
-          startGen = 1)))
-      Clustering.semDedupIndexed(s, path,
-          Clustering.assignL2(delta, cent), threshold = 0.3)
-        .orderBy(col("cid"), col("vec_id"))
-    },
+  val q180StreamingSemanticIngest: QueryDef = Scenario(
+    "q180_streaming_semantic_ingest", Scenario.Semantic, Split(4, 0), Stream,
     Some(semanticIncrementalOracleSql))
 
   // ------------------------------------------------------------------
@@ -3495,34 +3136,28 @@ object PipelineQueries {
     "q193_idempotent_ingest_replay",
     (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
-      val idxPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_fpidx_q193_", dir)
+      val idxPath =
+        Scenario.workspace("q193_idempotent_ingest_replay", "fpidx", dir)
       Dedup.exactWriteIndex(docs.filter(col("doc_id") % 5 =!= 1),
-        idxPath.toString, "doc_id", "text")
+        idxPath, "doc_id", "text")
       val snapshot = docs.filter(col("doc_id") % 5 === 1)
         .select(col("doc_id"), col("text")).localCheckpoint()
-      val inPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ingest_in_q193_", dir)
-      (0 until 2).foreach { c =>
-        snapshot.filter(col("doc_id") % 2 === c).coalesce(1)
-          .write.mode("append").parquet(inPath.toString)
-      }
-      IndexIngest.drain(IndexIngest.start(
-        s.readStream.schema(snapshot.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inPath.toString), None)(
-        IndexIngest.exactBatch(idxPath.toString, "doc_id", "text")))
+      Scenario.deliver(Scenario.landChunks(s,
+          Scenario.workspace("q193_idempotent_ingest_replay", "in", dir),
+          snapshot, col("doc_id") % 2 === 0))(
+        IndexIngest.exactBatch(idxPath, "doc_id", "text"))
       // the sink retry: re-deliver both batches under their original
       // (epoch, batchId) keys through the sink's own body — the
       // ledger must skip them (any execution doubles cluster sizes
       // and the audit scalar → hash-fail)
       (0 until 2).foreach { c =>
         IndexIngest.exactBatch(
-          idxPath.toString, "doc_id", "text")(
+          idxPath, "doc_id", "text")(
           snapshot.filter(col("doc_id") % 2 === c), c.toLong)
       }
-      val audit = IndexLayout.Exact.audit(s, idxPath.toString)
+      val audit = IndexLayout.Exact.audit(s, idxPath)
         .agg(count(lit(1)).as("n_replay_dups"))
-      Dedup.exactClustersIndexed(s, idxPath.toString, snapshot,
+      Dedup.exactClustersIndexed(s, idxPath, snapshot,
           "doc_id", "text")
         .crossJoin(broadcast(audit))
         .orderBy(col("fingerprint"))
@@ -3559,24 +3194,8 @@ object PipelineQueries {
     * UTF-8 bytes, so a corrupted write, a lossy binary round-trip, or
     * a broken shard prune all hash-fail.
     */
-  val q194AssetDedupIndexed: QueryDef = QueryDef(
-    "q194_asset_dedup_indexed",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val assetDir = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assets_q194_", dir)
-      Multimodal.writeAssets(docs, "doc_id", "text", assetDir.toString)
-      val assets = Multimodal.ingestBinaryDir(s, assetDir.toString)
-        .localCheckpoint()
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assetidx_q194_", dir)
-      Multimodal.assetWriteIndex(assets.filter(col("asset_id") % 4 =!= 3),
-        path.toString)
-      val snapshot = assets.filter(col("asset_id") % 4 === 3)
-      Multimodal.assetAppendIndex(snapshot, path.toString)
-      Multimodal.assetDedupIndexed(s, path.toString, snapshot)
-        .orderBy(col("fingerprint"))
-    },
+  val q194AssetDedupIndexed: QueryDef = Scenario(
+    "q194_asset_dedup_indexed", Scenario.Asset, Split(4, 3), Append,
     Some("""
       WITH fp AS (SELECT doc_id AS asset_id, md5(text) AS fingerprint
                   FROM documents WHERE text IS NOT NULL)
@@ -3611,11 +3230,10 @@ object PipelineQueries {
     (s, dir) => {
       val emb = Tables.load(s, dir, "embeddings")
       val (assigned, centroids, cb) = ivfPqBuild(emb, lit(true))
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ivfpqidx_q196_", dir)
+      val path = Scenario.workspace("q196_ivfpq_recall", "ivfpqidx", dir)
       Pq.ivfPqWriteIndexFull(Pq.ivfPqEncode(assigned, centroids, cb),
-        centroids, cb, path.toString)
-      Pq.ivfPqRecallAudit(s, path.toString, emb,
+        centroids, cb, path)
+      Pq.ivfPqRecallAudit(s, path, emb,
           emb.filter(col("vec_id") < 10)
             .select(col("vec_id"), col("embedding")),
           k = 5, shortlist = 10, nprobe = 2)
@@ -3708,27 +3326,8 @@ object PipelineQueries {
     """
   }
 
-  val q197AssetNearDupIndexed: QueryDef = QueryDef(
-    "q197_asset_near_dup_indexed",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-        .filter(col("text").isNotNull)
-      val feats = Multimodal.featurizeVector(
-        Multimodal.attachPayload(docs, "text"), "doc_id")
-        .localCheckpoint()
-      val cents = feats.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("centroid"))
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assetsem_q197_", dir)
-      Clustering.semanticWriteIndex(
-        Clustering.assignL2(feats.filter(col("vec_id") % 4 =!= 3), cents),
-        path.toString)
-      val snap = Clustering.assignL2(
-        feats.filter(col("vec_id") % 4 === 3), cents).localCheckpoint()
-      Clustering.semanticAppendIndex(snap, path.toString, gen = 1)
-      Clustering.semDedupIndexed(s, path.toString, snap, threshold = 0.999)
-        .orderBy(col("cid"), col("vec_id"))
-    },
+  val q197AssetNearDupIndexed: QueryDef = Scenario(
+    "q197_asset_near_dup_indexed", Scenario.AssetSemantic, Split(4, 3), Append,
     Some(assetNearDupOracleSql))
 
   // ------------------------------------------------------------------
@@ -3760,33 +3359,9 @@ object PipelineQueries {
     * every row: `n_damaged` (audit count pre-repair = the snapshot
     * size, every id doubled) and `n_after` (0 — the repair's claim).
     */
-  val q198AssetRepair: QueryDef = QueryDef(
-    "q198_asset_repair",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val assetDir = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assets_q198_", dir)
-      Multimodal.writeAssets(docs, "doc_id", "text", assetDir.toString)
-      val assets = Multimodal.ingestBinaryDir(s, assetDir.toString)
-        .localCheckpoint()
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assetidx_q198_", dir)
-      Multimodal.assetWriteIndex(assets.filter(col("asset_id") % 4 =!= 3),
-        path.toString)
-      val snapshot = assets.filter(col("asset_id") % 4 === 3)
-      Multimodal.assetAppendIndex(snapshot, path.toString)
-      Multimodal.assetAppendIndex(snapshot, path.toString) // the blind retry
-      val damaged = IndexLayout.Asset.audit(s, path.toString)
-        .agg(count(lit(1)).as("n_damaged"))
-      val repaired = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assetidx_q198r_", dir)
-      IndexLayout.Asset.compact(s, path.toString, repaired.toString)
-      val after = IndexLayout.Asset.audit(s, repaired.toString)
-        .agg(count(lit(1)).as("n_after"))
-      Multimodal.assetDedupIndexed(s, repaired.toString, snapshot)
-        .crossJoin(broadcast(damaged)).crossJoin(broadcast(after))
-        .orderBy(col("fingerprint"))
-    },
+  val q198AssetRepair: QueryDef = Scenario(
+    "q198_asset_repair", Scenario.Asset, Split(4, 3),
+    BlindRetry(scalars = true),
     Some(s"""
       WITH fp AS (SELECT doc_id AS asset_id, md5(text) AS fingerprint
                   FROM documents WHERE text IS NOT NULL),
@@ -3808,36 +3383,8 @@ object PipelineQueries {
     * must then hash-equal q194's fresh whole-corpus oracle — batch
     * boundaries cannot move byte-hash verdicts.
     */
-  val q199StreamingAssetIngest: QueryDef = QueryDef(
-    "q199_streaming_asset_ingest",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val assetDir = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assets_q199_", dir)
-      Multimodal.writeAssets(docs, "doc_id", "text", assetDir.toString)
-      val assets = Multimodal.ingestBinaryDir(s, assetDir.toString)
-        .localCheckpoint()
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assetidx_q199_", dir)
-      Multimodal.assetWriteIndex(assets.filter(col("asset_id") % 4 =!= 3),
-        path.toString)
-      val snapshot = assets.filter(col("asset_id") % 4 === 3)
-      // the delta quarter ARRIVES as files: its own landing directory,
-      // streamed in two micro-batches
-      val deltaDir = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assets_in_q199_", dir)
-      Multimodal.writeAssets(docs.filter(col("doc_id") % 4 === 3),
-        "doc_id", "text", deltaDir.toString)
-      // two micro-batches, sized from one FS metadata listing of the
-      // landing dir — no Spark count() action in the gate body
-      val half = Multimodal.dirFileCount(s, deltaDir.toString) / 2 + 1
-      IndexIngest.drain(IndexIngest.start(
-        Multimodal.streamBinaryDir(s, deltaDir.toString,
-          maxFilesPerTrigger = half), None)(
-        IndexIngest.assetBatch(path.toString)))
-      Multimodal.assetDedupIndexed(s, path.toString, snapshot)
-        .orderBy(col("fingerprint"))
-    },
+  val q199StreamingAssetIngest: QueryDef = Scenario(
+    "q199_streaming_asset_ingest", Scenario.Asset, Split(4, 3), Stream,
     Some(s"""
       WITH fp AS (SELECT doc_id AS asset_id, md5(text) AS fingerprint
                   FROM documents WHERE text IS NOT NULL)
@@ -3872,24 +3419,8 @@ object PipelineQueries {
     * ASCII invariant (tools/gen_scaled.py) remains as belt-and-braces
     * but is no longer load-bearing for these gates.
     */
-  val q200FrameDedupIndexed: QueryDef = QueryDef(
-    "q200_frame_dedup_indexed",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-        .filter(col("text").isNotNull)
-      val assets = Multimodal.attachPayload(docs, "text")
-        .select(col("doc_id").as("asset_id"), col("payload"))
-        .localCheckpoint()
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_frameidx_q200_", dir)
-      Multimodal.frameWriteIndex(assets.filter(col("asset_id") % 4 =!= 1),
-        path.toString, frameBytes = 64)
-      val snapshot = assets.filter(col("asset_id") % 4 === 1)
-      Multimodal.frameAppendIndex(snapshot, path.toString, frameBytes = 64)
-      Multimodal.frameDedupIndexed(s, path.toString, snapshot,
-          frameBytes = 64)
-        .orderBy(col("asset_id"))
-    },
+  val q200FrameDedupIndexed: QueryDef = Scenario(
+    "q200_frame_dedup_indexed", Scenario.Frame, Split(4, 1), Append,
     Some("""
       WITH fr AS (
         SELECT doc_id AS asset_id, CAST(i AS BIGINT) AS frame_no,
@@ -3932,36 +3463,9 @@ object PipelineQueries {
     * the probe reads their union, so batch boundaries cannot move a
     * verdict.
     */
-  val q201StreamingAssetNearDup: QueryDef = QueryDef(
-    "q201_streaming_asset_near_dup",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-        .filter(col("text").isNotNull)
-      val feats = Multimodal.featurizeVector(
-        Multimodal.attachPayload(docs, "text"), "doc_id")
-        .localCheckpoint()
-      val cents = feats.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("centroid"))
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assetsem_q201_", dir)
-      Clustering.semanticWriteIndex(
-        Clustering.assignL2(feats.filter(col("vec_id") % 4 =!= 3), cents),
-        path.toString)
-      // the snapshot quarter ARRIVES as files, two micro-batches
-      val deltaDir = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assets_in_q201_", dir)
-      val snapDocs = docs.filter(col("doc_id") % 4 === 3)
-      Multimodal.writeAssets(snapDocs, "doc_id", "text", deltaDir.toString)
-      val half = Multimodal.dirFileCount(s, deltaDir.toString) / 2 + 1
-      IndexIngest.drain(IndexIngest.start(
-        Multimodal.streamBinaryDir(s, deltaDir.toString,
-          maxFilesPerTrigger = half), None)(
-        IndexIngest.assetSemanticBatch(path.toString, cents, startGen = 1)))
-      val snap = Clustering.assignL2(
-        feats.filter(col("vec_id") % 4 === 3), cents).localCheckpoint()
-      Clustering.semDedupIndexed(s, path.toString, snap, threshold = 0.999)
-        .orderBy(col("cid"), col("vec_id"))
-    },
+  val q201StreamingAssetNearDup: QueryDef = Scenario(
+    "q201_streaming_asset_near_dup", Scenario.AssetSemantic, Split(4, 3),
+    Stream,
     Some(assetNearDupOracleSql))
 
   /** Shared WITH-body of the media admission oracle (q202 batch /
@@ -4050,23 +3554,20 @@ object PipelineQueries {
       // floor-bound jobs, so the eager phase pays ~max(chain) instead
       // of the sum. Within a chain the order is unchanged (append
       // follows its own layout's build).
-      val fpPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assetidx_q202_", dir)
-      val semPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assetsem_q202_", dir)
-      val frPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_frameidx_q202_", dir)
+      val fpPath = Scenario.workspace("q202_curation_v9", "assetidx", dir)
+      val semPath = Scenario.workspace("q202_curation_v9", "assetsem", dir)
+      val frPath = Scenario.workspace("q202_curation_v9", "frameidx", dir)
       var exactKept: org.apache.spark.sql.DataFrame = null
       var nearKept: org.apache.spark.sql.DataFrame = null
       var novelty: org.apache.spark.sql.DataFrame = null
       graft.operators.Parallelism.inParallel(
         // ---- exact payload modality ----
         () => {
-          Multimodal.assetWriteIndex(base, fpPath.toString)
-          Multimodal.assetAppendIndex(snap, fpPath.toString)
+          Multimodal.assetWriteIndex(base, fpPath)
+          Multimodal.assetAppendIndex(snap, fpPath)
           exactKept = snap
             .withColumn("fingerprint", md5(col("payload")))
-            .join(Multimodal.assetDedupIndexed(s, fpPath.toString, snap),
+            .join(Multimodal.assetDedupIndexed(s, fpPath, snap),
               "fingerprint")
             .select(col("asset_id"),
               (col("asset_id") === col("kept_id")).as("exact_kept"))
@@ -4080,20 +3581,20 @@ object PipelineQueries {
           Clustering.semanticWriteIndex(
             Clustering.assignL2(feats.filter(col("vec_id") % 4 =!= 3),
               cents),
-            semPath.toString)
+            semPath)
           val snapAssigned = Clustering.assignL2(
             feats.filter(col("vec_id") % 4 === 3), cents).localCheckpoint()
-          Clustering.semanticAppendIndex(snapAssigned, semPath.toString,
+          Clustering.semanticAppendIndex(snapAssigned, semPath,
             gen = 1)
-          nearKept = Clustering.semDedupIndexed(s, semPath.toString,
+          nearKept = Clustering.semDedupIndexed(s, semPath,
               snapAssigned, threshold = 0.999)
             .select(col("vec_id").as("asset_id"), col("kept").as("near_kept"))
         },
         // ---- frame-novelty modality ----
         () => {
-          Multimodal.frameWriteIndex(base, frPath.toString, frameBytes = 64)
-          Multimodal.frameAppendIndex(snap, frPath.toString, frameBytes = 64)
-          novelty = Multimodal.frameDedupIndexed(s, frPath.toString, snap,
+          Multimodal.frameWriteIndex(base, frPath, frameBytes = 64)
+          Multimodal.frameAppendIndex(snap, frPath, frameBytes = 64)
+          novelty = Multimodal.frameDedupIndexed(s, frPath, snap,
             frameBytes = 64)
         })
       // ---- the admission manifest ----
@@ -4147,16 +3648,15 @@ object PipelineQueries {
       val cents = feats.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("centroid"))
       val nb = element_at(col("embedding"), 2)
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assetsem_q203_", dir)
+      val path = Scenario.workspace("q203_asset_drift", "assetsem", dir)
       Clustering.semanticWriteIndex(
         Clustering.assignL2(feats.filter(col("vec_id") % 2 === 0), cents),
-        path.toString)
+        path)
       Clustering.semanticAppendIndex(
         Clustering.assignL2(
           feats.filter(col("vec_id") % 2 === 1 && nb <= 450.0), cents),
-        path.toString, gen = 1)
-      Clustering.semanticDriftAudit(s, path.toString, shareDrift = 0.05)
+        path, gen = 1)
+      Clustering.semanticDriftAudit(s, path, shareDrift = 0.05)
         .orderBy(col("cid"))
     },
     Some(s"""
@@ -4211,32 +3711,8 @@ object PipelineQueries {
     * frame rows depend only on their own payload, so batch boundaries
     * cannot move a keep-first verdict.
     */
-  val q204StreamingFrameIngest: QueryDef = QueryDef(
-    "q204_streaming_frame_ingest",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-        .filter(col("text").isNotNull)
-      val assets = Multimodal.attachPayload(docs, "text")
-        .select(col("doc_id").as("asset_id"), col("payload"))
-        .localCheckpoint()
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_frameidx_q204_", dir)
-      Multimodal.frameWriteIndex(assets.filter(col("asset_id") % 4 =!= 1),
-        path.toString, frameBytes = 64)
-      val snapshot = assets.filter(col("asset_id") % 4 === 1)
-      val deltaDir = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assets_in_q204_", dir)
-      Multimodal.writeAssets(docs.filter(col("doc_id") % 4 === 1),
-        "doc_id", "text", deltaDir.toString)
-      val half = Multimodal.dirFileCount(s, deltaDir.toString) / 2 + 1
-      IndexIngest.drain(IndexIngest.start(
-        Multimodal.streamBinaryDir(s, deltaDir.toString,
-          maxFilesPerTrigger = half), None)(
-        IndexIngest.frameBatch(path.toString, frameBytes = 64)))
-      Multimodal.frameDedupIndexed(s, path.toString, snapshot,
-          frameBytes = 64)
-        .orderBy(col("asset_id"))
-    },
+  val q204StreamingFrameIngest: QueryDef = Scenario(
+    "q204_streaming_frame_ingest", Scenario.Frame, Split(4, 1), Stream,
     // the q200 oracle verbatim: the streamed generations must serve
     // the identical novelty counts
     q200FrameDedupIndexed.oracle)
@@ -4268,24 +3744,24 @@ object PipelineQueries {
     "q205_bm25_compact_amplification",
     (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_bm25idx_q205_", dir)
+      val path =
+        Scenario.workspace("q205_bm25_compact_amplification", "bm25idx", dir)
       // the amplification gate MEASURES the historical wide geometry
       // (its oracle re-derives file counts from the 2-hex shard
       // contract) — build pinned WIDE; appends/compact follow the
       // persisted choice
       Retrieval.bm25WriteIndex(docs.filter(col("doc_id") % 3 === 1),
-        path.toString, shards = Some(IndexShards.Wide))
+        path, shards = Some(IndexShards.Wide))
       Retrieval.bm25AppendIndex(docs.filter(col("doc_id") % 3 === 2),
-        path.toString)
+        path)
       Retrieval.bm25AppendIndex(docs.filter(col("doc_id") % 3 === 0),
-        path.toString)
-      val before = IndexStats.dataFileCount(s, path.toString)
-      val compacted = graft.operators.TmpWorkspaces
-        .pidScoped("graft_bm25idx_q205c_", dir)
-      IndexLayout.Bm25.compact(s, path.toString, compacted.toString)
-      val after = IndexStats.dataFileCount(s, compacted.toString)
-      Retrieval.bm25TopKIndexed(s, compacted.toString,
+        path)
+      val before = IndexStats.dataFileCount(s, path)
+      val compacted =
+        Scenario.workspace("q205_bm25_compact_amplification", "compacted", dir)
+      IndexLayout.Bm25.compact(s, path, compacted)
+      val after = IndexStats.dataFileCount(s, compacted)
+      Retrieval.bm25TopKIndexed(s, compacted,
           docs.filter(col("doc_id") < 8), k = 10)
         .withColumn("n_files_before", lit(before))
         .withColumn("n_files_after", lit(after))
@@ -4325,23 +3801,23 @@ object PipelineQueries {
       val assets = Multimodal.attachPayload(docs, "text")
         .select(col("doc_id").as("asset_id"), col("payload"))
         .localCheckpoint()
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assetidx_q206_", dir)
+      val path =
+        Scenario.workspace("q206_asset_compact_amplification", "assetidx", dir)
       // the amplification gate MEASURES the historical wide geometry
       // (oracle re-derives counts from the 2-hex contract) — build
       // pinned WIDE; appends/compact follow the persisted choice
       Multimodal.assetWriteIndex(assets.filter(col("asset_id") % 4 < 2),
-        path.toString, shards = Some(graft.operators.IndexShards.Wide))
+        path, shards = Some(graft.operators.IndexShards.Wide))
       Multimodal.assetAppendIndex(assets.filter(col("asset_id") % 4 === 2),
-        path.toString)
+        path)
       val snapshot = assets.filter(col("asset_id") % 4 === 3)
-      Multimodal.assetAppendIndex(snapshot, path.toString)
-      val before = IndexStats.dataFileCount(s, path.toString)
-      val compacted = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assetidx_q206c_", dir)
-      IndexLayout.Asset.compact(s, path.toString, compacted.toString)
-      val after = IndexStats.dataFileCount(s, compacted.toString)
-      Multimodal.assetDedupIndexed(s, compacted.toString, snapshot)
+      Multimodal.assetAppendIndex(snapshot, path)
+      val before = IndexStats.dataFileCount(s, path)
+      val compacted =
+        Scenario.workspace("q206_asset_compact_amplification", "compacted", dir)
+      IndexLayout.Asset.compact(s, path, compacted)
+      val after = IndexStats.dataFileCount(s, compacted)
+      Multimodal.assetDedupIndexed(s, compacted, snapshot)
         .withColumn("n_files_before", lit(before))
         .withColumn("n_files_after", lit(after))
         .orderBy(col("fingerprint"))
@@ -4384,36 +3860,8 @@ object PipelineQueries {
     * q118/q194/q199 as the true edge; this member is everything
     * AFTER the edge.
     */
-  val q207PackedAssetIngest: QueryDef = QueryDef(
-    "q207_packed_asset_ingest",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-        .filter(col("text").isNotNull)
-      val assets = Multimodal.attachPayload(docs, "text")
-        .select(col("doc_id").as("asset_id"), col("payload"))
-        .localCheckpoint()
-      // pack at the edge: the base corpus and the arriving delta
-      // quarter each land as a bounded set of multi-asset files
-      val basePacked = graft.operators.TmpWorkspaces
-        .pidScoped("graft_packed_q207_", dir)
-      Multimodal.packAssets(assets.filter(col("asset_id") % 4 =!= 3),
-        basePacked.toString, nFiles = 8)
-      val deltaPacked = graft.operators.TmpWorkspaces
-        .pidScoped("graft_packed_in_q207_", dir)
-      Multimodal.packAssets(assets.filter(col("asset_id") % 4 === 3),
-        deltaPacked.toString, nFiles = 4)
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assetidx_q207_", dir)
-      Multimodal.assetWriteIndex(
-        Multimodal.readPackedAssets(s, basePacked.toString), path.toString)
-      IndexIngest.drain(IndexIngest.start(
-        Multimodal.streamPackedDir(s, deltaPacked.toString,
-          maxFilesPerTrigger = 2), None)(
-        IndexIngest.assetBatch(path.toString)))
-      Multimodal.assetDedupIndexed(s, path.toString,
-          Multimodal.readPackedAssets(s, deltaPacked.toString))
-        .orderBy(col("fingerprint"))
-    },
+  val q207PackedAssetIngest: QueryDef = Scenario(
+    "q207_packed_asset_ingest", Scenario.PackedAsset, Split(4, 3), Stream,
     // the q194/q199 oracle verbatim: packing is a layout change only
     Some(s"""
       WITH fp AS (SELECT doc_id AS asset_id, md5(text) AS fingerprint
@@ -4445,27 +3893,9 @@ object PipelineQueries {
     * cap, candidate distinct, `bit_count` verify, the stride decode —
     * restricted to snapshot-endpoint pairs.
     */
-  val q208FrameSimhashIncremental: QueryDef = QueryDef(
-    "q208_frame_simhash_incremental",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-        .filter(col("text").isNotNull)
-      val assets = Multimodal.attachPayload(docs, "text")
-        .select(col("doc_id").as("asset_id"), col("source"), col("payload"))
-        .localCheckpoint()
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_frsim_q208_", dir)
-      Multimodal.frameSimhashWriteIndex(
-        assets.filter(col("asset_id") % 4 =!= 3), path.toString,
-        frameBytes = 64)
-      val snapshot = assets.filter(col("asset_id") % 4 === 3)
-      Multimodal.frameSimhashAppendIndex(snapshot, path.toString,
-        frameBytes = 64)
-      Multimodal.frameSimhashPairsIndexed(s, path.toString, snapshot,
-          frameBytes = 64)
-        .orderBy(col("blk"), col("asset_a"), col("frame_a"),
-          col("asset_b"), col("frame_b"))
-    },
+  val q208FrameSimhashIncremental: QueryDef = Scenario(
+    "q208_frame_simhash_incremental", Scenario.FrameSimhash, Split(4, 3),
+    Append,
     Some(s"""
       WITH ${simhashPairsCtes(s"""
         SELECT doc_id, blk,
@@ -4524,11 +3954,11 @@ object PipelineQueries {
       val assets = Multimodal.attachPayload(docs, "text")
         .select(col("doc_id").as("asset_id"), col("payload"))
         .localCheckpoint()
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_frdecon_q209_", dir)
+      val path =
+        Scenario.workspace("q209_frame_decontamination", "frdecon", dir)
       Multimodal.frameWriteIndex(assets.filter(col("asset_id") % 4 =!= 3),
-        path.toString, frameBytes = 64)
-      Multimodal.frameDecontamination(s, path.toString,
+        path, frameBytes = 64)
+      Multimodal.frameDecontamination(s, path,
           assets.filter(col("asset_id") % 4 === 3), frameBytes = 64)
         .orderBy(col("asset_id"))
     },
@@ -4601,13 +4031,12 @@ object PipelineQueries {
       val base = assets.filter(col("asset_id") % 4 =!= 3)
       val snap = assets.filter(col("asset_id") % 4 === 3)
       // ---- exact payload modality (q194) ----
-      val fpPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assetidx_q210_", dir)
-      Multimodal.assetWriteIndex(base, fpPath.toString)
-      Multimodal.assetAppendIndex(snap, fpPath.toString)
+      val fpPath = Scenario.workspace("q210_curation_v10", "assetidx", dir)
+      Multimodal.assetWriteIndex(base, fpPath)
+      Multimodal.assetAppendIndex(snap, fpPath)
       val exactKept = snap
         .withColumn("fingerprint", md5(col("payload")))
-        .join(Multimodal.assetDedupIndexed(s, fpPath.toString, snap),
+        .join(Multimodal.assetDedupIndexed(s, fpPath, snap),
           "fingerprint")
         .select(col("asset_id"),
           (col("asset_id") === col("kept_id")).as("exact_kept"))
@@ -4616,15 +4045,14 @@ object PipelineQueries {
         .localCheckpoint()
       val cents = feats.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("centroid"))
-      val semPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assetsem_q210_", dir)
+      val semPath = Scenario.workspace("q210_curation_v10", "assetsem", dir)
       Clustering.semanticWriteIndex(
         Clustering.assignL2(feats.filter(col("vec_id") % 4 =!= 3), cents),
-        semPath.toString)
+        semPath)
       val snapAssigned = Clustering.assignL2(
         feats.filter(col("vec_id") % 4 === 3), cents).localCheckpoint()
-      Clustering.semanticAppendIndex(snapAssigned, semPath.toString, gen = 1)
-      val nearKept = Clustering.semDedupIndexed(s, semPath.toString,
+      Clustering.semanticAppendIndex(snapAssigned, semPath, gen = 1)
+      val nearKept = Clustering.semDedupIndexed(s, semPath,
           snapAssigned, threshold = 0.999)
         .select(col("vec_id").as("asset_id"), col("kept").as("near_kept"))
       // ---- the dedup funnel, then the mixture over the survivors ----
@@ -4712,8 +4140,8 @@ object PipelineQueries {
     * q192, assets q198): the snapshot quarter's frames are appended
     * TWICE (the ledger-less blind retry),
     * `IndexLayout.Frame.audit` localizes exactly
-    * the doubled coordinates (asserted bit-identical in the closure —
-    * no payload divergence), and
+    * the doubled coordinates (their count rides every row as
+    * `n_damaged`), and
     * `IndexLayout.Frame.compact` rewrites the
     * fingerprint rows (coordinates + 32 hex chars — NO payload bytes
     * re-read: the media-repair argument is ×frames-per-asset sharper
@@ -4722,33 +4150,9 @@ object PipelineQueries {
     * (audit count pre-repair = the snapshot's frame count, every
     * coordinate doubled) and `n_after` (0 — the repair's claim).
     */
-  val q211FrameRepair: QueryDef = QueryDef(
-    "q211_frame_repair",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-        .filter(col("text").isNotNull)
-      val assets = Multimodal.attachPayload(docs, "text")
-        .select(col("doc_id").as("asset_id"), col("payload"))
-        .localCheckpoint()
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_frameidx_q211_", dir)
-      Multimodal.frameWriteIndex(assets.filter(col("asset_id") % 4 =!= 1),
-        path.toString, frameBytes = 64)
-      val snapshot = assets.filter(col("asset_id") % 4 === 1)
-      Multimodal.frameAppendIndex(snapshot, path.toString, frameBytes = 64)
-      Multimodal.frameAppendIndex(snapshot, path.toString, frameBytes = 64)
-      val damaged = IndexLayout.Frame.audit(s, path.toString)
-        .agg(count(lit(1)).as("n_damaged"))
-      val repaired = graft.operators.TmpWorkspaces
-        .pidScoped("graft_frameidx_q211r_", dir)
-      IndexLayout.Frame.compact(s, path.toString, repaired.toString)
-      val after = IndexLayout.Frame.audit(s, repaired.toString)
-        .agg(count(lit(1)).as("n_after"))
-      Multimodal.frameDedupIndexed(s, repaired.toString, snapshot,
-          frameBytes = 64)
-        .crossJoin(broadcast(damaged)).crossJoin(broadcast(after))
-        .orderBy(col("asset_id"))
-    },
+  val q211FrameRepair: QueryDef = Scenario(
+    "q211_frame_repair", Scenario.Frame, Split(4, 1),
+    BlindRetry(scalars = true),
     // q200's oracle with the damage scalars: every snapshot frame
     // coordinate was doubled, the repair leaves zero
     Some("""
@@ -4797,35 +4201,8 @@ object PipelineQueries {
     * the delta, the probe reads their union with the bucket cap over
     * the full post-append membership.
     */
-  val q212StreamingFrameSimhash: QueryDef = QueryDef(
-    "q212_streaming_frame_simhash",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-        .filter(col("text").isNotNull)
-      val assets = Multimodal.attachPayload(docs, "text")
-        .select(col("doc_id").as("asset_id"), col("source"), col("payload"))
-        .localCheckpoint()
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_frsim_q212_", dir)
-      Multimodal.frameSimhashWriteIndex(
-        assets.filter(col("asset_id") % 4 =!= 3), path.toString,
-        frameBytes = 64)
-      // the snapshot quarter ARRIVES packed, two micro-batches; the
-      // static metadata frame supplies the blocking key per batch
-      val landing = graft.operators.TmpWorkspaces
-        .pidScoped("graft_packed_in_q212_", dir)
-      val snapshot = assets.filter(col("asset_id") % 4 === 3)
-      Multimodal.packAssets(snapshot, landing.toString, nFiles = 4)
-      IndexIngest.drain(IndexIngest.start(
-        Multimodal.streamPackedDir(s, landing.toString,
-          maxFilesPerTrigger = 2), None)(
-        IndexIngest.frameSimhashBatch(path.toString, frameBytes = 64,
-          blockOf = assets.select(col("asset_id"), col("source")))))
-      Multimodal.frameSimhashPairsIndexed(s, path.toString, snapshot,
-          frameBytes = 64)
-        .orderBy(col("blk"), col("asset_a"), col("frame_a"),
-          col("asset_b"), col("frame_b"))
-    },
+  val q212StreamingFrameSimhash: QueryDef = Scenario(
+    "q212_streaming_frame_simhash", Scenario.FrameSimhash, Split(4, 3), Stream,
     // the q208 oracle verbatim, with ITS snapshot split: the streamed
     // generations must serve the identical pair set
     Some(s"""
@@ -4883,38 +4260,9 @@ object PipelineQueries {
     * pre-repair = 4 band coordinates per snapshot frame, every one
     * doubled) and `n_after` (0 — the repair's claim).
     */
-  val q213FrameSimhashRepair: QueryDef = QueryDef(
-    "q213_frame_simhash_repair",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-        .filter(col("text").isNotNull)
-      val assets = Multimodal.attachPayload(docs, "text")
-        .select(col("doc_id").as("asset_id"), col("source"), col("payload"))
-        .localCheckpoint()
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_frsim_q213_", dir)
-      Multimodal.frameSimhashWriteIndex(
-        assets.filter(col("asset_id") % 4 =!= 3), path.toString,
-        frameBytes = 64)
-      val snapshot = assets.filter(col("asset_id") % 4 === 3)
-      Multimodal.frameSimhashAppendIndex(snapshot, path.toString,
-        frameBytes = 64)
-      Multimodal.frameSimhashAppendIndex(snapshot, path.toString,
-        frameBytes = 64)
-      val damaged = IndexLayout.FrameSimhash.audit(s, path.toString)
-        .agg(count(lit(1)).as("n_damaged"))
-      val repaired = graft.operators.TmpWorkspaces
-        .pidScoped("graft_frsim_q213r_", dir)
-      IndexLayout.FrameSimhash.compact(s, path.toString,
-        repaired.toString)
-      val after = IndexLayout.FrameSimhash.audit(s, repaired.toString)
-        .agg(count(lit(1)).as("n_after"))
-      Multimodal.frameSimhashPairsIndexed(s, repaired.toString, snapshot,
-          frameBytes = 64)
-        .crossJoin(broadcast(damaged)).crossJoin(broadcast(after))
-        .orderBy(col("blk"), col("asset_a"), col("frame_a"),
-          col("asset_b"), col("frame_b"))
-    },
+  val q213FrameSimhashRepair: QueryDef = Scenario(
+    "q213_frame_simhash_repair", Scenario.FrameSimhash, Split(4, 3),
+    BlindRetry(scalars = true),
     // q208's oracle with the damage scalars: 4 band coordinates per
     // snapshot frame (source non-null — NULL-block frames never land
     // band rows), every one doubled; the repair leaves zero
@@ -4992,11 +4340,10 @@ object PipelineQueries {
       val merged = Multimodal.assetManifestMerge(
         Multimodal.assetReleaseManifest(base),
         Multimodal.assetReleaseManifest(delta))
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assetmf_q214_", dir)
-      Multimodal.assetWriteIndex(base, path.toString)
-      Multimodal.assetAppendIndex(delta, path.toString)
-      val fromIdx = Multimodal.assetManifestFromIndex(s, path.toString)
+      val path = Scenario.workspace("q214_asset_manifest", "assetmf", dir)
+      Multimodal.assetWriteIndex(base, path)
+      Multimodal.assetAppendIndex(delta, path)
+      val fromIdx = Multimodal.assetManifestFromIndex(s, path)
         .select(col("shard"), col("n_assets").as("n_idx"),
           col("checksum").as("ck_index"))
       merged.join(broadcast(fromIdx), Seq("shard"))
@@ -5034,29 +4381,8 @@ object PipelineQueries {
     * S-rows-per-batch cost, with payloads read exactly once each, at
     * arrival.
     */
-  val q215StreamingManifest: QueryDef = QueryDef(
-    "q215_streaming_manifest",
-    (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-        .filter(col("text").isNotNull)
-      val assets = Multimodal.attachPayload(docs, "text")
-        .select(col("doc_id").as("asset_id"), col("payload"))
-        .localCheckpoint()
-      val path = graft.operators.TmpWorkspaces
-        .pidScoped("graft_mfing_q215_", dir)
-      Multimodal.manifestAppendGeneration(
-        assets.filter(col("asset_id") % 4 =!= 3), path.toString)
-      val landing = graft.operators.TmpWorkspaces
-        .pidScoped("graft_packed_in_q215_", dir)
-      Multimodal.packAssets(assets.filter(col("asset_id") % 4 === 3),
-        landing.toString, nFiles = 4)
-      IndexIngest.drain(IndexIngest.start(
-        Multimodal.streamPackedDir(s, landing.toString,
-          maxFilesPerTrigger = 2), None)(
-        IndexIngest.assetManifestBatch(path.toString)))
-      Multimodal.assetManifestServe(s, path.toString)
-        .orderBy(col("shard"))
-    },
+  val q215StreamingManifest: QueryDef = Scenario(
+    "q215_streaming_manifest", Scenario.Manifest, Split(4, 3), Stream,
     // q214's fresh derivation, verbatim minus the index-served twins:
     // the streamed generations must fold to the identical manifest
     Some(s"""
@@ -5106,51 +4432,46 @@ object PipelineQueries {
       // day-2 consume them), then the three index builds and the
       // landing-layout pack — four writes into DISJOINT paths — overlap
       // (guide §2.6: independent floor-bound jobs, sum → max)
-      val fpPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assetidx_q216_", dir)
+      val fpPath = Scenario.workspace("q216_streaming_media", "assetidx", dir)
       val feats = Multimodal.featurizeVector(assets, "asset_id")
         .localCheckpoint()
       val cents = feats.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("embedding").as("centroid"))
         .localCheckpoint()
-      val semPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_assetsem_q216_", dir)
-      val frPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_frameidx_q216_", dir)
-      val landing = graft.operators.TmpWorkspaces
-        .pidScoped("graft_packed_in_q216_", dir)
+      val semPath = Scenario.workspace("q216_streaming_media", "assetsem", dir)
+      val frPath = Scenario.workspace("q216_streaming_media", "frameidx", dir)
+      val landing = Scenario.workspace("q216_streaming_media", "packed_in", dir)
       graft.operators.Parallelism.inParallel(
-        () => Multimodal.assetWriteIndex(base, fpPath.toString),
+        () => Multimodal.assetWriteIndex(base, fpPath),
         () => Clustering.semanticWriteIndex(
           Clustering.assignL2(feats.filter(col("vec_id") % 4 =!= 3), cents),
-          semPath.toString),
-        () => Multimodal.frameWriteIndex(base, frPath.toString,
+          semPath),
+        () => Multimodal.frameWriteIndex(base, frPath,
           frameBytes = 64),
-        () => Multimodal.packAssets(snap, landing.toString, nFiles = 4))
+        () => Multimodal.packAssets(snap, landing, nFiles = 4))
       // day-2: ONE stream maintains all three
-      IndexIngest.drain(IndexIngest.start(
-        Multimodal.streamPackedDir(s, landing.toString,
-          maxFilesPerTrigger = 2), None)(
-        IndexIngest.mediaBatch(fpPath.toString, semPath.toString,
-          frPath.toString, cents, frameBytes = 64)))
+      Scenario.deliver(Multimodal.streamPackedDir(s, landing,
+          maxFilesPerTrigger = 2))(
+        IndexIngest.mediaBatch(fpPath, semPath,
+          frPath, cents, frameBytes = 64))
       // consistency scalar: every delivery landed in all three members
       val inconsistent = graft.streaming.IndexIngest
-        .mediaConsistencyAudit(s, fpPath.toString, semPath.toString,
-          frPath.toString)
+        .mediaConsistencyAudit(s, fpPath, semPath,
+          frPath)
         .agg(count(lit(1)).as("n_inconsistent"))
       // q202's admission manifest, served from the streamed indexes
       val exactKept = snap
         .withColumn("fingerprint", md5(col("payload")))
-        .join(Multimodal.assetDedupIndexed(s, fpPath.toString, snap),
+        .join(Multimodal.assetDedupIndexed(s, fpPath, snap),
           "fingerprint")
         .select(col("asset_id"),
           (col("asset_id") === col("kept_id")).as("exact_kept"))
       val snapAssigned = Clustering.assignL2(
         feats.filter(col("vec_id") % 4 === 3), cents).localCheckpoint()
-      val nearKept = Clustering.semDedupIndexed(s, semPath.toString,
+      val nearKept = Clustering.semDedupIndexed(s, semPath,
           snapAssigned, threshold = 0.999)
         .select(col("vec_id").as("asset_id"), col("kept").as("near_kept"))
-      val novelty = Multimodal.frameDedupIndexed(s, frPath.toString, snap,
+      val novelty = Multimodal.frameDedupIndexed(s, frPath, snap,
         frameBytes = 64)
       snap.select(col("asset_id"))
         .join(exactKept, "asset_id")
@@ -5190,27 +4511,26 @@ object PipelineQueries {
     "q217_bm25_pointer_swap",
     (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
-      val root = graft.operators.TmpWorkspaces
-        .pidScoped("graft_bm25idx_q217_", dir)
+      val root = Scenario.workspace("q217_bm25_pointer_swap", "bm25idx", dir)
       Retrieval.bm25WriteIndex(docs.filter(col("doc_id") % 3 === 1),
-        root.toString)
+        root)
       val deltaA = docs.filter(col("doc_id") % 3 === 2)
-      Retrieval.bm25AppendIndex(deltaA, root.toString)
+      Retrieval.bm25AppendIndex(deltaA, root)
       // the injected failure: a blind retry replays the same append
-      Retrieval.bm25AppendIndex(deltaA, root.toString)
-      require(!IndexLayout.Bm25.audit(s, root.toString).isEmpty,
+      Retrieval.bm25AppendIndex(deltaA, root)
+      require(!IndexLayout.Bm25.audit(s, root).isEmpty,
         "the replay damage must be visible before the repair")
       // ONLINE repair: compact + atomic pointer cutover, same root
-      val gen = IndexLayout.Bm25.compactSwap(s, root.toString)
-      require(graft.operators.IndexPaths.resolve(s, root.toString) == gen,
+      val gen = IndexLayout.Bm25.compactSwap(s, root)
+      require(graft.operators.IndexPaths.resolve(s, root) == gen,
         s"the pointer must resolve to the repaired generation $gen")
       // day-2 continues THROUGH the root: the append must land in the
       // live generation, not the stale flat layout
       Retrieval.bm25AppendIndex(docs.filter(col("doc_id") % 3 === 0),
-        root.toString)
-      require(IndexLayout.Bm25.audit(s, root.toString).isEmpty,
+        root)
+      require(IndexLayout.Bm25.audit(s, root).isEmpty,
         "the repaired+appended layout must audit clean")
-      Retrieval.bm25TopKIndexed(s, root.toString,
+      Retrieval.bm25TopKIndexed(s, root,
           docs.filter(col("doc_id") < 8), k = 10)
         .orderBy(col("query_id"), col("rnk"))
     },
@@ -5236,43 +4556,35 @@ object PipelineQueries {
     "q218_auto_compact_ingest",
     (s, dir) => {
       val docs = Tables.load(s, dir, "documents")
-      val root = graft.operators.TmpWorkspaces
-        .pidScoped("graft_bm25idx_q218_", dir)
+      val root = Scenario.workspace("q218_auto_compact_ingest", "bm25idx", dir)
       Retrieval.bm25WriteIndex(docs.filter(col("doc_id") % 3 =!= 0),
-        root.toString)
-      val floor = graft.operators.IndexStats.dataFileCount(s, root.toString)
+        root)
+      val floor = graft.operators.IndexStats.dataFileCount(s, root)
       val snapshot = docs.filter(col("doc_id") % 3 === 0)
         .select(col("doc_id"), col("text")).localCheckpoint()
-      val inPath = graft.operators.TmpWorkspaces
-        .pidScoped("graft_ingest_in_q218_", dir)
-      Seq(col("doc_id") % 2 === 0, col("doc_id") % 2 =!= 0).foreach { p =>
-        snapshot.filter(p).coalesce(1)
-          .write.mode("append").parquet(inPath.toString)
-      }
+      val landed = Scenario.landChunks(s,
+        Scenario.workspace("q218_auto_compact_ingest", "in", dir), snapshot,
+        col("doc_id") % 2 === 0)
       // the fresh full-corpus build exists only to measure the
       // compacted file floor — independent of the ingest's root, so
       // overlap it with the streamed deliveries (guide §2.6)
-      val fresh = graft.operators.TmpWorkspaces
-        .pidScoped("graft_bm25idx_q218f_", dir)
+      val fresh = Scenario.workspace("q218_auto_compact_ingest", "fresh", dir)
       graft.operators.Parallelism.inParallel(
-        () => IndexIngest.drain(IndexIngest.start(
-          s.readStream.schema(snapshot.schema)
-            .option("maxFilesPerTrigger", 1).parquet(inPath.toString),
-          None)(
-          IndexIngest.bm25Batch(root.toString, "doc_id", "text",
-            maxDataFiles = Some(floor + 2)))),
-        () => Retrieval.bm25WriteIndex(docs, fresh.toString))
+        () => Scenario.deliver(landed)(
+          IndexIngest.bm25Batch(root, "doc_id", "text",
+            maxDataFiles = Some(floor + 2))),
+        () => Retrieval.bm25WriteIndex(docs, fresh))
       require(graft.operators.IndexPaths
-          .currentGeneration(s, root.toString).nonEmpty,
+          .currentGeneration(s, root).nonEmpty,
         "the file-count threshold must have fired a compact-swap")
       val floorFull = graft.operators.IndexStats
-        .dataFileCount(s, fresh.toString)
+        .dataFileCount(s, fresh)
       val served = graft.operators.IndexStats.dataFileCount(s,
-        graft.operators.IndexPaths.resolve(s, root.toString))
+        graft.operators.IndexPaths.resolve(s, root))
       require(served <= floorFull + 2,
         s"serve cost must return to the compacted baseline: " +
           s"$served vs fresh floor $floorFull")
-      Retrieval.bm25TopKIndexed(s, root.toString,
+      Retrieval.bm25TopKIndexed(s, root,
           docs.filter(col("doc_id") < 8), k = 10)
         .orderBy(col("query_id"), col("rnk"))
     },

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.hadoop.fs.Path
@@ -9,6 +10,7 @@ import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftSessionBridge
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 import org.apache.spark.sql.types.LongType
 
 /** Drives Structured Streaming pipelines over the driver-provided
@@ -131,7 +133,10 @@ object StreamRunner {
     * caller's conf is never written or restored, and no query sees
     * settings of one that ran before or beside it
     * (`Parallelism.inParallel`). The clone does not copy streaming
-    * listeners, so the caller's are forwarded onto it. Partition count
+    * listeners, so the caller's are forwarded onto it; once they have
+    * seen the query's terminated event, the listener buses of the clone
+    * and of the query's own session are unregistered ([[release]]), or
+    * every run would leave two on the SparkContext. Partition count
     * cannot move a result: state is keyed, the sink collects every
     * partition, and oracle comparisons are order-insensitive.
     *
@@ -166,30 +171,24 @@ object StreamRunner {
     statePartitions(spark, plan).foreach(n =>
       scoped.conf.set("spark.sql.shuffle.partitions", n.toString))
     spark.streams.listListeners().foreach(scoped.streams.addListener)
+    // last, so it sees each event after the forwarded listeners did
+    val sentinel = new Sentinel
+    scoped.streams.addListener(sentinel)
     val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-    val query = GraftSessionBridge.ofRows(scoped, plan).writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(outputMode)
-      .start()
+    val query =
+      try GraftSessionBridge.ofRows(scoped, plan).writeStream
+        .format("memory")
+        .queryName(name)
+        .outputMode(outputMode)
+        .start()
+      catch { case e: Throwable =>
+        GraftSessionBridge.dropListenerBus(spark, sentinel)
+        throw e
+      }
     try query.processAllAvailable()
-    finally query.stop()
+    finally release(query, sentinel)
     maxDataBatches.foreach { max =>
-      val progress = query.recentProgress
-      // recentProgress is a RING BUFFER capped by
-      // spark.sql.streaming.numRecentProgressUpdates (default 100): a
-      // run emitting more updates than the cap silently drops the
-      // EARLIEST entries, and a count over the survivors could pass the
-      // pin vacuously. Refuse to adjudicate a saturated buffer instead
-      // of trusting it.
-      val cap = spark.conf
-        .get("spark.sql.streaming.numRecentProgressUpdates", "100").toInt
-      require(progress.length < cap,
-        s"recentProgress holds ${progress.length} entries with ring-buffer " +
-          s"cap $cap — early progress may have been dropped, so the " +
-          "single-batch pin cannot be trusted; raise " +
-          "spark.sql.streaming.numRecentProgressUpdates for this query")
-      val dataBatches = progress.count(_.numInputRows > 0)
+      val dataBatches = this.dataBatches(query)
       require(dataBatches <= max,
         s"source delivered data in $dataBatches micro-batches; this " +
           s"query's oracle is only engine-equivalent up to $max (fixture " +
@@ -198,6 +197,53 @@ object StreamRunner {
     val out = scoped.table(name).localCheckpoint(true)
     scoped.catalog.dropTempView(name)
     GraftSessionBridge.ofRows(spark, out.queryExecution.analyzed)
+  }
+
+  /** Marks the listener bus of the session it is added to, and sees
+    * that session's query terminate. */
+  private final class Sentinel extends StreamingQueryListener {
+    val terminated = new CountDownLatch(1)
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      terminated.countDown()
+  }
+
+  /** Stops `query` and unregisters the two streaming-listener buses its
+    * run left on the SparkContext: each session's query manager adds
+    * one for the session's lifetime, and neither the cloned session nor
+    * the query's own session outlives the run. The clone's bus goes
+    * only once `sentinel`, its last listener, has seen the terminated
+    * event, so the forwarded listeners have seen it and every progress
+    * event before it.
+    */
+  private def release(query: StreamingQuery, sentinel: Sentinel): Unit =
+    try query.stop()
+    finally {
+      sentinel.terminated.await(60, TimeUnit.SECONDS)
+      GraftSessionBridge.dropListenerBus(query.sparkSession, sentinel)
+      val own = new Sentinel
+      GraftSessionBridge.streamSession(query).streams.addListener(own)
+      GraftSessionBridge.dropListenerBus(query.sparkSession, own)
+    }
+
+  /** Data-carrying micro-batches of a stopped `query`, from its
+    * recentProgress. That is a RING BUFFER capped by
+    * spark.sql.streaming.numRecentProgressUpdates (default 100): a run
+    * emitting more updates than the cap silently drops the EARLIEST
+    * entries, and a count over the survivors could pass a pin
+    * vacuously, so a saturated buffer is refused instead of counted.
+    */
+  private[graft] def dataBatches(query: StreamingQuery): Int = {
+    val progress = query.recentProgress
+    val cap = query.sparkSession.conf
+      .get("spark.sql.streaming.numRecentProgressUpdates", "100").toInt
+    require(progress.length < cap,
+      s"recentProgress holds ${progress.length} entries with ring-buffer " +
+        s"cap $cap — early progress may have been dropped, so the " +
+        "micro-batch count cannot be trusted; raise " +
+        "spark.sql.streaming.numRecentProgressUpdates for this query")
+    progress.count(_.numInputRows > 0)
   }
 
   /** Watermark-idleness analog (reference: `flink-core/…/eventtime/

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import scala.jdk.CollectionConverters._
 
@@ -123,5 +123,36 @@ class StreamScopeSpec extends AnyFunSuite {
     // also after a file stream was built but never run
     StreamRunner.tableStream(spark, sf, "events")
     assert(memoryStreamPartitions() == Set(sessionPartitions))
+  }
+
+  test("runs leave no streaming-listener bus behind and forward every run's events") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val progressed = ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val terminated = ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        progressed.add(e.progress.runId)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        terminated.add(e.runId)
+    }
+    spark.streams.addListener(listener)
+    try {
+      val before = ListenerBusDrain.streamingBuses(spark)
+      (1 to 5).foreach { i =>
+        val in = MemoryStream[Long]
+        in.addData(1L to 20L: _*)
+        assert(StreamRunner.runToTable(
+          in.toDF().groupBy(col("value") % 4).count(), "complete")
+          .agg(sum("count")).as[Long].head() == 20L)
+        // delivered before runToTable returned, with no wait here
+        assert(terminated.size == i, s"run $i: terminated events")
+        assert(progressed.asScala == terminated.asScala,
+          s"run $i: each run's progress reached the caller's listener")
+      }
+      assert(ListenerBusDrain.streamingBuses(spark) == before,
+        "each run must unregister its sessions' listener buses")
+    } finally spark.streams.removeListener(listener)
   }
 }

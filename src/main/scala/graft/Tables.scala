@@ -35,14 +35,6 @@ object Tables {
     } else spark.read.parquet(s"$dir/$name.parquet")
   }
 
-  /** Normalize events.ts to µs TimestampType at the scan boundary so
-    * every downstream operator (windows, watermarks — which reject NTZ —
-    * interval joins) sees a plain event-time column (SURVEY.md §1.2
-    * ns-precision note). Handles every fixture shape seen so far:
-    * timestamp[ns] (read as Long under nanosAsLong), naive timestamp[us]
-    * (read as TIMESTAMP_NTZ), or native TimestampType. All sessions run
-    * UTC, so the NTZ cast relabels the identical instant DuckDB sees.
-    */
   /** The NTZ→Timestamp relabel below is instant-preserving ONLY under a
     * UTC session timezone; enforce it at the chokepoint instead of
     * trusting every session builder to have set it (ADVICE.md r9).
@@ -70,7 +62,16 @@ object Tables {
     }
   }
 
-  private def normalizeEventTime(df: DataFrame): DataFrame = {
+  /** Normalize events.ts to µs TimestampType at the scan boundary, batch
+    * ([[load]]) or stream (`StreamRunner.eventsStream`), so
+    * every downstream operator (windows, watermarks — which reject NTZ —
+    * interval joins) sees a plain event-time column (SURVEY.md §1.2
+    * ns-precision note). Handles every fixture shape seen so far:
+    * timestamp[ns] (read as Long under nanosAsLong), naive timestamp[us]
+    * (read as TIMESTAMP_NTZ), or native TimestampType. All sessions run
+    * UTC, so the NTZ cast relabels the identical instant DuckDB sees.
+    */
+  private[graft] def normalizeEventTime(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.types._
     df.schema("ts").dataType match {
       case TimestampType => df

@@ -147,22 +147,17 @@ object Dedup {
     * [[exactWriteIndex]] layout that already contains it: every
     * cluster with AT LEAST ONE snapshot member, with the stats the
     * fresh whole-corpus run would report (kept = global min id,
-    * cluster_size = full membership — the probe reads ENTIRE shard
-    * buckets, so base members count). One delta-sized fingerprint
-    * pass, a partition-pruned scan (literal shards from a collect
-    * bounded by the 256-shard alphabet), a broadcast
-    * snapshot-fingerprint semi-join BEFORE the aggregation (prunes
-    * the shard residue ahead of the shuffle), one keyed agg. q160
-    * gates equality with the fresh run restricted to
-    * snapshot-touched fingerprints.
+    * cluster_size = full membership). One delta-sized fingerprint
+    * pass, the [[IndexLayout.probe]] by the snapshot's fingerprints
+    * BEFORE the aggregation, one keyed agg. q160 gates equality with
+    * the fresh run restricted to snapshot-touched fingerprints.
     */
   def exactClustersIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String, deltaDocs: DataFrame,
       idCol: String, textCol: String): DataFrame = {
     val deltaFp = deltaDocs
-      .select(md5(normalize(col(textCol))).as("fingerprint")).distinct()
-    IndexLayout.Exact.prunedScan(spark, path, deltaFp)
-      .join(broadcast(deltaFp), Seq("fingerprint"), "leftsemi")
+      .select(md5(normalize(col(textCol))).as("fingerprint"))
+    IndexLayout.Exact.probe(spark, path, deltaFp, "fingerprint")
       .groupBy(col("fingerprint"))
       .agg(min(col("doc_id")).as("kept_id"), count(lit(1)).as("cluster_size"))
   }
@@ -396,22 +391,22 @@ object Dedup {
     * [[minhashAppendIndex]] the snapshot, then call this): every pair
     * (doc_a, doc_b, jaccard) with AT LEAST ONE endpoint in the
     * snapshot — exactly the fresh whole-corpus [[minhashDedup]] output
-    * restricted to snapshot-endpoint pairs (q159 gates that equality),
-    * because the probe reads ENTIRE buckets for every shard a snapshot
-    * band key lands in: same bucket membership, same cap accounting,
-    * same verify arithmetic as the fresh run. Base-base pairs were the
-    * PREVIOUS runs' output and are skipped — the point of the index.
+    * restricted to snapshot-endpoint pairs (q159 gates that equality):
+    * the [[IndexLayout.probe]] by the snapshot's own band keys keeps
+    * every bucket holding a snapshot doc with its full membership, so
+    * cap accounting and verify arithmetic are the fresh run's.
+    * Base-base pairs were the PREVIOUS runs' output and are skipped —
+    * the point of the index.
     *
     * Plan shape: one delta-sized signature pass (band keys only — the
-    * verify sets come from `sigs/`, not a re-tokenize), a
-    * partition-pruned `bands/` scan (literal shards from a collect
-    * bounded by the 256-shard alphabet), the shared capped pair
-    * emission, a broadcast snapshot-id filter (two broadcast hash
-    * joins — an OR-semi-join would plan a nested loop), and the
-    * doc-keyed verify join against `sigs/`. At deployment scale the
-    * sigs fetch co-locates by bucketing the layout on doc_id; the
-    * snapshot-id broadcast assumes a snapshot's ID LIST is
-    * broadcast-class — drop the hint if a snapshot outgrows it.
+    * verify sets come from `sigs/`, not a re-tokenize), the probe of
+    * `bands/`, the shared capped pair emission, a broadcast
+    * snapshot-id filter (two broadcast hash joins — an OR-semi-join
+    * would plan a nested loop), and the doc-keyed verify join against
+    * `sigs/`. At deployment scale the sigs fetch co-locates by
+    * bucketing the layout on doc_id; the snapshot-id broadcast assumes
+    * a snapshot's ID LIST is broadcast-class — drop the hint if a
+    * snapshot outgrows it.
     */
   def minhashDedupIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String, deltaDocs: DataFrame, idCol: String, textCol: String,
@@ -420,30 +415,15 @@ object Dedup {
     val deltaSig = minhashSignatures(deltaDocs, idCol, textCol,
       numHashes, shingleN)
     // ONE delta band-key pass, materialized WITH doc_id (r22 probe-
-    // chain fusion, guide §1.2): the one checkpointed frame feeds the
-    // bounded shard collect, the (bk) semi prune (r21 — the q219
-    // pruned-regime argument on the minhash member: every bucket
-    // holding a snapshot doc has a band key the snapshot itself posts;
-    // kept buckets retain FULL membership so the bucket cap fires
-    // exactly as fresh), AND the delta-id broadcast sides — previously
-    // the id set was a second checkpoint pass over deltaDocs (a second
-    // delta signature run) and the broadcast bound one more count job.
-    // Band-bearing ids are exact: a delta doc with no signature posts
-    // no bands and can never be a pair endpoint. The broadcast sides
-    // re-checkpoint cheap in-memory projections so the served plan
-    // keeps the r21 shape (checkpoint-scan broadcast sides).
+    // chain fusion, guide §1.2): it feeds the probe and the delta-id
+    // broadcast sides. Band-bearing ids are exact: a delta doc with no
+    // signature posts no bands and can never be a pair endpoint.
     val qbands = bandKeys(deltaSig, numHashes, bands)
       .select(col("doc_id"), col("bk")).distinct().localCheckpoint()
-    // one aggregation job: shard list (in the layout's persisted
-    // derivation — IndexShards) + a conservative broadcast bound
-    val (bandsScan, nRows) =
-      IndexLayout.MinhashBands.prunedScanCounted(spark, path, qbands)
-    val qbk = qbands.select(col("bk")).distinct().localCheckpoint()
     val deltaIds = qbands.select(col("doc_id")).distinct().localCheckpoint()
-    val probe = bandsScan
-      .join(Parallelism.boundedBroadcast(qbk, nRows), Seq("bk"), "leftsemi")
+    val probe = IndexLayout.MinhashBands.probe(spark, path, qbands, "bk")
       .select(col("doc_id"), col("bk"))
-    // EARLY endpoint filter — same as [[winnowPairsIndexed]]: a
+    // EARLY endpoint filter — same as [[postingPairs]]: a
     // (base, base) bucket pair is discarded by the endpoint filter no
     // matter what, so filter at emission instead of after the distinct
     val flagged = flagDelta(probe, deltaIds)
@@ -722,12 +702,11 @@ object Dedup {
     * [[simhashWriteIndex]] layout AFTER the snapshot was appended
     * (append-then-probe, the q159/q160/q161 shape — snapshot bands in
     * the index make snapshot×snapshot pairs fall out of the same
-    * probe). The snapshot's ≤1,024 band shards prune the scan via
-    * PartitionFilters; snapshot band rows broadcast into the probed
-    * residue; bucket caps apply to the bucket's FULL post-append
-    * membership (visible in the probed partitions), so capping equals
-    * the fresh run's. Gated ≡ the fresh whole-corpus pairs restricted
-    * to snapshot endpoints.
+    * probe). The [[IndexLayout.probe]] by the snapshot's band keys
+    * keeps each touched bucket's FULL post-append membership, so
+    * capping equals the fresh run's; snapshot band rows then broadcast
+    * into the probed residue. Gated ≡ the fresh whole-corpus pairs
+    * restricted to snapshot endpoints.
     */
   def simhashNearDupIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String, deltaDocs: DataFrame, idCol: String, textCol: String,
@@ -738,10 +717,8 @@ object Dedup {
     val qb = simhashBandRows(
       simhash60Blocked(deltaDocs, idCol, textCol, blockCol)
         .localCheckpoint())
-    val probed = IndexLayout.Simhash.prunedScan(spark, path, qb)
-      .join(broadcast(
-          qb.select(col("blk"), col("bidx"), col("bval")).distinct()),
-        Seq("blk", "bidx", "bval"))
+    val probed = IndexLayout.Simhash.probe(spark, path, qb,
+      "blk", "bidx", "bval")
     val capped = cappedBuckets(probed.drop("pshard"), maxBucketSize)
     val cands = capped.join(
         broadcast(qb.select(col("blk"), col("bidx"), col("bval"),
@@ -762,67 +739,70 @@ object Dedup {
   // Blocked n-gram Jaccard (no LSH; exact within blocks)
   // ------------------------------------------------------------------
 
-  /** All-pairs n-gram Jaccard within a blocking key (e.g. source or
-    * language): exact near-dup detection when a cheap blocking column
-    * bounds the candidate space. Requires `threshold > 0`.
+  /** The posting-pair core of the n-gram and winnowing families, fresh
+    * and indexed: per block, every document pair sharing at least one
+    * posting hash, with set sizes and the intersection count —
+    * (blk, doc_a, doc_b, na, nb, i) from (blk, doc_id, n, h) postings.
     *
-    * Implemented as an inverted-index join rather than a quadratic
-    * all-pairs array_intersect: shingle hashes are exploded and documents
-    * are paired per (block, shingle-hash), so the intersection size is a
-    * co-occurrence COUNT aggregation. Work and shuffle volume scale with
-    * the number of actually-shared shingles (≈ true near-dups), not with
-    * |block|^2, and join parallelism is keyed on the full (block, hash)
-    * space instead of the handful of block values.
+    * An inverted-index join rather than a quadratic all-pairs
+    * array_intersect: documents pair per (block, hash) through the
+    * shared [[emitSortedPairs]] idiom, so the intersection size is a
+    * co-occurrence COUNT aggregation — work and shuffle scale with the
+    * actually-shared hashes (≈ true near-dups), not with |block|^2. A
+    * self-join of the postings would re-run the set pass per side
+    * (Spark plans no ReusedExchange across the object barrier; measured
+    * 2x at sf1) and shuffle them twice. Items are (doc_id, n) structs;
+    * the helper's whole-struct `<` guard is equivalent to the doc_id
+    * comparison (n is a function of doc_id). dedupPairs stays FALSE: the
+    * pair multiplicity across postings IS the intersection count.
     *
-    * Bias note: "exact" holds only while no posting exceeds
-    * `maxPostingSize`. A capped (dropped) shingle still counts in both
-    * documents' sizes `na`/`nb` but can no longer contribute to the
-    * intersection count, so once the cap fires the jaccard of surviving
-    * pairs is UNDERestimated — the operator errs toward missing near-dups,
-    * never toward false pairs. Raise `maxPostingSize` if recall near the
-    * threshold matters more than bounding a corpus-wide boilerplate
-    * shingle (the cap is a spillable window count — a skew guard, not a
-    * memory ceiling).
+    * Bias note: exact only while no posting exceeds `maxPostingSize`. A
+    * capped (dropped) hash still counts in both sizes `na`/`nb` but no
+    * longer in `i`, so past the cap overlap is UNDERestimated — the
+    * operator errs toward missing near-dups, never toward false pairs
+    * (the cap is a spillable window count — a skew guard, not a memory
+    * ceiling).
+    *
+    * With `deltaIds` (an [[IndexLayout.probe]] of a written layout),
+    * only pairs with an endpoint in the delta survive. The flag rides a
+    * broadcast `__delta` on each posting and filters (a.__delta OR
+    * b.__delta) AT EMISSION, before the pair exchange (r21 — measured
+    * at sf1: 104.9M raw pairs into the groupBy, 124.8k rows out): a
+    * (base, base) pair is dropped by the endpoint filter whatever its
+    * multiplicity, while group membership, order (doc_id is unique per
+    * group) and the cap count stay unchanged.
     */
-  /** Shared inverted-index core of [[ngramJaccardPairs]] /
-    * [[ngramContainmentPairs]]: per block, every document pair sharing
-    * at least one shingle, with set sizes and the intersection count —
-    * (blk, doc_a, doc_b, na, nb, i).
-    */
-  private def ngramIntersections(
-      df: DataFrame, idCol: String, textCol: String, blockCol: String,
-      shingleN: Int, maxPostingSize: Int): DataFrame = {
-    val sets = shingleSets(df, idCol, textCol, shingleN, Some(blockCol))
-    val hd = sets.select(col("blk"), col("doc_id"), col("n"),
-        explode(col("hs")).as("h"))
-      // NULL block = no block: never paired (the SQL-join semantics the
-      // self-join formulation had; groupBy would pair NULLs together)
-      .filter(col("blk").isNotNull)
-    // ONE keyed pass per (blk, shingle) posting list, then bucket-local
-    // pair explosion via the shared [[emitSortedPairs]] idiom — a
-    // self-join of hd would re-run the whole shingle/hash pass per side
-    // (Spark plans no ReusedExchange across the object barrier;
-    // measured 2x at sf1) and shuffle the postings twice. Items are
-    // (doc_id, n) structs; the helper's whole-struct `<` guard is
-    // equivalent to the doc_id comparison (n is a function of doc_id).
-    // dedupPairs stays FALSE: the pair multiplicity across postings IS
-    // the intersection count the groupBy below aggregates.
-    emitSortedPairs(hd, keys = Seq("blk", "h"),
-      item = struct(col("doc_id"), col("n")), capCol = "posting_n",
+  private def postingPairs(postings: DataFrame,
+      deltaIds: Option[DataFrame], maxPostingSize: Int): DataFrame = {
+    val item = Seq("doc_id", "n") ++ deltaIds.map(_ => "__delta")
+    val emitted = emitSortedPairs(
+      deltaIds.fold(postings)(flagDelta(postings, _)), keys = Seq("blk", "h"),
+      item = struct(item.map(col): _*), capCol = "posting_n",
       maxGroupSize = maxPostingSize, aName = "a", bName = "b",
       carry = Seq("blk"), dedupPairs = false)
+    val pairs = deltaIds.fold(emitted)(_ =>
+        emitted.filter(col("a.__delta") || col("b.__delta")))
       .groupBy(col("blk"), col("a.doc_id").as("doc_a"),
         col("b.doc_id").as("doc_b"), col("a.n").as("na"), col("b.n").as("nb"))
       .agg(count(lit(1)).as("i"))
+    deltaIds.fold(pairs)(withDeltaEndpoint(pairs, _))
+      .select(col("blk"), col("doc_a"), col("doc_b"),
+        col("na"), col("nb"), col("i"))
   }
 
+  /** All-pairs n-gram Jaccard within a blocking key (e.g. source or
+    * language): exact near-dup detection when a cheap blocking column
+    * bounds the candidate space, over the [[postingPairs]] core.
+    * Requires `threshold > 0`. NULL block = no block: never paired.
+    */
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String, blockCol: String,
       shingleN: Int = 3, threshold: Double = 0.5,
       maxPostingSize: Int = 10000): DataFrame = {
     require(threshold > 0,
       "inverted-index jaccard only surfaces pairs sharing >=1 shingle")
-    ngramIntersections(df, idCol, textCol, blockCol, shingleN, maxPostingSize)
+    postingPairs(ngramPostingRows(df, idCol, textCol, blockCol, shingleN),
+        None, maxPostingSize)
       .withColumn("jaccard",
         round(col("i").cast("double") / (col("na") + col("nb") - col("i")), 6))
       .filter(col("jaccard") >= threshold)
@@ -848,11 +828,17 @@ object Dedup {
   def ngramContainmentPairs(
       df: DataFrame, idCol: String, textCol: String, blockCol: String,
       shingleN: Int = 3, threshold: Double = 0.5,
-      maxPostingSize: Int = 10000): DataFrame = {
+      maxPostingSize: Int = 10000): DataFrame =
+    containment(threshold)(postingPairs(
+      ngramPostingRows(df, idCol, textCol, blockCol, shingleN), None,
+      maxPostingSize))
+
+  /** The containment direction arithmetic over (blk, doc_a, doc_b, na,
+    * nb, i) pairs; checks `threshold` before any pair is computed. */
+  private def containment(threshold: Double): DataFrame => DataFrame = {
     require(threshold > 0,
       "inverted-index containment only surfaces pairs sharing >=1 shingle")
-    ngramIntersections(df, idCol, textCol, blockCol, shingleN, maxPostingSize)
-      .withColumn("cont_ab", round(col("i").cast("double") / col("na"), 6))
+    _.withColumn("cont_ab", round(col("i").cast("double") / col("na"), 6))
       .withColumn("cont_ba", round(col("i").cast("double") / col("nb"), 6))
       .filter(greatest(col("cont_ab"), col("cont_ba")) >= threshold)
       .select(col("blk"), col("doc_a"), col("doc_b"),
@@ -892,89 +878,40 @@ object Dedup {
 
   private def ngramPostingRows(df: DataFrame, idCol: String,
       textCol: String, blockCol: String, shingleN: Int): DataFrame =
-    shingleSets(df, idCol, textCol, shingleN, Some(blockCol))
-      .filter(col("blk").isNotNull)
-      .select(col("blk"), col("doc_id"), col("n"),
-        explode(col("hs")).as("h"))
+    postingRows(shingleSets(df, idCol, textCol, shingleN, Some(blockCol)))
 
-  /** Shared incremental core: intersections of every pair with at
-    * least one snapshot endpoint, from a [[ngramWriteIndex]] layout
-    * that already contains the snapshot — (blk, doc_a, doc_b, na, nb,
-    * i), exactly [[ngramIntersections]] restricted. Completeness
-    * argument: every SHARED shingle of a snapshot-endpoint pair is by
-    * definition one of the snapshot document's shingles, so the
-    * probed shards (the snapshot's shingle-hash shards, a collect
-    * bounded by the 256-value alphabet) cover every intersecting
-    * posting, and each probed shard holds its ENTIRE posting lists —
-    * same cap accounting, same multiplicity counts as the fresh run.
+  /** (blk, doc_id, n, h) postings of (blk, doc_id, hs, n) sets. NULL
+    * block = no block: never paired (groupBy would pair NULLs
+    * together), so such rows are neither written nor paired.
     */
-  private def ngramIntersectionsIndexed(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      deltaDocs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, maxPostingSize: Int): DataFrame = {
-    // ONE delta shingle pass, materialized WITH doc_id (r22 probe-chain
-    // fusion, guide §1.2): the one checkpointed frame feeds the bounded
-    // shard collect, the (h) semi prune, and the delta-id broadcast
-    // sides — previously the id set was a second checkpoint pass over
-    // deltaDocs and the broadcast bound one more count job. Shingle-
-    // bearing ids are exact: a delta doc with no shingles posts nothing
-    // and can never be a pair endpoint. The broadcast sides
-    // re-checkpoint cheap in-memory projections so the served plan
-    // keeps the r21 shape (checkpoint-scan broadcast sides).
-    val qsets = shingleSets(deltaDocs, idCol, textCol, shingleN)
-      .select(col("doc_id"), explode(col("hs")).as("h"))
-      .distinct().localCheckpoint()
-    // one aggregation job: shard list (the layout's persisted
-    // derivation — IndexShards) + a conservative broadcast bound
-    val (postingsScan, nRows) =
-      IndexLayout.Ngram.prunedScanCounted(spark, path, qsets)
-    val qhs = qsets.select(col("h")).distinct().localCheckpoint()
-    val deltaIds = qsets.select(col("doc_id")).distinct().localCheckpoint()
-    val probe = postingsScan
-      // the PRUNED-REGIME semi (r21 — the q219 argument on the ngram
-      // member, h-only because the caller carries no block column:
-      // every shared shingle of a snapshot-endpoint pair is one the
-      // snapshot document itself posts; a coincidental same-h group in
-      // ANOTHER block survives the prune but contains no delta doc, so
-      // the endpoint filter below drops its pairs — kept groups retain
-      // FULL membership, so cap accounting matches the fresh run)
-      .join(Parallelism.boundedBroadcast(qhs, nRows), Seq("h"), "leftsemi")
-    // EARLY endpoint filter — same as [[winnowPairsIndexed]]: don't
-    // emit or aggregate (base, base) pairs the final filter discards
-    val flagged = flagDelta(probe, deltaIds)
-    val pairs = emitSortedPairs(flagged, keys = Seq("blk", "h"),
-      item = struct(col("doc_id"), col("n"), col("__delta")),
-      capCol = "posting_n",
-      maxGroupSize = maxPostingSize, aName = "a", bName = "b",
-      carry = Seq("blk"), dedupPairs = false)
-      .filter(col("a.__delta") || col("b.__delta"))
-      .groupBy(col("blk"), col("a.doc_id").as("doc_a"),
-        col("b.doc_id").as("doc_b"), col("a.n").as("na"), col("b.n").as("nb"))
-      .agg(count(lit(1)).as("i"))
-    withDeltaEndpoint(pairs, deltaIds)
-      .select(col("blk"), col("doc_a"), col("doc_b"),
-        col("na"), col("nb"), col("i"))
-  }
+  private def postingRows(sets: DataFrame): DataFrame =
+    sets.filter(col("blk").isNotNull)
+      .select(col("blk"), col("doc_id"), col("n"), explode(col("hs")).as("h"))
 
   /** Incremental [[ngramContainmentPairs]] of a new snapshot against
-    * (base ∪ snapshot) — q161 gates equality with the fresh
-    * whole-corpus run restricted to snapshot-endpoint pairs. Same
-    * direction arithmetic off the shared indexed core.
+    * (base ∪ snapshot), from a [[ngramWriteIndex]] layout that already
+    * contains the snapshot — q161 gates equality with the fresh
+    * whole-corpus run restricted to snapshot-endpoint pairs. One delta
+    * shingle pass, materialized WITH doc_id (r22 probe-chain fusion,
+    * guide §1.2), feeds the [[IndexLayout.probe]] by shingle hash and
+    * the delta ids; shingle-bearing ids are exact (a delta doc with no
+    * shingles posts nothing and can never be a pair endpoint). The
+    * probe is h-only because the caller carries no block column: a
+    * same-h group in ANOTHER block survives it but holds no delta doc,
+    * so the endpoint filter drops its pairs.
     */
   def ngramContainmentPairsIndexed(
       spark: org.apache.spark.sql.SparkSession, path: String,
       deltaDocs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, threshold: Double = 0.5,
       maxPostingSize: Int = 10000): DataFrame = {
-    require(threshold > 0,
-      "inverted-index containment only surfaces pairs sharing >=1 shingle")
-    ngramIntersectionsIndexed(spark, path, deltaDocs, idCol, textCol,
-        shingleN, maxPostingSize)
-      .withColumn("cont_ab", round(col("i").cast("double") / col("na"), 6))
-      .withColumn("cont_ba", round(col("i").cast("double") / col("nb"), 6))
-      .filter(greatest(col("cont_ab"), col("cont_ba")) >= threshold)
-      .select(col("blk"), col("doc_a"), col("doc_b"),
-        col("cont_ab"), col("cont_ba"))
+    val keep = containment(threshold)
+    val qsets = shingleSets(deltaDocs, idCol, textCol, shingleN)
+      .select(col("doc_id"), explode(col("hs")).as("h"))
+      .distinct().localCheckpoint()
+    val deltaIds = qsets.select(col("doc_id")).distinct().localCheckpoint()
+    keep(postingPairs(IndexLayout.Ngram.probe(spark, path, qsets, "h"),
+      Some(deltaIds), maxPostingSize))
   }
 
   // ------------------------------------------------------------------
@@ -1149,12 +1086,10 @@ object Dedup {
     * GLOBAL minimum for its fingerprint across base ∪ snapshot —
     * exactly the fresh q123 rule restricted to snapshot documents.
     *
-    * 100 TB posture: the probe prunes to the snapshot's fingerprint
-    * shards (≤256 by construction), semi-joins the broadcast
-    * snapshot fingerprints, and aggregates winners per fingerprint
-    * (min over the compact coordinate pair) — the index's text-free
-    * rows are all that is read; reassembly uses the snapshot's own
-    * blocks already in hand.
+    * 100 TB posture: the [[IndexLayout.probe]] by the snapshot's
+    * fingerprints, then winners per fingerprint (min over the compact
+    * coordinate pair) — the index's text-free rows are all that is
+    * read; reassembly uses the snapshot's own blocks already in hand.
     */
   def blockDedupIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String, deltaDocs: DataFrame, idCol: String,
@@ -1162,9 +1097,7 @@ object Dedup {
     val blocks = docBlocks(deltaDocs, idCol, textCol, blockTokens)
       .withColumn("fingerprint", md5(col("block")))
       .localCheckpoint()
-    val mins = IndexLayout.Block.prunedScan(spark, path, blocks)
-      .join(broadcast(blocks.select(col("fingerprint")).distinct()),
-        Seq("fingerprint"), "leftsemi")
+    val mins = IndexLayout.Block.probe(spark, path, blocks, "fingerprint")
       .groupBy(col("fingerprint"))
       .agg(min(struct(col("doc_id"), col("block_idx"))).as("m"))
     blockRollup(blocks.join(mins, Seq("fingerprint"))
@@ -1237,31 +1170,19 @@ object Dedup {
     * pair real. Output (blk, doc_a, doc_b, na, nb, i) — all exact
     * integers.
     *
-    * Same 100 TB shape as [[ngramJaccardPairs]]: one keyed posting
-    * pass, capped lists (a boilerplate fingerprint shared by a viral
+    * Same 100 TB shape as [[ngramJaccardPairs]] — the [[postingPairs]]
+    * core: capped lists (a boilerplate fingerprint shared by a viral
     * block would otherwise go quadratic — the LSH-cap trade), bucket-
-    * local pair emission via [[emitSortedPairs]], source-blocked per
-    * the q33/q153/q167 precedent.
+    * local pair emission, source-blocked per the q33/q153/q167
+    * precedent.
     */
   def winnowPairs(df: DataFrame, idCol: String, textCol: String,
       blockCol: String, k: Int = 7, w: Int = 4, minShared: Long = 2L,
       maxPostingSize: Int = 10000): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    val hd = winnowSets(df, idCol, textCol, blockCol, k, w)
-      .filter(col("blk").isNotNull)
-      .select(col("blk"), col("doc_id"), col("n"),
-        explode(col("hs")).as("h"))
-    emitSortedPairs(hd, keys = Seq("blk", "h"),
-      item = struct(col("doc_id"), col("n")), capCol = "posting_n",
-      maxGroupSize = maxPostingSize, aName = "a", bName = "b",
-      carry = Seq("blk"), dedupPairs = false)
-      .groupBy(col("blk"), col("a.doc_id").as("doc_a"),
-        col("b.doc_id").as("doc_b"), col("a.n").as("na"),
-        col("b.n").as("nb"))
-      .agg(count(lit(1)).as("i"))
+    postingPairs(winnowPostingRows(df, idCol, textCol, blockCol, k, w),
+        None, maxPostingSize)
       .filter(col("i") >= minShared)
-      .select(col("blk"), col("doc_a"), col("doc_b"),
-        col("na"), col("nb"), col("i"))
   }
 
   /** Materializes the winnowing postings as a WRITTEN layout — one row
@@ -1292,20 +1213,20 @@ object Dedup {
   // cheaper probes
   private def winnowPostingRows(df: DataFrame, idCol: String,
       textCol: String, blockCol: String, k: Int, w: Int): DataFrame =
-    winnowSets(df, idCol, textCol, blockCol, k, w)
-      .filter(col("blk").isNotNull)
-      .select(col("blk"), col("doc_id"), col("n"),
-        explode(col("hs")).as("h"))
+    postingRows(winnowSets(df, idCol, textCol, blockCol, k, w))
 
   /** Incremental [[winnowPairs]] of a new snapshot against
     * (base ∪ snapshot), from a written layout that already holds the
-    * snapshot's postings. Completeness: every SHARED fingerprint of a
-    * snapshot-endpoint pair is one of the snapshot document's
-    * fingerprints, so the probed shards (the snapshot's fingerprint
-    * shards — a collect bounded by the 256-value shard alphabet) cover
-    * every intersecting posting, and each probed shard holds its
-    * ENTIRE posting lists — same cap accounting, same multiplicities
-    * as the fresh run. q190 gates equality with the fresh q189 replay
+    * snapshot's postings: the [[IndexLayout.probe]] by the snapshot's
+    * own (blk, h) fingerprints, then the [[postingPairs]] core with the
+    * delta ids. Probing the matched posting lists instead of the
+    * touched shards' entire content (corpus/256 per shard — the q190
+    * quarter-corpus worst case) is what keeps pair emission
+    * delta-sized. One delta-sized fingerprint pass, materialized WITH
+    * doc_id (r22 probe-chain fusion, guide §1.2 "fewer passes"), feeds
+    * the probe and the delta ids; fingerprint-bearing ids are exact (a
+    * delta doc with no fingerprints posts nothing and can never be a
+    * pair endpoint). q190 gates equality with the fresh q189 replay
     * restricted to snapshot-endpoint pairs.
     */
   def winnowPairsIndexed(spark: org.apache.spark.sql.SparkSession,
@@ -1313,70 +1234,12 @@ object Dedup {
       blockCol: String, k: Int = 7, w: Int = 4, minShared: Long = 2L,
       maxPostingSize: Int = 10000): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    // ONE delta-sized fingerprint pass, materialized WITH doc_id (r22
-    // probe-chain fusion, guide §1.2 "fewer passes"): previously the
-    // probe ran the delta pass TWICE (once for the (blk, h) key set,
-    // once for the id set) plus a separate broadcast-bound count job.
-    // Now the pass runs once; the key-set and id-set broadcast sides
-    // re-checkpoint cheap in-memory projections of it (so the SERVED
-    // plan keeps the r21 shape — checkpoint-scan broadcast sides, no
-    // extra distinct exchanges), and one aggregation job serves both
-    // the shard list and the broadcast bound. Using fingerprint-bearing
-    // ids is exact: a delta doc with no fingerprints posts nothing, so
-    // it can never be a pair endpoint and its flag is never consulted.
     val qsets = winnowSets(deltaDocs, idCol, textCol, blockCol, k, w)
       .select(col("blk"), col("doc_id"), explode(col("hs")).as("h"))
       .distinct().localCheckpoint()
-    val (postingsScan, nRows) =
-      IndexLayout.Winnow.prunedScanCounted(spark, path, qsets)
-    val qfps = qsets.select(col("blk"), col("h")).distinct().localCheckpoint()
     val deltaIds = qsets.select(col("doc_id")).distinct().localCheckpoint()
-    val probe = postingsScan
-      // the PRUNED-REGIME join: keep only posting groups whose (blk, h)
-      // is one of the delta's own fingerprints. EXACT by the same
-      // argument as the shard pruning one level up — every shared
-      // fingerprint of a delta-endpoint pair is a fingerprint the delta
-      // document itself posts — and kept groups retain their FULL
-      // membership, so the posting cap fires exactly as in the fresh
-      // run. Cost: pair emission drops from the touched shards' entire
-      // content (corpus/256 per shard — the q190 quarter-corpus
-      // worst case) to the matched posting lists only. For a BOUNDED
-      // delta the semi side broadcasts EXPLICITLY (guide §3.1: size
-      // estimates for checkpointed frames are unreliable, and waiting
-      // for AQE to convert still map-writes the corpus-sized probe
-      // side to shuffle disk first) so the probe stays shuffle-free by
-      // construction; above the bound it degrades to the planner's
-      // choice — the 100 TB posture where the delta itself is huge.
-      .join(Parallelism.boundedBroadcast(qfps, nRows),
-        Seq("blk", "h"), "leftsemi")
-    // EARLY endpoint filter (r21, guide §2.3 "aggregate before you
-    // shuffle" inverted: don't shuffle what the endpoint filter will
-    // discard): matched posting lists still contain base docs, and a
-    // base-base pair — both endpoints outside the delta — is discarded
-    // by the final endpoint filter no matter its multiplicity, yet the
-    // old plan emitted and AGGREGATED it (measured at sf1: 104.9M raw
-    // pairs into the groupBy, 124.8k rows out — 52 s in the pair agg
-    // alone). Riding a broadcast __delta flag on each posting row and
-    // filtering (a.__delta OR b.__delta) AT EMISSION — the same stage,
-    // before the pair exchange — keeps exactly the pairs the final
-    // filter keeps, with identical multiplicity: per (blk, h) group
-    // membership, order (doc_id is unique per group, so the extra
-    // struct field never reorders), and the cap count are all
-    // unchanged; only already-doomed (base, base) rows skip the wire.
-    val flagged = flagDelta(probe, deltaIds)
-    val pairs = emitSortedPairs(flagged, keys = Seq("blk", "h"),
-      item = struct(col("doc_id"), col("n"), col("__delta")),
-      capCol = "posting_n",
-      maxGroupSize = maxPostingSize, aName = "a", bName = "b",
-      carry = Seq("blk"), dedupPairs = false)
-      .filter(col("a.__delta") || col("b.__delta"))
-      .groupBy(col("blk"), col("a.doc_id").as("doc_a"),
-        col("b.doc_id").as("doc_b"), col("a.n").as("na"),
-        col("b.n").as("nb"))
-      .agg(count(lit(1)).as("i"))
+    postingPairs(IndexLayout.Winnow.probe(spark, path, qsets, "blk", "h"),
+        Some(deltaIds), maxPostingSize)
       .filter(col("i") >= minShared)
-    withDeltaEndpoint(pairs, deltaIds)
-      .select(col("blk"), col("doc_a"), col("doc_b"),
-        col("na"), col("nb"), col("i"))
   }
 }

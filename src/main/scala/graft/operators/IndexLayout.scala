@@ -52,39 +52,33 @@ final case class IndexLayout(
     */
   def shardAt(n: Int): Column = shardOf.get(n)
 
-  /** The live layout's scan pruned to the shards `keys` touch (`keys`
-    * carries the columns [[shardAt]] derives from) — literal partition
-    * filters from a driver collect bounded by the shard alphabet. A
-    * layout without a persisted count (a crashed build) scans unpruned:
-    * pruning is an optimization, never a correctness dependency.
+  /** The one way an incremental probe reads a written index: the live
+    * layout's rows whose `on` columns match a row of `keys`, reading
+    * only the shards `keys` touches (`keys` carries `on` and the
+    * columns [[shardAt]] derives from).
+    *
+    * One driver aggregation over `keys` returns both the touched shard
+    * list (literal partition filters, bounded by the shard alphabet)
+    * and the row count that bounds the broadcast of the distinct `on`
+    * keys ([[Parallelism.boundedBroadcast]]); the scan then semi-joins
+    * that broadcast. `keys` need not be distinct — its count is only
+    * the broadcast bound — and a distinct of its own would cost the
+    * aggregation one more shuffle. A layout without a persisted
+    * `_shards` count (a crashed build) or without a shard derivation
+    * scans unpruned: pruning is an optimization, never a correctness
+    * dependency.
+    *
+    * Probing with only the delta's OWN keys is exact for every caller
+    * that asks "which groups hold a delta row, and what is in them":
+    * every group (posting list, bucket, cluster) with a delta member
+    * has a key the delta itself carries, so its shard is scanned and
+    * its key survives the semi; and a kept group keeps its FULL
+    * membership, base rows included, so group caps, minima and counts
+    * are exactly those of a fresh whole-corpus run.
     */
-  def prunedScan(spark: SparkSession, root: String,
-      keys: DataFrame): DataFrame = {
-    val dir = live(spark, root)
-    val scan = spark.read.parquet(dir)
-    IndexShards.read(spark, dir).fold(scan) { n =>
-      val shards = keys.select(shardAt(n).as(shardCol.get)).distinct()
-        .collect().map(_.get(0))
-      scan.filter(col(shardCol.get).isin(shards.toSeq: _*))
-    }
-  }
-
-  /** [[prunedScan]] plus the row count of a MATERIALIZED `keys` (a
-    * [[Parallelism.boundedBroadcast]] bound), both from ONE aggregation
-    * job (the r22 probe-chain fusion, guide §1.2).
-    */
-  def prunedScanCounted(spark: SparkSession, root: String,
-      keys: DataFrame): (DataFrame, Long) = {
-    val dir = live(spark, root)
-    val nSh = IndexShards.read(spark, dir)
-    val info = keys.agg(
-      collect_set(shardAt(nSh.getOrElse(IndexShards.Wide))).as("shards"),
-      count(lit(1)).as("n")).head()
-    val scan = spark.read.parquet(dir)
-    (nSh.fold(scan)(_ =>
-      scan.filter(col(shardCol.get).isin(info.getSeq[Any](0): _*))),
-      info.getLong(1))
-  }
+  def probe(spark: SparkSession, root: String, keys: DataFrame,
+      on: String*): DataFrame =
+    IndexLayout.probeAll(spark, root, keys, on, this).head
 
   /** A FRESH build of `rows` (plus `also` — sibling layouts of the same
     * member, each with its own rows) under `root`: clears a stale
@@ -211,6 +205,31 @@ object IndexLayout {
   type Also = (SparkSession, DataFrame, String, String) => Seq[() => Unit]
 
   private val NoAlso: Also = (_, _, _, _) => Nil
+
+  /** [[IndexLayout.probe]] of sibling `layouts` under one root with the
+    * same `keys` and one aggregation for all of them (BM25 reads
+    * `postings/` and `terms/` by the query terms).
+    */
+  def probeAll(spark: SparkSession, root: String, keys: DataFrame,
+      on: Seq[String], layouts: IndexLayout*): Seq[DataFrame] = {
+    val live = IndexPaths.resolve(spark, root)
+    val nSh = layouts.map(l =>
+      l.shardOf.flatMap(_ => IndexShards.read(spark, l.at(live))))
+    val shardSets = layouts.zip(nSh).collect {
+      case (l, Some(n)) => collect_set(l.shardAt(n))
+    }
+    val info = keys.agg(count(lit(1)), shardSets: _*).head()
+    val semi = Parallelism.boundedBroadcast(
+      keys.select(on.map(col): _*).distinct(), info.getLong(0))
+    // each pruned layout's shard list sits after the count, in order
+    val at = nSh.scanLeft(1)(_ + _.size)
+    layouts.lazyZip(nSh).lazyZip(at).map { (l, n, i) =>
+      val scan = spark.read.parquet(l.at(live))
+      n.fold(scan)(_ =>
+          scan.filter(col(l.shardCol.get).isin(info.getSeq[Any](i): _*)))
+        .join(semi, on, "leftsemi")
+    }
+  }
 
   private def cols(names: String*): Seq[Column] = names.map(col)
 

@@ -363,18 +363,15 @@ object Multimodal {
     * every fingerprint cluster with AT LEAST ONE snapshot member, with
     * the stats the fresh whole-corpus run would report (kept = global
     * min id, cluster_size = full membership). One delta-sized hash
-    * pass, a partition-pruned scan (literal shards from a collect
-    * bounded by the 256-shard alphabet), a broadcast snapshot-
-    * fingerprint semi-join BEFORE the aggregation, one keyed agg.
+    * pass, the [[IndexLayout.probe]] by the snapshot's fingerprints
+    * BEFORE the aggregation, one keyed agg.
     */
   def assetDedupIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String, deltaAssets: DataFrame,
       idCol: String = "asset_id", payloadCol: String = "payload")
       : DataFrame = {
-    val deltaFp = deltaAssets
-      .select(md5(col(payloadCol)).as("fingerprint")).distinct()
-    IndexLayout.Asset.prunedScan(spark, path, deltaFp)
-      .join(broadcast(deltaFp), Seq("fingerprint"), "leftsemi")
+    val deltaFp = deltaAssets.select(md5(col(payloadCol)).as("fingerprint"))
+    IndexLayout.Asset.probe(spark, path, deltaFp, "fingerprint")
       .groupBy(col("fingerprint"))
       .agg(min(col("asset_id")).as("kept_id"),
         count(lit(1)).as("cluster_size"))
@@ -477,9 +474,8 @@ object Multimodal {
     * asset — the per-asset novelty measure a crawl pipeline thresholds
     * on ("this clip is 95% previously-seen frames").
     *
-    * 100 TB posture: the probe prunes to the snapshot's fingerprint
-    * shards (≤256), semi-joins the broadcast snapshot fingerprints,
-    * and aggregates winners per fingerprint (min over the compact
+    * 100 TB posture: the [[IndexLayout.probe]] by the snapshot's
+    * fingerprints, then winners per fingerprint (min over the compact
     * coordinate pair) — only the index's text-free rows are read;
     * the snapshot's own frames are already in hand.
     */
@@ -488,9 +484,7 @@ object Multimodal {
       idCol: String = "asset_id"): DataFrame = {
     val frames = frameFingerprints(deltaAssets, idCol, frameBytes)
       .localCheckpoint()
-    val mins = IndexLayout.Frame.prunedScan(spark, path, frames)
-      .join(broadcast(frames.select(col("fingerprint")).distinct()),
-        Seq("fingerprint"), "leftsemi")
+    val mins = IndexLayout.Frame.probe(spark, path, frames, "fingerprint")
       .groupBy(col("fingerprint"))
       .agg(min(struct(col("asset_id"), col("frame_no"))).as("m"))
     // LEFT join: the contract is append-then-probe (every snapshot
@@ -522,19 +516,15 @@ object Multimodal {
     * eval set must never enter the index), so a fingerprint missing
     * from the probed shards means CLEAN, not absent-by-bug — the
     * left-join contract. 100 TB posture: eval sets are small by
-    * nature; the scan prunes to the eval frames' shards (≤256), the
-    * broadcast semi-join keeps only hit fingerprints, and only
-    * (fingerprint) residues reach the driver-side of nothing —
-    * payloads stay in the one framing pass.
+    * nature; the [[IndexLayout.probe]] by the eval fingerprints keeps
+    * only hit fingerprints, and payloads stay in the one framing pass.
     */
   def frameDecontamination(spark: org.apache.spark.sql.SparkSession,
       path: String, evalAssets: DataFrame, frameBytes: Int,
       idCol: String = "asset_id"): DataFrame = {
     val frames = frameFingerprints(evalAssets, idCol, frameBytes)
       .localCheckpoint()
-    val hits = IndexLayout.Frame.prunedScan(spark, path, frames)
-      .join(broadcast(frames.select(col("fingerprint")).distinct()),
-        Seq("fingerprint"), "leftsemi")
+    val hits = IndexLayout.Frame.probe(spark, path, frames, "fingerprint")
       .select(col("fingerprint")).distinct()
       .withColumn("__hit", lit(1L))
     frames.join(hits, Seq("fingerprint"), "left")

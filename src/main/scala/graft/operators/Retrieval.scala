@@ -74,7 +74,7 @@ object Retrieval {
       .localCheckpoint()
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total"))
-    val qt = queryTerms(queries, idCol, textCol)
+    val qt = queryTerms(queries, idCol, textCol).distinct()
     // posting lists: only rows whose term some query mentions survive
     val matched = tf.join(broadcast(qt.select(col("term")).distinct()), "term")
     // df per query term over the full corpus (the term filter commutes
@@ -114,14 +114,13 @@ object Retrieval {
         round(col("score_fp") / lit(ScoreScale), 6).as("score"))
   }
 
-  /** The distinct normalized query terms of a query frame. */
+  /** The normalized query terms of a query frame, one row per token. */
   private def queryTerms(
       queries: DataFrame, idCol: String, textCol: String): DataFrame =
     queries
       .select(col(idCol).as("query_id"),
         explode(TextOps.tokens(col(textCol))).as("term"))
       .filter(col("term") =!= "")
-      .distinct()
 
   /** Materializes a BM25 inverted index as the WRITTEN, shard-pruned
     * serving layout — the lexical twin of the IVF-PQ index lifecycle
@@ -216,13 +215,10 @@ object Retrieval {
     dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total"))
       .coalesce(1)
 
-  /** Serves BM25 top-k from a [[bm25WriteIndex]] layout: the query
-    * terms' shards push into BOTH the postings and terms scans as
-    * PARTITION filters (the q134/q139 PartitionFilters shape — the
-    * driver-side shard collect is bounded by the 256-shard alphabet
-    * BY CONSTRUCTION, so unlike the probed-bucket collect no cap
-    * needs enforcing), the broadcast term probes prune the shard
-    * residue, per-term df and the corpus scalars sum across
+  /** Serves BM25 top-k from a [[bm25WriteIndex]] layout: one
+    * [[IndexLayout.probeAll]] by the query terms reads BOTH the
+    * `terms/` and `postings/` layouts (the q134/q139 PartitionFilters
+    * shape), per-term df and the corpus scalars sum across
     * generations, and scoring is the exact [[bm25TopK]] fixed-point
     * arithmetic — served results must hash-equal the ad-hoc path,
     * which q154 (fresh build) and q155 (build + append) gate against
@@ -232,22 +228,14 @@ object Retrieval {
       path0: String, queries: DataFrame, k: Int,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val path = IndexPaths.resolve(spark, path0)
-    val qt = queryTerms(queries, idCol, textCol)
-    // prune with the layout's persisted shard derivation (IndexShards);
-    // no persisted count → scan unpruned (pruning is never correctness)
-    val nShOpt = IndexShards.read(spark, s"$path/postings")
-    val shards = nShOpt.map { nSh =>
-      qt.select(IndexLayout.Bm25.shardAt(nSh).as("shard"))
-        .distinct().collect().map(_.getString(0)).toSeq
-    }
-    def pruned(df: DataFrame): DataFrame =
-      shards.fold(df)(s => df.filter(col("shard").isin(s: _*)))
-    val stats = spark.read.parquet(s"$path/meta/stats")
+    val tokens = queryTerms(queries, idCol, textCol)
+    val qt = tokens.distinct()
+    val Seq(terms, postings) = IndexLayout.probeAll(spark, path, tokens,
+      Seq("term"), IndexLayout.Bm25Terms, IndexLayout.Bm25)
+    val stats = spark.read.parquet(IndexLayout.Bm25Stats.at(path))
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("total")).as("total"))
-    val dfq = pruned(spark.read.parquet(s"$path/terms"))
-      .join(broadcast(qt.select(col("term")).distinct()), "term")
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val contrib = pruned(spark.read.parquet(s"$path/postings"))
+    val dfq = terms.groupBy(col("term")).agg(sum(col("df")).as("df"))
+    val contrib = postings
       .join(broadcast(qt), "term")
       .join(broadcast(dfq), "term")
       .crossJoin(broadcast(stats))
@@ -298,8 +286,7 @@ object Retrieval {
   private[operators] def bm25Rederive(spark: SparkSession,
       postings: DataFrame, src: String, dst: String): Seq[() => Unit] = {
     import IndexLayout.{Bm25, Bm25Stats, Bm25Terms}
-    val nSh = IndexShards.read(spark, Bm25.at(src))
-      .getOrElse(IndexShards.Wide)
+    val nSh = IndexShards.forAppend(spark, Bm25.at(src))
     Seq(
       () => {
         val inconsistent = postings.groupBy(col("doc_id"))

@@ -166,42 +166,24 @@ object SubstringDedup {
   /** Incremental [[substringPairs]] of a new snapshot against
     * (base ∪ snapshot), served from a written layout that already
     * holds the snapshot's postings — the [[Dedup.winnowPairsIndexed]]
-    * probe shape at stride 1: the snapshot's window-hash shards prune
-    * the scan (≤256 literal PartitionFilters), an (h) SEMI JOIN
-    * against the snapshot's own window set prunes pair emission to
-    * matched posting lists (every shared window of a snapshot-endpoint
-    * pair is a window the snapshot document itself posts — and kept
-    * keys retain FULL membership, so the cap fires exactly as fresh),
-    * and the diagonal merge runs on the surviving pairs only. Output
-    * = the fresh whole-corpus run restricted to pairs with a snapshot
-    * endpoint.
+    * probe shape at stride 1: the [[IndexLayout.probe]] by the
+    * snapshot's own window hashes prunes pair emission to matched
+    * posting lists, and the diagonal merge runs on the surviving pairs
+    * only. Output = the fresh whole-corpus run restricted to pairs with
+    * a snapshot endpoint.
     */
   def substringPairsIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String, deltaDocs: DataFrame, idCol: String, textCol: String,
       minLen: Int, maxPostingSize: Int = 200): DataFrame = {
     // ONE delta-sized window pass, materialized WITH doc_id (r22
-    // probe-chain fusion, guide §1.2): the one checkpointed frame
-    // feeds the shard collect, the (h) semi prune, and the snapshot-id
-    // broadcast sides — previously the id set was a second checkpoint
-    // pass and the broadcast bound one more count job. Window-bearing
-    // ids are exact: a delta doc shorter than minLen posts nothing and
-    // can never be a pair endpoint.
+    // probe-chain fusion, guide §1.2): it feeds the probe and the
+    // snapshot-id broadcast sides. Window-bearing ids are exact: a
+    // delta doc shorter than minLen posts nothing and can never be a
+    // pair endpoint.
     val qsets = substringWindows(deltaDocs, idCol, textCol, minLen)
       .select(col("doc_id"), col("h")).distinct().localCheckpoint()
-    // one aggregation job: shard list (in the layout's persisted
-    // derivation — IndexShards) + a conservative broadcast bound;
-    // the broadcast sides re-checkpoint cheap in-memory projections so
-    // the served plan keeps the r21 shape (checkpoint-scan broadcast
-    // sides, no extra distinct exchanges)
-    val (postingsScan, nRows) =
-      IndexLayout.Substring.prunedScanCounted(spark, path, qsets)
-    val qw = qsets.select(col("h")).distinct().localCheckpoint()
     val snapIds = qsets.select(col("doc_id")).distinct().localCheckpoint()
-    val probe = postingsScan
-      // bounded-delta broadcast for the (h) semi prune — same rationale
-      // as [[Dedup.winnowPairsIndexed]]: keep the corpus-sized postings
-      // scan out of any shuffle by construction (guide §3.1)
-      .join(Parallelism.boundedBroadcast(qw, nRows), Seq("h"), "leftsemi")
+    val probe = IndexLayout.Substring.probe(spark, path, qsets, "h")
     // ride the snapshot-endpoint flag so pairsFromWindows can drop
     // (base, base) pairs at emission instead of after the run merge
     val flagged = Dedup.flagDelta(probe, snapIds)

@@ -8,10 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, TransformWithState}
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftSessionBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
-import org.apache.spark.sql.types.LongType
 
 /** Drives Structured Streaming pipelines over the driver-provided
   * bounded parquet fixtures, end-to-end: source → transforms → memory
@@ -104,21 +102,12 @@ object StreamRunner {
       .option("pathGlobFilter", s"$table.parquet").parquet(dir)
   }
 
-  /** The `events` fixture as a stream with the same ns→µs event-time
-    * normalization as the batch loader ([[graft.Tables.load]]).
+  /** The `events` fixture as a stream, through the batch loader's own
+    * event-time normalization ([[graft.Tables.normalizeEventTime]]).
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     graft.Tables.requireUtcSession(spark)
-    val raw = tableStream(spark, dir, "events")
-    raw.schema("ts").dataType match {
-      case LongType => // timestamp[ns] fixture read under nanosAsLong
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        // r9 fixture shape: naive timestamp[us]. Watermarks reject NTZ;
-        // sessions run UTC so the cast relabels the identical instant.
-        raw.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
+    graft.Tables.normalizeEventTime(tableStream(spark, dir, "events"))
   }
 
   /** Runs `stream` into a fresh memory sink until all available input is

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape assertions: the scale-critical properties of key query
@@ -10,6 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanSpec extends AnyFunSuite {
   import SparkTestSession._
+
+  private object Aqe extends AdaptiveSparkPlanHelper
 
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
@@ -607,18 +611,26 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q159: incremental dedup serves purely from the written index — pruned bands, sigs verify") {
-    val p = plan("q159_minhash_incremental")
+    val served = SparkEntry.queries("q159_minhash_incremental")(spark, sf)
+      .queryExecution.executedPlan
+    val p = served.toString
     // the snapshot's band-key shards must prune the bands/ directories
     assert("PartitionFilters: \\[[^\\]]*shard".r.findFirstIn(p).isDefined,
       s"snapshot shards must prune the bands scan:\n$p")
     // ZERO object-barrier passes in the served plan: the snapshot's
-    // signature pass ran once at probe-build time (it only feeds the
-    // bounded shard collect), and the verify sets come from sigs/
+    // signature pass ran once at probe-build time (checkpointed before
+    // the probe's shard aggregation), and the verify sets come from sigs/
     // parquet, NOT a re-tokenize — the whole point of the written
     // layout
     assert("MapPartitions graft\\.operators\\.Dedup".r.findAllIn(p).isEmpty,
       s"the served plan must be purely index-driven:\n$p")
-    assert(p.contains("/sigs]"), "verify must read the written sigs layout")
+    // by the scan's root path, not its plan string: the string cuts the
+    // location at spark.sql.maxMetadataStringLength characters
+    val roots = Aqe.collectWithSubqueries(served) {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+    }.flatten
+    assert(roots.exists(_.endsWith("/sigs")),
+      s"verify must read the written sigs layout, scans read $roots")
     // same capped incremental pair emission as the fresh path
     assert("bucket_n#\\d+L? <= \\d+".r.findFirstIn(p).isDefined,
       s"bucket-size cap filter missing:\n$p")
@@ -641,9 +653,9 @@ class PlanSpec extends AnyFunSuite {
     val p = plan("q161_containment_incremental")
     assert("PartitionFilters: \\[[^\\]]*shard".r.findFirstIn(p).isDefined,
       s"snapshot shingle shards must prune the postings scan:\n$p")
-    // one object-barrier pass total: the snapshot shingle pass feeds
-    // only the driver-bounded shard collect, so the served plan reads
-    // the written postings exclusively
+    // the snapshot shingle pass is checkpointed before the probe's
+    // shard aggregation, so the served plan reads the written postings
+    // exclusively
     assert("MapPartitions graft\\.operators\\.Dedup".r.findAllIn(p).isEmpty,
       s"the served plan must be purely index-driven:\n$p")
     assert("posting_n#\\d+L? <= \\d+".r.findFirstIn(p).isDefined,

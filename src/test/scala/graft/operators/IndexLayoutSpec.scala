@@ -10,6 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * compact-swap clears the audit and carries `_shards`, the served
   * probe after the swap equals the probe before the replay, and a
   * payload-divergent copy makes the compaction refuse by member name.
+  * A sharded layout whose `_shards` counts are gone serves the same
+  * probe rows, unpruned.
   */
 class IndexLayoutSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -134,8 +136,33 @@ class IndexLayoutSpec extends AnyFunSuite {
 
   private def rows(df: DataFrame): Set[Row] = df.collect().toSet
 
+  /** Deletes every `_shards` file under `dir`; returns how many. */
+  private def dropShardCounts(dir: String): Int = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.listFiles(p, true)
+    val counts = Iterator.continually(files).takeWhile(_.hasNext)
+      .map(_.next().getPath).filter(_.getName == "_shards").toList
+    counts.foreach(fs.delete(_, false))
+    counts.size
+  }
+
   members.foreach { m =>
     val name = m.layout.member
+    if (m.layout.shardOf.isDefined)
+      test(s"$name: without `_shards` the probe scans unpruned and serves the pruned rows") {
+        val root = TmpWorkspaces.pidScoped(s"graft_layout_spec_${name}_",
+          "unpruned").toString
+        m.build(root)
+        m.append(root)
+        val pruned = rows(m.probe(root))
+        assert(pruned.nonEmpty, "the fixture must serve something")
+        assert(dropShardCounts(IndexPaths.resolve(spark, root)) > 0)
+        assert(IndexShards.read(spark, m.layout.live(spark, root)).isEmpty)
+        assert(rows(m.probe(root)) == pruned,
+          "pruning is an optimization, never a correctness dependency")
+      }
+
     test(s"$name: replay audits bit-identical, compactSwap clears it and serves the pre-replay probe") {
       val root = TmpWorkspaces.pidScoped(s"graft_layout_spec_${name}_", "life")
         .toString

@@ -240,14 +240,11 @@ object Clustering {
     * recall-for-boundedness trade, measured on union membership so
     * both the fresh run and this probe cap identically.
     *
-    * Cost shape: one driver collect of the snapshot's DISTINCT cluster
-    * ids — structurally capped with the `limit(max + 1)` idiom and
-    * `require`d against `maxProbedClusters` (cluster ids ARE centroid
-    * ids, so the [[Similarity.MaxLiteralCentroids]] broadcast-class
-    * bound applies) — then ONE partition-pruned read of the touched
-    * cluster directories (PlanSpec pins the `PartitionFilters` shape)
-    * feeding a cluster-keyed join: |snapshot ∩ cluster| × |cluster|
-    * candidate pairs, quadratic only inside the cap, never corpus-wide.
+    * Cost shape: ONE partition-pruned read of the touched cluster
+    * directories ([[Similarity.bucketScan]] of the snapshot's cluster
+    * ids, bounded by `maxProbedClusters`) feeding a cluster-keyed join:
+    * |snapshot ∩ cluster| × |cluster| candidate pairs, quadratic only
+    * inside the cap, never corpus-wide.
     */
   def semDedupIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String, snapshotAssigned: DataFrame, threshold: Double,
@@ -267,18 +264,11 @@ object Clustering {
         asD(col("v")).as("xv"))
       .withColumn("xn", Similarity.l2norm(col("xv")))
       .localCheckpoint(true)
-    val probed = snap.select("cid").distinct()
-      .limit(maxProbedClusters + 1).collect().map(_.getLong(0))
-    require(probed.length <= maxProbedClusters,
-      s"semDedupIndexed probed more than $maxProbedClusters distinct " +
-        "clusters — cluster ids are centroid ids and must stay " +
-        "broadcast-class (they feed a driver collect and a literal " +
-        "partition filter); a probe this wide means the snapshot " +
-        "touches effectively every cluster, where a fresh semDedup " +
-        "run reads the same data without the index round-trip")
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("cid"))
-    val members = spark.read.parquet(IndexPaths.resolve(spark, path))
-      .filter(col("cid").isin(probed.toSeq: _*))
+    val members = Similarity.bucketScan(spark, IndexPaths.resolve(spark, path),
+        snap, "cid", maxProbedClusters, "semDedupIndexed",
+        "a fresh semDedup run, which reads the same clusters without the " +
+          "index round-trip")
       .select(col("cid").cast("long").as("cid"), col(idCol).as("uid"),
         asD(col("v")).as("uv"))
       .withColumn("cn", count(lit(1)).over(w))

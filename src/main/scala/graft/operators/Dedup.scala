@@ -75,9 +75,9 @@ object Dedup {
   }
 
   /** `probe` rows flagged `__delta` iff their doc_id is in the
-    * materialized delta id set (broadcast) — the incremental probes
-    * drop (base, base) pairs AT EMISSION with it: such a pair is
-    * discarded by the endpoint filter whatever its multiplicity.
+    * materialized delta id set (broadcast). The incremental probes keep
+    * a pair iff `a.__delta || b.__delta` AT EMISSION, which is exactly
+    * "an endpoint is in the delta": no later endpoint filter is needed.
     */
   private[operators] def flagDelta(probe: DataFrame,
       deltaIds: DataFrame): DataFrame =
@@ -85,19 +85,6 @@ object Dedup {
       .join(broadcast(deltaIds.withColumn("__delta", lit(true))),
         Seq("doc_id"), "left")
       .withColumn("__delta", coalesce(col("__delta"), lit(false)))
-
-  /** `pairs` with at least one endpoint (doc_a or doc_b) in `deltaIds`:
-    * two broadcast hash joins (an OR-semi-join would plan a nested
-    * loop).
-    */
-  private[operators] def withDeltaEndpoint(pairs: DataFrame,
-      deltaIds: DataFrame): DataFrame =
-    pairs
-      .join(broadcast(deltaIds.select(col("doc_id").as("doc_a"))
-        .withColumn("fa", lit(1))), Seq("doc_a"), "left")
-      .join(broadcast(deltaIds.select(col("doc_id").as("doc_b"))
-        .withColumn("fb", lit(1))), Seq("doc_b"), "left")
-      .filter(col("fa").isNotNull || col("fb").isNotNull)
 
   // ------------------------------------------------------------------
   // Exact dedup
@@ -400,10 +387,9 @@ object Dedup {
     *
     * Plan shape: one delta-sized signature pass (band keys only — the
     * verify sets come from `sigs/`, not a re-tokenize), the probe of
-    * `bands/`, the shared capped pair emission, a broadcast
-    * snapshot-id filter (two broadcast hash joins — an OR-semi-join
-    * would plan a nested loop), and the doc-keyed verify join against
-    * `sigs/`. At deployment scale the sigs fetch co-locates by
+    * `bands/`, the shared capped pair emission filtered on the
+    * broadcast snapshot-id flag ([[flagDelta]]), and the doc-keyed
+    * verify join against `sigs/`. At deployment scale the sigs fetch co-locates by
     * bucketing the layout on doc_id; the snapshot-id broadcast assumes
     * a snapshot's ID LIST is broadcast-class — drop the hint if a
     * snapshot outgrows it.
@@ -433,8 +419,6 @@ object Dedup {
       dedupPairs = true)
       .filter(col("a.__delta") || col("b.__delta"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val dcands = withDeltaEndpoint(cands, deltaIds)
-      .select(col("doc_a"), col("doc_b"))
     // prune the verify-set fetch to PROBED-BUCKET MEMBERS before the
     // join: sigs/ rows carry the full shingle-hash arrays (the widest
     // rows this family owns), and an unpruned join lets the planner
@@ -447,7 +431,7 @@ object Dedup {
     val memberIds = probe.select(col("doc_id")).distinct().localCheckpoint()
     val sigs = spark.read.parquet(IndexLayout.MinhashSigs.live(spark, path))
       .join(Parallelism.boundedBroadcast(memberIds), Seq("doc_id"), "leftsemi")
-    verifyJaccard(dcands, sigs, threshold)
+    verifyJaccard(cands, sigs, threshold)
   }
 
   // ------------------------------------------------------------------
@@ -780,14 +764,11 @@ object Dedup {
       item = struct(item.map(col): _*), capCol = "posting_n",
       maxGroupSize = maxPostingSize, aName = "a", bName = "b",
       carry = Seq("blk"), dedupPairs = false)
-    val pairs = deltaIds.fold(emitted)(_ =>
+    deltaIds.fold(emitted)(_ =>
         emitted.filter(col("a.__delta") || col("b.__delta")))
       .groupBy(col("blk"), col("a.doc_id").as("doc_a"),
         col("b.doc_id").as("doc_b"), col("a.n").as("na"), col("b.n").as("nb"))
       .agg(count(lit(1)).as("i"))
-    deltaIds.fold(pairs)(withDeltaEndpoint(pairs, _))
-      .select(col("blk"), col("doc_a"), col("doc_b"),
-        col("na"), col("nb"), col("i"))
   }
 
   /** All-pairs n-gram Jaccard within a blocking key (e.g. source or

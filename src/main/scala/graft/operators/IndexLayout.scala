@@ -59,11 +59,13 @@ final case class IndexLayout(
     *
     * One driver aggregation over `keys` returns both the touched shard
     * list (literal partition filters, bounded by the shard alphabet)
-    * and the row count that bounds the broadcast of the distinct `on`
-    * keys ([[Parallelism.boundedBroadcast]]); the scan then semi-joins
-    * that broadcast. `keys` need not be distinct — its count is only
-    * the broadcast bound — and a distinct of its own would cost the
-    * aggregation one more shuffle. A layout without a persisted
+    * and the row count that bounds the broadcast of the `on` keys
+    * ([[Parallelism.boundedBroadcast]]); the scan then semi-joins that
+    * broadcast. `keys` need not be distinct, and the broadcast carries
+    * its rows as they come: a semi-join's result does not depend on
+    * duplicate keys, the count already bounds them, and a distinct
+    * would cost every execution of the probe one more shuffle (MinHash
+    * executes its probe twice). A layout without a persisted
     * `_shards` count (a crashed build) or without a shard derivation
     * scans unpruned: pruning is an optimization, never a correctness
     * dependency.
@@ -220,7 +222,7 @@ object IndexLayout {
     }
     val info = keys.agg(count(lit(1)), shardSets: _*).head()
     val semi = Parallelism.boundedBroadcast(
-      keys.select(on.map(col): _*).distinct(), info.getLong(0))
+      keys.select(on.map(col): _*), info.getLong(0))
     // each pruned layout's shard list sits after the count, in order
     val at = nSh.scanLeft(1)(_ + _.size)
     layouts.lazyZip(nSh).lazyZip(at).map { (l, n, i) =>

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -213,29 +213,6 @@ object Pq {
     corpus.select(col(idCol), codesCol(asD(col(vecCol)), cb).as("codes"))
   }
 
-  /** ADC top-k over an encoded corpus: approximate cosine =
-    * `(Σ_j dotLut_q[j][codes_j]) / (|q| · sqrt(Σ_j normLut[j][codes_j]))`
-    * — the numerator is the dot of the query with the RECONSTRUCTED
-    * corpus vector, the denominator its reconstructed norm; both are m
-    * table adds via the codegen `pq_adc` expression.
-    *
-    * Plan shape (the 100 TB contract, pinned for q136): the query side
-    * is broadcast-class by the [[Similarity.bruteForceTopK]] contract —
-    * each query row carries its own m·stride dot-LUT, built with
-    * codegen `vec_dot` against codebook literals on the tiny query
-    * frame; the corpus side reads only (id, codes), computes its
-    * reconstructed norm against the LITERAL norm-LUT in the same narrow
-    * projection, broadcast-joins, and the only exchange is the
-    * per-query top-k window. Dead (sub, code) slots that Lloyd dropped
-    * pad the LUTs with 0.0 and are never indexed (encoder emits only
-    * live codes).
-    *
-    * Output: (query_id, rank, neighbor_id, sim) — `sim` is the ADC
-    * APPROXIMATION (round 6); self-matches excluded, ties on
-    * neighbor id. Recall versus exact top-k is the q136 gate, with the
-    * pick's EXACT similarity compared under tolerance (the q96
-    * pattern).
-    */
   // ------------------------------------------------------------------
   // IVF-PQ: coarse buckets + PQ-quantized residuals (Jégou et al. §V,
   // "IVFADC" — the composition [[Pq]]'s scaladoc promises and q134's
@@ -321,44 +298,41 @@ object Pq {
   def ivfPqTopK(encoded: DataFrame, centroids: DataFrame,
       codebook: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      centroidIdCol: String = "centroid_id"): DataFrame = {
+      centroidIdCol: String = "centroid_id"): DataFrame =
+    ivfPqServe(centroids, codebook, queries, k, nprobe, idCol, vecCol,
+      centroidIdCol, "ivfPqTopK")(_ => encoded)
+
+  /** The body of [[ivfPqTopK]] and [[ivfPqTopKIndexed]]: the probed
+    * query frame — the m×stride dot-LUT built once per query BEFORE the
+    * nprobe explode and carried into each probe row (ADVICE.md r10),
+    * plus the per-probe constant `qc = dot(q, c_b)` — then ADC top-k
+    * over the code rows `corpus` picks for it (a whole encoded frame,
+    * or a [[Similarity.bucketScan]] of the probed buckets).
+    */
+  private def ivfPqServe(centroids: DataFrame, codebook: DataFrame,
+      queries: DataFrame, k: Int, nprobe: Int, idCol: String,
+      vecCol: String, centroidIdCol: String, op: String)(
+      corpus: DataFrame => DataFrame): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val cb = collectCodebook(codebook)
     val stride = cb.map(_.length).max
     val centsSeq = Similarity.collectCentroids(centroids, centroidIdCol, vecCol)
-    require(centsSeq.nonEmpty, "ivfPqTopK: empty centroid set")
-    val dotLut = dotLutCol(col("qv"), cb, stride)
+    require(centsSeq.nonEmpty, s"$op: empty centroid set")
     val centFrame = centroids.select(
       col(centroidIdCol).cast("long").as("bucket"),
       asD(col(vecCol)).as("__centv"))
-    val q = broadcast(queries
-      .select(col(idCol).as("query_id"), asD(col(vecCol)).as("qv"))
-      .withColumn("qn", Similarity.l2norm(col("qv")))
-      // LUT before the nprobe explode: the m×stride table is built ONCE
-      // per query and carried as a pass-through column into the probe
-      // rows, instead of recomputed per probe (ADVICE.md r10)
-      .withColumn("dlut", dotLut)
-      .withColumn("bucket",
-        explode(transform(
-          Similarity.nearestCentroids(col("qv"), centsSeq, nprobe, "cos"),
-          p => p.getField("cid"))))
+    val q = Similarity.queryVectors(queries, idCol, vecCol)
+      .withColumn("dlut", dotLutCol(col("qv"), cb, stride))
+      .withColumn("bucket", Similarity.probeBuckets(col("qv"), centsSeq, nprobe))
       .join(centFrame, "bucket")
       .withColumn("qc", Similarity.dot(col("qv"), col("__centv")))
-      .drop("qv", "__centv"))
-    val win = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    encoded
-      .select(col(idCol).as("neighbor_id"), col("bucket"), col("codes"),
-        col("cn"))
-      .join(q, Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
+      .drop("qv", "__centv")
+    val codes = corpus(q).select(col(idCol).as("neighbor_id"),
+      col("bucket").cast("long").as("bucket"), col("codes"), col("cn"))
+    Similarity.rankTopK(Similarity.candidates(codes, q, "bucket")
       .withColumn("sim",
         (col("qc") + call_function("pq_adc", col("codes"), col("dlut"),
-          lit(stride))) / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(win))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 6).as("sim"))
+          lit(stride))) / (col("qn") * col("cn"))), k)
   }
 
   /** Materializes an IVF-PQ index: [[ivfPqEncode]] output
@@ -402,70 +376,23 @@ object Pq {
   def ivfPqAppendIndex(encodedDelta: DataFrame, path: String): Unit =
     Similarity.ivfAppendIndex(encodedDelta, path)
 
-  /** Serves IVF-PQ ADC top-k from a WRITTEN index ([[ivfPqWriteIndex]]):
-    * identical scoring arithmetic to [[ivfPqTopK]] —
-    * `(dot(q,c_b) + Σ_j dotLut_q[j][codes_j]) / (|q| · cn)` — but the
-    * corpus side is the bucket-partitioned parquet layout with the
-    * probed bucket ids pushed as a PARTITION filter, so the scan reads
-    * ~nprobe/K of the index directories (the q134 PartitionFilters
-    * shape) and each row read is codes+norm, not a vector.
-    *
-    * BOUNDED driver sync, ENFORCED — the [[Similarity.ivfTopKIndexed]]
-    * contract verbatim: static pruning needs literal predicates, so
-    * the distinct probed buckets (≤ queries × nprobe, broadcast-class
-    * by contract) are collected under the `limit(max + 1)` structural
-    * cap and `require`d against `maxProbedBuckets`. A corpus-sized
-    * query frame belongs on [[ivfPqTopK]]'s bucket-keyed join path.
+  /** Serves [[ivfPqTopK]] from a WRITTEN index ([[ivfPqWriteIndex]]):
+    * the same probe and scoring arithmetic, with the code rows read
+    * through [[Similarity.bucketScan]], so the scan reads ~nprobe/K of
+    * the index directories (the q134 PartitionFilters shape) and each
+    * row read is codes+norm, not a vector. `maxProbedBuckets` bounds the
+    * query set's distinct probed buckets.
     */
   def ivfPqTopKIndexed(
-      spark: org.apache.spark.sql.SparkSession, path: String,
+      spark: SparkSession, path: String,
       centroids: DataFrame, codebook: DataFrame, queries: DataFrame,
       k: Int, nprobe: Int, idCol: String = "vec_id",
       vecCol: String = "embedding", centroidIdCol: String = "centroid_id",
-      maxProbedBuckets: Int = Similarity.MaxLiteralCentroids): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val cb = collectCodebook(codebook)
-    val stride = cb.map(_.length).max
-    val centsSeq = Similarity.collectCentroids(centroids, centroidIdCol, vecCol)
-    require(centsSeq.nonEmpty, "ivfPqTopKIndexed: empty centroid set")
-    val centFrame = centroids.select(
-      col(centroidIdCol).cast("long").as("bucket"),
-      asD(col(vecCol)).as("__centv"))
-    val q = queries
-      .select(col(idCol).as("query_id"), asD(col(vecCol)).as("qv"))
-      .withColumn("qn", Similarity.l2norm(col("qv")))
-      // LUT before the nprobe explode (once per query, carried per probe)
-      .withColumn("dlut", dotLutCol(col("qv"), cb, stride))
-      .withColumn("bucket",
-        explode(transform(
-          Similarity.nearestCentroids(col("qv"), centsSeq, nprobe, "cos"),
-          p => p.getField("cid"))))
-      .join(centFrame, "bucket")
-      .withColumn("qc", Similarity.dot(col("qv"), col("__centv")))
-      .drop("qv", "__centv")
-    val probed = q.select("bucket").distinct()
-      .limit(maxProbedBuckets + 1).collect().map(_.getLong(0))
-    require(probed.length <= maxProbedBuckets,
-      s"ivfPqTopKIndexed probed more than $maxProbedBuckets distinct " +
-        "buckets — the query set must stay broadcast-class; serve a " +
-        "corpus-sized query frame through the bucket-keyed join path " +
-        "(ivfPqTopK) instead")
-    val win = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    spark.read.parquet(path)
-      .filter(col("bucket").isin(probed: _*))
-      .select(col(idCol).as("neighbor_id"),
-        col("bucket").cast("long").as("bucket"), col("codes"), col("cn"))
-      .join(broadcast(q), Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim",
-        (col("qc") + call_function("pq_adc", col("codes"), col("dlut"),
-          lit(stride))) / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(win))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 6).as("sim"))
-  }
+      maxProbedBuckets: Int = Similarity.MaxLiteralCentroids): DataFrame =
+    ivfPqServe(centroids, codebook, queries, k, nprobe, idCol, vecCol,
+      centroidIdCol, "ivfPqTopKIndexed")(Similarity.bucketScan(spark, path,
+        _, "bucket", maxProbedBuckets, "ivfPqTopKIndexed",
+        "the bucket-keyed join of ivfPqTopK"))
 
   /** Writes a SELF-CONTAINED IVF-PQ index: the encoded code rows
     * ([[ivfPqWriteIndex]]'s bucket-partitioned layout under `codes/`)
@@ -504,7 +431,7 @@ object Pq {
     * shape and the bounded probed-bucket collect are identical.
     */
   def ivfPqTopKFromIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
+      spark: SparkSession, path: String,
       queries: DataFrame, k: Int, nprobe: Int, idCol: String = "vec_id",
       vecCol: String = "embedding",
       maxProbedBuckets: Int = Similarity.MaxLiteralCentroids): DataFrame = {
@@ -530,7 +457,7 @@ object Pq {
     * semantics wearing append's name).
     */
   def ivfPqAppendToIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
+      spark: SparkSession, path: String,
       delta: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit = {
     val root = IndexPaths.resolve(spark, path)
@@ -563,7 +490,7 @@ object Pq {
     * deterministic under any partitioning (an avg would not be — the
     * parallel sum order varies); counts are exact.
     */
-  def ivfPqIndexStats(spark: org.apache.spark.sql.SparkSession,
+  def ivfPqIndexStats(spark: SparkSession,
       path: String): DataFrame =
     spark.read.parquet(path)
       .groupBy(col("bucket").cast("long").as("bucket"))
@@ -594,26 +521,23 @@ object Pq {
       : DataFrame = {
     require(shortlist >= k,
       s"rerank shortlist ($shortlist) must be >= k ($k)")
-    val cand = ivfPqTopK(encoded, centroids, codebook, queries, shortlist,
-      nprobe, idCol, vecCol, centroidIdCol)
-    val qv = broadcast(queries
-      .select(col(idCol).as("query_id"), asD(col(vecCol)).as("qv"))
-      .withColumn("qn", Similarity.l2norm(col("qv"))))
-    val win = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    corpus
-      .select(col(idCol).as("neighbor_id"), asD(col(vecCol)).as("cv"))
-      .withColumn("cn", Similarity.l2norm(col("cv")))
-      .join(broadcast(cand.select(col("query_id"), col("neighbor_id"))),
-        "neighbor_id")
-      .join(qv, "query_id")
-      .withColumn("sim",
-        Similarity.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(win))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 6).as("sim"))
+    exactRerank(ivfPqTopK(encoded, centroids, codebook, queries, shortlist,
+      nprobe, idCol, vecCol, centroidIdCol), corpus, queries, k, idCol, vecCol)
   }
+
+  /** The exact second stage of [[ivfPqTopKReranked]] and
+    * [[ivfPqRecallAudit]]: the `shortlist` candidates' real vectors are
+    * fetched from `corpus` by a broadcast join on the neighbor id, and
+    * the top `k` re-ranked by exact cosine.
+    */
+  private def exactRerank(shortlist: DataFrame, corpus: DataFrame,
+      queries: DataFrame, k: Int, idCol: String, vecCol: String): DataFrame =
+    Similarity.rankTopK(Similarity.corpusVectors(corpus, idCol, vecCol)
+      .join(broadcast(shortlist.select(col("query_id"), col("neighbor_id"))),
+        "neighbor_id")
+      .join(broadcast(Similarity.queryVectors(queries, idCol, vecCol)),
+        "query_id")
+      .withColumn("sim", Similarity.cosineQC), k)
 
   /** Recall@k QUALITY audit of the IVF-PQ TWO-STAGE serve — the
     * [[Similarity.ivfRecallAudit]] measurement applied to the coded
@@ -641,40 +565,40 @@ object Pq {
     * the measurement); the served side stays partition-pruned.
     */
   def ivfPqRecallAudit(
-      spark: org.apache.spark.sql.SparkSession, path: String,
+      spark: SparkSession, path: String,
       corpus: DataFrame, queries: DataFrame, k: Int, shortlist: Int,
       nprobe: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     require(shortlist >= k,
       s"rerank shortlist ($shortlist) must be >= k ($k)")
-    val cand = ivfPqTopKFromIndex(spark, path, queries, k = shortlist,
-      nprobe, idCol, vecCol)
-    val qv = broadcast(queries
-      .select(col(idCol).as("query_id"), asD(col(vecCol)).as("qv"))
-      .withColumn("qn", Similarity.l2norm(col("qv"))))
-    val win = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    val served = corpus
-      .select(col(idCol).as("neighbor_id"), asD(col(vecCol)).as("cv"))
-      .withColumn("cn", Similarity.l2norm(col("cv")))
-      .join(broadcast(cand.select(col("query_id"), col("neighbor_id"))),
-        "neighbor_id")
-      .join(qv, "query_id")
-      .withColumn("sim",
-        Similarity.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(win))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-    val exact = Similarity.bruteForceTopK(corpus, queries, k, idCol, vecCol)
-    exact.join(broadcast(served), Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
-      .select(col("query_id"), lit(k).as("k"), col("n_exact"),
-        col("n_hit"),
-        round(col("n_hit").cast("double") / col("n_exact").cast("double"),
-          6).as("recall"))
+    val served = exactRerank(ivfPqTopKFromIndex(spark, path, queries,
+      k = shortlist, nprobe, idCol, vecCol), corpus, queries, k, idCol, vecCol)
+    Similarity.recallAtK(
+      Similarity.bruteForceTopK(corpus, queries, k, idCol, vecCol), served, k)
   }
 
+  /** ADC top-k over an encoded corpus: approximate cosine =
+    * `(Σ_j dotLut_q[j][codes_j]) / (|q| · sqrt(Σ_j normLut[j][codes_j]))`
+    * — the numerator is the dot of the query with the RECONSTRUCTED
+    * corpus vector, the denominator its reconstructed norm; both are m
+    * table adds via the codegen `pq_adc` expression.
+    *
+    * Plan shape (the 100 TB contract, pinned for q136): the query side
+    * is broadcast-class by the [[Similarity.bruteForceTopK]] contract —
+    * each query row carries its own m·stride dot-LUT, built with
+    * codegen `vec_dot` against codebook literals on the tiny query
+    * frame; the corpus side reads only (id, codes), computes its
+    * reconstructed norm against the LITERAL norm-LUT in the same narrow
+    * projection, broadcast-joins, and the only exchange is the
+    * per-query top-k window. Dead (sub, code) slots that Lloyd dropped
+    * pad the LUTs with 0.0 and are never indexed (encoder emits only
+    * live codes).
+    *
+    * Output: the [[Similarity.rankTopK]] frame, `sim` the ADC
+    * APPROXIMATION. Recall versus exact top-k is the q136 gate, with the
+    * pick's EXACT similarity compared under tolerance (the q96
+    * pattern).
+    */
   def pqTopK(encoded: DataFrame, codebook: DataFrame, queries: DataFrame,
       k: Int, idCol: String = "vec_id", vecCol: String = "embedding")
       : DataFrame = {
@@ -687,21 +611,12 @@ object Pq {
       .select(col(idCol).as("neighbor_id"), col("codes"))
       .withColumn("cn", sqrt(call_function("pq_adc", col("codes"),
         typedLit(normLut), lit(stride))))
-    val dotLut = dotLutCol(col("qv"), cb, stride)
-    val q = broadcast(queries
-      .select(col(idCol).as("query_id"), asD(col(vecCol)).as("qv"))
-      .withColumn("qn", Similarity.l2norm(col("qv")))
-      .withColumn("dlut", dotLut)
-      .drop("qv"))
-    val win = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    c.join(q, col("neighbor_id") =!= col("query_id"))
+    val q = Similarity.queryVectors(queries, idCol, vecCol)
+      .withColumn("dlut", dotLutCol(col("qv"), cb, stride))
+      .drop("qv")
+    Similarity.rankTopK(Similarity.candidates(c, q)
       .withColumn("sim",
         call_function("pq_adc", col("codes"), col("dlut"), lit(stride))
-          / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(win))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 6).as("sim"))
+          / (col("qn") * col("cn"))), k)
   }
 }

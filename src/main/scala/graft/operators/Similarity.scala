@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -61,28 +61,121 @@ object Similarity {
   def cosineSql(a: String, b: String): String =
     s"(${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)})))"
 
-  /** Brute-force top-k: for every query vector, the k most-similar corpus
-    * vectors (self excluded), deterministic tie-break on corpus id.
-    * `queries` is expected to be small (it is broadcast).
+  // ------------------------------------------------------------------
+  // The vector-serve core: every top-k serve here and in [[Pq]] is a
+  // query frame, candidate rows and the one rank tail
+  // ------------------------------------------------------------------
+
+  /** Query frame `(query_id, qv, carry…, qn)`: ids, double vectors and
+    * norms, one row per query. Not broadcast here: each serve hints it
+    * where it joins.
     */
-  def bruteForceTopK(
-      corpus: DataFrame, queries: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = broadcast(queries
-      .select(col(idCol).as("query_id"), asD(col(vecCol)).as("qv"))
-      .withColumn("qn", l2norm(col("qv"))))
-    val c = corpus
-      .select(col(idCol).as("neighbor_id"), asD(col(vecCol)).as("cv"))
+  private[graft] def queryVectors(queries: DataFrame, idCol: String,
+      vecCol: String, carry: Column*): DataFrame =
+    queries
+      .select(col(idCol).as("query_id") +: asD(col(vecCol)).as("qv") +: carry: _*)
+      .withColumn("qn", l2norm(col("qv")))
+
+  /** Corpus frame `(neighbor_id, cv, carry…, cn)`, the candidate side of
+    * [[queryVectors]]: the norm is computed per corpus row before the
+    * join, so a candidate pair costs one dot product.
+    */
+  private[operators] def corpusVectors(corpus: DataFrame, idCol: String,
+      vecCol: String, carry: Column*): DataFrame =
+    corpus
+      .select(col(idCol).as("neighbor_id") +: asD(col(vecCol)).as("cv") +: carry: _*)
       .withColumn("cn", l2norm(col("cv")))
+
+  /** Exact cosine of a [[corpusVectors]] × [[queryVectors]] row. */
+  private[operators] def cosineQC: Column =
+    dot(col("qv"), col("cv")) / (col("qn") * col("cn"))
+
+  /** Candidate rows of `corpus` against the broadcast query frame `q`,
+    * the self-match dropped at the join, before any scoring: keyed on
+    * `on` (a bucket join), or with no keys the nested-loop join of a
+    * brute-force scan.
+    */
+  private[operators] def candidates(corpus: DataFrame, q: DataFrame,
+      on: String*): DataFrame =
+    if (on.isEmpty) corpus.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
+    else corpus.join(broadcast(q), on).filter(col("neighbor_id") =!= col("query_id"))
+
+  /** The one rank tail of the vector serves, the engine's
+    * `ROW_NUMBER() OVER (PARTITION BY query_id …) <= k`: `(query_id,
+    * neighbor_id, sim)` rows in, `(query_id, rank, neighbor_id, sim)` out,
+    * at most `k` rows per query. The contract every serve shares:
+    *  - the self-match is excluded ([[candidates]] drops it at the join;
+    *    a shortlist re-rank inherits it from its first stage);
+    *  - ties break on ascending neighbor id, so ranks run 1, 2, … with no
+    *    gap or repeat and the top-k set is deterministic;
+    *  - `sim` is ranked at full double precision and rounded to 6 places
+    *    only on output.
+    * Spark plans the `rank <= k` filter as a partial `WindowGroupLimit`
+    * before the query-keyed shuffle (PlanSpec pins it).
+    */
+  private[graft] def rankTopK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id"))
-    c.join(q, col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(w))
+    scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         round(col("sim"), 6).as("sim"))
   }
+
+  /** Recall@k of a served top-k against the exact one (both
+    * [[rankTopK]] outputs at `k`): per query `n_exact`,
+    * `n_hit = |exact ∩ served|` and `recall = n_hit / n_exact`. Both
+    * rankings break ties on neighbor id, so the intersection count is
+    * exact; both sides are |Q|·k rows, so the served side broadcasts.
+    */
+  private[operators] def recallAtK(exact: DataFrame, served: DataFrame,
+      k: Int): DataFrame =
+    exact
+      .join(broadcast(served.select(col("query_id"), col("neighbor_id"),
+        lit(1L).as("hit"))), Seq("query_id", "neighbor_id"), "left")
+      .groupBy(col("query_id"))
+      .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
+      .select(col("query_id"), lit(k).as("k"), col("n_exact"),
+        col("n_hit"),
+        round(col("n_hit").cast("double") / col("n_exact").cast("double"),
+          6).as("recall"))
+
+  /** The one capped literal partition prune of a bucket-partitioned
+    * layout (IVF, IVF-PQ, the semantic clusters): the distinct
+    * `bucketCol` ids of `keys` are collected to the driver and pushed
+    * into the scan of `dir` as a literal `isin`, so the scan's
+    * `PartitionFilters` read only the probed directories (PlanSpec pins
+    * the shape). Static pruning needs literals at plan time, and the
+    * bucket id IS the partition value, so a semi-join on it (the
+    * [[IndexLayout.probe]] shape) would only add a broadcast.
+    *
+    * The collect is structurally capped with the `limit(max + 1)` idiom
+    * (the [[LookupJoin]] guard) and `require`d against `maxProbed`:
+    * probed ids are centroid ids, so the [[MaxLiteralCentroids]]
+    * broadcast-class bound applies, and a wider probe belongs on `op`'s
+    * bucket-keyed `fallback`.
+    */
+  private[operators] def bucketScan(spark: SparkSession, dir: String,
+      keys: DataFrame, bucketCol: String, maxProbed: Int, op: String,
+      fallback: String): DataFrame = {
+    val probed = keys.select(bucketCol).distinct()
+      .limit(maxProbed + 1).collect().map(_.getLong(0))
+    require(probed.length <= maxProbed,
+      s"$op probed more than $maxProbed distinct $bucketCol values — the " +
+        "probe must stay broadcast-class (it feeds a driver collect and a " +
+        s"literal partition filter); use $fallback instead")
+    spark.read.parquet(dir).filter(col(bucketCol).isin(probed.toSeq: _*))
+  }
+
+  /** Brute-force top-k: for every query vector, the k most-similar
+    * corpus vectors under the [[rankTopK]] contract. `queries` is
+    * expected to be small (it is broadcast).
+    */
+  def bruteForceTopK(
+      corpus: DataFrame, queries: DataFrame, k: Int,
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    rankTopK(candidates(corpusVectors(corpus, idCol, vecCol),
+      queryVectors(queries, idCol, vecCol)).withColumn("sim", cosineQC), k)
 
   /** Hard bounds on a centroid set embedded as plan literals by
     * [[ivfAssign]] / [[graft.operators.Clustering.assignL2]] — the same
@@ -159,6 +252,18 @@ object Similarity {
                else cents.map(_._3)),
       lit(n), lit(metric))
 
+  /** The `nprobe` nearest centroid ids of each query vector `qv` (max
+    * cosine, tie-break on centroid id, so nprobe = 1 is [[ivfAssign]]'s
+    * own pick), exploded one row per probe: the `bucket` column of a
+    * probed query frame. The probed buckets are distinct and a corpus
+    * vector lives in one bucket, so bucket-keyed candidates need no
+    * dedup; the query side is broadcast ×nprobe.
+    */
+  private[operators] def probeBuckets(qv: Column,
+      cents: Seq[(Long, Seq[Double], Double)], nprobe: Int): Column =
+    explode(transform(nearestCentroids(qv, cents, nprobe, "cos"),
+      _.getField("cid")))
+
   /** IVF bucket assignment: nearest centroid per vector (max cosine,
     * tie-break on centroid id). ZERO-shuffle: the centroid set is
     * collected (guarded by [[MaxLiteralCentroids]] — the same bound the
@@ -196,43 +301,19 @@ object Similarity {
     */
   def ivfTopK(
       assigned: DataFrame, queryIds: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = broadcast(assigned.join(queryIds, idCol)
-      .select(col(idCol).as("query_id"), asD(col(vecCol)).as("qv"), col("bucket"))
-      .withColumn("qn", l2norm(col("qv"))))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    assigned
-      .select(col(idCol).as("neighbor_id"), asD(col(vecCol)).as("cv"), col("bucket"))
-      .withColumn("cn", l2norm(col("cv")))
-      .join(q, "bucket")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 6).as("sim"))
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    bucketTopK(assigned,
+      queryVectors(assigned.join(queryIds, idCol), idCol, vecCol, col("bucket")),
+      k, idCol, vecCol)
 
   /** IVF top-k with a recall knob: each query probes its `nprobe`
-    * nearest centroid buckets instead of only its own ([[ivfTopK]] ≡
-    * nprobe=1 — single-probe recall cliffs at bucket boundaries are
-    * the first thing a real ANN user hits, because a query near a
-    * Voronoi edge has true neighbors assigned to the adjacent cell).
-    *
-    * The probe set is computed with the same zero-shuffle native
-    * `vec_nearest` ranking as [[ivfAssign]] (collect centroids —
-    * bounded by [[MaxLiteralCentroids]] / payload — then the top
-    * `nprobe` (−csim, cid) structs per query row), so nprobe=1
-    * reproduces [[ivfAssign]]'s own bucket choice exactly (max
-    * cosine, tie-break on centroid id). Each query row
-    * then EXPLODES into its nprobe bucket keys and the candidate join
-    * stays keyed on the bucket id — corpus vectors live in exactly one
-    * bucket, and the probed buckets are distinct, so candidates need
-    * no dedup. 100 TB posture: the query side (small by construction)
-    * is broadcast ×nprobe; the corpus side still never shuffles for
-    * scoring — candidate volume scales linearly in nprobe, the
-    * standard IVF recall/cost trade.
+    * nearest centroid buckets ([[probeBuckets]]) instead of only its own
+    * ([[ivfTopK]] ≡ nprobe=1 — single-probe recall cliffs at bucket
+    * boundaries are the first thing a real ANN user hits, because a
+    * query near a Voronoi edge has true neighbors assigned to the
+    * adjacent cell). The candidate join stays keyed on the bucket id and
+    * the corpus side never shuffles for scoring: candidate volume
+    * scales linearly in nprobe, the standard IVF recall/cost trade.
     *
     * Same CONTRACT notes as [[ivfAssign]]: bucket/centroid ids compare
     * as LONG, and the centroid set must be non-empty.
@@ -241,31 +322,9 @@ object Similarity {
       assigned: DataFrame, centroids: DataFrame, queryIds: DataFrame,
       k: Int, nprobe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      centroidIdCol: String = "centroid_id"): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    val cents = collectCentroids(centroids, centroidIdCol, vecCol)
-    require(cents.nonEmpty, "ivfTopKProbed: empty centroid set")
-    val q = broadcast(assigned.join(queryIds, idCol)
-      .select(col(idCol).as("query_id"), asD(col(vecCol)).as("qv"))
-      .withColumn("qn", l2norm(col("qv")))
-      .withColumn("bucket",
-        explode(transform(
-          nearestCentroids(col("qv"), cents, nprobe, "cos"),
-          p => p.getField("cid")))))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    assigned
-      .select(col(idCol).as("neighbor_id"), asD(col(vecCol)).as("cv"),
-        col("bucket"))
-      .withColumn("cn", l2norm(col("cv")))
-      .join(q, "bucket")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 6).as("sim"))
-  }
+      centroidIdCol: String = "centroid_id"): DataFrame =
+    probedTopK(centroids, assigned.join(queryIds, idCol), k, nprobe, idCol,
+      vecCol, centroidIdCol, "ivfTopKProbed")(_ => assigned)
 
   /** Materializes an IVF index: an [[ivfAssign]] output written as
     * parquet PARTITIONED BY the bucket id. This is the 100 TB serving
@@ -313,124 +372,73 @@ object Similarity {
     assignedDelta.repartition(col("bucket"))
       .write.mode("append").partitionBy("bucket").parquet(path)
 
-  /** Serves top-k from a written index ([[ivfWriteIndex]]): probe
-    * buckets are ranked per query with the native `vec_nearest`
-    * expression, then pushed into the index scan as a PARTITION filter
-    * — the scan's `PartitionFilters` prunes to the probed bucket
-    * directories, so a query batch reads ~`nprobe/K` of the corpus
-    * (PlanSpec pins the pruned-scan shape).
-    *
-    * BOUNDED driver sync, ENFORCED: the distinct probed bucket ids
-    * (≤ queries × nprobe — the query set is broadcast-class by the
-    * same contract as [[bruteForceTopK]]) are collected to the driver,
-    * because STATIC partition pruning needs literal predicates at plan
-    * time; dynamic pruning would need a join against the partition
-    * column and a shuffle of the query side. The collect is
-    * structurally capped with the `limit(max + 1)` idiom (the
-    * [[LookupJoin]] guard) and then `require`d against
-    * `maxProbedBuckets` (default [[MaxLiteralCentroids]] — probed
-    * buckets ARE centroid ids, so the same broadcast-class bound
-    * applies; today probed ⊆ the already-guarded centroid family, but
-    * the bound must not depend on that transitive argument surviving
-    * refactors). A corpus-sized query frame belongs on the
-    * bucket-keyed join path ([[ivfTopKProbed]]), not static pruning.
-    * Self-matches are excluded, ties break on neighbor id — identical
-    * semantics to [[ivfTopKProbed]] at the same nprobe (the oracle
-    * replays both).
+  /** Serves [[ivfTopKProbed]] from a written index ([[ivfWriteIndex]]):
+    * the same probe and scoring, with the corpus read through
+    * [[bucketScan]], so a query batch reads ~`nprobe/K` of the corpus.
+    * The query set must be broadcast-class (the [[bruteForceTopK]]
+    * contract): `maxProbedBuckets` bounds its distinct probed buckets.
     */
   def ivfTopKIndexed(
-      spark: org.apache.spark.sql.SparkSession, path: String,
+      spark: SparkSession, path: String,
       centroids: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       centroidIdCol: String = "centroid_id",
-      maxProbedBuckets: Int = MaxLiteralCentroids): DataFrame = {
+      maxProbedBuckets: Int = MaxLiteralCentroids): DataFrame =
+    probedTopK(centroids, queries, k, nprobe, idCol, vecCol, centroidIdCol,
+      "ivfTopKIndexed")(bucketScan(spark, path, _, "bucket",
+        maxProbedBuckets, "ivfTopKIndexed", "the bucket-keyed join of ivfTopKProbed"))
+
+  /** The body of [[ivfTopKProbed]] and [[ivfTopKIndexed]]: the probed
+    * query frame, then cosine top-k over the corpus rows `corpus` picks
+    * for it (a whole assigned frame, or a [[bucketScan]] of the probed
+    * buckets).
+    */
+  private def probedTopK(centroids: DataFrame, queries: DataFrame, k: Int,
+      nprobe: Int, idCol: String, vecCol: String, centroidIdCol: String,
+      op: String)(corpus: DataFrame => DataFrame): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val cents = collectCentroids(centroids, centroidIdCol, vecCol)
-    require(cents.nonEmpty, "ivfTopKIndexed: empty centroid set")
-    val q = queries
-      .select(col(idCol).as("query_id"), asD(col(vecCol)).as("qv"))
-      .withColumn("qn", l2norm(col("qv")))
-      .withColumn("bucket",
-        explode(transform(
-          nearestCentroids(col("qv"), cents, nprobe, "cos"),
-          p => p.getField("cid"))))
-    val probed = q.select("bucket").distinct()
-      .limit(maxProbedBuckets + 1).collect().map(_.getLong(0))
-    require(probed.length <= maxProbedBuckets,
-      s"ivfTopKIndexed probed more than $maxProbedBuckets distinct " +
-        "buckets — the query set must stay broadcast-class (probed " +
-        "buckets <= queries x nprobe feed a driver collect and a " +
-        "literal partition filter); serve a corpus-sized query frame " +
-        "through the bucket-keyed join path (ivfTopKProbed) instead")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    spark.read.parquet(path)
-      .filter(col("bucket").isin(probed: _*))
-      .select(col(idCol).as("neighbor_id"), asD(col(vecCol)).as("cv"),
-        col("bucket").cast("long").as("bucket"))
-      .withColumn("cn", l2norm(col("cv")))
-      .join(broadcast(q), "bucket")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 6).as("sim"))
+    require(cents.nonEmpty, s"$op: empty centroid set")
+    val q = queryVectors(queries, idCol, vecCol)
+      .withColumn("bucket", probeBuckets(col("qv"), cents, nprobe))
+    bucketTopK(corpus(q), q, k, idCol, vecCol)
   }
 
-  /** QUALITY audit of a written IVF index: recall@k of the pruned
-    * serve against exact brute force over the SAME index. The
-    * structural audits (duplicate members, payload divergence) say the
-    * artifact is intact; this one says the artifact is GOOD — the
-    * number an ANN operator actually watches, because recall decays
-    * silently as appends drift members away from the frozen centroids
-    * (the failure [[graft.operators.Clustering.semanticDriftAudit]]
-    * detects on distributions, measured here on retrieval results).
-    *
-    * Per query: the exact top-k (ONE full scan of the index — ground
-    * truth, which is the audit's irreducible cost) and the served
-    * top-k ([[ivfTopKIndexed]], partition-pruned at `nprobe`), then
-    * `n_hit = |exact ∩ served|` and `recall = n_hit / n_exact`. Both
-    * rankings break ties on neighbor id, so both SETS are total-order
-    * deterministic and the intersection count is exact — q183 gates
+  /** Cosine top-k of bucket-assigned corpus rows against a query frame
+    * carrying each query's bucket: the candidate join is keyed on the
+    * bucket id.
+    */
+  private def bucketTopK(corpus: DataFrame, q: DataFrame, k: Int,
+      idCol: String, vecCol: String): DataFrame =
+    rankTopK(candidates(corpusVectors(corpus, idCol, vecCol,
+        col("bucket").cast("long").as("bucket")), q, "bucket")
+      .withColumn("sim", cosineQC), k)
+
+  /** QUALITY audit of a written IVF index: recall@k ([[recallAtK]]) of
+    * the pruned serve ([[ivfTopKIndexed]] at `nprobe`) against exact
+    * brute force over the SAME index. The structural audits (duplicate
+    * members, payload divergence) say the artifact is intact; this one
+    * says the artifact is GOOD — the number an ANN operator actually
+    * watches, because recall decays silently as appends drift members
+    * away from the frozen centroids (the failure
+    * [[graft.operators.Clustering.semanticDriftAudit]] detects on
+    * distributions, measured here on retrieval results). q183 gates
     * every per-query row against a DuckDB replay of both rankings.
     *
-    * Scale shape: the query set is broadcast-class (the
-    * [[bruteForceTopK]] contract — an audit runs on a SAMPLE of
-    * queries, not the corpus); the exact side is one narrow scan of
-    * the index with the queries broadcast, partial top-k per
-    * partition via the rank window's shuffle being |Q|-keyed; the
-    * served side prunes as in serving. Both per-query shortlists are
-    * |Q|·k rows — the intersection join broadcasts.
+    * Scale shape: the query set is a broadcast-class SAMPLE; the exact
+    * side is one full narrow scan of the index (the audit's irreducible
+    * cost) with the queries broadcast; the served side prunes as in
+    * serving.
     */
   def ivfRecallAudit(
-      spark: org.apache.spark.sql.SparkSession, path: String,
+      spark: SparkSession, path: String,
       centroids: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       centroidIdCol: String = "centroid_id"): DataFrame = {
     val served = ivfTopKIndexed(spark, path, centroids, queries, k,
-        nprobe, idCol, vecCol, centroidIdCol)
-      .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-    val q = queries
-      .select(col(idCol).as("query_id"), asD(col(vecCol)).as("qv"))
-      .withColumn("qn", l2norm(col("qv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    val exact = spark.read.parquet(path)
-      .select(col(idCol).as("neighbor_id"), asD(col(vecCol)).as("cv"))
-      .withColumn("cn", l2norm(col("cv")))
-      .crossJoin(broadcast(q))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-    exact.join(broadcast(served), Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
-      .select(col("query_id"), lit(k).as("k"), col("n_exact"),
-        col("n_hit"),
-        round(col("n_hit").cast("double") / col("n_exact").cast("double"),
-          6).as("recall"))
+      nprobe, idCol, vecCol, centroidIdCol)
+    recallAtK(bruteForceTopK(spark.read.parquet(path), queries, k, idCol,
+      vecCol), served, k)
   }
 
   /** Embedding-cosine near-duplicate pairs within a blocking column

@@ -105,12 +105,12 @@ object SubstringDedup {
       .withColumn("posting_n", count(lit(1)).over(capW))
       .filter(col("posting_n") <= maxPostingSize)
       .drop("posting_n")
-    // EARLY endpoint filter (r21): when the caller rode a `__delta`
-    // flag on the window rows ([[substringPairsIndexed]]), drop
-    // (base, base) pairs AT THE JOIN — they fail the final endpoint
-    // filter whatever their diagonals, and the run-merge windows are
-    // pair-local, so removing whole pairs here is exact. Without the
-    // flag (fresh [[substringPairs]]) the predicate is absent.
+    // endpoint filter AT THE JOIN (r21): when the caller rode a
+    // `__delta` flag on the window rows ([[substringPairsIndexed]]),
+    // only pairs with a flagged endpoint are joined — the run-merge
+    // windows are pair-local, so dropping whole (base, base) pairs here
+    // is exact. Without the flag (fresh [[substringPairs]]) the
+    // predicate is absent.
     val endpointPred =
       if (windows.columns.contains("__delta"))
         col("x.__delta") || col("y.__delta")
@@ -184,13 +184,10 @@ object SubstringDedup {
       .select(col("doc_id"), col("h")).distinct().localCheckpoint()
     val snapIds = qsets.select(col("doc_id")).distinct().localCheckpoint()
     val probe = IndexLayout.Substring.probe(spark, path, qsets, "h")
-    // ride the snapshot-endpoint flag so pairsFromWindows can drop
-    // (base, base) pairs at emission instead of after the run merge
+    // ride the snapshot-endpoint flag: pairsFromWindows keeps only the
+    // pairs with a snapshot endpoint
     val flagged = Dedup.flagDelta(probe, snapIds)
       .select(col("doc_id"), col("pos"), col("h"), col("__delta"))
-    Dedup.withDeltaEndpoint(pairsFromWindows(flagged, minLen,
-        maxPostingSize), snapIds)
-      .select(col("doc_a"), col("doc_b"), col("pos_a"), col("pos_b"),
-        col("len"))
+    pairsFromWindows(flagged, minLen, maxPostingSize)
   }
 }

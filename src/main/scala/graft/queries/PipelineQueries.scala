@@ -403,25 +403,18 @@ object PipelineQueries {
   val q96QuantizedAnn: QueryDef = QueryDef(
     "q96_quantized_ann",
     (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val emb = Tables.load(s, dir, "embeddings")
       val queries = emb.filter(col("vec_id") < 10)
       val exact = Similarity.bruteForceTopK(emb, queries, k = 1)
         .select(col("query_id"), col("sim").as("exact_sim"))
-      val q = broadcast(queries
-        .select(col("vec_id").as("query_id"),
-          col("embedding").cast("array<double>").as("qv"))
-        .withColumn("qn", Similarity.l2norm(col("qv"))))
+      val q = broadcast(Similarity.queryVectors(queries, "vec_id", "embedding"))
       val deq = Similarity.quantizeInt8(emb, "vec_id", "embedding")
         .select(col("vec_id").as("neighbor_id"),
           Similarity.dequantize(col("qvec"), col("scale")).as("dv"))
         .withColumn("dn", Similarity.l2norm(col("dv")))
-      val top1q = deq.join(q, col("neighbor_id") =!= col("query_id"))
-        .withColumn("simq",
-          Similarity.dot(col("qv"), col("dv")) / (col("qn") * col("dn")))
-        .withColumn("rk", row_number().over(Window.partitionBy("query_id")
-          .orderBy(col("simq").desc, col("neighbor_id"))))
-        .filter(col("rk") === 1)
+      val top1q = Similarity.rankTopK(
+          deq.join(q, col("neighbor_id") =!= col("query_id")).withColumn("sim",
+            Similarity.dot(col("qv"), col("dv")) / (col("qn") * col("dn"))), 1)
         .select(col("query_id"), col("neighbor_id"))
       val cv = emb.select(col("vec_id").as("neighbor_id"),
           col("embedding").cast("array<double>").as("cv"))
@@ -988,26 +981,13 @@ object PipelineQueries {
   val q133IvfNprobe: QueryDef = QueryDef(
     "q133_ivf_nprobe",
     (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
       val emb = Tables.load(s, dir, "embeddings")
       val centroids = emb.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("centroid_id"), col("embedding"))
       val assigned = Similarity.ivfAssign(emb, centroids)
       val queries = emb.filter(col("vec_id") < 10)
-      val ivf = Similarity.ivfTopKProbed(assigned, centroids,
-        queries.select("vec_id"), k = 3, nprobe = 2)
-      val exact = Similarity.bruteForceTopK(emb, queries, k = 3)
-        .select(col("query_id"), col("neighbor_id"), lit(true).as("hit"))
-      val w = Window.partitionBy(col("query_id"))
-      ivf.withColumnRenamed("rank", "rnk")
-        .join(exact, Seq("query_id", "neighbor_id"), "left")
-        .withColumn("in_exact", coalesce(col("hit"), lit(false)))
-        .withColumn("recall3", round(
-          sum(when(col("in_exact"), lit(1L)).otherwise(lit(0L))).over(w)
-            / lit(3.0), 6))
-        .select(col("query_id"), col("rnk"), col("neighbor_id"),
-          col("sim"), col("in_exact"), col("recall3"))
-        .orderBy(col("query_id"), col("rnk"))
+      withExactRecall3(Similarity.ivfTopKProbed(assigned, centroids,
+        queries.select("vec_id"), k = 3, nprobe = 2), emb, queries)
     }, {
       val cosEC = Similarity.cosineSql("e.embedding", "c.centv")
       val cosQC = Similarity.cosineSql("q.qv", "c.centv")
@@ -1342,7 +1322,7 @@ object PipelineQueries {
            GROUP BY 1, 2)"""
   }
 
-  /** Shared engine tail of the ANN gate queries (q136/q138/q139/q140):
+  /** Shared engine tail of the ANN gate queries (q133/q136/q138–q143):
     * left-join the exact brute-force top-3 and emit the
     * `in_exact`/`recall3` columns of the q133 pattern. `approx` is a
     * (query_id, rank, neighbor_id, sim) top-3 frame.

@@ -643,7 +643,7 @@ class PlanSpec extends AnyFunSuite {
       s"the early snapshot-endpoint filter must gate pair emission:\n$p")
     assert(p.contains("Generate posexplode") && "slice\\(ds#".r.findFirstIn(p).isDefined,
       s"pair emission must be incremental (posexplode + slice):\n$p")
-    // the snapshot-id filter is two broadcast probes, never a loop join
+    // the snapshot-id flag is one broadcast probe, never a loop join
     assert(p.contains("BroadcastHashJoin"), "snapshot-id flags must broadcast")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       s"no OR-condition loop join:\n$p")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkTestSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -171,6 +172,59 @@ class SimilaritySpec extends AnyFunSuite {
         .as[(Long, Int, Long, Double)].collect().toSeq
     assert(serve(apndPath.toString) == serve(freshPath.toString),
       "append layout must serve bit-identically to the fresh union build")
+  }
+
+  test("every top-k serve keeps the rank contract: ranks 1..k, ties by ascending id, no self-match") {
+    // exact ties: 2 and 3 duplicate query 1's own vector, 5 duplicates
+    // query 4's; both queries sit inside the corpus. Ids 1-5 share
+    // bucket 100, ids 6-8 bucket 200, so at k = 4 every serve (nprobe 1
+    // included) ranks a full top-4 holding at least one tie pair
+    def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
+    val a = v(1, 0.2, 0.1, 0)
+    val b = v(0.9, 0.3, 0, 0.1)
+    val df = Seq(1L -> a, 2L -> a, 3L -> a, 4L -> b, 5L -> b,
+      6L -> v(0, 1, 0.2, 0.1), 7L -> v(0.1, 0.9, 0, 0.3),
+      8L -> v(0.2, 1, 0.1, 0)).toDF("vec_id", "embedding")
+    val cents = Seq(100L -> v(1, 0, 0, 0), 200L -> v(0, 1, 0, 0))
+      .toDF("centroid_id", "embedding")
+    val queries = df.filter(col("vec_id").isin(1L, 4L))
+    val k = 4
+    val assigned = Similarity.ivfAssign(df, cents)
+    val ivfPath = TmpWorkspaces.pidScoped("graft_rank_spec_", "ivf").toString
+    Similarity.ivfWriteIndex(assigned, ivfPath)
+    val pqCb = Pq.pqTrain(df, m = 2, ksub = 4, iters = 2)
+    val ivfPqCb = Pq.pqTrain(Pq.ivfResiduals(assigned, cents),
+      m = 2, ksub = 4, iters = 1, vecCol = "resid")
+    val ivfPqEnc = Pq.ivfPqEncode(assigned, cents, ivfPqCb)
+    val ivfPqPath = TmpWorkspaces.pidScoped("graft_rank_spec_", "ivfpq").toString
+    Pq.ivfPqWriteIndex(ivfPqEnc, ivfPqPath)
+    val serves: Seq[(String, () => DataFrame)] = Seq(
+      "bruteForceTopK" -> (() => Similarity.bruteForceTopK(df, queries, k)),
+      "ivfTopK" -> (() => Similarity.ivfTopK(assigned,
+        queries.select("vec_id"), k)),
+      "ivfTopKProbed" -> (() => Similarity.ivfTopKProbed(assigned, cents,
+        queries.select("vec_id"), k, nprobe = 2)),
+      "ivfTopKIndexed" -> (() => Similarity.ivfTopKIndexed(spark, ivfPath,
+        cents, queries, k, nprobe = 2)),
+      "ivfPqTopK" -> (() => Pq.ivfPqTopK(ivfPqEnc, cents, ivfPqCb, queries,
+        k, nprobe = 2)),
+      "ivfPqTopKIndexed" -> (() => Pq.ivfPqTopKIndexed(spark, ivfPqPath,
+        cents, ivfPqCb, queries, k, nprobe = 2)),
+      "pqTopK" -> (() => Pq.pqTopK(Pq.pqEncode(df, pqCb), pqCb, queries, k)))
+    val broken = serves.flatMap { case (name, serve) =>
+      val rows = serve().as[(Long, Int, Long, Double)].collect().toSeq
+      Seq(1L, 4L).flatMap { qid =>
+        val got = rows.filter(_._1 == qid).sortBy(_._2)
+        val ordered = got.zip(got.drop(1)).forall { case (x, y) =>
+          x._4 > y._4 || (x._4 == y._4 && x._3 < y._3)
+        }
+        val ties = got.groupBy(_._4).values.exists(_.size > 1)
+        if (got.map(_._2) == (1 to k) && ordered && ties &&
+            !got.exists(_._3 == qid)) Nil
+        else Seq(s"$name query $qid: $got")
+      }
+    }
+    assert(broken.isEmpty, broken.mkString("\n"))
   }
 
   test("lshNearDupPairs respects the bucket cap") {

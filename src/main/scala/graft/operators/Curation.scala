@@ -620,6 +620,30 @@ object Curation {
         col("n_toks_in_seq").cast("long").as("n_toks_in_seq"))
   }
 
+  /** The DuckDB twin of [[packSequencesByCount]] at the default 2-hex
+    * shard, as the tail of a WITH clause over `rel`'s (doc_id, `nCol`)
+    * rows: CTEs pt → po → pe, then the placement rows in
+    * (shard, seq_idx, doc_id) order.
+    */
+  def packSequencesByCountSql(rel: String, nCol: String, seqLen: Int): String =
+    s"""pt AS (SELECT doc_id,
+                    md5(CAST(doc_id AS VARCHAR)) AS key,
+                    substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS shard,
+                    $nCol AS n
+             FROM $rel),
+      po AS (SELECT doc_id, shard, n,
+                    CAST(SUM(n + 1) OVER (PARTITION BY shard ORDER BY key, doc_id)
+                      - (n + 1) AS BIGINT) AS s
+             FROM pt),
+      pe AS (SELECT doc_id, shard, s, n,
+                    unnest(generate_series(s // $seqLen, (s + n - 1) // $seqLen)) AS seq_idx
+             FROM po)
+      SELECT doc_id, shard, CAST(seq_idx AS BIGINT) AS seq_idx,
+             CAST(least(s + n, (seq_idx + 1) * $seqLen)
+                  - greatest(s, seq_idx * $seqLen) AS BIGINT) AS n_toks_in_seq
+      FROM pe
+      ORDER BY shard, seq_idx, doc_id"""
+
   /** The shared packing-offset window: expects a `__n` long column;
     * adds `shard` and `__start` (this doc's slot start — tokens + one
     * EOS — in its shard stream, md5-then-id order). Extracted so

@@ -285,24 +285,6 @@ object Multimodal {
       .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(dir)
   }
 
-  /** Driver-side count of the landing FILES in `dir` — the
-    * `maxFilesPerTrigger` sizing a gate needs, via one filesystem
-    * metadata listing instead of a Spark count() action over the data
-    * (hidden `_`/`.` entries excluded, matching what the `binaryFile`
-    * source would deliver). Math.toIntExact keeps a >2B-file listing a
-    * loud failure instead of a silent wrap.
-    */
-  def dirFileCount(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Int = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Math.toIntExact(fs.listStatus(p).count { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.toLong)
-  }
-
   private def assetProjection(files: DataFrame): DataFrame =
     files.select(
         // filename must be exactly <digits>.bin: anything else (a

@@ -37,6 +37,152 @@ object CepQueries {
     withinMs = WithinMs, skipPastLast = skipPastLast)
 
   // ------------------------------------------------------------------
+  // shared oracle fragments: every CEP oracle replays the same closed
+  // input, and the greedy / next-position / LEAD shapes recur
+  // ------------------------------------------------------------------
+
+  private val MsCol = "CAST(floor(epoch_us(ts) / 1000) AS BIGINT)"
+
+  /** `e AS (...` without its closing parenthesis: the events the final
+    * watermark (max(ts) minus the 1-hour delay) has passed, as `cols`
+    * plus epoch-millisecond `ms`, plus `more` (a column list led by its
+    * own comma). Callers close it, so each keeps its layout.
+    */
+  private def closedEvents(cols: String, more: String = ""): String =
+    s"""e AS (
+        SELECT $cols,
+               $MsCol AS ms$more
+        FROM events
+        WHERE ts <= (SELECT max(ts) - INTERVAL 1 HOUR FROM events)"""
+
+  /** [[closedEvents]] with each user's processing position `rn`: the
+    * (ms, event_id) order the NFA replays rows in.
+    */
+  private val rankedEvents = closedEvents("user_id, event_type, event_id",
+    s""",
+               ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY
+                 $MsCol, event_id) AS rn""")
+
+  /** `nx AS (...` without its closing parenthesis: each ranked event
+    * plus, per (event type, column) in `next`, the position of the
+    * user's first later event of that type.
+    */
+  private def nextPositions(next: (String, String)*): String = {
+    val cols = next.map { case (tpe, c) =>
+      s"""               MIN(CASE WHEN event_type = '$tpe' THEN rn END) OVER w
+                 AS $c"""
+    }.mkString(",\n")
+    s"""nx AS (
+        SELECT *,
+$cols
+        FROM e
+        WINDOW w AS (PARTITION BY user_id ORDER BY rn
+                     ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)"""
+  }
+
+  /** SKIP_PAST_LAST arbitration over the completed candidates `cand`:
+    * repeatedly take the candidate with the earliest completion (ties
+    * to the oldest start) among those starting after the previous
+    * match's completion. `cols` / `cCols` list the carried columns.
+    */
+  private def greedyMatches(cols: String, cCols: String): String =
+    s"""greedy AS (
+        (SELECT $cols
+         FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
+                          ORDER BY end_rn, s_rn) AS pick FROM cand)
+         WHERE pick = 1)
+        UNION ALL
+        SELECT $cCols
+        FROM greedy g, LATERAL (
+          SELECT * FROM cand c
+          WHERE c.user_id = g.user_id AND c.s_rn > g.end_rn
+          ORDER BY c.end_rn, c.s_rn LIMIT 1) c
+      )"""
+
+  /** `o AS (...)`: each closed event with the type, id and ms of the
+    * user's next `n` rows (`t1`, `id1`, `ms1`, ...) under strict
+    * adjacency.
+    */
+  private def nextRows(n: Int): String = {
+    val leads = (1 to n).map(i =>
+      s"""               LEAD(event_type, $i) OVER w AS t$i,
+               LEAD(event_id, $i) OVER w AS id$i,
+               LEAD(ms, $i) OVER w AS ms$i""").mkString(",\n")
+    s"""o AS (
+        SELECT *,
+$leads
+        FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id))"""
+  }
+
+  /** The V-shape MATCH_RECOGNIZE of q88 / q102 (falling then rising
+    * values, strict contiguity) under the AFTER MATCH `skip` strategy.
+    */
+  private def vShape(s: org.apache.spark.sql.SparkSession, dir: String,
+      skip: String) =
+    graft.MatchRecognizeSql.run(s, dir, s"""
+        SELECT * FROM events MATCH_RECOGNIZE (
+          PARTITION BY user_id
+          ORDER BY ts
+          MEASURES A.event_id AS start_id, FIRST(DOWN.value) AS first_down,
+                   LAST(DOWN.event_id) AS bottom_id,
+                   LAST(UP.event_id) AS top_id, LAST(UP.value) AS last_up
+          ONE ROW PER MATCH
+          AFTER MATCH $skip
+          PATTERN (A DOWN+ UP+)
+          WITHIN INTERVAL '90' DAY
+          DEFINE DOWN AS DOWN.value < PREV(DOWN.value),
+                 UP AS UP.value > PREV(UP.value)
+        )""")
+      .orderBy(col("user_id"), col("start_id"))
+
+  /** The V-shape oracle of q88 / q102: gaps-and-islands runs of falling
+    * and rising values, every down-run followed by an up-run and a
+    * break row, the start rows `startsOn` admits (a join predicate over
+    * `p` the start row and `c` the V), and the MEASURES read off them.
+    */
+  private def vShapeOracle(startsOn: String): String = s"""
+      WITH ${closedEvents("user_id, event_id, value")}),
+      o AS (
+        SELECT *, ROW_NUMBER() OVER w AS rn, LAG(value) OVER w AS pv
+        FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)),
+      d AS (
+        SELECT *, CASE WHEN pv IS NULL THEN NULL
+                       WHEN value < pv THEN 'D'
+                       WHEN value > pv THEN 'U' ELSE 'F' END AS dir
+        FROM o),
+      ch AS (
+        SELECT *, CASE WHEN dir IS DISTINCT FROM
+                            LAG(dir) OVER (PARTITION BY user_id ORDER BY rn)
+                       THEN 1 ELSE 0 END AS chg
+        FROM d),
+      isl AS (
+        SELECT *, SUM(chg) OVER (PARTITION BY user_id ORDER BY rn) AS island
+        FROM ch),
+      runs AS (
+        SELECT user_id, island, dir, MIN(rn) AS s, MAX(rn) AS en
+        FROM isl GROUP BY user_id, island, dir),
+      cand AS (
+        SELECT dr.user_id, dr.s AS ds, dr.en AS de, ur.en AS ue
+        FROM runs dr
+        JOIN runs ur ON ur.user_id = dr.user_id AND ur.s = dr.en + 1
+        WHERE dr.dir = 'D' AND ur.dir = 'U'
+          AND ur.en < (SELECT MAX(rn) FROM isl i
+                       WHERE i.user_id = dr.user_id)),
+      starts AS (
+        SELECT c.*, p.rn AS p_rn, p.event_id AS start_id
+        FROM cand c
+        JOIN isl p ON $startsOn)
+      SELECT st.user_id AS user_id, st.start_id, fd.value AS first_down,
+             bot.event_id AS bottom_id, top.event_id AS top_id,
+             top.value AS last_up
+      FROM starts st
+      JOIN isl fd ON fd.user_id = st.user_id AND fd.rn = st.p_rn + 1
+      JOIN isl bot ON bot.user_id = st.user_id AND bot.rn = st.de
+      JOIN isl top ON top.user_id = st.user_id AND top.rn = st.ue
+      ORDER BY user_id, start_id
+    """
+
+  // ------------------------------------------------------------------
   // q61 NO_SKIP: every signup → purchase → error within 3 days
   // ------------------------------------------------------------------
 
@@ -54,11 +200,7 @@ object CepQueries {
           col("error_id"))
     },
     Some(s"""
-      WITH e AS (
-        SELECT user_id, event_type, event_id,
-               CAST(floor(epoch_us(ts) / 1000) AS BIGINT) AS ms
-        FROM events
-        WHERE ts <= (SELECT max(ts) - INTERVAL 1 HOUR FROM events)
+      WITH ${closedEvents("user_id, event_type, event_id")}
       )
       SELECT s.user_id, s.event_id AS signup_id, p.event_id AS purchase_id,
              r.event_id AS error_id, s.ms AS start_ms, r.ms AS end_ms
@@ -94,23 +236,9 @@ object CepQueries {
         .orderBy(col("user_id"), col("signup_id"))
     },
     Some(s"""
-      WITH RECURSIVE e AS (
-        SELECT user_id, event_type, event_id,
-               CAST(floor(epoch_us(ts) / 1000) AS BIGINT) AS ms,
-               ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY
-                 CAST(floor(epoch_us(ts) / 1000) AS BIGINT), event_id) AS rn
-        FROM events
-        WHERE ts <= (SELECT max(ts) - INTERVAL 1 HOUR FROM events)
+      WITH RECURSIVE $rankedEvents
       ),
-      nx AS (
-        SELECT *,
-               MIN(CASE WHEN event_type = 'purchase' THEN rn END) OVER w
-                 AS next_pur_rn,
-               MIN(CASE WHEN event_type = 'error' THEN rn END) OVER w
-                 AS next_err_rn
-        FROM e
-        WINDOW w AS (PARTITION BY user_id ORDER BY rn
-                     ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)
+      ${nextPositions("purchase" -> "next_pur_rn", "error" -> "next_err_rn")}
       ),
       cand AS (
         SELECT s.user_id, s.rn AS s_rn, s.event_id AS signup_id,
@@ -121,19 +249,9 @@ object CepQueries {
         JOIN nx r ON r.user_id = s.user_id AND r.rn = p.next_err_rn
         WHERE s.event_type = 'signup' AND r.ms - s.ms <= $WithinMs
       ),
-      greedy AS (
-        (SELECT user_id, s_rn, signup_id, purchase_id, error_id, end_rn
-         FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-                          ORDER BY end_rn, s_rn) AS pick FROM cand)
-         WHERE pick = 1)
-        UNION ALL
-        SELECT c.user_id, c.s_rn, c.signup_id, c.purchase_id, c.error_id,
-               c.end_rn
-        FROM greedy g, LATERAL (
-          SELECT * FROM cand c
-          WHERE c.user_id = g.user_id AND c.s_rn > g.end_rn
-          ORDER BY c.end_rn, c.s_rn LIMIT 1) c
-      )
+      ${greedyMatches("user_id, s_rn, signup_id, purchase_id, error_id, end_rn",
+        """c.user_id, c.s_rn, c.signup_id, c.purchase_id, c.error_id,
+               c.end_rn""")}
       SELECT user_id, signup_id, purchase_id, error_id
       FROM greedy ORDER BY user_id, signup_id
     """))
@@ -162,11 +280,7 @@ object CepQueries {
         .orderBy(col("user_id"), col("signup_id"), col("error_id"))
     },
     Some(s"""
-      WITH e AS (
-        SELECT user_id, event_type, event_id,
-               CAST(floor(epoch_us(ts) / 1000) AS BIGINT) AS ms
-        FROM events
-        WHERE ts <= (SELECT max(ts) - INTERVAL 1 HOUR FROM events)),
+      WITH ${closedEvents("user_id, event_type, event_id")}),
       nxt AS (
         SELECT user_id, event_type, event_id, ms,
                LEAD(event_type) OVER w AS n_type,
@@ -194,69 +308,9 @@ object CepQueries {
 
   val q88MatchRecognizeVShape: QueryDef = QueryDef(
     "q88_mr_vshape",
-    (s, dir) => {
-      graft.MatchRecognizeSql.run(s, dir, """
-        SELECT * FROM events MATCH_RECOGNIZE (
-          PARTITION BY user_id
-          ORDER BY ts
-          MEASURES A.event_id AS start_id, FIRST(DOWN.value) AS first_down,
-                   LAST(DOWN.event_id) AS bottom_id,
-                   LAST(UP.event_id) AS top_id, LAST(UP.value) AS last_up
-          ONE ROW PER MATCH
-          AFTER MATCH SKIP TO NEXT ROW
-          PATTERN (A DOWN+ UP+)
-          WITHIN INTERVAL '90' DAY
-          DEFINE DOWN AS DOWN.value < PREV(DOWN.value),
-                 UP AS UP.value > PREV(UP.value)
-        )""")
-        .orderBy(col("user_id"), col("start_id"))
-    },
-    Some("""
-      WITH e AS (
-        SELECT user_id, event_id, value,
-               CAST(floor(epoch_us(ts) / 1000) AS BIGINT) AS ms
-        FROM events
-        WHERE ts <= (SELECT max(ts) - INTERVAL 1 HOUR FROM events)),
-      o AS (
-        SELECT *, ROW_NUMBER() OVER w AS rn, LAG(value) OVER w AS pv
-        FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)),
-      d AS (
-        SELECT *, CASE WHEN pv IS NULL THEN NULL
-                       WHEN value < pv THEN 'D'
-                       WHEN value > pv THEN 'U' ELSE 'F' END AS dir
-        FROM o),
-      ch AS (
-        SELECT *, CASE WHEN dir IS DISTINCT FROM
-                            LAG(dir) OVER (PARTITION BY user_id ORDER BY rn)
-                       THEN 1 ELSE 0 END AS chg
-        FROM d),
-      isl AS (
-        SELECT *, SUM(chg) OVER (PARTITION BY user_id ORDER BY rn) AS island
-        FROM ch),
-      runs AS (
-        SELECT user_id, island, dir, MIN(rn) AS s, MAX(rn) AS en
-        FROM isl GROUP BY user_id, island, dir),
-      cand AS (
-        SELECT dr.user_id, dr.s AS ds, dr.en AS de, ur.en AS ue
-        FROM runs dr
-        JOIN runs ur ON ur.user_id = dr.user_id AND ur.s = dr.en + 1
-        WHERE dr.dir = 'D' AND ur.dir = 'U'
-          AND ur.en < (SELECT MAX(rn) FROM isl i
-                       WHERE i.user_id = dr.user_id)),
-      starts AS (
-        SELECT c.*, p.rn AS p_rn, p.event_id AS start_id
-        FROM cand c
-        JOIN isl p ON p.user_id = c.user_id
-                  AND p.rn BETWEEN c.ds - 1 AND c.de - 1)
-      SELECT st.user_id AS user_id, st.start_id, fd.value AS first_down,
-             bot.event_id AS bottom_id, top.event_id AS top_id,
-             top.value AS last_up
-      FROM starts st
-      JOIN isl fd ON fd.user_id = st.user_id AND fd.rn = st.p_rn + 1
-      JOIN isl bot ON bot.user_id = st.user_id AND bot.rn = st.de
-      JOIN isl top ON top.user_id = st.user_id AND top.rn = st.ue
-      ORDER BY user_id, start_id
-    """))
+    (s, dir) => vShape(s, dir, "SKIP TO NEXT ROW"),
+    Some(vShapeOracle("""p.user_id = c.user_id
+                  AND p.rn BETWEEN c.ds - 1 AND c.de - 1""")))
 
   // ------------------------------------------------------------------
   // q89 CEP DSL quantifier: signup (click)+ purchase, relaxed
@@ -289,23 +343,9 @@ object CepQueries {
         .orderBy(col("user_id"), col("signup_id"))
     },
     Some(s"""
-      WITH RECURSIVE e AS (
-        SELECT user_id, event_type, event_id,
-               CAST(floor(epoch_us(ts) / 1000) AS BIGINT) AS ms,
-               ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY
-                 CAST(floor(epoch_us(ts) / 1000) AS BIGINT), event_id) AS rn
-        FROM events
-        WHERE ts <= (SELECT max(ts) - INTERVAL 1 HOUR FROM events)
+      WITH RECURSIVE $rankedEvents
       ),
-      nx AS (
-        SELECT *,
-               MIN(CASE WHEN event_type = 'click' THEN rn END) OVER w
-                 AS next_click_rn,
-               MIN(CASE WHEN event_type = 'purchase' THEN rn END) OVER w
-                 AS next_pur_rn
-        FROM e
-        WINDOW w AS (PARTITION BY user_id ORDER BY rn
-                     ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)
+      ${nextPositions("click" -> "next_click_rn", "purchase" -> "next_pur_rn")}
       ),
       cand AS (
         SELECT s.user_id, s.rn AS s_rn, s.event_id AS signup_id,
@@ -322,20 +362,10 @@ object CepQueries {
         JOIN nx pu ON pu.user_id = c1.user_id AND pu.rn = c1.next_pur_rn
         WHERE s.event_type = 'signup' AND pu.ms - s.ms <= $WithinMs
       ),
-      greedy AS (
-        (SELECT user_id, s_rn, signup_id, n_clicks, first_click_id,
-                last_click_id, purchase_id, end_rn
-         FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-                          ORDER BY end_rn, s_rn) AS pick FROM cand)
-         WHERE pick = 1)
-        UNION ALL
-        SELECT c.user_id, c.s_rn, c.signup_id, c.n_clicks,
-               c.first_click_id, c.last_click_id, c.purchase_id, c.end_rn
-        FROM greedy g, LATERAL (
-          SELECT * FROM cand c
-          WHERE c.user_id = g.user_id AND c.s_rn > g.end_rn
-          ORDER BY c.end_rn, c.s_rn LIMIT 1) c
-      )
+      ${greedyMatches("""user_id, s_rn, signup_id, n_clicks, first_click_id,
+                last_click_id, purchase_id, end_rn""",
+        """c.user_id, c.s_rn, c.signup_id, c.n_clicks,
+               c.first_click_id, c.last_click_id, c.purchase_id, c.end_rn""")}
       SELECT user_id, signup_id, CAST(n_clicks AS INTEGER) AS n_clicks,
              first_click_id, last_click_id, purchase_id
       FROM greedy ORDER BY user_id, signup_id
@@ -366,20 +396,8 @@ object CepQueries {
         .orderBy(col("user_id"), col("signup_id"), col("purchase_id"))
     },
     Some(s"""
-      WITH e AS (
-        SELECT user_id, event_type, event_id,
-               CAST(floor(epoch_us(ts) / 1000) AS BIGINT) AS ms,
-               ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY
-                 CAST(floor(epoch_us(ts) / 1000) AS BIGINT), event_id) AS rn
-        FROM events
-        WHERE ts <= (SELECT max(ts) - INTERVAL 1 HOUR FROM events)),
-      nx AS (
-        SELECT *,
-               MIN(CASE WHEN event_type = 'error' THEN rn END) OVER w
-                 AS next_err_rn
-        FROM e
-        WINDOW w AS (PARTITION BY user_id ORDER BY rn
-                     ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING))
+      WITH $rankedEvents),
+      ${nextPositions("error" -> "next_err_rn")})
       SELECT s.user_id, s.event_id AS signup_id, p.event_id AS purchase_id
       FROM nx s
       JOIN e p ON p.user_id = s.user_id AND p.event_type = 'purchase'
@@ -417,21 +435,9 @@ object CepQueries {
         )""")
         .orderBy(col("user_id"), col("view_id"))
     },
-    Some("""
-      WITH e AS (
-        SELECT user_id, event_id, event_type,
-               CAST(floor(epoch_us(ts) / 1000) AS BIGINT) AS ms
-        FROM events
-        WHERE ts <= (SELECT max(ts) - INTERVAL 1 HOUR FROM events)),
-      o AS (
-        SELECT *,
-               LEAD(event_type, 1) OVER w AS t1,
-               LEAD(event_id, 1) OVER w AS id1,
-               LEAD(ms, 1) OVER w AS ms1,
-               LEAD(event_type, 2) OVER w AS t2,
-               LEAD(event_id, 2) OVER w AS id2,
-               LEAD(ms, 2) OVER w AS ms2
-        FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id))
+    Some(s"""
+      WITH ${closedEvents("user_id, event_id, event_type")}),
+      ${nextRows(2)}
       SELECT user_id, event_id AS view_id,
              CASE WHEN t1 = 'click' THEN id1 END AS click_id,
              CASE WHEN t1 = 'purchase' THEN id1 ELSE id2 END AS purchase_id
@@ -453,68 +459,8 @@ object CepQueries {
 
   val q102MrSkipToLast: QueryDef = QueryDef(
     "q102_mr_skip_to_last",
-    (s, dir) => {
-      graft.MatchRecognizeSql.run(s, dir, """
-        SELECT * FROM events MATCH_RECOGNIZE (
-          PARTITION BY user_id
-          ORDER BY ts
-          MEASURES A.event_id AS start_id, FIRST(DOWN.value) AS first_down,
-                   LAST(DOWN.event_id) AS bottom_id,
-                   LAST(UP.event_id) AS top_id, LAST(UP.value) AS last_up
-          ONE ROW PER MATCH
-          AFTER MATCH SKIP TO LAST DOWN
-          PATTERN (A DOWN+ UP+)
-          WITHIN INTERVAL '90' DAY
-          DEFINE DOWN AS DOWN.value < PREV(DOWN.value),
-                 UP AS UP.value > PREV(UP.value)
-        )""")
-        .orderBy(col("user_id"), col("start_id"))
-    },
-    Some("""
-      WITH e AS (
-        SELECT user_id, event_id, value,
-               CAST(floor(epoch_us(ts) / 1000) AS BIGINT) AS ms
-        FROM events
-        WHERE ts <= (SELECT max(ts) - INTERVAL 1 HOUR FROM events)),
-      o AS (
-        SELECT *, ROW_NUMBER() OVER w AS rn, LAG(value) OVER w AS pv
-        FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id)),
-      d AS (
-        SELECT *, CASE WHEN pv IS NULL THEN NULL
-                       WHEN value < pv THEN 'D'
-                       WHEN value > pv THEN 'U' ELSE 'F' END AS dir
-        FROM o),
-      ch AS (
-        SELECT *, CASE WHEN dir IS DISTINCT FROM
-                            LAG(dir) OVER (PARTITION BY user_id ORDER BY rn)
-                       THEN 1 ELSE 0 END AS chg
-        FROM d),
-      isl AS (
-        SELECT *, SUM(chg) OVER (PARTITION BY user_id ORDER BY rn) AS island
-        FROM ch),
-      runs AS (
-        SELECT user_id, island, dir, MIN(rn) AS s, MAX(rn) AS en
-        FROM isl GROUP BY user_id, island, dir),
-      cand AS (
-        SELECT dr.user_id, dr.s AS ds, dr.en AS de, ur.en AS ue
-        FROM runs dr
-        JOIN runs ur ON ur.user_id = dr.user_id AND ur.s = dr.en + 1
-        WHERE dr.dir = 'D' AND ur.dir = 'U'
-          AND ur.en < (SELECT MAX(rn) FROM isl i
-                       WHERE i.user_id = dr.user_id)),
-      starts AS (
-        SELECT c.*, p.rn AS p_rn, p.event_id AS start_id
-        FROM cand c
-        JOIN isl p ON p.user_id = c.user_id AND p.rn = c.ds - 1)
-      SELECT st.user_id AS user_id, st.start_id, fd.value AS first_down,
-             bot.event_id AS bottom_id, top.event_id AS top_id,
-             top.value AS last_up
-      FROM starts st
-      JOIN isl fd ON fd.user_id = st.user_id AND fd.rn = st.p_rn + 1
-      JOIN isl bot ON bot.user_id = st.user_id AND bot.rn = st.de
-      JOIN isl top ON top.user_id = st.user_id AND top.rn = st.ue
-      ORDER BY user_id, start_id
-    """))
+    (s, dir) => vShape(s, dir, "SKIP TO LAST DOWN"),
+    Some(vShapeOracle("p.user_id = c.user_id AND p.rn = c.ds - 1")))
 
   // ------------------------------------------------------------------
   // q115 TRAILING optional step (Flink `Pattern#optional` at the last
@@ -546,18 +492,9 @@ object CepQueries {
         )""")
         .orderBy(col("user_id"), col("view_id"))
     },
-    Some("""
-      WITH e AS (
-        SELECT user_id, event_id, event_type,
-               CAST(floor(epoch_us(ts) / 1000) AS BIGINT) AS ms
-        FROM events
-        WHERE ts <= (SELECT max(ts) - INTERVAL 1 HOUR FROM events)),
-      o AS (
-        SELECT *,
-               LEAD(event_type, 1) OVER w AS t1,
-               LEAD(event_id, 1) OVER w AS id1,
-               LEAD(ms, 1) OVER w AS ms1
-        FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ms, event_id))
+    Some(s"""
+      WITH ${closedEvents("user_id, event_id, event_type")}),
+      ${nextRows(1)}
       SELECT user_id, event_id AS view_id,
              CASE WHEN t1 = 'click' AND ms1 - ms <= 604800000
                   THEN id1 END AS click_id
@@ -596,20 +533,8 @@ object CepQueries {
         .orderBy(col("user_id"), col("signup_id"))
     },
     Some(s"""
-      WITH e AS (
-        SELECT user_id, event_type, event_id,
-               CAST(floor(epoch_us(ts) / 1000) AS BIGINT) AS ms,
-               ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY
-                 CAST(floor(epoch_us(ts) / 1000) AS BIGINT), event_id) AS rn
-        FROM events
-        WHERE ts <= (SELECT max(ts) - INTERVAL 1 HOUR FROM events)),
-      nx AS (
-        SELECT *,
-               MIN(CASE WHEN event_type = 'purchase' THEN rn END) OVER w
-                 AS next_pur_rn
-        FROM e
-        WINDOW w AS (PARTITION BY user_id ORDER BY rn
-                     ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING))
+      WITH $rankedEvents),
+      ${nextPositions("purchase" -> "next_pur_rn")})
       SELECT s.user_id, s.event_id AS signup_id, p.event_id AS purchase_id
       FROM nx s
       JOIN e p ON p.user_id = s.user_id AND p.rn = s.next_pur_rn

@@ -315,12 +315,6 @@ object CurationQueries {
   // q124 weighted source mixing (epoch up/down-sampling)
   // ------------------------------------------------------------------
 
-  /** Domain-weight mixing: each source replicated or subsampled to its
-    * target rate (2.5x, 1x, 0.5x, …; unmapped sources drop). Engine
-    * and oracle derive base copies and the fractional 2-hex-char
-    * threshold from the SAME Scala map, so the realized per-row copy
-    * counts are bit-identical. A pure narrow map — zero shuffle.
-    */
   /** SQL expression twins of [[graft.operators.Curation.weightedMix]]'s
     * base-copies and fractional-threshold when-chains, derived from
     * [[graft.operators.Curation.mixThresholds]] — the ONE place the
@@ -344,6 +338,12 @@ object CurationQueries {
     else s"CASE $stratum ${branches.mkString(" ")} ELSE NULL END"
   }
 
+  /** Domain-weight mixing: each source replicated or subsampled to its
+    * target rate (2.5x, 1x, 0.5x, …; unmapped sources drop). Engine
+    * and oracle derive base copies and the fractional 2-hex-char
+    * threshold from the SAME Scala map, so the realized per-row copy
+    * counts are bit-identical. A pure narrow map — zero shuffle.
+    */
   val q124WeightedMix: QueryDef = {
     val rates = Map(
       "src0" -> 2.5, "src1" -> 1.0, "src2" -> 0.5, "src3" -> 0.25,
@@ -473,12 +473,6 @@ object CurationQueries {
   // q130 unigram-LM quality filter (CCNet-style)
   // ------------------------------------------------------------------
 
-  /** Per-document unigram negative log-likelihood against the corpus's
-    * own token distribution, with a keep flag at NLL <= 3.404 (the
-    * corpus median at test scale — both classes populated). Token
-    * log-probs are quantized to longs before the per-doc sum so the
-    * result is order-independent and engine-exact.
-    */
   /** The fixed-point unigram-NLL scoring CTEs (ending in `scores` =
     * (doc_id, n_tok, nll)) — shared by q130's fixed-threshold gate and
     * q187's percentile gate, so the quantized-log arithmetic is ONE
@@ -501,6 +495,12 @@ object CurationQueries {
                       round(-(s) / (1000000.0 * n_tok), 6) AS nll
                FROM agg)"""
 
+  /** Per-document unigram negative log-likelihood against the corpus's
+    * own token distribution, with a keep flag at NLL <= 3.404 (the
+    * corpus median at test scale — both classes populated). Token
+    * log-probs are quantized to longs before the per-doc sum so the
+    * result is order-independent and engine-exact.
+    */
   val q130UnigramQuality: QueryDef = QueryDef(
     "q130_unigram_quality",
     (s, dir) =>
@@ -580,6 +580,32 @@ object CurationQueries {
       ORDER BY doc_id
     """))
 
+  /** CTEs tf → tot → cnts → sc over `tk` = (doc_id, tok) rows: each
+    * (doc, token)'s count `tf` and the token's fixed-point corpus
+    * log-probability `lpf` — q132 and q135 score unigram NLL from
+    * them. */
+  private[queries] val unigramLogProbCtes =
+    """tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM tk GROUP BY 1, 2),
+        tot AS (SELECT SUM(tf) AS total_toks FROM tf),
+        cnts AS (SELECT tok, SUM(tf) AS cnt FROM tf GROUP BY 1),
+        sc AS (SELECT t.doc_id, t.tf,
+                      CAST(FLOOR(ln(CAST(c.cnt AS DOUBLE) / tt.total_toks)
+                                 * 1000000.0) AS BIGINT) AS lpf
+               FROM tf t JOIN cnts c USING (tok) CROSS JOIN tot tt)"""
+
+  /** CTEs o → e over `t` = (doc_id, key, shard, n): each document's slot
+    * start `s` in its shard stream (tokens plus one EOS, key-then-id
+    * order) and one row per `seqLen`-token sequence it overlaps — the
+    * offset arithmetic of [[graft.operators.Curation.packSequences]]. */
+  private[queries] def packOffsetCtes(seqLen: Int): String =
+    s"""o AS (SELECT doc_id, shard, n,
+                     CAST(SUM(n + 1) OVER (PARTITION BY shard ORDER BY key, doc_id)
+                       - (n + 1) AS BIGINT) AS s
+              FROM t),
+        e AS (SELECT doc_id, shard, s, n,
+                     unnest(generate_series(s // $seqLen, (s + n - 1) // $seqLen)) AS seq_idx
+              FROM o)"""
+
   // ------------------------------------------------------------------
   // q131 concat-and-cut sequence packing
   // ------------------------------------------------------------------
@@ -605,13 +631,7 @@ object CurationQueries {
                           substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS shard,
                           CAST(len(${TextOps.tokensSql("text")}) AS BIGINT) AS n
                    FROM documents),
-        o AS (SELECT doc_id, shard, n,
-                     CAST(SUM(n + 1) OVER (PARTITION BY shard ORDER BY key, doc_id)
-                       - (n + 1) AS BIGINT) AS s
-              FROM t),
-        e AS (SELECT doc_id, shard, s, n,
-                     unnest(generate_series(s // 64, (s + n - 1) // 64)) AS seq_idx
-              FROM o)
+        ${packOffsetCtes(64)}
         SELECT doc_id, shard, CAST(seq_idx AS BIGINT) AS seq_idx,
                CAST(least(s + n, (seq_idx + 1) * 64)
                     - greatest(s, seq_idx * 64) AS BIGINT) AS n_toks_in_seq
@@ -666,13 +686,7 @@ object CurationQueries {
       Some(s"""
         WITH tk AS (SELECT doc_id, unnest(${TextOps.tokensSql("text")}) AS tok
                     FROM documents),
-        tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM tk GROUP BY 1, 2),
-        tot AS (SELECT SUM(tf) AS total_toks FROM tf),
-        cnts AS (SELECT tok, SUM(tf) AS cnt FROM tf GROUP BY 1),
-        sc AS (SELECT t.doc_id, t.tf,
-                      CAST(FLOOR(ln(CAST(c.cnt AS DOUBLE) / tt.total_toks)
-                                 * 1000000.0) AS BIGINT) AS lpf
-               FROM tf t JOIN cnts c USING (tok) CROSS JOIN tot tt),
+        $unigramLogProbCtes,
         agg AS (SELECT doc_id, round(-(SUM(tf * lpf)) / (1000000.0 * SUM(tf)), 6)
                          AS nll
                 FROM sc GROUP BY 1),
@@ -724,17 +738,6 @@ object CurationQueries {
         .orderBy(col("doc_id")),
     Some(TextAnalysis.bigramNllSql("documents", "doc_id", "text", BigramNllMedian)))
 
-  /** Temperature-scaled mixture derivation
-    * ([[graft.operators.Curation.temperatureMixture]]) — the step
-    * q124's [[graft.operators.Curation.weightedMix]] assumes already
-    * happened: per-source token masses reweighted at α = 1/2
-    * (fixed-point-quantized sqrt so Σq is an exact long), a 12k-token
-    * global budget split by the reweighted shares, and every
-    * document's deterministic hash draw against its source's rate.
-    * The oracle replays mass measurement, quantization, the budget
-    * split, and EVERY per-document draw — a one-ulp drift in any
-    * rate, or one flipped draw, hash-fails one of the 500 rows.
-    */
   /** The shared q179/q181 budget: ~45% of the sf0.01 gate corpus's
     * token mass, so admission is properly mixed per source.
     */
@@ -784,6 +787,17 @@ object CurationQueries {
     ORDER BY doc_id
   """
 
+  /** Temperature-scaled mixture derivation
+    * ([[graft.operators.Curation.temperatureMixture]]) — the step
+    * q124's [[graft.operators.Curation.weightedMix]] assumes already
+    * happened: per-source token masses reweighted at α = 1/2
+    * (fixed-point-quantized sqrt so Σq is an exact long), a 12k-token
+    * global budget split by the reweighted shares, and every
+    * document's deterministic hash draw against its source's rate.
+    * The oracle replays mass measurement, quantization, the budget
+    * split, and EVERY per-document draw — a one-ulp drift in any
+    * rate, or one flipped draw, hash-fails one of the 500 rows.
+    */
   val q179TemperatureMixture: QueryDef = QueryDef(
     "q179_temperature_mixture",
     (s, dir) =>
@@ -848,23 +862,7 @@ object CurationQueries {
       adm AS (SELECT t.doc_id, t.n_toks
               FROM tm t JOIN rt r USING (source)
               WHERE $mixtureAdmittedSql),
-      pt AS (SELECT doc_id,
-                    md5(CAST(doc_id AS VARCHAR)) AS key,
-                    substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS shard,
-                    n_toks AS n
-             FROM adm),
-      po AS (SELECT doc_id, shard, n,
-                    CAST(SUM(n + 1) OVER (PARTITION BY shard ORDER BY key, doc_id)
-                      - (n + 1) AS BIGINT) AS s
-             FROM pt),
-      pe AS (SELECT doc_id, shard, s, n,
-                    unnest(generate_series(s // 256, (s + n - 1) // 256)) AS seq_idx
-             FROM po)
-      SELECT doc_id, shard, CAST(seq_idx AS BIGINT) AS seq_idx,
-             CAST(least(s + n, (seq_idx + 1) * 256)
-                  - greatest(s, seq_idx * 256) AS BIGINT) AS n_toks_in_seq
-      FROM pe
-      ORDER BY shard, seq_idx, doc_id
+      ${Curation.packSequencesByCountSql("adm", "n_toks", 256)}
     """))
 
   /** Day-2 of the mixture ([[graft.operators.Curation

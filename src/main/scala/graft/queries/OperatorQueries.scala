@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{FlinkSql, QueryDef, Tables}
 import graft.operators.{AsyncLookup, CdcFormats, LookupJoin, Multimodal, TemporalJoin, TmpWorkspaces}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -48,27 +49,41 @@ object OperatorQueries {
   // q46 lookup join: point lookups + LRU cache against a dim store
   // ------------------------------------------------------------------
 
-  val q46LookupJoin: QueryDef = QueryDef(
-    "q46_lookup_join",
-    (s, dir) => {
-      val dim = Tables.load(s, dir, "nation")
-        .join(broadcast(Tables.load(s, dir, "region")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("n_nationkey"), col("n_name"), col("r_name"))
-      val (store, outSchema) = LookupJoin.storeFrom(dim)
-      LookupJoin.enrich(
-          Tables.load(s, dir, "supplier")
-            .select(col("s_suppkey"), col("s_name"), col("s_nationkey")),
-          "s_nationkey", store, outSchema, cacheSize = 8)
-        .orderBy(col("s_suppkey"))
-    },
-    Some("""
+  /** The lookup members' dimension: nation with its region name, keyed
+    * by `n_nationkey`.
+    */
+  private def nationDim(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "nation")
+      .join(broadcast(Tables.load(s, dir, "region")),
+        col("n_regionkey") === col("r_regionkey"))
+      .select(col("n_nationkey"), col("n_name"), col("r_name"))
+
+  /** The lookup members' probe side: each supplier and its nation key. */
+  private def suppliers(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "supplier")
+      .select(col("s_suppkey"), col("s_name"), col("s_nationkey"))
+
+  /** Every lookup member (q46 cached, q98 batched, q122 async) enriches
+    * each supplier exactly once, so all three answer this left-outer
+    * join.
+    */
+  private val lookupOracle = Some("""
       SELECT s_suppkey, s_name, s_nationkey, n_name, r_name
       FROM supplier
       LEFT JOIN nation ON s_nationkey = n_nationkey
       LEFT JOIN region ON n_regionkey = r_regionkey
       ORDER BY s_suppkey
-    """))
+    """)
+
+  val q46LookupJoin: QueryDef = QueryDef(
+    "q46_lookup_join",
+    (s, dir) => {
+      val (store, outSchema) = LookupJoin.storeFrom(nationDim(s, dir))
+      LookupJoin.enrich(suppliers(s, dir), "s_nationkey", store, outSchema,
+          cacheSize = 8)
+        .orderBy(col("s_suppkey"))
+    },
+    lookupOracle)
 
   // ------------------------------------------------------------------
   // q98 batched lookup join — the async-lookup-I/O analog: distinct
@@ -79,24 +94,12 @@ object OperatorQueries {
   val q98LookupBatched: QueryDef = QueryDef(
     "q98_lookup_batched",
     (s, dir) => {
-      val dim = Tables.load(s, dir, "nation")
-        .join(broadcast(Tables.load(s, dir, "region")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("n_nationkey"), col("n_name"), col("r_name"))
-      val (store, outSchema) = LookupJoin.batchedStoreFrom(dim)
-      LookupJoin.enrichBatched(
-          Tables.load(s, dir, "supplier")
-            .select(col("s_suppkey"), col("s_name"), col("s_nationkey")),
-          "s_nationkey", store, outSchema, batchSize = 64)
+      val (store, outSchema) = LookupJoin.batchedStoreFrom(nationDim(s, dir))
+      LookupJoin.enrichBatched(suppliers(s, dir), "s_nationkey", store,
+          outSchema, batchSize = 64)
         .orderBy(col("s_suppkey"))
     },
-    Some("""
-      SELECT s_suppkey, s_name, s_nationkey, n_name, r_name
-      FROM supplier
-      LEFT JOIN nation ON s_nationkey = n_nationkey
-      LEFT JOIN region ON n_regionkey = r_regionkey
-      ORDER BY s_suppkey
-    """))
+    lookupOracle)
 
   // ------------------------------------------------------------------
   // q122 ASYNC lookup join (AsyncWaitOperator / unorderedWait analog):
@@ -111,26 +114,13 @@ object OperatorQueries {
   val q122AsyncLookup: QueryDef = QueryDef(
     "q122_async_lookup",
     (s, dir) => {
-      val dim = Tables.load(s, dir, "nation")
-        .join(broadcast(Tables.load(s, dir, "region")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("n_nationkey"), col("n_name"), col("r_name"))
       val (store, outSchema) = AsyncLookup.asyncStoreFrom(
-        dim, k => (k.asInstanceOf[Number].longValue() % 4).toLong)
-      AsyncLookup.enrichAsync(
-          Tables.load(s, dir, "supplier")
-            .select(col("s_suppkey"), col("s_name"), col("s_nationkey")),
-          "s_nationkey", store, outSchema, capacity = 32,
-          timeoutMs = 30000, ordered = false)
+        nationDim(s, dir), k => (k.asInstanceOf[Number].longValue() % 4).toLong)
+      AsyncLookup.enrichAsync(suppliers(s, dir), "s_nationkey", store,
+          outSchema, capacity = 32, timeoutMs = 30000, ordered = false)
         .orderBy(col("s_suppkey"))
     },
-    Some("""
-      SELECT s_suppkey, s_name, s_nationkey, n_name, r_name
-      FROM supplier
-      LEFT JOIN nation ON s_nationkey = n_nationkey
-      LEFT JOIN region ON n_regionkey = r_regionkey
-      ORDER BY s_suppkey
-    """))
+    lookupOracle)
 
   // ------------------------------------------------------------------
   // q47 deduplicate keep-last (the reference's StreamExecDeduplicate

@@ -57,6 +57,27 @@ object PipelineQueries {
 
   private val shingleCtes: String = shingleCtesFrom("documents")
 
+  /** CTEs after [[shingleCtes]] ending in `inter` = (blk, doc_a, doc_b,
+    * i): the shared-shingle counts of every same-source document pair
+    * over capped postings (`cnts` holds each document's shingle count)
+    * — the inverted-index core q33's Jaccard and q153's containment
+    * both threshold.
+    */
+  private val blockedShingleInterCtes: String = s"""$shingleCtes,
+      blk AS (SELECT doc_id, source FROM documents WHERE source IS NOT NULL),
+      hd AS (SELECT DISTINCT doc_id, h FROM hs),
+      cnts AS (SELECT doc_id, COUNT(*) AS n FROM hd GROUP BY doc_id),
+      pb AS (SELECT b.source AS blk, hd.doc_id, hd.h
+             FROM hd JOIN blk b ON b.doc_id = hd.doc_id),
+      capped AS (SELECT blk, doc_id, h FROM (
+        SELECT *, COUNT(*) OVER (PARTITION BY blk, h) AS pn FROM pb) t
+        WHERE pn <= 10000),
+      inter AS (SELECT x.blk, x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i
+                FROM capped x
+                JOIN capped y ON y.blk = x.blk AND y.h = x.h
+                             AND x.doc_id < y.doc_id
+                GROUP BY 1, 2, 3)"""
+
   /** CTEs bd_toks → bd_st → bd_blocks → bd_rk → bd(doc_id, n_blocks,
     * n_kept, text_deduped): the [[graft.operators.Dedup.blockDedup]]
     * oracle chain over any (doc_id, text) relation — shared by q123 and
@@ -143,6 +164,18 @@ object PipelineQueries {
 
   private[queries] val minhashPairCtes: String = minhashPairCtesFrom("documents")
 
+  /** Recursive CTEs after [[minhashPairCtes]]: `e` = both directions of
+    * every pair, `walk(v, lbl)` = every label reachable from `v`; a
+    * vertex's component is its MIN(lbl) — the oracle twin of
+    * [[graft.operators.Dedup.connectedComponents]]. */
+  private val componentWalkCtes = """e AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
+            UNION SELECT doc_b, doc_a FROM pairs),
+      walk(v, lbl) AS (
+        SELECT DISTINCT src, src FROM e
+        UNION
+        SELECT e.dst, w.lbl FROM e JOIN walk w ON e.src = w.v
+      )"""
+
   val q31MinhashDedup: QueryDef = QueryDef(
     "q31_minhash_dedup",
     (s, dir) =>
@@ -191,20 +224,7 @@ object PipelineQueries {
           blockCol = "source", shingleN = ShingleN, threshold = 0.8)
         .orderBy(col("blk"), col("doc_a"), col("doc_b")),
     Some(s"""
-      WITH $shingleCtes,
-      blk AS (SELECT doc_id, source FROM documents WHERE source IS NOT NULL),
-      hd AS (SELECT DISTINCT doc_id, h FROM hs),
-      cnts AS (SELECT doc_id, COUNT(*) AS n FROM hd GROUP BY doc_id),
-      pb AS (SELECT b.source AS blk, hd.doc_id, hd.h
-             FROM hd JOIN blk b ON b.doc_id = hd.doc_id),
-      capped AS (SELECT blk, doc_id, h FROM (
-        SELECT *, COUNT(*) OVER (PARTITION BY blk, h) AS pn FROM pb) t
-        WHERE pn <= 10000),
-      inter AS (SELECT x.blk, x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i
-                FROM capped x
-                JOIN capped y ON y.blk = x.blk AND y.h = x.h
-                             AND x.doc_id < y.doc_id
-                GROUP BY 1, 2, 3)
+      WITH $blockedShingleInterCtes
       SELECT i.blk, i.doc_a, i.doc_b,
              round(i.i * 1.0 / (ca.n + cb.n - i.i), 6) AS jaccard
       FROM inter i
@@ -220,6 +240,20 @@ object PipelineQueries {
 
   private val cosQC = Similarity.cosineSql("q.qv", "c.cv")
 
+  /** `r AS (...)`: the `sims` (query_id, neighbor_id, sim) rows ranked
+    * per query, ties to the smaller neighbor id — the oracle twin of
+    * [[Similarity.rankTopK]]. */
+  private val simsRankCte = """r AS (SELECT query_id, neighbor_id, sim,
+                   ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
+            FROM sims)"""
+
+  /** The top-`k` rows of [[simsRankCte]] in the top-k serves' output
+    * shape. */
+  private def simsTopKSelect(k: Int) =
+    s"""SELECT query_id, CAST(rnk AS INT) AS rnk, neighbor_id, round(sim, 6) AS sim
+      FROM r WHERE rnk <= $k
+      ORDER BY query_id, rnk"""
+
   val q34SimilarityTopK: QueryDef = QueryDef(
     "q34_similarity_topk",
     (s, dir) => {
@@ -233,17 +267,42 @@ object PipelineQueries {
       c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
       sims AS (SELECT query_id, neighbor_id, $cosQC AS sim
                FROM c JOIN q ON neighbor_id <> query_id),
-      r AS (SELECT query_id, neighbor_id, sim,
-                   ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-            FROM sims)
-      SELECT query_id, CAST(rnk AS INT) AS rnk, neighbor_id, round(sim, 6) AS sim
-      FROM r WHERE rnk <= 5
-      ORDER BY query_id, rnk
+      $simsRankCte
+      ${simsTopKSelect(5)}
     """))
 
   // ------------------------------------------------------------------
   // q35 IVF-bucketed top-k
   // ------------------------------------------------------------------
+
+  /** CTEs cent → assign: the fresh IVF build, every vector in the
+    * `bucket` of its nearest `vec_id % 50 = 0` centroid (ties to the
+    * smaller centroid id). */
+  private def ivfAssignCtes: String = {
+    val cosEC = Similarity.cosineSql("e.embedding", "c.centv")
+    s"""cent AS (SELECT vec_id AS cid, embedding AS centv FROM embeddings WHERE vec_id % 50 = 0),
+      assign AS (SELECT vec_id, embedding, cid AS bucket FROM (
+        SELECT e.vec_id, e.embedding, c.cid,
+               ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY $cosEC DESC, c.cid) AS crn
+        FROM embeddings e CROSS JOIN cent c) t WHERE crn = 1)"""
+  }
+
+  /** CTEs q → probes → sims → r after [[ivfAssignCtes]]: the first 10
+    * vectors probe their 2 nearest buckets and rank those buckets'
+    * members by cosine (q133's in-session serve, the written index's
+    * oracle). */
+  private def ivfProbeRankCtes: String = {
+    val cosQC = Similarity.cosineSql("q.qv", "c.centv")
+    val cosQA = Similarity.cosineSql("p.qv", "a.embedding")
+    s"""q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
+      probes AS (SELECT query_id, qv, cid AS bucket FROM (
+        SELECT q.query_id, q.qv, c.cid,
+               ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY $cosQC DESC, c.cid) AS prn
+        FROM q CROSS JOIN cent c) t WHERE prn <= 2),
+      sims AS (SELECT p.query_id, a.vec_id AS neighbor_id, $cosQA AS sim
+               FROM assign a JOIN probes p ON a.bucket = p.bucket AND a.vec_id <> p.query_id),
+      $simsRankCte"""
+  }
 
   val q35IvfTopK: QueryDef = QueryDef(
     "q35_ivf_topk",
@@ -256,23 +315,14 @@ object PipelineQueries {
         .withColumnRenamed("rank", "rnk")
         .orderBy(col("query_id"), col("rnk"))
     }, {
-      val cosEC = Similarity.cosineSql("e.embedding", "c.centv")
       val cosQA = Similarity.cosineSql("q.qv", "a.embedding")
       Some(s"""
-      WITH cent AS (SELECT vec_id AS cid, embedding AS centv FROM embeddings WHERE vec_id % 50 = 0),
-      assign AS (SELECT vec_id, embedding, cid AS bucket FROM (
-        SELECT e.vec_id, e.embedding, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY $cosEC DESC, c.cid) AS crn
-        FROM embeddings e CROSS JOIN cent c) t WHERE crn = 1),
+      WITH $ivfAssignCtes,
       q AS (SELECT vec_id AS query_id, embedding AS qv, bucket FROM assign WHERE vec_id < 10),
       sims AS (SELECT q.query_id, a.vec_id AS neighbor_id, $cosQA AS sim
                FROM assign a JOIN q ON a.bucket = q.bucket AND a.vec_id <> q.query_id),
-      r AS (SELECT query_id, neighbor_id, sim,
-                   ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-            FROM sims)
-      SELECT query_id, CAST(rnk AS INT) AS rnk, neighbor_id, round(sim, 6) AS sim
-      FROM r WHERE rnk <= 3
-      ORDER BY query_id, rnk
+      $simsRankCte
+      ${simsTopKSelect(3)}
     """)
     })
 
@@ -377,13 +427,7 @@ object PipelineQueries {
     },
     Some(s"""
       WITH RECURSIVE $minhashPairCtes,
-      e AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-            UNION SELECT doc_b, doc_a FROM pairs),
-      walk(v, lbl) AS (
-        SELECT DISTINCT src, src FROM e
-        UNION
-        SELECT e.dst, w.lbl FROM e JOIN walk w ON e.src = w.v
-      )
+      $componentWalkCtes
       SELECT v AS doc_id, MIN(lbl) AS component
       FROM walk
       GROUP BY v
@@ -447,13 +491,6 @@ object PipelineQueries {
   // q108 winnowing fingerprints (rolling hash — MOSS)
   // ------------------------------------------------------------------
 
-  /** Per-doc winnowed fingerprint summary over the codegen
-    * `winnow_fp` expression ([[graft.functions.Winnow]]): k=7 char
-    * grams, window w=4 — any ≥10-char shared substring between two
-    * normalized documents yields a common fingerprint hash. The oracle
-    * recomputes the polynomial hash definitionally (unrolled k terms)
-    * and the window minima via inclusive list slices.
-    */
   /** Definitional DuckDB replay of the `winnow_fp` contract as a
     * WITH-clause body ending in `fp` = (doc_id, f) with `f` the
     * sorted-distinct fingerprint list — the polynomial k-gram hash
@@ -488,6 +525,13 @@ object PipelineQueries {
       fp AS (SELECT doc_id, list_sort(list_distinct(ms)) AS f FROM wmins)"""
   }
 
+  /** Per-doc winnowed fingerprint summary over the codegen
+    * `winnow_fp` expression ([[graft.functions.Winnow]]): k=7 char
+    * grams, window w=4 — any ≥10-char shared substring between two
+    * normalized documents yields a common fingerprint hash. The oracle
+    * recomputes the polynomial hash definitionally (unrolled k terms)
+    * and the window minima via inclusive list slices.
+    */
   val q108WinnowFingerprint: QueryDef = {
     val (k, w) = (7, 4)
     QueryDef(
@@ -789,13 +833,7 @@ object PipelineQueries {
     },
     Some(s"""
       WITH RECURSIVE $minhashPairCtes,
-      e AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-            UNION SELECT doc_b, doc_a FROM pairs),
-      walk(v, lbl) AS (
-        SELECT DISTINCT src, src FROM e
-        UNION
-        SELECT e.dst, w.lbl FROM e JOIN walk w ON e.src = w.v
-      ),
+      $componentWalkCtes,
       comp AS (SELECT v, MIN(lbl) AS component FROM walk GROUP BY v),
       lab AS (SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS cluster,
                      d.n_chars
@@ -896,6 +934,19 @@ object PipelineQueries {
       c2 AS ${kmeansUpdateSql("a2")},
       au AS ${kmeansAssignSql("corpus", "c2")}"""
 
+  /** CTEs csz → rm after [[kmeansOracleCtes]]: `rm` = every vector with
+    * a smaller-id neighbor at cosine >= 0.3 in its final cluster, over
+    * clusters of at most `maxClusterSize` (the engine's cap). */
+  private def semDedupRemovedCtes(maxClusterSize: Int): String = {
+    val cosXY = Similarity.cosineSql("x.v", "y.v")
+    s"""csz AS (SELECT cid, COUNT(*) AS cn FROM a3 GROUP BY 1),
+        rm AS (SELECT DISTINCT y.vec_id
+               FROM a3 x
+               JOIN a3 y ON x.cid = y.cid AND x.vec_id < y.vec_id
+               JOIN csz z ON z.cid = x.cid AND z.cn <= $maxClusterSize
+               WHERE $cosXY >= 0.3)"""
+  }
+
   private def kmeansInit(s: org.apache.spark.sql.SparkSession, dir: String) =
     Tables.load(s, dir, "embeddings").filter(col("vec_id") < 8)
       .select(col("vec_id").as("cid"), col("embedding").as("centroid"))
@@ -947,21 +998,14 @@ object PipelineQueries {
         Clustering.semDedup(Tables.load(s, dir, "embeddings"),
             kmeansInit(s, dir), iters = 2, threshold = 0.3,
             maxClusterSize = MaxClusterSize)
-          .orderBy(col("cid"), col("vec_id")), {
-        val cosXY = Similarity.cosineSql("x.v", "y.v")
+          .orderBy(col("cid"), col("vec_id")),
         Some(s"""
         WITH $kmeansOracleCtes,
-        csz AS (SELECT cid, COUNT(*) AS cn FROM a3 GROUP BY 1),
-        rm AS (SELECT DISTINCT y.vec_id
-               FROM a3 x
-               JOIN a3 y ON x.cid = y.cid AND x.vec_id < y.vec_id
-               JOIN csz z ON z.cid = x.cid AND z.cn <= $MaxClusterSize
-               WHERE $cosXY >= 0.3)
+        ${semDedupRemovedCtes(MaxClusterSize)}
         SELECT a.cid, a.vec_id, (r.vec_id IS NULL) AS kept
         FROM a3 a LEFT JOIN rm r USING (vec_id)
         ORDER BY cid, vec_id
-      """)
-      })
+      """))
   }
 
   // ------------------------------------------------------------------
@@ -989,26 +1033,10 @@ object PipelineQueries {
       withExactRecall3(Similarity.ivfTopKProbed(assigned, centroids,
         queries.select("vec_id"), k = 3, nprobe = 2), emb, queries)
     }, {
-      val cosEC = Similarity.cosineSql("e.embedding", "c.centv")
-      val cosQC = Similarity.cosineSql("q.qv", "c.centv")
-      val cosQA = Similarity.cosineSql("p.qv", "a.embedding")
       val cosQE = Similarity.cosineSql("q.qv", "e.embedding")
       Some(s"""
-      WITH cent AS (SELECT vec_id AS cid, embedding AS centv FROM embeddings WHERE vec_id % 50 = 0),
-      assign AS (SELECT vec_id, embedding, cid AS bucket FROM (
-        SELECT e.vec_id, e.embedding, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY $cosEC DESC, c.cid) AS crn
-        FROM embeddings e CROSS JOIN cent c) t WHERE crn = 1),
-      q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
-      probes AS (SELECT query_id, qv, cid AS bucket FROM (
-        SELECT q.query_id, q.qv, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY $cosQC DESC, c.cid) AS prn
-        FROM q CROSS JOIN cent c) t WHERE prn <= 2),
-      sims AS (SELECT p.query_id, a.vec_id AS neighbor_id, $cosQA AS sim
-               FROM assign a JOIN probes p ON a.bucket = p.bucket AND a.vec_id <> p.query_id),
-      r AS (SELECT query_id, neighbor_id, sim,
-                   ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-            FROM sims),
+      WITH $ivfAssignCtes,
+      $ivfProbeRankCtes,
       ivf AS (SELECT query_id, rnk, neighbor_id, sim FROM r WHERE rnk <= 3),
       xr AS (SELECT query_id, neighbor_id FROM (
         SELECT q.query_id, e.vec_id AS neighbor_id,
@@ -1072,28 +1100,16 @@ object PipelineQueries {
             sum(col("n_toks_in_seq")).as("n_toks"))
           .orderBy(col("shard"))
       }, {
-        val cosXY = Similarity.cosineSql("x.v", "y.v")
         val toks = TextOps.tokensSql("text")
         Some(s"""
         WITH $kmeansOracleCtes,
-        csz AS (SELECT cid, COUNT(*) AS cn FROM a3 GROUP BY 1),
-        rm AS (SELECT DISTINCT y.vec_id
-               FROM a3 x
-               JOIN a3 y ON x.cid = y.cid AND x.vec_id < y.vec_id
-               JOIN csz z ON z.cid = x.cid AND z.cn <= $MaxClusterSize
-               WHERE $cosXY >= 0.3),
+        ${semDedupRemovedCtes(MaxClusterSize)},
         keptv AS (SELECT a.vec_id FROM a3 a LEFT JOIN rm r USING (vec_id)
                   WHERE r.vec_id IS NULL),
         docs2 AS (SELECT d.doc_id, d.text FROM documents d
                   JOIN keptv k ON d.doc_id = k.vec_id),
         tk AS (SELECT doc_id, unnest($toks) AS tok FROM docs2),
-        tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM tk GROUP BY 1, 2),
-        tot AS (SELECT SUM(tf) AS total_toks FROM tf),
-        cnts AS (SELECT tok, SUM(tf) AS cnt FROM tf GROUP BY 1),
-        sc AS (SELECT t.doc_id, t.tf,
-                      CAST(FLOOR(ln(CAST(c.cnt AS DOUBLE) / tt.total_toks)
-                                 * 1000000.0) AS BIGINT) AS lpf
-               FROM tf t JOIN cnts c USING (tok) CROSS JOIN tot tt),
+        ${CurationQueries.unigramLogProbCtes},
         agg AS (SELECT doc_id, SUM(tf * lpf) AS s, SUM(tf) AS n_tok
                 FROM sc GROUP BY 1),
         goodd AS (SELECT d2.doc_id, d2.text FROM docs2 d2 JOIN agg g USING (doc_id)
@@ -1103,13 +1119,7 @@ object PipelineQueries {
                      substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS shard,
                      CAST(len($toks) AS BIGINT) AS n
               FROM goodd),
-        o AS (SELECT doc_id, shard, n,
-                     CAST(SUM(n + 1) OVER (PARTITION BY shard ORDER BY key, doc_id)
-                       - (n + 1) AS BIGINT) AS s
-              FROM t),
-        e AS (SELECT doc_id, shard, s, n,
-                     unnest(generate_series(s // 64, (s + n - 1) // 64)) AS seq_idx
-              FROM o),
+        ${CurationQueries.packOffsetCtes(64)},
         pk AS (SELECT doc_id, shard, CAST(seq_idx AS BIGINT) AS seq_idx,
                       CAST(least(s + n, (seq_idx + 1) * 64)
                            - greatest(s, seq_idx * 64) AS BIGINT) AS n_toks_in_seq
@@ -1129,6 +1139,18 @@ object PipelineQueries {
   // q134 IVF index serving (bucket-partitioned layout, pruned scan)
   // ------------------------------------------------------------------
 
+  /** Shared fresh-build IVF serving oracle (q134 AND q137): assignment
+    * of the FULL corpus, nprobe=2 probe ranking, bucket-union scoring,
+    * top-3. q137's engine side serves from a base-build + delta-append
+    * layout — hash-equality against this fresh-build replay IS the
+    * proof that append composes to the union build.
+    */
+  private def ivfIndexOracleSql: String = s"""
+      WITH $ivfAssignCtes,
+      $ivfProbeRankCtes
+      ${simsTopKSelect(3)}
+    """
+
   /** The missing piece of the IVF lifecycle: build once, serve many.
     * The assigned corpus is written as parquet PARTITIONED BY bucket
     * (per-JVM workspace — [[graft.operators.TmpWorkspaces]]), then the
@@ -1141,38 +1163,6 @@ object PipelineQueries {
     * gates — a float-precision or partition-value corruption in the
     * layout hash-fails.
     */
-  /** Shared fresh-build IVF serving oracle (q134 AND q137): assignment
-    * of the FULL corpus, nprobe=2 probe ranking, bucket-union scoring,
-    * top-3. q137's engine side serves from a base-build + delta-append
-    * layout — hash-equality against this fresh-build replay IS the
-    * proof that append composes to the union build.
-    */
-  private def ivfIndexOracleSql: String = {
-    val cosEC = Similarity.cosineSql("e.embedding", "c.centv")
-    val cosQC = Similarity.cosineSql("q.qv", "c.centv")
-    val cosQA = Similarity.cosineSql("p.qv", "a.embedding")
-    s"""
-      WITH cent AS (SELECT vec_id AS cid, embedding AS centv FROM embeddings WHERE vec_id % 50 = 0),
-      assign AS (SELECT vec_id, embedding, cid AS bucket FROM (
-        SELECT e.vec_id, e.embedding, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY $cosEC DESC, c.cid) AS crn
-        FROM embeddings e CROSS JOIN cent c) t WHERE crn = 1),
-      q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
-      probes AS (SELECT query_id, qv, cid AS bucket FROM (
-        SELECT q.query_id, q.qv, c.cid,
-               ROW_NUMBER() OVER (PARTITION BY q.query_id ORDER BY $cosQC DESC, c.cid) AS prn
-        FROM q CROSS JOIN cent c) t WHERE prn <= 2),
-      sims AS (SELECT p.query_id, a.vec_id AS neighbor_id, $cosQA AS sim
-               FROM assign a JOIN probes p ON a.bucket = p.bucket AND a.vec_id <> p.query_id),
-      r AS (SELECT query_id, neighbor_id, sim,
-                   ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-            FROM sims)
-      SELECT query_id, CAST(rnk AS INT) AS rnk, neighbor_id, round(sim, 6) AS sim
-      FROM r WHERE rnk <= 3
-      ORDER BY query_id, rnk
-    """
-  }
-
   val q134IvfIndex: QueryDef = QueryDef(
     "q134_ivf_index",
     (s, dir) => {
@@ -1344,6 +1334,32 @@ object PipelineQueries {
       .orderBy(col("query_id"), col("rnk"))
   }
 
+  /** `xr AS (...)`: each `q` query's exact top-`k` neighbor ids by
+    * brute-force cosine over `corpus` (self excluded, ties to the
+    * smaller id). */
+  private def exactTopKCte(k: Int): String = {
+    val cosQE = Similarity.cosineSql("q.qv", "e.v")
+    s"""xr AS (SELECT query_id, neighbor_id FROM (
+                SELECT q.query_id, e.vec_id AS neighbor_id,
+                       ROW_NUMBER() OVER (PARTITION BY q.query_id
+                         ORDER BY $cosQE DESC, e.vec_id) AS xrn
+                FROM corpus e CROSS JOIN q WHERE e.vec_id <> q.query_id) z
+               WHERE xrn <= $k)"""
+  }
+
+  /** The oracle twin of [[withExactRecall3]] over the served top-3
+    * relation `served` (query_id, rnk, neighbor_id, sim): the exact
+    * top-3 `xr` and the `in_exact` / `recall3` columns. */
+  private def exactRecall3Sql(served: String): String = s"""${exactTopKCte(3)}
+        SELECT p.query_id, CAST(p.rnk AS INT) AS rnk, p.neighbor_id,
+               round(p.sim, 6) AS sim,
+               (x.neighbor_id IS NOT NULL) AS in_exact,
+               round(SUM(CASE WHEN x.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+                     OVER (PARTITION BY p.query_id) / 3.0, 6) AS recall3
+        FROM $served p LEFT JOIN xr x
+          ON p.query_id = x.query_id AND p.neighbor_id = x.neighbor_id
+        ORDER BY p.query_id, p.rnk"""
+
   // ------------------------------------------------------------------
   // q136 product-quantization ADC top-k (recall vs exact top-k)
   // ------------------------------------------------------------------
@@ -1384,8 +1400,7 @@ object PipelineQueries {
         val enc = Pq.pqEncode(emb, cb)
         val queries = emb.filter(col("vec_id") < 10)
         withExactRecall3(Pq.pqTopK(enc, cb, queries, k = 3), emb, queries)
-      }, {
-        val cosQE = Similarity.cosineSql("q.qv", "e.v")
+      },
         Some(s"""
         WITH corpus AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         subs AS (SELECT unnest(generate_series(0, ${M - 1})) AS j),
@@ -1433,22 +1448,8 @@ object PipelineQueries {
                        ORDER BY sim DESC, neighbor_id) AS rnk
               FROM sims),
         pq AS (SELECT query_id, rnk, neighbor_id, sim FROM r WHERE rnk <= 3),
-        xr AS (SELECT query_id, neighbor_id FROM (
-                SELECT q.query_id, e.vec_id AS neighbor_id,
-                       ROW_NUMBER() OVER (PARTITION BY q.query_id
-                         ORDER BY $cosQE DESC, e.vec_id) AS xrn
-                FROM corpus e CROSS JOIN q WHERE e.vec_id <> q.query_id) z
-               WHERE xrn <= 3)
-        SELECT p.query_id, CAST(p.rnk AS INT) AS rnk, p.neighbor_id,
-               round(p.sim, 6) AS sim,
-               (x.neighbor_id IS NOT NULL) AS in_exact,
-               round(SUM(CASE WHEN x.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                     OVER (PARTITION BY p.query_id) / 3.0, 6) AS recall3
-        FROM pq p LEFT JOIN xr x
-          ON p.query_id = x.query_id AND p.neighbor_id = x.neighbor_id
-        ORDER BY p.query_id, p.rnk
-      """)
-      })
+        ${exactRecall3Sql("pq")}
+      """))
   }
 
   // ------------------------------------------------------------------
@@ -1479,17 +1480,6 @@ object PipelineQueries {
     (assigned, centroids, cb)
   }
 
-  /** Shared DuckDB replay of the ENTIRE IVF-PQ composition (q138/q139
-    * serve it in-session/from-disk; q140 appends): coarse cosine
-    * assignment, elementwise residuals, one fixed-point Lloyd round on
-    * residual subvectors (training corpus restricted by `trainPred` —
-    * "TRUE" for whole-corpus training, the base predicate for q140's
-    * frozen-codebook append gate), dense remap, whole-corpus encoding,
-    * the flattened reconstruction and its norm, and the
-    * split-numerator serving arithmetic — so any drift in the
-    * composition (a residual sign, a bucket/codebook mix-up, the
-    * stored norm, an append that re-trained) hash-fails.
-    */
   /** The build-side CTE chain shared by EVERY IVF-PQ oracle — coarse
     * assignment through the encode-time reconstruction norms (`cnrm`).
     * The serving oracles ([[ivfPqOracleSql]]) append the probe/ADC/
@@ -1602,28 +1592,23 @@ object PipelineQueries {
         $servingTail"""
   }
 
+  /** Shared DuckDB replay of the ENTIRE IVF-PQ composition (q138/q139
+    * serve it in-session/from-disk; q140 appends): coarse cosine
+    * assignment, elementwise residuals, one fixed-point Lloyd round on
+    * residual subvectors (training corpus restricted by `trainPred` —
+    * "TRUE" for whole-corpus training, the base predicate for q140's
+    * frozen-codebook append gate), dense remap, whole-corpus encoding,
+    * the flattened reconstruction and its norm, and the
+    * split-numerator serving arithmetic — so any drift in the
+    * composition (a residual sign, a bucket/codebook mix-up, the
+    * stored norm, an append that re-trained) hash-fails.
+    */
   private def ivfPqOracleSql(trainPred: String,
-      rerank: Option[Int] = None): String = {
-    val cosQE = Similarity.cosineSql("q.qv", "e.v")
-    s"""
+      rerank: Option[Int] = None): String = s"""
         WITH ${ivfPqOracleCtes(trainPred)},
         ${ivfPqServeCtes("vec_id < 10", 3, rerank)},
-        xr AS (SELECT query_id, neighbor_id FROM (
-                SELECT q.query_id, e.vec_id AS neighbor_id,
-                       ROW_NUMBER() OVER (PARTITION BY q.query_id
-                         ORDER BY $cosQE DESC, e.vec_id) AS xrn
-                FROM corpus e CROSS JOIN q WHERE e.vec_id <> q.query_id) z
-               WHERE xrn <= 3)
-        SELECT p.query_id, CAST(p.rnk AS INT) AS rnk, p.neighbor_id,
-               round(p.sim, 6) AS sim,
-               (x.neighbor_id IS NOT NULL) AS in_exact,
-               round(SUM(CASE WHEN x.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-                     OVER (PARTITION BY p.query_id) / 3.0, 6) AS recall3
-        FROM ipq p LEFT JOIN xr x
-          ON p.query_id = x.query_id AND p.neighbor_id = x.neighbor_id
-        ORDER BY p.query_id, p.rnk
+        ${exactRecall3Sql("ipq")}
       """
-  }
 
   /** The composed 100 TB index, served IN-SESSION: coarse IVF
     * assignment (the q134/q137 layout) + PQ codes over the per-bucket
@@ -1848,15 +1833,6 @@ object PipelineQueries {
     },
     Some(ivfPqOracleSql("vec_id % 4 <> 0")))
 
-  /** BM25 top-10 keyword retrieval ([[graft.operators.Retrieval
-    * .bm25TopK]]): 8 query documents rank the corpus by the standard
-    * Lucene-idf BM25 (k1=1.2, b=0.75 as exact rationals), computed
-    * entirely in fixed point so the DuckDB replay of the inverted
-    * index, df counts, and per-term floored contributions hash-matches
-    * exactly. The retrieval counterpart of the curation family —
-    * decontamination probes and eval-set mining run exactly this
-    * query shape over a training corpus.
-    */
   /** The q146/q154 oracle: the ad-hoc and written-index serving paths
     * must produce the identical ranking, so they share one replay.
     */
@@ -1868,6 +1844,15 @@ object PipelineQueries {
       ORDER BY query_id, rnk
     """
 
+  /** BM25 top-10 keyword retrieval ([[graft.operators.Retrieval
+    * .bm25TopK]]): 8 query documents rank the corpus by the standard
+    * Lucene-idf BM25 (k1=1.2, b=0.75 as exact rationals), computed
+    * entirely in fixed point so the DuckDB replay of the inverted
+    * index, df counts, and per-term floored contributions hash-matches
+    * exactly. The retrieval counterpart of the curation family —
+    * decontamination probes and eval-set mining run exactly this
+    * query shape over a training corpus.
+    */
   val q146Bm25: QueryDef = QueryDef(
     "q146_bm25_topk",
     (s, dir) => {
@@ -2079,34 +2064,12 @@ object PipelineQueries {
       ORDER BY doc_id, pos
     """))
 
-  /** Containment near-dup pairs ([[graft.operators.Dedup
-    * .ngramContainmentPairs]]): the asymmetric complement of q33's
-    * Jaccard on the same inverted-index core — a near-superset page
-    * contains a smaller doc almost entirely while Jaccard stays low,
-    * so partial copies (quotes, boilerplate wrappers, embedded eval
-    * items) need this direction-aware gate. Thresholded on the larger
-    * direction; the oracle replays postings, caps, intersections, and
-    * both direction ratios.
-    */
   /** The q153/q161 oracle: fresh whole-corpus containment pairs, with
     * an optional extra predicate (q161 restricts to snapshot-endpoint
     * pairs — the incremental path must equal exactly this).
     */
   private def containmentOracleSql(extraPred: String): String = s"""
-      WITH $shingleCtes,
-      blk AS (SELECT doc_id, source FROM documents WHERE source IS NOT NULL),
-      hd AS (SELECT DISTINCT doc_id, h FROM hs),
-      cnts AS (SELECT doc_id, COUNT(*) AS n FROM hd GROUP BY doc_id),
-      pb AS (SELECT b.source AS blk, hd.doc_id, hd.h
-             FROM hd JOIN blk b ON b.doc_id = hd.doc_id),
-      capped AS (SELECT blk, doc_id, h FROM (
-        SELECT *, COUNT(*) OVER (PARTITION BY blk, h) AS pn FROM pb) t
-        WHERE pn <= 10000),
-      inter AS (SELECT x.blk, x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i
-                FROM capped x
-                JOIN capped y ON y.blk = x.blk AND y.h = x.h
-                             AND x.doc_id < y.doc_id
-                GROUP BY 1, 2, 3)
+      WITH $blockedShingleInterCtes
       SELECT blk, doc_a, doc_b, cont_ab, cont_ba
       FROM (SELECT i.blk, i.doc_a, i.doc_b,
                    round(i.i * 1.0 / ca.n, 6) AS cont_ab,
@@ -2118,6 +2081,15 @@ object PipelineQueries {
       ORDER BY blk, doc_a, doc_b
     """
 
+  /** Containment near-dup pairs ([[graft.operators.Dedup
+    * .ngramContainmentPairs]]): the asymmetric complement of q33's
+    * Jaccard on the same inverted-index core — a near-superset page
+    * contains a smaller doc almost entirely while Jaccard stays low,
+    * so partial copies (quotes, boilerplate wrappers, embedded eval
+    * items) need this direction-aware gate. Thresholded on the larger
+    * direction; the oracle replays postings, caps, intersections, and
+    * both direction ratios.
+    */
   val q153Containment: QueryDef = QueryDef(
     "q153_ngram_containment",
     (s, dir) =>
@@ -2143,6 +2115,44 @@ object PipelineQueries {
     "q161_containment_incremental", Scenario.Ngram, Split(3, 0), Append,
     Some(containmentOracleSql("doc_a % 3 = 0 OR doc_b % 3 = 0")))
 
+  /** Stages 1 and 2 of the v4 / v5 flagships (q152 / q158): the
+    * bigram-LM quality filter, then BM25 retrieval-decontamination —
+    * the eval probes (doc_id < 8) and their top-5 hits leave. Returns
+    * the training corpus (doc_id, text, source); both stages'
+    * survivors are checkpointed.
+    */
+  private def decontaminatedTrain(s: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame = {
+    val docs = Tables.load(s, dir, "documents")
+    val keptIds = TextAnalysis.bigramNll(docs, "doc_id", "text",
+        nllThreshold = BigramNllMedian)
+      .filter(col("kept")).select(col("doc_id"))
+    val surv = docs.join(keptIds, "doc_id")
+      .select(col("doc_id"), col("text"), col("source"))
+      .localCheckpoint()
+    val cont = Retrieval
+      .bm25TopK(surv, surv.filter(col("doc_id") < 8), k = 5)
+      .select(col("doc_id")).distinct()
+    surv.filter(col("doc_id") >= 8)
+      .join(cont, Seq("doc_id"), "left_anti")
+      .localCheckpoint()
+  }
+
+  /** The oracle twin of [[decontaminatedTrain]] plus the 4-merge BPE
+    * trained on and encoding `train`: CTEs ending in `enc` = (doc_id,
+    * n_words, n_bpe). */
+  private val decontaminatedTrainCtes: String = s"""${TextAnalysis.bigramNllCtesSql("documents", "doc_id", "text", BigramNllMedian)},
+      surv AS MATERIALIZED (SELECT d.doc_id, d.text, d.source
+               FROM documents d JOIN bnll b USING (doc_id)
+               WHERE b.kept),
+      ${Retrieval.bm25CtesSql("surv", "doc_id", "text", "doc_id < 8", 5)},
+      cont AS (SELECT DISTINCT doc_id FROM bm25),
+      train AS MATERIALIZED (SELECT * FROM surv
+                WHERE doc_id >= 8
+                  AND doc_id NOT IN (SELECT doc_id FROM cont)),
+      ${Bpe.trainOracleCtes("train", "text", 4)},
+      ${Bpe.encodeOracleCtes("train", "doc_id", "text", 4)}"""
+
   /** Flagship curation v4 — the session-2 operators composed into one
     * pipeline: (1) bigram-LM quality filter (q150's model, corpus-
     * trained, median threshold), (2) BM25 decontamination — the kept
@@ -2166,19 +2176,7 @@ object PipelineQueries {
   val q152CurationV4: QueryDef = QueryDef(
     "q152_curation_v4",
     (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val keptIds = TextAnalysis.bigramNll(docs, "doc_id", "text",
-          nllThreshold = BigramNllMedian)
-        .filter(col("kept")).select(col("doc_id"))
-      val surv = docs.join(keptIds, "doc_id")
-        .select(col("doc_id"), col("text"), col("source"))
-        .localCheckpoint()
-      val cont = Retrieval
-        .bm25TopK(surv, surv.filter(col("doc_id") < 8), k = 5)
-        .select(col("doc_id")).distinct()
-      val train = surv.filter(col("doc_id") >= 8)
-        .join(cont, Seq("doc_id"), "left_anti")
-        .localCheckpoint()
+      val train = decontaminatedTrain(s, dir)
       val ms = Bpe.trainMerges(train, "text", nMerges = 4)
       Bpe.encodeTokenCounts(train, "doc_id", "text", ms)
         .join(train.select(col("doc_id"), col("source")), "doc_id")
@@ -2188,17 +2186,7 @@ object PipelineQueries {
         .orderBy(col("source"))
     },
     Some(s"""
-      WITH ${TextAnalysis.bigramNllCtesSql("documents", "doc_id", "text", BigramNllMedian)},
-      surv AS MATERIALIZED (SELECT d.doc_id, d.text, d.source
-               FROM documents d JOIN bnll b USING (doc_id)
-               WHERE b.kept),
-      ${Retrieval.bm25CtesSql("surv", "doc_id", "text", "doc_id < 8", 5)},
-      cont AS (SELECT DISTINCT doc_id FROM bm25),
-      train AS MATERIALIZED (SELECT * FROM surv
-                WHERE doc_id >= 8
-                  AND doc_id NOT IN (SELECT doc_id FROM cont)),
-      ${Bpe.trainOracleCtes("train", "text", 4)},
-      ${Bpe.encodeOracleCtes("train", "doc_id", "text", 4)}
+      WITH $decontaminatedTrainCtes
       SELECT tr.source,
              CAST(COUNT(*) AS BIGINT) AS n_docs,
              CAST(SUM(e.n_words) AS BIGINT) AS n_words,
@@ -2231,6 +2219,19 @@ object PipelineQueries {
       ORDER BY doc_a, doc_b
     """))
 
+  /** The fresh whole-corpus exact-dedup clusters (q30's replay) that
+    * hold at least one `deltaPred` document: what the incremental exact
+    * probes must serve however the delta arrived. */
+  private def exactClustersOracleSql(deltaPred: String): String = s"""
+      WITH fp AS (SELECT doc_id, md5(${TextOps.normalizeSql("text")}) AS fingerprint
+                  FROM documents)
+      SELECT fingerprint, MIN(doc_id) AS kept_id, COUNT(*) AS cluster_size
+      FROM fp
+      GROUP BY 1
+      HAVING COUNT(CASE WHEN $deltaPred THEN 1 END) > 0
+      ORDER BY fingerprint
+    """
+
   /** Incremental EXACT dedup against its written fingerprint index
     * ([[graft.operators.Dedup.exactWriteIndex]] /
     * [[graft.operators.Dedup.exactClustersIndexed]]) — q159's trivial
@@ -2244,15 +2245,7 @@ object PipelineQueries {
     */
   val q160ExactIncremental: QueryDef = Scenario(
     "q160_exact_incremental", Scenario.Exact, Split(4, 0), Append,
-    Some(s"""
-      WITH fp AS (SELECT doc_id, md5(${TextOps.normalizeSql("text")}) AS fingerprint
-                  FROM documents)
-      SELECT fingerprint, MIN(doc_id) AS kept_id, COUNT(*) AS cluster_size
-      FROM fp
-      GROUP BY 1
-      HAVING COUNT(CASE WHEN doc_id % 4 = 0 THEN 1 END) > 0
-      ORDER BY fingerprint
-    """))
+    Some(exactClustersOracleSql("doc_id % 4 = 0")))
 
   /** Flagship curation v5 — v4's pipeline driven one step further, to
     * THE artifact a pretraining run actually reads: (1) bigram-LM
@@ -2278,53 +2271,15 @@ object PipelineQueries {
   val q158CurationV5: QueryDef = QueryDef(
     "q158_curation_v5",
     (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      val keptIds = TextAnalysis.bigramNll(docs, "doc_id", "text",
-          nllThreshold = BigramNllMedian)
-        .filter(col("kept")).select(col("doc_id"))
-      val surv = docs.join(keptIds, "doc_id")
-        .select(col("doc_id"), col("text"), col("source"))
-        .localCheckpoint()
-      val cont = Retrieval
-        .bm25TopK(surv, surv.filter(col("doc_id") < 8), k = 5)
-        .select(col("doc_id")).distinct()
-      val train = surv.filter(col("doc_id") >= 8)
-        .join(cont, Seq("doc_id"), "left_anti")
-        .localCheckpoint()
+      val train = decontaminatedTrain(s, dir)
       val ms = Bpe.trainMerges(train, "text", nMerges = 4)
       val counts = Bpe.encodeTokenCounts(train, "doc_id", "text", ms)
       Curation.packSequencesByCount(counts, "doc_id", "n_bpe", seqLen = 256)
         .orderBy(col("shard"), col("seq_idx"), col("doc_id"))
     },
     Some(s"""
-      WITH ${TextAnalysis.bigramNllCtesSql("documents", "doc_id", "text", BigramNllMedian)},
-      surv AS MATERIALIZED (SELECT d.doc_id, d.text, d.source
-               FROM documents d JOIN bnll b USING (doc_id)
-               WHERE b.kept),
-      ${Retrieval.bm25CtesSql("surv", "doc_id", "text", "doc_id < 8", 5)},
-      cont AS (SELECT DISTINCT doc_id FROM bm25),
-      train AS MATERIALIZED (SELECT * FROM surv
-                WHERE doc_id >= 8
-                  AND doc_id NOT IN (SELECT doc_id FROM cont)),
-      ${Bpe.trainOracleCtes("train", "text", 4)},
-      ${Bpe.encodeOracleCtes("train", "doc_id", "text", 4)},
-      pt AS (SELECT doc_id,
-                    md5(CAST(doc_id AS VARCHAR)) AS key,
-                    substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS shard,
-                    n_bpe AS n
-             FROM enc),
-      po AS (SELECT doc_id, shard, n,
-                    CAST(SUM(n + 1) OVER (PARTITION BY shard ORDER BY key, doc_id)
-                      - (n + 1) AS BIGINT) AS s
-             FROM pt),
-      pe AS (SELECT doc_id, shard, s, n,
-                    unnest(generate_series(s // 256, (s + n - 1) // 256)) AS seq_idx
-             FROM po)
-      SELECT doc_id, shard, CAST(seq_idx AS BIGINT) AS seq_idx,
-             CAST(least(s + n, (seq_idx + 1) * 256)
-                  - greatest(s, seq_idx * 256) AS BIGINT) AS n_toks_in_seq
-      FROM pe
-      ORDER BY shard, seq_idx, doc_id
+      WITH $decontaminatedTrainCtes,
+      ${Curation.packSequencesByCountSql("enc", "n_bpe", 256)}
     """))
 
   /** The SERVING STACK capstone: hybrid retrieval where BOTH rankers
@@ -2540,32 +2495,9 @@ object PipelineQueries {
       ${Bpe.trainOracleCtes(
         "(SELECT * FROM documents WHERE doc_id % 3 <> 0)", "text", 4)},
       ${Bpe.encodeOracleCtes("keptd", "doc_id", "text", 4)},
-      pt AS (SELECT doc_id,
-                    md5(CAST(doc_id AS VARCHAR)) AS key,
-                    substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS shard,
-                    n_bpe AS n
-             FROM enc),
-      po AS (SELECT doc_id, shard, n,
-                    CAST(SUM(n + 1) OVER (PARTITION BY shard ORDER BY key, doc_id)
-                      - (n + 1) AS BIGINT) AS s
-             FROM pt),
-      pe AS (SELECT doc_id, shard, s, n,
-                    unnest(generate_series(s // 256, (s + n - 1) // 256)) AS seq_idx
-             FROM po)
-      SELECT doc_id, shard, CAST(seq_idx AS BIGINT) AS seq_idx,
-             CAST(least(s + n, (seq_idx + 1) * 256)
-                  - greatest(s, seq_idx * 256) AS BIGINT) AS n_toks_in_seq
-      FROM pe
-      ORDER BY shard, seq_idx, doc_id
+      ${Curation.packSequencesByCountSql("enc", "n_bpe", 256)}
     """))
 
-  /** The q167/q168 oracle: fresh blocked SimHash near-dup pairs, with
-    * an optional extra predicate (q168 restricts to snapshot-endpoint
-    * pairs — the incremental path must equal exactly this). Replays
-    * the WHOLE Spark chain: 60-bit fingerprints (the q32 sum-of-signs
-    * shape widened), the four 15-bit bands, the bucket cap, the
-    * distinct multi-band candidates, and the `bit_count(xor)` verify.
-    */
   /** The WITH-body of the SimHash pair replay over ANY (doc_id, blk,
     * text) relation — shared by the document members (q167/q168) and
     * the FRAME member (q208, frames-as-documents): 60-bit fingerprints
@@ -2603,6 +2535,13 @@ object PipelineQueries {
                               AND y.bval = x.bval AND x.doc_id < y.doc_id)"""
   }
 
+  /** The q167/q168 oracle: fresh blocked SimHash near-dup pairs, with
+    * an optional extra predicate (q168 restricts to snapshot-endpoint
+    * pairs — the incremental path must equal exactly this). Replays
+    * the WHOLE Spark chain: 60-bit fingerprints (the q32 sum-of-signs
+    * shape widened), the four 15-bit bands, the bucket cap, the
+    * distinct multi-band candidates, and the `bit_count(xor)` verify.
+    */
   private def simhashPairsOracleSql(extraPred: String): String = s"""
       WITH ${simhashPairsCtes("SELECT doc_id, source AS blk, text FROM documents")}
       SELECT blk, doc_a, doc_b,
@@ -2734,15 +2673,7 @@ object PipelineQueries {
     */
   val q171StreamingIngest: QueryDef = Scenario(
     "q171_streaming_ingest", Scenario.Exact, Split(5, 1), Stream,
-    Some(s"""
-      WITH fp AS (SELECT doc_id, md5(${TextOps.normalizeSql("text")}) AS fingerprint
-                  FROM documents)
-      SELECT fingerprint, MIN(doc_id) AS kept_id, COUNT(*) AS cluster_size
-      FROM fp
-      GROUP BY 1
-      HAVING COUNT(CASE WHEN doc_id % 5 = 1 THEN 1 END) > 0
-      ORDER BY fingerprint
-    """))
+    Some(exactClustersOracleSql("doc_id % 5 = 1")))
 
   /** Incremental BLOCK-level exact dedup against the written
     * block-fingerprint index ([[graft.operators.Dedup
@@ -2842,6 +2773,33 @@ object PipelineQueries {
     "q174_streaming_ivf_ingest", Scenario.Ivf, Split(4, 0), Stream,
     Some(ivfIndexOracleSql))
 
+  /** The oracle twin of [[graft.operators.Clustering.semanticDriftAudit]]
+    * after CTEs ending in `agg` = per-cluster base and new counts
+    * (`n_base`, `n_new`) and fixed-point d2 sums (`sf_base`, `sf_new`):
+    * each side's share and mean d2, and whether the share moved more
+    * than `shareDrift`. */
+  private def semanticDriftSql(shareDrift: Double): String =
+    s"""sh AS (SELECT cid, n_base, n_new, sf_base, sf_new,
+                    CASE WHEN SUM(n_base) OVER () > 0
+                         THEN CAST(n_base AS DOUBLE)
+                              / CAST(SUM(n_base) OVER () AS DOUBLE) END AS shb,
+                    CASE WHEN SUM(n_new) OVER () > 0
+                         THEN CAST(n_new AS DOUBLE)
+                              / CAST(SUM(n_new) OVER () AS DOUBLE) END AS shn
+             FROM agg)
+      SELECT cid, CAST(n_base AS BIGINT) AS n_base,
+             CAST(n_new AS BIGINT) AS n_new,
+             round(shb, 6) AS share_base, round(shn, 6) AS share_new,
+             CASE WHEN n_base > 0
+                  THEN FLOOR(CAST(sf_base AS DOUBLE) / n_base) / 1000000.0 END
+               AS mean_d2_base,
+             CASE WHEN n_new > 0
+                  THEN FLOOR(CAST(sf_new AS DOUBLE) / n_new) / 1000000.0 END
+               AS mean_d2_new,
+             COALESCE(ABS(shn - shb) > $shareDrift, FALSE) AS drifted
+      FROM sh
+      ORDER BY cid"""
+
   /** CENTROID-STALENESS drift audit of the written semantic index
     * ([[graft.operators.Clustering.semanticDriftAudit]]) on a
     * genuinely DISTRIBUTION-SHIFTED snapshot: the base slice is the
@@ -2883,26 +2841,7 @@ object PipelineQueries {
                               THEN CAST(FLOOR(d2 * 1000000.0) AS BIGINT) END)
                        AS sf_new
               FROM au GROUP BY 1),
-      sh AS (SELECT cid, n_base, n_new, sf_base, sf_new,
-                    CASE WHEN SUM(n_base) OVER () > 0
-                         THEN CAST(n_base AS DOUBLE)
-                              / CAST(SUM(n_base) OVER () AS DOUBLE) END AS shb,
-                    CASE WHEN SUM(n_new) OVER () > 0
-                         THEN CAST(n_new AS DOUBLE)
-                              / CAST(SUM(n_new) OVER () AS DOUBLE) END AS shn
-             FROM agg)
-      SELECT cid, CAST(n_base AS BIGINT) AS n_base,
-             CAST(n_new AS BIGINT) AS n_new,
-             round(shb, 6) AS share_base, round(shn, 6) AS share_new,
-             CASE WHEN n_base > 0
-                  THEN FLOOR(CAST(sf_base AS DOUBLE) / n_base) / 1000000.0 END
-               AS mean_d2_base,
-             CASE WHEN n_new > 0
-                  THEN FLOOR(CAST(sf_new AS DOUBLE) / n_new) / 1000000.0 END
-               AS mean_d2_new,
-             COALESCE(ABS(shn - shb) > 0.03, FALSE) AS drifted
-      FROM sh
-      ORDER BY cid
+      ${semanticDriftSql(0.03)}
     """))
 
   /** Flagship curation v7 — DAY-2 INGEST ACROSS ALL THREE INDEX
@@ -3176,9 +3115,8 @@ object PipelineQueries {
     */
   val q194AssetDedupIndexed: QueryDef = Scenario(
     "q194_asset_dedup_indexed", Scenario.Asset, Split(4, 3), Append,
-    Some("""
-      WITH fp AS (SELECT doc_id AS asset_id, md5(text) AS fingerprint
-                  FROM documents WHERE text IS NOT NULL)
+    Some(s"""
+      WITH $assetFpCte
       SELECT fingerprint, MIN(asset_id) AS kept_id, COUNT(*) AS cluster_size
       FROM fp
       GROUP BY 1
@@ -3218,17 +3156,11 @@ object PipelineQueries {
             .select(col("vec_id"), col("embedding")),
           k = 5, shortlist = 10, nprobe = 2)
         .orderBy(col("query_id"))
-    }, {
-      val cosQE = Similarity.cosineSql("q.qv", "e.v")
+    },
       Some(s"""
         WITH ${ivfPqOracleCtes("TRUE")},
         ${ivfPqServeCtes("vec_id < 10", 5, rerank = Some(10))},
-        xr AS (SELECT query_id, neighbor_id FROM (
-                SELECT q.query_id, e.vec_id AS neighbor_id,
-                       ROW_NUMBER() OVER (PARTITION BY q.query_id
-                         ORDER BY $cosQE DESC, e.vec_id) AS xrn
-                FROM corpus e CROSS JOIN q WHERE e.vec_id <> q.query_id) z
-               WHERE xrn <= 5)
+        ${exactTopKCte(5)}
         SELECT x.query_id, CAST(5 AS INT) AS k,
                CAST(COUNT(*) AS BIGINT) AS n_exact,
                CAST(COUNT(p.neighbor_id) AS BIGINT) AS n_hit,
@@ -3237,8 +3169,7 @@ object PipelineQueries {
         FROM xr x LEFT JOIN ipq p
           ON x.query_id = p.query_id AND x.neighbor_id = p.neighbor_id
         GROUP BY 1 ORDER BY 1
-      """)
-    })
+      """))
 
   // ------------------------------------------------------------------
   // q197 multimodal near-dup vs the written semantic index (the
@@ -3262,6 +3193,41 @@ object PipelineQueries {
         FROM documents WHERE text IS NOT NULL)"""
   }
 
+  /** CTEs feats → cents → au: the featurized assets assigned to the
+    * centroids frozen on the first 8 assets' vectors — the oracle twin
+    * of [[Scenario.featurized]] and its L2 assignment. */
+  private val assetAssignCtes = s"""$assetFeatureCte,
+      cents AS (SELECT vec_id AS cid, v AS centroid
+                FROM feats WHERE vec_id < 8),
+      au AS ${kmeansAssignSql("feats", "cents")}"""
+
+  /** CTEs after [[assetAssignCtes]] ending in `rm`: every asset with a
+    * smaller-id neighbor at cosine >= 0.999 in its (capped) cluster. */
+  private def assetNearDupCtes: String = {
+    val cosXY = Similarity.cosineSql("x.v", "y.v")
+    s"""$assetAssignCtes,
+      csz AS (SELECT cid, COUNT(*) AS cn FROM au GROUP BY 1),
+      rm AS (SELECT DISTINCT y.vec_id
+             FROM au x
+             JOIN au y ON x.cid = y.cid AND x.vec_id < y.vec_id
+             JOIN csz z ON z.cid = x.cid AND z.cn <= 10000
+             WHERE $cosXY >= 0.999)"""
+  }
+
+  /** Shared fresh whole-corpus replay for the asset near-dup probes
+    * (q197 and its streaming twin q201 serve IDENTICAL verdicts —
+    * batch boundaries cannot move them): featurize → frozen assign →
+    * keep-lowest-id at cosine ≥ 0.999, restricted to the snapshot
+    * quarter.
+    */
+  private def assetNearDupOracleSql: String = s"""
+      WITH $assetNearDupCtes
+      SELECT a.cid, a.vec_id, (r.vec_id IS NULL) AS kept
+      FROM au a LEFT JOIN rm r USING (vec_id)
+      WHERE a.vec_id % 4 = 3
+      ORDER BY cid, vec_id
+    """
+
   /** Near-dup dedup of NEW binary assets against the written semantic
     * index — the multimodal family's second index member (VERDICT r17
     * #7 / r15 candidate): q194 catches bit-identical payloads; this
@@ -3280,32 +3246,6 @@ object PipelineQueries {
     * → keep-lowest-id at cosine ≥ 0.999) restricted to the snapshot —
     * the q173 hash-equality contract on the asset modality.
     */
-  /** Shared fresh whole-corpus replay for the asset near-dup probes
-    * (q197 and its streaming twin q201 serve IDENTICAL verdicts —
-    * batch boundaries cannot move them): featurize → frozen assign →
-    * keep-lowest-id at cosine ≥ 0.999, restricted to the snapshot
-    * quarter.
-    */
-  private def assetNearDupOracleSql: String = {
-    val cosXY = Similarity.cosineSql("x.v", "y.v")
-    s"""
-      WITH $assetFeatureCte,
-      cents AS (SELECT vec_id AS cid, v AS centroid
-                FROM feats WHERE vec_id < 8),
-      au AS ${kmeansAssignSql("feats", "cents")},
-      csz AS (SELECT cid, COUNT(*) AS cn FROM au GROUP BY 1),
-      rm AS (SELECT DISTINCT y.vec_id
-             FROM au x
-             JOIN au y ON x.cid = y.cid AND x.vec_id < y.vec_id
-             JOIN csz z ON z.cid = x.cid AND z.cn <= 10000
-             WHERE $cosXY >= 0.999)
-      SELECT a.cid, a.vec_id, (r.vec_id IS NULL) AS kept
-      FROM au a LEFT JOIN rm r USING (vec_id)
-      WHERE a.vec_id % 4 = 3
-      ORDER BY cid, vec_id
-    """
-  }
-
   val q197AssetNearDupIndexed: QueryDef = Scenario(
     "q197_asset_near_dup_indexed", Scenario.AssetSemantic, Split(4, 3), Append,
     Some(assetNearDupOracleSql))
@@ -3320,6 +3260,9 @@ object PipelineQueries {
     * snapshot-touched fingerprints — DuckDB's md5 of the text IS the
     * md5 of the file's UTF-8 bytes.
     */
+  private def assetFpCte = """fp AS (SELECT doc_id AS asset_id, md5(text) AS fingerprint
+                  FROM documents WHERE text IS NOT NULL)"""
+
   private def assetClustersOracleSelect: String = """
       SELECT fingerprint, MIN(asset_id) AS kept_id, COUNT(*) AS cluster_size
       FROM fp
@@ -3343,8 +3286,7 @@ object PipelineQueries {
     "q198_asset_repair", Scenario.Asset, Split(4, 3),
     BlindRetry(scalars = true),
     Some(s"""
-      WITH fp AS (SELECT doc_id AS asset_id, md5(text) AS fingerprint
-                  FROM documents WHERE text IS NOT NULL),
+      WITH $assetFpCte,
       dmg AS (SELECT COUNT(*) AS n_damaged FROM fp WHERE asset_id % 4 = 3)
       SELECT z.*, dmg.n_damaged, CAST(0 AS BIGINT) AS n_after
       FROM ($assetClustersOracleSelect) z CROSS JOIN dmg
@@ -3366,8 +3308,7 @@ object PipelineQueries {
   val q199StreamingAssetIngest: QueryDef = Scenario(
     "q199_streaming_asset_ingest", Scenario.Asset, Split(4, 3), Stream,
     Some(s"""
-      WITH fp AS (SELECT doc_id AS asset_id, md5(text) AS fingerprint
-                  FROM documents WHERE text IS NOT NULL)
+      WITH $assetFpCte
       $assetClustersOracleSelect
       ORDER BY fingerprint
     """))
@@ -3376,6 +3317,29 @@ object PipelineQueries {
   // q200 frame-level dedup vs the written frame-fingerprint index —
   // the dedup family BELOW the asset (q172's rule on the byte level)
   // ------------------------------------------------------------------
+
+  /** `fr AS (...)`: every payload's 64-byte frames as (asset_id,
+    * frame_no, fingerprint) — md5 over the frame bytes' lowercase hex,
+    * sliced at byte offsets, the twin of
+    * [[graft.operators.Multimodal.frameFingerprints]]. */
+  private val frameFingerprintCte = """fr AS (
+        SELECT doc_id AS asset_id, CAST(i AS BIGINT) AS frame_no,
+               md5(substring(lower(to_hex(encode(text))),
+                 CAST(i * 128 + 1 AS BIGINT), 128))
+                 AS fingerprint
+        FROM (SELECT doc_id, text,
+                     unnest(generate_series(0,
+                       CAST(greatest(ceil(octet_length(encode(text)) / 64.0), 1)
+                         AS BIGINT) - 1)) AS i
+              FROM documents WHERE text IS NOT NULL))"""
+
+  /** `rk AS (...)`: each frame ranked among equal fingerprints in
+    * (asset_id, frame_no) order; `rn = 1` is the globally first copy
+    * the keep-first rule keeps. */
+  private val frameFirstCte = """rk AS (SELECT asset_id, frame_no,
+                    row_number() OVER (PARTITION BY fingerprint
+                                       ORDER BY asset_id, frame_no) AS rn
+             FROM fr)"""
 
   /** Incremental FRAME-level exact dedup of a new asset snapshot
     * against the written frame-fingerprint index — the sub-asset
@@ -3401,21 +3365,9 @@ object PipelineQueries {
     */
   val q200FrameDedupIndexed: QueryDef = Scenario(
     "q200_frame_dedup_indexed", Scenario.Frame, Split(4, 1), Append,
-    Some("""
-      WITH fr AS (
-        SELECT doc_id AS asset_id, CAST(i AS BIGINT) AS frame_no,
-               md5(substring(lower(to_hex(encode(text))),
-                 CAST(i * 128 + 1 AS BIGINT), 128))
-                 AS fingerprint
-        FROM (SELECT doc_id, text,
-                     unnest(generate_series(0,
-                       CAST(greatest(ceil(octet_length(encode(text)) / 64.0), 1)
-                         AS BIGINT) - 1)) AS i
-              FROM documents WHERE text IS NOT NULL)),
-      rk AS (SELECT asset_id, frame_no,
-                    row_number() OVER (PARTITION BY fingerprint
-                                       ORDER BY asset_id, frame_no) AS rn
-             FROM fr)
+    Some(s"""
+      WITH $frameFingerprintCte,
+      $frameFirstCte
       SELECT asset_id, CAST(COUNT(*) AS BIGINT) AS n_frames,
              CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT)
                AS n_kept
@@ -3454,25 +3406,14 @@ object PipelineQueries {
     * (nv9) — replayed from scratch over the whole corpus, snapshot
     * quarter = asset_id % 4 = 3.
     */
-  private def mediaAdmissionCtes: String = {
-    val cosXY = Similarity.cosineSql("x.v", "y.v")
-    s"""fp AS (SELECT doc_id AS asset_id, md5(text) AS fingerprint
-                  FROM documents WHERE text IS NOT NULL),
+  private def mediaAdmissionCtes: String =
+    s"""$assetFpCte,
       keep9 AS (SELECT fingerprint, MIN(asset_id) AS kept_id
                 FROM fp GROUP BY 1),
       ek9 AS (SELECT f.asset_id, (f.asset_id = k.kept_id) AS exact_kept
               FROM fp f JOIN keep9 k USING (fingerprint)
               WHERE f.asset_id % 4 = 3),
-      $assetFeatureCte,
-      cents AS (SELECT vec_id AS cid, v AS centroid
-                FROM feats WHERE vec_id < 8),
-      au AS ${kmeansAssignSql("feats", "cents")},
-      csz AS (SELECT cid, COUNT(*) AS cn FROM au GROUP BY 1),
-      rm AS (SELECT DISTINCT y.vec_id
-             FROM au x
-             JOIN au y ON x.cid = y.cid AND x.vec_id < y.vec_id
-             JOIN csz z ON z.cid = x.cid AND z.cn <= 10000
-             WHERE $cosXY >= 0.999),
+      $assetNearDupCtes,
       nk9 AS (SELECT a.vec_id AS asset_id, (r.vec_id IS NULL) AS near_kept
               FROM au a LEFT JOIN rm r USING (vec_id)
               WHERE a.vec_id % 4 = 3),
@@ -3494,7 +3435,60 @@ object PipelineQueries {
                        AS BIGINT) AS n_kept
               FROM rk WHERE asset_id % 4 = 3
               GROUP BY 1)"""
+
+  /** Each `snap` asset's exact-payload verdict against the asset index
+    * at `path`: is it the global kept id of its bytes. */
+  private def exactKept(s: org.apache.spark.sql.SparkSession, path: String,
+      snap: DataFrame): DataFrame =
+    snap.withColumn("fingerprint", md5(col("payload")))
+      .join(Multimodal.assetDedupIndexed(s, path, snap), "fingerprint")
+      .select(col("asset_id"),
+        (col("asset_id") === col("kept_id")).as("exact_kept"))
+
+  /** The exact modality of the media flagships (q202 / q210): `base`
+    * builds the asset index at `path`, `snap` appends, then
+    * [[exactKept]]. */
+  private def exactKeptAppended(s: org.apache.spark.sql.SparkSession,
+      path: String, base: DataFrame, snap: DataFrame): DataFrame = {
+    Multimodal.assetWriteIndex(base, path)
+    Multimodal.assetAppendIndex(snap, path)
+    exactKept(s, path, snap)
   }
+
+  /** Each assigned snapshot asset's near-dup verdict against the
+    * featurized index at `path`: no smaller-id neighbor at cosine >=
+    * 0.999 in its cluster. */
+  private def nearKept(s: org.apache.spark.sql.SparkSession, path: String,
+      snapAssigned: DataFrame): DataFrame =
+    Clustering.semDedupIndexed(s, path, snapAssigned, threshold = 0.999)
+      .select(col("vec_id").as("asset_id"), col("kept").as("near_kept"))
+
+  /** The featurized modality of the media flagships (q202 / q210): the
+    * base vectors build the semantic index at `path` under the frozen
+    * `cents`, the snapshot quarter's assignment (checkpointed) appends
+    * as generation 1, then [[nearKept]]. */
+  private def nearKeptAppended(s: org.apache.spark.sql.SparkSession,
+      path: String, feats: DataFrame, cents: DataFrame): DataFrame = {
+    Clustering.semanticWriteIndex(
+      Clustering.assignL2(feats.filter(col("vec_id") % 4 =!= 3), cents),
+      path)
+    val snapAssigned = Clustering.assignL2(
+      feats.filter(col("vec_id") % 4 === 3), cents).localCheckpoint()
+    Clustering.semanticAppendIndex(snapAssigned, path, gen = 1)
+    nearKept(s, path, snapAssigned)
+  }
+
+  /** The media admission manifest (q202 / q216): per snapshot asset the
+    * three verdicts and `admitted = exact_kept AND near_kept`. */
+  private def admissionManifest(snap: DataFrame, exact: DataFrame,
+      near: DataFrame, novelty: DataFrame): DataFrame =
+    snap.select(col("asset_id"))
+      .join(exact, "asset_id")
+      .join(near, "asset_id")
+      .join(novelty, "asset_id")
+      .select(col("asset_id"), col("exact_kept"), col("near_kept"),
+        col("n_frames"), col("n_kept"),
+        (col("exact_kept") && col("near_kept")).as("admitted"))
 
   // ------------------------------------------------------------------
   // q202 flagship v9 — the MEDIA admission manifest (day-2 across all
@@ -3521,11 +3515,7 @@ object PipelineQueries {
   val q202CurationV9: QueryDef = QueryDef(
     "q202_curation_v9",
     (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-        .filter(col("text").isNotNull)
-      val assets = Multimodal.attachPayload(docs, "text")
-        .select(col("doc_id").as("asset_id"), col("payload"))
-        .localCheckpoint()
+      val assets = Scenario.payloads(Scenario.mediaDocs(s, dir))
       val base = assets.filter(col("asset_id") % 4 =!= 3)
       val snap = assets.filter(col("asset_id") % 4 === 3)
       // the three modalities build three DISJOINT index layouts and
@@ -3537,38 +3527,12 @@ object PipelineQueries {
       val fpPath = Scenario.workspace("q202_curation_v9", "assetidx", dir)
       val semPath = Scenario.workspace("q202_curation_v9", "assetsem", dir)
       val frPath = Scenario.workspace("q202_curation_v9", "frameidx", dir)
-      var exactKept: org.apache.spark.sql.DataFrame = null
-      var nearKept: org.apache.spark.sql.DataFrame = null
-      var novelty: org.apache.spark.sql.DataFrame = null
+      var exact, near, novelty: DataFrame = null
       graft.operators.Parallelism.inParallel(
-        // ---- exact payload modality ----
+        () => exact = exactKeptAppended(s, fpPath, base, snap),
         () => {
-          Multimodal.assetWriteIndex(base, fpPath)
-          Multimodal.assetAppendIndex(snap, fpPath)
-          exactKept = snap
-            .withColumn("fingerprint", md5(col("payload")))
-            .join(Multimodal.assetDedupIndexed(s, fpPath, snap),
-              "fingerprint")
-            .select(col("asset_id"),
-              (col("asset_id") === col("kept_id")).as("exact_kept"))
-        },
-        // ---- featurized near-dup modality ----
-        () => {
-          val feats = Multimodal.featurizeVector(assets, "asset_id")
-            .localCheckpoint()
-          val cents = feats.filter(col("vec_id") < 8)
-            .select(col("vec_id").as("cid"), col("embedding").as("centroid"))
-          Clustering.semanticWriteIndex(
-            Clustering.assignL2(feats.filter(col("vec_id") % 4 =!= 3),
-              cents),
-            semPath)
-          val snapAssigned = Clustering.assignL2(
-            feats.filter(col("vec_id") % 4 === 3), cents).localCheckpoint()
-          Clustering.semanticAppendIndex(snapAssigned, semPath,
-            gen = 1)
-          nearKept = Clustering.semDedupIndexed(s, semPath,
-              snapAssigned, threshold = 0.999)
-            .select(col("vec_id").as("asset_id"), col("kept").as("near_kept"))
+          val (feats, cents) = Scenario.featurized(assets, "asset_id")
+          near = nearKeptAppended(s, semPath, feats, cents)
         },
         // ---- frame-novelty modality ----
         () => {
@@ -3577,15 +3541,7 @@ object PipelineQueries {
           novelty = Multimodal.frameDedupIndexed(s, frPath, snap,
             frameBytes = 64)
         })
-      // ---- the admission manifest ----
-      snap.select(col("asset_id"))
-        .join(exactKept, "asset_id")
-        .join(nearKept, "asset_id")
-        .join(novelty, "asset_id")
-        .select(col("asset_id"), col("exact_kept"), col("near_kept"),
-          col("n_frames"), col("n_kept"),
-          (col("exact_kept") && col("near_kept")).as("admitted"))
-        .orderBy(col("asset_id"))
+      admissionManifest(snap, exact, near, novelty).orderBy(col("asset_id"))
     },
     Some(s"""
       WITH $mediaAdmissionCtes
@@ -3620,13 +3576,8 @@ object PipelineQueries {
   val q203AssetDrift: QueryDef = QueryDef(
     "q203_asset_drift",
     (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-        .filter(col("text").isNotNull)
-      val feats = Multimodal.featurizeVector(
-        Multimodal.attachPayload(docs, "text"), "doc_id")
-        .localCheckpoint()
-      val cents = feats.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("centroid"))
+      val (feats, cents) = Scenario.featurized(
+        Multimodal.attachPayload(Scenario.mediaDocs(s, dir), "text"), "doc_id")
       val nb = element_at(col("embedding"), 2)
       val path = Scenario.workspace("q203_asset_drift", "assetsem", dir)
       Clustering.semanticWriteIndex(
@@ -3640,10 +3591,7 @@ object PipelineQueries {
         .orderBy(col("cid"))
     },
     Some(s"""
-      WITH $assetFeatureCte,
-      cents AS (SELECT vec_id AS cid, v AS centroid
-                FROM feats WHERE vec_id < 8),
-      au AS ${kmeansAssignSql("feats", "cents")},
+      WITH $assetAssignCtes,
       agg AS (SELECT cid,
                      COUNT(CASE WHEN vec_id % 2 = 0 THEN 1 END) AS n_base,
                      COUNT(CASE WHEN vec_id % 2 = 1 AND v[2] <= 450.0
@@ -3655,26 +3603,7 @@ object PipelineQueries {
                               THEN CAST(FLOOR(d2 * 1000000.0) AS BIGINT) END)
                        AS sf_new
               FROM au GROUP BY 1),
-      sh AS (SELECT cid, n_base, n_new, sf_base, sf_new,
-                    CASE WHEN SUM(n_base) OVER () > 0
-                         THEN CAST(n_base AS DOUBLE)
-                              / CAST(SUM(n_base) OVER () AS DOUBLE) END AS shb,
-                    CASE WHEN SUM(n_new) OVER () > 0
-                         THEN CAST(n_new AS DOUBLE)
-                              / CAST(SUM(n_new) OVER () AS DOUBLE) END AS shn
-             FROM agg)
-      SELECT cid, CAST(n_base AS BIGINT) AS n_base,
-             CAST(n_new AS BIGINT) AS n_new,
-             round(shb, 6) AS share_base, round(shn, 6) AS share_new,
-             CASE WHEN n_base > 0
-                  THEN FLOOR(CAST(sf_base AS DOUBLE) / n_base) / 1000000.0 END
-               AS mean_d2_base,
-             CASE WHEN n_new > 0
-                  THEN FLOOR(CAST(sf_new AS DOUBLE) / n_new) / 1000000.0 END
-               AS mean_d2_new,
-             COALESCE(ABS(shn - shb) > 0.05, FALSE) AS drifted
-      FROM sh
-      ORDER BY cid
+      ${semanticDriftSql(0.05)}
     """))
 
   // ------------------------------------------------------------------
@@ -3693,8 +3622,7 @@ object PipelineQueries {
     */
   val q204StreamingFrameIngest: QueryDef = Scenario(
     "q204_streaming_frame_ingest", Scenario.Frame, Split(4, 1), Stream,
-    // the q200 oracle verbatim: the streamed generations must serve
-    // the identical novelty counts
+    // the streamed generations must serve q200's novelty counts
     q200FrameDedupIndexed.oracle)
 
   // ------------------------------------------------------------------
@@ -3776,11 +3704,7 @@ object PipelineQueries {
   val q206AssetCompactAmplification: QueryDef = QueryDef(
     "q206_asset_compact_amplification",
     (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-        .filter(col("text").isNotNull)
-      val assets = Multimodal.attachPayload(docs, "text")
-        .select(col("doc_id").as("asset_id"), col("payload"))
-        .localCheckpoint()
+      val assets = Scenario.payloads(Scenario.mediaDocs(s, dir))
       val path =
         Scenario.workspace("q206_asset_compact_amplification", "assetidx", dir)
       // the amplification gate MEASURES the historical wide geometry
@@ -3803,8 +3727,7 @@ object PipelineQueries {
         .orderBy(col("fingerprint"))
     },
     Some(s"""
-      WITH fp AS (SELECT doc_id AS asset_id, md5(text) AS fingerprint
-                  FROM documents WHERE text IS NOT NULL),
+      WITH $assetFpCte,
       gsh AS (SELECT CASE WHEN asset_id % 4 < 2 THEN 0
                           ELSE asset_id % 4 - 1 END AS g,
                      substr(fingerprint, 1, 2) AS shard
@@ -3842,19 +3765,37 @@ object PipelineQueries {
     */
   val q207PackedAssetIngest: QueryDef = Scenario(
     "q207_packed_asset_ingest", Scenario.PackedAsset, Split(4, 3), Stream,
-    // the q194/q199 oracle verbatim: packing is a layout change only
-    Some(s"""
-      WITH fp AS (SELECT doc_id AS asset_id, md5(text) AS fingerprint
-                  FROM documents WHERE text IS NOT NULL)
-      $assetClustersOracleSelect
-      ORDER BY fingerprint
-    """))
+    // packing is a layout change only: q199's verdicts must not move
+    q199StreamingAssetIngest.oracle)
 
   // ------------------------------------------------------------------
   // q208 frame-level SimHash NEAR-dup vs the written band index — the
   // hamming ball below the asset (q200's exact hashes miss one
   // flipped byte; this member does not)
   // ------------------------------------------------------------------
+
+  /** Every payload's 64-byte frames as SimHash documents (doc_id, blk,
+    * text): the frame's coordinates in the 2^20 stride `doc_id`, its
+    * asset's source as the block, its hex as overlapping 8-char
+    * tokens — the frames-as-documents relation q208 and q213 replay. */
+  private val frameSimhashDocs = s"""
+        SELECT doc_id, blk,
+               CASE WHEN strlen(h) <= 8 THEN h
+                    ELSE array_to_string(list_append(list_transform(
+                      generate_series(0,
+                        CAST((strlen(h) - 8) // 4 AS BIGINT)),
+                      j -> substring(h, j * 4 + 1, 8)),
+                      substring(h, strlen(h) - 7, 8)), ' ')
+               END AS text
+        FROM (SELECT doc_id * ${1L << 20} + i AS doc_id, source AS blk,
+                     substring(lower(to_hex(encode(text))),
+                       CAST(i * 128 + 1 AS BIGINT), 128) AS h
+              FROM (SELECT doc_id, source, text,
+                           unnest(generate_series(0,
+                             CAST(greatest(
+                               ceil(octet_length(encode(text)) / 64.0), 1)
+                               AS BIGINT) - 1)) AS i
+                    FROM documents WHERE text IS NOT NULL))"""
 
   /** Incremental frame-level SimHash near-dup against the WRITTEN
     * band index ([[graft.operators.Multimodal.frameSimhashWriteIndex]]
@@ -3877,24 +3818,7 @@ object PipelineQueries {
     "q208_frame_simhash_incremental", Scenario.FrameSimhash, Split(4, 3),
     Append,
     Some(s"""
-      WITH ${simhashPairsCtes(s"""
-        SELECT doc_id, blk,
-               CASE WHEN strlen(h) <= 8 THEN h
-                    ELSE array_to_string(list_append(list_transform(
-                      generate_series(0,
-                        CAST((strlen(h) - 8) // 4 AS BIGINT)),
-                      j -> substring(h, j * 4 + 1, 8)),
-                      substring(h, strlen(h) - 7, 8)), ' ')
-               END AS text
-        FROM (SELECT doc_id * ${1L << 20} + i AS doc_id, source AS blk,
-                     substring(lower(to_hex(encode(text))),
-                       CAST(i * 128 + 1 AS BIGINT), 128) AS h
-              FROM (SELECT doc_id, source, text,
-                           unnest(generate_series(0,
-                             CAST(greatest(
-                               ceil(octet_length(encode(text)) / 64.0), 1)
-                               AS BIGINT) - 1)) AS i
-                    FROM documents WHERE text IS NOT NULL))""")}
+      WITH ${simhashPairsCtes(frameSimhashDocs)}
       SELECT blk,
              CAST(doc_a // ${1L << 20} AS BIGINT) AS asset_a,
              CAST(doc_a % ${1L << 20} AS BIGINT) AS frame_a,
@@ -3929,11 +3853,7 @@ object PipelineQueries {
   val q209FrameDecontamination: QueryDef = QueryDef(
     "q209_frame_decontamination",
     (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-        .filter(col("text").isNotNull)
-      val assets = Multimodal.attachPayload(docs, "text")
-        .select(col("doc_id").as("asset_id"), col("payload"))
-        .localCheckpoint()
+      val assets = Scenario.payloads(Scenario.mediaDocs(s, dir))
       val path =
         Scenario.workspace("q209_frame_decontamination", "frdecon", dir)
       Multimodal.frameWriteIndex(assets.filter(col("asset_id") % 4 =!= 3),
@@ -3942,17 +3862,8 @@ object PipelineQueries {
           assets.filter(col("asset_id") % 4 === 3), frameBytes = 64)
         .orderBy(col("asset_id"))
     },
-    Some("""
-      WITH fr AS (
-        SELECT doc_id AS asset_id, CAST(i AS BIGINT) AS frame_no,
-               md5(substring(lower(to_hex(encode(text))),
-                 CAST(i * 128 + 1 AS BIGINT), 128))
-                 AS fingerprint
-        FROM (SELECT doc_id, text,
-                     unnest(generate_series(0,
-                       CAST(greatest(ceil(octet_length(encode(text)) / 64.0), 1)
-                         AS BIGINT) - 1)) AS i
-              FROM documents WHERE text IS NOT NULL)),
+    Some(s"""
+      WITH $frameFingerprintCte,
       corpus AS (SELECT DISTINCT fingerprint FROM fr WHERE asset_id % 4 <> 3)
       SELECT f.asset_id, CAST(COUNT(*) AS BIGINT) AS n_frames,
              CAST(SUM(CASE WHEN c.fingerprint IS NOT NULL THEN 1 ELSE 0 END)
@@ -4001,45 +3912,22 @@ object PipelineQueries {
   val q210CurationV10: QueryDef = QueryDef(
     "q210_curation_v10",
     (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-        .filter(col("text").isNotNull)
-      val assets = Multimodal.attachPayload(docs, "text")
-        .select(col("doc_id").as("asset_id"), col("source"),
-          col("payload"),
-          octet_length(col("payload")).cast("long").as("n_bytes"))
-        .localCheckpoint()
+      val assets = Scenario.payloads(Scenario.mediaDocs(s, dir), col("source"),
+        octet_length(col("payload")).cast("long").as("n_bytes"))
       val base = assets.filter(col("asset_id") % 4 =!= 3)
       val snap = assets.filter(col("asset_id") % 4 === 3)
       // ---- exact payload modality (q194) ----
-      val fpPath = Scenario.workspace("q210_curation_v10", "assetidx", dir)
-      Multimodal.assetWriteIndex(base, fpPath)
-      Multimodal.assetAppendIndex(snap, fpPath)
-      val exactKept = snap
-        .withColumn("fingerprint", md5(col("payload")))
-        .join(Multimodal.assetDedupIndexed(s, fpPath, snap),
-          "fingerprint")
-        .select(col("asset_id"),
-          (col("asset_id") === col("kept_id")).as("exact_kept"))
+      val exact = exactKeptAppended(s,
+        Scenario.workspace("q210_curation_v10", "assetidx", dir), base, snap)
       // ---- featurized near-dup modality (q197) ----
-      val feats = Multimodal.featurizeVector(assets, "asset_id")
-        .localCheckpoint()
-      val cents = feats.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("centroid"))
-      val semPath = Scenario.workspace("q210_curation_v10", "assetsem", dir)
-      Clustering.semanticWriteIndex(
-        Clustering.assignL2(feats.filter(col("vec_id") % 4 =!= 3), cents),
-        semPath)
-      val snapAssigned = Clustering.assignL2(
-        feats.filter(col("vec_id") % 4 === 3), cents).localCheckpoint()
-      Clustering.semanticAppendIndex(snapAssigned, semPath, gen = 1)
-      val nearKept = Clustering.semDedupIndexed(s, semPath,
-          snapAssigned, threshold = 0.999)
-        .select(col("vec_id").as("asset_id"), col("kept").as("near_kept"))
+      val (feats, cents) = Scenario.featurized(assets, "asset_id")
+      val near = nearKeptAppended(s,
+        Scenario.workspace("q210_curation_v10", "assetsem", dir), feats, cents)
       // ---- the dedup funnel, then the mixture over the survivors ----
       val verdicts = snap.select(col("asset_id"), col("source"),
           col("n_bytes"))
-        .join(exactKept, "asset_id")
-        .join(nearKept, "asset_id")
+        .join(exact, "asset_id")
+        .join(near, "asset_id")
         .withColumn("__da", col("exact_kept") && col("near_kept"))
         .localCheckpoint()
       val mix = Curation.mixtureFromCounts(
@@ -4135,21 +4023,9 @@ object PipelineQueries {
     BlindRetry(scalars = true),
     // q200's oracle with the damage scalars: every snapshot frame
     // coordinate was doubled, the repair leaves zero
-    Some("""
-      WITH fr AS (
-        SELECT doc_id AS asset_id, CAST(i AS BIGINT) AS frame_no,
-               md5(substring(lower(to_hex(encode(text))),
-                 CAST(i * 128 + 1 AS BIGINT), 128))
-                 AS fingerprint
-        FROM (SELECT doc_id, text,
-                     unnest(generate_series(0,
-                       CAST(greatest(ceil(octet_length(encode(text)) / 64.0), 1)
-                         AS BIGINT) - 1)) AS i
-              FROM documents WHERE text IS NOT NULL)),
-      rk AS (SELECT asset_id, frame_no,
-                    row_number() OVER (PARTITION BY fingerprint
-                                       ORDER BY asset_id, frame_no) AS rn
-             FROM fr),
+    Some(s"""
+      WITH $frameFingerprintCte,
+      $frameFirstCte,
       dmg AS (SELECT COUNT(*) AS n_damaged FROM fr WHERE asset_id % 4 = 1)
       SELECT asset_id, CAST(COUNT(*) AS BIGINT) AS n_frames,
              CAST(SUM(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT)
@@ -4183,38 +4059,8 @@ object PipelineQueries {
     */
   val q212StreamingFrameSimhash: QueryDef = Scenario(
     "q212_streaming_frame_simhash", Scenario.FrameSimhash, Split(4, 3), Stream,
-    // the q208 oracle verbatim, with ITS snapshot split: the streamed
-    // generations must serve the identical pair set
-    Some(s"""
-      WITH ${simhashPairsCtes(s"""
-        SELECT doc_id, blk,
-               CASE WHEN strlen(h) <= 8 THEN h
-                    ELSE array_to_string(list_append(list_transform(
-                      generate_series(0,
-                        CAST((strlen(h) - 8) // 4 AS BIGINT)),
-                      j -> substring(h, j * 4 + 1, 8)),
-                      substring(h, strlen(h) - 7, 8)), ' ')
-               END AS text
-        FROM (SELECT doc_id * ${1L << 20} + i AS doc_id, source AS blk,
-                     substring(lower(to_hex(encode(text))),
-                       CAST(i * 128 + 1 AS BIGINT), 128) AS h
-              FROM (SELECT doc_id, source, text,
-                           unnest(generate_series(0,
-                             CAST(greatest(
-                               ceil(octet_length(encode(text)) / 64.0), 1)
-                               AS BIGINT) - 1)) AS i
-                    FROM documents WHERE text IS NOT NULL))""")}
-      SELECT blk,
-             CAST(doc_a // ${1L << 20} AS BIGINT) AS asset_a,
-             CAST(doc_a % ${1L << 20} AS BIGINT) AS frame_a,
-             CAST(doc_b // ${1L << 20} AS BIGINT) AS asset_b,
-             CAST(doc_b % ${1L << 20} AS BIGINT) AS frame_b,
-             CAST(bit_count(xor(fa, fb)) AS BIGINT) AS hamming
-      FROM shpairs
-      WHERE bit_count(xor(fa, fb)) <= 3
-        AND ((doc_a // ${1L << 20}) % 4 = 3 OR (doc_b // ${1L << 20}) % 4 = 3)
-      ORDER BY blk, asset_a, frame_a, asset_b, frame_b
-    """))
+    // the streamed generations must serve q208's identical pair set
+    q208FrameSimhashIncremental.oracle)
 
   // ------------------------------------------------------------------
   // q213 frame-SimHash band-index repair — the repair family's member
@@ -4247,24 +4093,7 @@ object PipelineQueries {
     // snapshot frame (source non-null — NULL-block frames never land
     // band rows), every one doubled; the repair leaves zero
     Some(s"""
-      WITH ${simhashPairsCtes(s"""
-        SELECT doc_id, blk,
-               CASE WHEN strlen(h) <= 8 THEN h
-                    ELSE array_to_string(list_append(list_transform(
-                      generate_series(0,
-                        CAST((strlen(h) - 8) // 4 AS BIGINT)),
-                      j -> substring(h, j * 4 + 1, 8)),
-                      substring(h, strlen(h) - 7, 8)), ' ')
-               END AS text
-        FROM (SELECT doc_id * ${1L << 20} + i AS doc_id, source AS blk,
-                     substring(lower(to_hex(encode(text))),
-                       CAST(i * 128 + 1 AS BIGINT), 128) AS h
-              FROM (SELECT doc_id, source, text,
-                           unnest(generate_series(0,
-                             CAST(greatest(
-                               ceil(octet_length(encode(text)) / 64.0), 1)
-                               AS BIGINT) - 1)) AS i
-                    FROM documents WHERE text IS NOT NULL))""")},
+      WITH ${simhashPairsCtes(frameSimhashDocs)},
       dmg AS (
         SELECT 4 * COUNT(*) AS n_damaged
         FROM (SELECT doc_id,
@@ -4291,6 +4120,18 @@ object PipelineQueries {
   // q214 media release manifest — the release family's media member
   // ------------------------------------------------------------------
 
+  /** The fresh release-manifest derivation up to its per-shard
+    * columns (shard, n_assets, n_bytes, checksum) over `m`, one row
+    * per non-null document. */
+  private val assetManifestSelect = s"""WITH m AS (
+        SELECT substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS shard,
+               CAST(strlen(text) AS BIGINT) AS nb,
+               ${graft.operators.TextOps.hash60Sql(
+                 "concat(CAST(doc_id AS VARCHAR), md5(text))")} AS h
+        FROM documents WHERE text IS NOT NULL)
+      SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_assets,
+             CAST(SUM(nb) AS BIGINT) AS n_bytes, bit_xor(h) AS checksum"""
+
   /** Release MANIFEST on the media side — q184's contract (order-free
     * per-shard `bit_xor` checksums, compositional merge) with BYTE
     * masses and asset fingerprints, exercising BOTH serve paths at
@@ -4310,11 +4151,7 @@ object PipelineQueries {
   val q214AssetManifest: QueryDef = QueryDef(
     "q214_asset_manifest",
     (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-        .filter(col("text").isNotNull)
-      val assets = Multimodal.attachPayload(docs, "text")
-        .select(col("doc_id").as("asset_id"), col("payload"))
-        .localCheckpoint()
+      val assets = Scenario.payloads(Scenario.mediaDocs(s, dir))
       val base = assets.filter(col("asset_id") % 4 =!= 3)
       val delta = assets.filter(col("asset_id") % 4 === 3)
       val merged = Multimodal.assetManifestMerge(
@@ -4332,14 +4169,7 @@ object PipelineQueries {
     // one fresh derivation; the merge AND the index serve must both
     // reproduce it (n_idx/ck_index are the from-index twins)
     Some(s"""
-      WITH m AS (
-        SELECT substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS shard,
-               CAST(strlen(text) AS BIGINT) AS nb,
-               ${graft.operators.TextOps.hash60Sql(
-                 "concat(CAST(doc_id AS VARCHAR), md5(text))")} AS h
-        FROM documents WHERE text IS NOT NULL)
-      SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_assets,
-             CAST(SUM(nb) AS BIGINT) AS n_bytes, bit_xor(h) AS checksum,
+      $assetManifestSelect,
              CAST(COUNT(*) AS BIGINT) AS n_idx, bit_xor(h) AS ck_index
       FROM m GROUP BY shard ORDER BY shard
     """))
@@ -4363,17 +4193,10 @@ object PipelineQueries {
     */
   val q215StreamingManifest: QueryDef = Scenario(
     "q215_streaming_manifest", Scenario.Manifest, Split(4, 3), Stream,
-    // q214's fresh derivation, verbatim minus the index-served twins:
-    // the streamed generations must fold to the identical manifest
+    // the streamed generations must fold to q214's manifest (without
+    // its index-served twins)
     Some(s"""
-      WITH m AS (
-        SELECT substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS shard,
-               CAST(strlen(text) AS BIGINT) AS nb,
-               ${graft.operators.TextOps.hash60Sql(
-                 "concat(CAST(doc_id AS VARCHAR), md5(text))")} AS h
-        FROM documents WHERE text IS NOT NULL)
-      SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_assets,
-             CAST(SUM(nb) AS BIGINT) AS n_bytes, bit_xor(h) AS checksum
+      $assetManifestSelect
       FROM m GROUP BY shard ORDER BY shard
     """))
 
@@ -4400,11 +4223,7 @@ object PipelineQueries {
   val q216StreamingMedia: QueryDef = QueryDef(
     "q216_streaming_media",
     (s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-        .filter(col("text").isNotNull)
-      val assets = Multimodal.attachPayload(docs, "text")
-        .select(col("doc_id").as("asset_id"), col("payload"))
-        .localCheckpoint()
+      val assets = Scenario.payloads(Scenario.mediaDocs(s, dir))
       val base = assets.filter(col("asset_id") % 4 =!= 3)
       val snap = assets.filter(col("asset_id") % 4 === 3)
       // day-1 backfill of the three indexes via the batch writers; the
@@ -4413,11 +4232,8 @@ object PipelineQueries {
       // landing-layout pack — four writes into DISJOINT paths — overlap
       // (guide §2.6: independent floor-bound jobs, sum → max)
       val fpPath = Scenario.workspace("q216_streaming_media", "assetidx", dir)
-      val feats = Multimodal.featurizeVector(assets, "asset_id")
-        .localCheckpoint()
-      val cents = feats.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("cid"), col("embedding").as("centroid"))
-        .localCheckpoint()
+      val (feats, frozen) = Scenario.featurized(assets, "asset_id")
+      val cents = frozen.localCheckpoint()
       val semPath = Scenario.workspace("q216_streaming_media", "assetsem", dir)
       val frPath = Scenario.workspace("q216_streaming_media", "frameidx", dir)
       val landing = Scenario.workspace("q216_streaming_media", "packed_in", dir)
@@ -4440,30 +4256,16 @@ object PipelineQueries {
           frPath)
         .agg(count(lit(1)).as("n_inconsistent"))
       // q202's admission manifest, served from the streamed indexes
-      val exactKept = snap
-        .withColumn("fingerprint", md5(col("payload")))
-        .join(Multimodal.assetDedupIndexed(s, fpPath, snap),
-          "fingerprint")
-        .select(col("asset_id"),
-          (col("asset_id") === col("kept_id")).as("exact_kept"))
-      val snapAssigned = Clustering.assignL2(
-        feats.filter(col("vec_id") % 4 === 3), cents).localCheckpoint()
-      val nearKept = Clustering.semDedupIndexed(s, semPath,
-          snapAssigned, threshold = 0.999)
-        .select(col("vec_id").as("asset_id"), col("kept").as("near_kept"))
+      val exact = exactKept(s, fpPath, snap)
+      val near = nearKept(s, semPath, Clustering.assignL2(
+        feats.filter(col("vec_id") % 4 === 3), cents).localCheckpoint())
       val novelty = Multimodal.frameDedupIndexed(s, frPath, snap,
         frameBytes = 64)
-      snap.select(col("asset_id"))
-        .join(exactKept, "asset_id")
-        .join(nearKept, "asset_id")
-        .join(novelty, "asset_id")
-        .select(col("asset_id"), col("exact_kept"), col("near_kept"),
-          col("n_frames"), col("n_kept"),
-          (col("exact_kept") && col("near_kept")).as("admitted"))
+      admissionManifest(snap, exact, near, novelty)
         .crossJoin(broadcast(inconsistent))
         .orderBy(col("asset_id"))
     },
-    // q202's oracle verbatim + the zero consistency scalar
+    // q202's admission oracle plus the zero consistency scalar
     Some(s"""
       WITH $mediaAdmissionCtes
       SELECT e.asset_id, e.exact_kept, n.near_kept, v.n_frames,

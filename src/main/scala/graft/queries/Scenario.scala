@@ -2,6 +2,8 @@ package graft.queries
 
 import scala.collection.mutable
 
+import org.apache.hadoop.fs.Path
+
 import graft.{QueryDef, Tables}
 import graft.operators.{Clustering, Curation, Dedup, IndexLayout, IndexShards,
   Multimodal, Pq, Retrieval, Similarity, SubstringDedup, TmpWorkspaces}
@@ -48,8 +50,10 @@ import org.apache.spark.sql.functions._
   *
   * Rule: [[Scenario.apply]] takes no parameter that only one query
   * sets. A query that would need one stays hand-written, and may call
-  * the pieces
-  * ([[workspace]], [[landChunks]], [[deliver]]):
+  * the pieces: [[workspace]], [[landChunks]] and [[deliver]], and for
+  * media [[mediaDocs]], [[payloads]] (the checkpointed payload frame
+  * the media families read too) and [[featurized]] (the byte-stat
+  * vectors and their frozen centroids, as in [[AssetSemantic]]):
   *  - q176, q202, q210 and q216 combine several indexes;
   *  - q193 retries the sink through the batch body;
   *  - q217 swaps the serve pointer; q218 auto-compacts beside a fresh
@@ -57,7 +61,10 @@ import org.apache.spark.sql.functions._
   *  - q151 repairs without auditing (the check would add Spark jobs);
   *  - q185 streams the whole corpus into an index it never built;
   *  - q205/q206 append twice and measure file counts around the
-  *    compaction, which no other query does.
+  *    compaction, which no other query does;
+  *  - q203 audits drift instead of probing; q209 probes a delta it
+  *    never appends; q214 joins a merged manifest with the one its
+  *    index serves.
   */
 object Scenario {
 
@@ -81,8 +88,8 @@ object Scenario {
   /** The delta's `cols`, checkpointed, as two parquet files (the
     * `first` rows, the rest), one file per trigger. */
   final case class Chunks(first: Column, cols: String*) extends Landing
-  /** One `.bin` file per delta document of `docs`, half the files per
-    * trigger. */
+  /** One `.bin` file per delta document of `docs`; the first trigger
+    * takes the n / 2 + 1 smallest ids, the second the rest. */
   final case class BinFiles(docs: DataFrame) extends Landing
   /** The snapshot packed into 4 parquet files, two per trigger. */
   case object Packed extends Landing
@@ -177,7 +184,7 @@ object Scenario {
         Multimodal.writeAssets(docs.filter(r.split.delta("doc_id")),
           "doc_id", "text", in)
         (Multimodal.streamBinaryDir(r.s, in,
-          maxFilesPerTrigger = Multimodal.dirFileCount(r.s, in) / 2 + 1),
+          maxFilesPerTrigger = orderBinFiles(r.s, in)),
           () => f.landed(f.snapshot()))
       case Packed =>
         val snap = f.snapshot()
@@ -185,6 +192,26 @@ object Scenario {
         (Multimodal.streamPackedDir(r.s, in, maxFilesPerTrigger = 2),
           () => f.landed(snap))
     }
+  }
+
+  /** Orders the `<id>.bin` files under `in` for the file source, which
+    * takes the oldest files first: the n / 2 + 1 with the smallest ids
+    * get one modification time and the rest a later one. Their write
+    * times, set by parallel tasks, would otherwise decide which assets
+    * reach the first micro-batch. Returns n / 2 + 1, the first batch's
+    * file count. */
+  private def orderBinFiles(s: SparkSession, in: String): Int = {
+    val dir = new Path(in)
+    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val files = fs.listStatus(dir).map(_.getPath)
+      .filter(_.getName.endsWith(".bin"))
+      .sortBy(_.getName.stripSuffix(".bin").toLong)
+    val first = files.length / 2 + 1
+    val t = System.currentTimeMillis() - 2000L
+    files.zipWithIndex.foreach { case (p, i) =>
+      fs.setTimes(p, if (i < first) t else t + 1000L, -1L)
+    }
+    first
   }
 
   // ------------------------------------------------------------------
@@ -208,6 +235,27 @@ object Scenario {
     }
     s.readStream.schema(rows.schema).option("maxFilesPerTrigger", 1)
       .parquet(in)
+  }
+
+  /** The fixture's media documents: those with a non-null text. */
+  def mediaDocs(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "documents").filter(col("text").isNotNull)
+
+  /** `docs`' text as payload bytes, `(asset_id, extra..., payload)`,
+    * checkpointed: every media query reads the bytes once. */
+  def payloads(docs: DataFrame, extra: Column*): DataFrame =
+    Multimodal.attachPayload(docs, "text")
+      .select(col("doc_id").as("asset_id") +: extra :+ col("payload"): _*)
+      .localCheckpoint()
+
+  /** The byte-stat vectors of `assets` keyed by `idCol`
+    * ([[graft.operators.Multimodal.featurizeVector]]), checkpointed,
+    * and the centroids frozen on the first 8 of them, `(cid,
+    * centroid)`. */
+  def featurized(assets: DataFrame, idCol: String): (DataFrame, DataFrame) = {
+    val feats = Multimodal.featurizeVector(assets, idCol).localCheckpoint()
+    (feats, feats.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("cid"), col("embedding").as("centroid")))
   }
 
   /** Ingests `stream` through `body` until it has drained, then
@@ -235,14 +283,11 @@ object Scenario {
     val source: DataFrame = Tables.load(r.s, r.dir, "embeddings")
   }
 
-  /** Media assets: the non-null documents' text as payload bytes,
-    * checkpointed with the `extra` columns. */
+  /** Media assets: [[payloads]] of [[mediaDocs]] with the `extra`
+    * columns. */
   private abstract class Payloads(r: Run, extra: String*) extends Steps(r) {
-    val docs: DataFrame = Tables.load(r.s, r.dir, "documents")
-      .filter(col("text").isNotNull)
-    val source: DataFrame = Multimodal.attachPayload(docs, "text")
-      .select(col("doc_id").as("asset_id") +: (extra :+ "payload").map(col): _*)
-      .localCheckpoint()
+    val docs: DataFrame = mediaDocs(r.s, r.dir)
+    val source: DataFrame = payloads(docs, extra.map(col): _*)
   }
 
   val Exact: Family = Family("doc_id", new Text(_) {
@@ -501,12 +546,9 @@ object Scenario {
   /** Featurized assets in the semantic layout, centroids frozen on the
     * first 8 assets' vectors, probed by near-dup SemDeDup. */
   val AssetSemantic: Family = Family("vec_id", new Steps(_) {
-    val docs: DataFrame = Tables.load(r.s, r.dir, "documents")
-      .filter(col("text").isNotNull)
-    val source: DataFrame = Multimodal.featurizeVector(
-      Multimodal.attachPayload(docs, "text"), "doc_id").localCheckpoint()
-    val cents: DataFrame = source.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("centroid"))
+    val docs: DataFrame = mediaDocs(r.s, r.dir)
+    val (source, cents) =
+      featurized(Multimodal.attachPayload(docs, "text"), "doc_id")
     def build(): Unit = Clustering.semanticWriteIndex(
       Clustering.assignL2(source.filter(r.base), cents), r.index)
     override def snapshot(): DataFrame =

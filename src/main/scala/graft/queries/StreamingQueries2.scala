@@ -1,8 +1,9 @@
 package graft.queries
 
 import graft.QueryDef
-import graft.streaming.{StreamRunner, StreamingOver, UpsertSink}
+import graft.streaming.{EvictingWindow, StreamRunner, StreamingOver, Triggers, UpsertSink}
 import graft.streaming.StreamingOver.OverEvent
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Second streaming batch: sliding (HOP) windows, the custom
@@ -14,6 +15,66 @@ object StreamingQueries2 {
 
   private val Wm = "1 hour"
   private val WmCut = s"(SELECT max(ts) - INTERVAL 1 HOUR FROM events)"
+
+  /** `ev` under the 1-hour watermark as the keyed replay rows of the
+    * window and trigger operators: (key, tsMs, id, value) plus `more`.
+    */
+  private def keyedValues(ev: DataFrame, more: Column*): DataFrame =
+    ev.withWatermark("ts", Wm)
+      .select(Seq(col("user_id").as("key"),
+        expr("unix_micros(ts) div 1000").as("tsMs"),
+        col("event_id").as("id"), col("value")) ++ more: _*)
+
+  private def purchases(s: SparkSession, dir: String): DataFrame =
+    StreamRunner.eventsStream(s, dir).filter(col("event_type") === "purchase")
+
+  private def triggerEvents(s: SparkSession, dir: String) = {
+    import s.implicits._
+    keyedValues(StreamRunner.eventsStream(s, dir)).as[Triggers.TrEvent]
+  }
+
+  /** Per-user 1-day windows over purchases whose `evictor` drops
+    * elements before the count and sum run (q91 / q105).
+    */
+  private def evictingWindow(s: SparkSession, dir: String,
+      evictor: EvictingWindow.Evictor): DataFrame = {
+    import s.implicits._
+    val ev = keyedValues(purchases(s, dir)).as[EvictingWindow.EwEvent]
+    val out = EvictingWindow(ev, winMs = 86400000L, evictor).toDF()
+      .select(col("key").as("user_id"), col("winStart").as("win_start"),
+        col("cnt"), col("sum"))
+    StreamRunner.runToTable(out, "append")
+      .orderBy(col("user_id"), col("win_start"))
+  }
+
+  /** The delta-trigger oracle (q103 / q106): a recursive walk over each
+    * user's closed events in (ms, event_id) order that fires when a
+    * value exceeds the seed by more than 100 and then re-seeds. `step`
+    * is the walked row's `n, sum_cents` given the previous row `w`.
+    */
+  private def deltaTriggerOracle(step: String, orderBy: String): String = s"""
+      WITH RECURSIVE e AS (
+        SELECT user_id, event_id, value,
+               CAST(round(value * 100) AS BIGINT) AS cents,
+               ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY
+                 CAST(floor(epoch_us(ts) / 1000) AS BIGINT), event_id) AS rn
+        FROM events
+        WHERE ts <= (SELECT max(ts) - INTERVAL 1 HOUR FROM events)),
+      walk AS (
+        SELECT user_id, rn, value AS seed, event_id,
+               FALSE AS fired, 1::BIGINT AS n, cents AS sum_cents
+        FROM e WHERE rn = 1
+        UNION ALL
+        SELECT e.user_id, e.rn,
+               CASE WHEN e.value - w.seed > 100 THEN e.value ELSE w.seed END,
+               e.event_id, e.value - w.seed > 100,
+               $step
+        FROM walk w
+        JOIN e ON e.user_id = w.user_id AND e.rn = w.rn + 1)
+      SELECT user_id, event_id AS fire_id, n, sum_cents
+      FROM walk WHERE fired
+      ORDER BY user_id, $orderBy
+    """
 
   // ------------------------------------------------------------------
   // q63 sliding (HOP) window: 1-day windows every 12 hours
@@ -59,13 +120,7 @@ object StreamingQueries2 {
       import s.implicits._
       // Catalyst pushes the filter below EventTimeWatermark, so the
       // watermark tracks max *purchase* ts — the oracle cuts there too.
-      val ev = StreamRunner.eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .withWatermark("ts", Wm)
-        .select(col("user_id").as("key"),
-          expr("unix_micros(ts) div 1000").as("tsMs"),
-          col("event_id").as("id"), col("value"), col("ts"))
-        .as[OverEvent]
+      val ev = keyedValues(purchases(s, dir), col("ts")).as[OverEvent]
       val out = StreamingOver(ev, precedingRows = Int.MaxValue).toDF()
         .select(col("key").as("user_id"), col("id").as("event_id"),
           col("frameSum").as("running_sum"), col("frameCnt").as("running_cnt"))
@@ -139,13 +194,7 @@ object StreamingQueries2 {
     "q81_stream_over_range",
     (s, dir) => {
       import s.implicits._
-      val ev = StreamRunner.eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .withWatermark("ts", Wm)
-        .select(col("user_id").as("key"),
-          expr("unix_micros(ts) div 1000").as("tsMs"),
-          col("event_id").as("id"), col("value"), col("ts"))
-        .as[OverEvent]
+      val ev = keyedValues(purchases(s, dir), col("ts")).as[OverEvent]
       val out = graft.streaming.StreamingOverRange(ev, rangeMs = 6L * 3600 * 1000)
         .toDF()
         .select(col("key").as("user_id"), col("id").as("event_id"),
@@ -495,22 +544,8 @@ object StreamingQueries2 {
 
   val q91EvictingWindow: QueryDef = QueryDef(
     "q91_evicting_window",
-    (s, dir) => {
-      import s.implicits._
-      val ev = StreamRunner.eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .withWatermark("ts", Wm)
-        .select(col("user_id").as("key"),
-          expr("unix_micros(ts) div 1000").as("tsMs"),
-          col("event_id").as("id"), col("value"))
-        .as[graft.streaming.EvictingWindow.EwEvent]
-      val out = graft.streaming.EvictingWindow(ev, winMs = 86400000L,
-        graft.streaming.EvictingWindow.Evictor.CountEvictor(5)).toDF()
-        .select(col("key").as("user_id"), col("winStart").as("win_start"),
-          col("cnt"), col("sum"))
-      StreamRunner.runToTable(out, "append")
-        .orderBy(col("user_id"), col("win_start"))
-    },
+    (s, dir) =>
+      evictingWindow(s, dir, EvictingWindow.Evictor.CountEvictor(5)),
     Some("""
       WITH e AS (
         SELECT user_id, event_id,
@@ -541,43 +576,14 @@ object StreamingQueries2 {
   val q103DeltaTrigger: QueryDef = QueryDef(
     "q103_delta_trigger",
     (s, dir) => {
-      import s.implicits._
-      import graft.streaming.Triggers
-      val ev = StreamRunner.eventsStream(s, dir)
-        .withWatermark("ts", Wm)
-        .select(col("user_id").as("key"),
-          expr("unix_micros(ts) div 1000").as("tsMs"),
-          col("event_id").as("id"), col("value"))
-        .as[Triggers.TrEvent]
+      val ev = triggerEvents(s, dir)
       val out = Triggers.deltaTrigger(ev, threshold = 100.0).toDF()
         .select(col("key").as("user_id"), col("id").as("fire_id"),
           col("n"), col("sumCents").as("sum_cents"))
       StreamRunner.runToTable(out, "append")
         .orderBy(col("user_id"), col("n"))
     },
-    Some("""
-      WITH RECURSIVE e AS (
-        SELECT user_id, event_id, value,
-               CAST(round(value * 100) AS BIGINT) AS cents,
-               ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY
-                 CAST(floor(epoch_us(ts) / 1000) AS BIGINT), event_id) AS rn
-        FROM events
-        WHERE ts <= (SELECT max(ts) - INTERVAL 1 HOUR FROM events)),
-      walk AS (
-        SELECT user_id, rn, value AS seed, event_id,
-               FALSE AS fired, 1::BIGINT AS n, cents AS sum_cents
-        FROM e WHERE rn = 1
-        UNION ALL
-        SELECT e.user_id, e.rn,
-               CASE WHEN e.value - w.seed > 100 THEN e.value ELSE w.seed END,
-               e.event_id, e.value - w.seed > 100,
-               w.n + 1, w.sum_cents + e.cents
-        FROM walk w
-        JOIN e ON e.user_id = w.user_id AND e.rn = w.rn + 1)
-      SELECT user_id, event_id AS fire_id, n, sum_cents
-      FROM walk WHERE fired
-      ORDER BY user_id, n
-    """))
+    Some(deltaTriggerOracle("w.n + 1, w.sum_cents + e.cents", "n")))
 
   // ------------------------------------------------------------------
   // q104 ContinuousEventTimeTrigger analog: daily tumbling window
@@ -590,14 +596,7 @@ object StreamingQueries2 {
   val q104ContinuousTrigger: QueryDef = QueryDef(
     "q104_continuous_trigger",
     (s, dir) => {
-      import s.implicits._
-      import graft.streaming.Triggers
-      val ev = StreamRunner.eventsStream(s, dir)
-        .withWatermark("ts", Wm)
-        .select(col("user_id").as("key"),
-          expr("unix_micros(ts) div 1000").as("tsMs"),
-          col("event_id").as("id"), col("value"))
-        .as[Triggers.TrEvent]
+      val ev = triggerEvents(s, dir)
       val out = Triggers.continuousTrigger(ev,
         winMs = 86400000L, intervalMs = 21600000L).toDF()
         .select(col("key").as("user_id"), col("winStart").as("win_start"),
@@ -643,22 +642,8 @@ object StreamingQueries2 {
 
   val q105DeltaEvictor: QueryDef = QueryDef(
     "q105_delta_evictor",
-    (s, dir) => {
-      import s.implicits._
-      val ev = StreamRunner.eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .withWatermark("ts", Wm)
-        .select(col("user_id").as("key"),
-          expr("unix_micros(ts) div 1000").as("tsMs"),
-          col("event_id").as("id"), col("value"))
-        .as[graft.streaming.EvictingWindow.EwEvent]
-      val out = graft.streaming.EvictingWindow(ev, winMs = 86400000L,
-        graft.streaming.EvictingWindow.Evictor.DeltaEvictor(50.0)).toDF()
-        .select(col("key").as("user_id"), col("winStart").as("win_start"),
-          col("cnt"), col("sum"))
-      StreamRunner.runToTable(out, "append")
-        .orderBy(col("user_id"), col("win_start"))
-    },
+    (s, dir) =>
+      evictingWindow(s, dir, EvictingWindow.Evictor.DeltaEvictor(50.0)),
     Some("""
       WITH e AS (
         SELECT user_id, event_id,
@@ -691,14 +676,7 @@ object StreamingQueries2 {
   val q106PurgingDeltaTrigger: QueryDef = QueryDef(
     "q106_purging_delta_trigger",
     (s, dir) => {
-      import s.implicits._
-      import graft.streaming.Triggers
-      val ev = StreamRunner.eventsStream(s, dir)
-        .withWatermark("ts", Wm)
-        .select(col("user_id").as("key"),
-          expr("unix_micros(ts) div 1000").as("tsMs"),
-          col("event_id").as("id"), col("value"))
-        .as[Triggers.TrEvent]
+      val ev = triggerEvents(s, dir)
       val out = Triggers.deltaTrigger(ev, threshold = 100.0, purge = true)
         .toDF()
         .select(col("key").as("user_id"), col("id").as("fire_id"),
@@ -706,30 +684,10 @@ object StreamingQueries2 {
       StreamRunner.runToTable(out, "append")
         .orderBy(col("user_id"), col("fire_id"))
     },
-    Some("""
-      WITH RECURSIVE e AS (
-        SELECT user_id, event_id, value,
-               CAST(round(value * 100) AS BIGINT) AS cents,
-               ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY
-                 CAST(floor(epoch_us(ts) / 1000) AS BIGINT), event_id) AS rn
-        FROM events
-        WHERE ts <= (SELECT max(ts) - INTERVAL 1 HOUR FROM events)),
-      walk AS (
-        SELECT user_id, rn, value AS seed, event_id,
-               FALSE AS fired, 1::BIGINT AS n, cents AS sum_cents
-        FROM e WHERE rn = 1
-        UNION ALL
-        SELECT e.user_id, e.rn,
-               CASE WHEN e.value - w.seed > 100 THEN e.value ELSE w.seed END,
-               e.event_id, e.value - w.seed > 100,
-               CASE WHEN w.fired THEN 1::BIGINT ELSE w.n + 1 END,
-               CASE WHEN w.fired THEN e.cents ELSE w.sum_cents + e.cents END
-        FROM walk w
-        JOIN e ON e.user_id = w.user_id AND e.rn = w.rn + 1)
-      SELECT user_id, event_id AS fire_id, n, sum_cents
-      FROM walk WHERE fired
-      ORDER BY user_id, fire_id
-    """))
+    Some(deltaTriggerOracle(
+      """CASE WHEN w.fired THEN 1::BIGINT ELSE w.n + 1 END,
+               CASE WHEN w.fired THEN e.cents ELSE w.sum_cents + e.cents END""",
+      "fire_id")))
 
   // ------------------------------------------------------------------
   // q121 punctuated watermark release (flink-core

@@ -74,15 +74,17 @@ object Dedup {
     if (dedupPairs) paired.distinct() else paired
   }
 
-  /** `probe` rows flagged `__delta` iff their doc_id is in the
-    * materialized delta id set (broadcast). The incremental probes keep
-    * a pair iff `a.__delta || b.__delta` AT EMISSION, which is exactly
-    * "an endpoint is in the delta": no later endpoint filter is needed.
+  /** `probe` rows flagged `__delta` iff their doc_id is one of the
+    * `delta` rows' (the probe's materialized keys; their distinct ids
+    * broadcast). The incremental probes keep a pair iff
+    * `a.__delta || b.__delta` AT EMISSION, which is exactly "an
+    * endpoint is in the delta": no later endpoint filter is needed.
     */
   private[operators] def flagDelta(probe: DataFrame,
-      deltaIds: DataFrame): DataFrame =
+      delta: DataFrame): DataFrame =
     probe
-      .join(broadcast(deltaIds.withColumn("__delta", lit(true))),
+      .join(broadcast(delta.select(col("doc_id")).distinct()
+          .withColumn("__delta", lit(true))),
         Seq("doc_id"), "left")
       .withColumn("__delta", coalesce(col("__delta"), lit(false)))
 
@@ -144,7 +146,7 @@ object Dedup {
       idCol: String, textCol: String): DataFrame = {
     val deltaFp = deltaDocs
       .select(md5(normalize(col(textCol))).as("fingerprint"))
-    IndexLayout.Exact.probe(spark, path, deltaFp, "fingerprint")
+    IndexLayout.Exact.probe(spark, path, deltaFp, "fingerprint")._2
       .groupBy(col("fingerprint"))
       .agg(min(col("doc_id")).as("kept_id"), count(lit(1)).as("cluster_size"))
   }
@@ -400,19 +402,18 @@ object Dedup {
       threshold: Double = 0.8, maxBucketSize: Int = 1000): DataFrame = {
     val deltaSig = minhashSignatures(deltaDocs, idCol, textCol,
       numHashes, shingleN)
-    // ONE delta band-key pass, materialized WITH doc_id (r22 probe-
-    // chain fusion, guide §1.2): it feeds the probe and the delta-id
-    // broadcast sides. Band-bearing ids are exact: a delta doc with no
-    // signature posts no bands and can never be a pair endpoint.
-    val qbands = bandKeys(deltaSig, numHashes, bands)
-      .select(col("doc_id"), col("bk")).distinct().localCheckpoint()
-    val deltaIds = qbands.select(col("doc_id")).distinct().localCheckpoint()
-    val probe = IndexLayout.MinhashBands.probe(spark, path, qbands, "bk")
-      .select(col("doc_id"), col("bk"))
+    // ONE delta band-key pass WITH doc_id, materialized by the probe
+    // (guide §1.2): it feeds the probe and the delta-id flag.
+    // Band-bearing ids are exact: a delta doc with no signature posts
+    // no bands and can never be a pair endpoint.
+    val (qbands, probed) = IndexLayout.MinhashBands.probe(spark, path,
+      bandKeys(deltaSig, numHashes, bands)
+        .select(col("doc_id"), col("bk")).distinct(), "bk")
+    val probe = probed.select(col("doc_id"), col("bk"))
     // EARLY endpoint filter — same as [[postingPairs]]: a
     // (base, base) bucket pair is discarded by the endpoint filter no
     // matter what, so filter at emission instead of after the distinct
-    val flagged = flagDelta(probe, deltaIds)
+    val flagged = flagDelta(probe, qbands)
     val cands = emitSortedPairs(flagged, keys = Seq("bk"),
       item = struct(col("doc_id"), col("__delta")), capCol = "bucket_n",
       maxGroupSize = maxBucketSize, aName = "a", bName = "b",
@@ -425,12 +426,14 @@ object Dedup {
     // shuffle the whole layout (guide §2.3 "shuffle keys, not
     // payloads"). Every candidate pair's endpoints are members of some
     // kept bucket, so the member-id set is an exact superset of the
-    // verify endpoints; only the compact id list is materialized — the
-    // candidate pipeline itself stays lazy, so the served plan keeps
-    // its pruned bands scan.
-    val memberIds = probe.select(col("doc_id")).distinct().localCheckpoint()
+    // verify endpoints; only the compact id list is materialized, its
+    // count observed by the same job — the candidate pipeline itself
+    // stays lazy, so the served plan keeps its pruned bands scan.
+    val (memberIds, n) = Parallelism.observed(
+      probe.select(col("doc_id")).distinct(), count(lit(1)))
     val sigs = spark.read.parquet(IndexLayout.MinhashSigs.live(spark, path))
-      .join(Parallelism.boundedBroadcast(memberIds), Seq("doc_id"), "leftsemi")
+      .join(Parallelism.boundedBroadcast(memberIds, n.getLong(0)),
+        Seq("doc_id"), "leftsemi")
     verifyJaccard(cands, sigs, threshold)
   }
 
@@ -698,10 +701,8 @@ object Dedup {
       maxBucketSize: Int = 10000): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"maxHamming $maxHamming breaks the 4-band exactness bound (<= 3)")
-    val qb = simhashBandRows(
-      simhash60Blocked(deltaDocs, idCol, textCol, blockCol)
-        .localCheckpoint())
-    val probed = IndexLayout.Simhash.probe(spark, path, qb,
+    val (qb, probed) = IndexLayout.Simhash.probe(spark, path,
+      simhashBandRows(simhash60Blocked(deltaDocs, idCol, textCol, blockCol)),
       "blk", "bidx", "bval")
     val capped = cappedBuckets(probed.drop("pshard"), maxBucketSize)
     val cands = capped.join(
@@ -747,24 +748,24 @@ object Dedup {
     * (the cap is a spillable window count — a skew guard, not a memory
     * ceiling).
     *
-    * With `deltaIds` (an [[IndexLayout.probe]] of a written layout),
-    * only pairs with an endpoint in the delta survive. The flag rides a
-    * broadcast `__delta` on each posting and filters (a.__delta OR
-    * b.__delta) AT EMISSION, before the pair exchange (r21 — measured
-    * at sf1: 104.9M raw pairs into the groupBy, 124.8k rows out): a
-    * (base, base) pair is dropped by the endpoint filter whatever its
-    * multiplicity, while group membership, order (doc_id is unique per
-    * group) and the cap count stay unchanged.
+    * With `delta` (the keys of an [[IndexLayout.probe]] of a written
+    * layout), only pairs with an endpoint in the delta survive. The
+    * flag rides a broadcast `__delta` on each posting and filters
+    * (a.__delta OR b.__delta) AT EMISSION, before the pair exchange
+    * (r21 — measured at sf1: 104.9M raw pairs into the groupBy,
+    * 124.8k rows out): a (base, base) pair is dropped by the endpoint
+    * filter whatever its multiplicity, while group membership, order
+    * (doc_id is unique per group) and the cap count stay unchanged.
     */
   private def postingPairs(postings: DataFrame,
-      deltaIds: Option[DataFrame], maxPostingSize: Int): DataFrame = {
-    val item = Seq("doc_id", "n") ++ deltaIds.map(_ => "__delta")
+      delta: Option[DataFrame], maxPostingSize: Int): DataFrame = {
+    val item = Seq("doc_id", "n") ++ delta.map(_ => "__delta")
     val emitted = emitSortedPairs(
-      deltaIds.fold(postings)(flagDelta(postings, _)), keys = Seq("blk", "h"),
+      delta.fold(postings)(flagDelta(postings, _)), keys = Seq("blk", "h"),
       item = struct(item.map(col): _*), capCol = "posting_n",
       maxGroupSize = maxPostingSize, aName = "a", bName = "b",
       carry = Seq("blk"), dedupPairs = false)
-    deltaIds.fold(emitted)(_ =>
+    delta.fold(emitted)(_ =>
         emitted.filter(col("a.__delta") || col("b.__delta")))
       .groupBy(col("blk"), col("a.doc_id").as("doc_a"),
         col("b.doc_id").as("doc_b"), col("a.n").as("na"), col("b.n").as("nb"))
@@ -887,12 +888,10 @@ object Dedup {
       shingleN: Int = 3, threshold: Double = 0.5,
       maxPostingSize: Int = 10000): DataFrame = {
     val keep = containment(threshold)
-    val qsets = shingleSets(deltaDocs, idCol, textCol, shingleN)
-      .select(col("doc_id"), explode(col("hs")).as("h"))
-      .distinct().localCheckpoint()
-    val deltaIds = qsets.select(col("doc_id")).distinct().localCheckpoint()
-    keep(postingPairs(IndexLayout.Ngram.probe(spark, path, qsets, "h"),
-      Some(deltaIds), maxPostingSize))
+    val (qsets, probed) = IndexLayout.Ngram.probe(spark, path,
+      shingleSets(deltaDocs, idCol, textCol, shingleN)
+        .select(col("doc_id"), explode(col("hs")).as("h")).distinct(), "h")
+    keep(postingPairs(probed, Some(qsets), maxPostingSize))
   }
 
   // ------------------------------------------------------------------
@@ -920,25 +919,23 @@ object Dedup {
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
       .localCheckpoint()
-    var labels = edges.select(col("src").as("v")).distinct()
-      .withColumn("component", col("v"))
-      .localCheckpoint()
     // labels only ever DECREASE, so sum(component) strictly decreases
-    // until the fixpoint — one cheap aggregate per round detects
-    // convergence without a second join over both label sets
-    def labelSum(df: org.apache.spark.sql.DataFrame): Long =
-      df.agg(sum("component")).head().getLong(0)
-    var prevSum = labelSum(labels)
+    // until the fixpoint — the sum, observed by each round's
+    // checkpoint, detects convergence without a second join over both
+    // label sets or a job of its own
+    var (labels, prevSum) = Parallelism.observed(
+      edges.select(col("src").as("v")).distinct()
+        .withColumn("component", col("v")), sum("component"))
     var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
       val viaNeighbor = edges
         .join(labels, edges("dst") === labels("v"))
         .select(edges("src").as("v"), col("component"))
-      val next = labels.select(col("v"), col("component")).union(viaNeighbor)
-        .groupBy("v").agg(min("component").as("component"))
-        .localCheckpoint()
-      val s = labelSum(next)
+      val (next, s) = Parallelism.observed(
+        labels.select(col("v"), col("component")).union(viaNeighbor)
+          .groupBy("v").agg(min("component").as("component")),
+        sum("component"))
       converged = s == prevSum
       prevSum = s
       labels = next
@@ -1075,10 +1072,10 @@ object Dedup {
   def blockDedupIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String, deltaDocs: DataFrame, idCol: String,
       textCol: String, blockTokens: Int): DataFrame = {
-    val blocks = docBlocks(deltaDocs, idCol, textCol, blockTokens)
-      .withColumn("fingerprint", md5(col("block")))
-      .localCheckpoint()
-    val mins = IndexLayout.Block.probe(spark, path, blocks, "fingerprint")
+    val (blocks, probed) = IndexLayout.Block.probe(spark, path,
+      docBlocks(deltaDocs, idCol, textCol, blockTokens)
+        .withColumn("fingerprint", md5(col("block"))), "fingerprint")
+    val mins = probed
       .groupBy(col("fingerprint"))
       .agg(min(struct(col("doc_id"), col("block_idx"))).as("m"))
     blockRollup(blocks.join(mins, Seq("fingerprint"))
@@ -1215,12 +1212,11 @@ object Dedup {
       blockCol: String, k: Int = 7, w: Int = 4, minShared: Long = 2L,
       maxPostingSize: Int = 10000): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    val qsets = winnowSets(deltaDocs, idCol, textCol, blockCol, k, w)
-      .select(col("blk"), col("doc_id"), explode(col("hs")).as("h"))
-      .distinct().localCheckpoint()
-    val deltaIds = qsets.select(col("doc_id")).distinct().localCheckpoint()
-    postingPairs(IndexLayout.Winnow.probe(spark, path, qsets, "blk", "h"),
-        Some(deltaIds), maxPostingSize)
+    val (qsets, probed) = IndexLayout.Winnow.probe(spark, path,
+      winnowSets(deltaDocs, idCol, textCol, blockCol, k, w)
+        .select(col("blk"), col("doc_id"), explode(col("hs")).as("h"))
+        .distinct(), "blk", "h")
+    postingPairs(probed, Some(qsets), maxPostingSize)
       .filter(col("i") >= minShared)
   }
 }

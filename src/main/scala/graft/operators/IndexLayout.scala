@@ -55,20 +55,25 @@ final case class IndexLayout(
   /** The one way an incremental probe reads a written index: the live
     * layout's rows whose `on` columns match a row of `keys`, reading
     * only the shards `keys` touches (`keys` carries `on` and the
-    * columns [[shardAt]] derives from).
+    * columns [[shardAt]] derives from). Returns `keys` MATERIALIZED
+    * beside the probed rows: a caller that reads its keys again (a
+    * delta-id flag, a reassembly join) reads that frame, so `keys` is
+    * computed once and the caller checkpoints nothing itself.
     *
-    * One driver aggregation over `keys` returns both the touched shard
-    * list (literal partition filters, bounded by the shard alphabet)
-    * and the row count that bounds the broadcast of the `on` keys
-    * ([[Parallelism.boundedBroadcast]]); the scan then semi-joins that
-    * broadcast. `keys` need not be distinct, and the broadcast carries
-    * its rows as they come: a semi-join's result does not depend on
-    * duplicate keys, the count already bounds them, and a distinct
-    * would cost every execution of the probe one more shuffle (MinHash
-    * executes its probe twice). A layout without a persisted
-    * `_shards` count (a crashed build) or without a shard derivation
-    * scans unpruned: pruning is an optimization, never a correctness
-    * dependency.
+    * The probe's one job is that checkpoint of `keys`: it also yields,
+    * through [[Parallelism.observed]], the touched shard list (literal
+    * partition filters, bounded by the shard alphabet) and the row
+    * count that bounds the broadcast of the `on` keys
+    * ([[Parallelism.boundedBroadcast]]), so building the probe runs no
+    * driver aggregation; the scan then semi-joins that broadcast.
+    * `keys` need not be distinct, and the broadcast carries its rows
+    * as they come: a semi-join's result does not depend on duplicate
+    * keys, the count already bounds them, and a distinct would cost
+    * every execution of the probe one more shuffle (MinHash executes
+    * its probe twice). Empty keys serve nothing. A layout without a
+    * persisted `_shards` count (a crashed build) or without a shard
+    * derivation scans unpruned: pruning is an optimization, never a
+    * correctness dependency.
     *
     * Probing with only the delta's OWN keys is exact for every caller
     * that asks "which groups hold a delta row, and what is in them":
@@ -79,8 +84,9 @@ final case class IndexLayout(
     * are exactly those of a fresh whole-corpus run.
     */
   def probe(spark: SparkSession, root: String, keys: DataFrame,
-      on: String*): DataFrame =
-    IndexLayout.probeAll(spark, root, keys, on, this).head
+      on: String*): (DataFrame, DataFrame) =
+    IndexLayout.probeAll(spark, root, keys, on, this) match {
+      case (ks, Seq(rows)) => (ks, rows) }
 
   /** A FRESH build of `rows` (plus `also` — sibling layouts of the same
     * member, each with its own rows) under `root`: clears a stale
@@ -209,28 +215,28 @@ object IndexLayout {
   private val NoAlso: Also = (_, _, _, _) => Nil
 
   /** [[IndexLayout.probe]] of sibling `layouts` under one root with the
-    * same `keys` and one aggregation for all of them (BM25 reads
+    * same `keys`, materialized once for all of them (BM25 reads
     * `postings/` and `terms/` by the query terms).
     */
   def probeAll(spark: SparkSession, root: String, keys: DataFrame,
-      on: Seq[String], layouts: IndexLayout*): Seq[DataFrame] = {
+      on: Seq[String], layouts: IndexLayout*): (DataFrame, Seq[DataFrame]) = {
     val live = IndexPaths.resolve(spark, root)
     val nSh = layouts.map(l =>
       l.shardOf.flatMap(_ => IndexShards.read(spark, l.at(live))))
     val shardSets = layouts.zip(nSh).collect {
       case (l, Some(n)) => collect_set(l.shardAt(n))
     }
-    val info = keys.agg(count(lit(1)), shardSets: _*).head()
+    val (ks, info) = Parallelism.observed(keys, count(lit(1)) +: shardSets: _*)
     val semi = Parallelism.boundedBroadcast(
-      keys.select(on.map(col): _*), info.getLong(0))
+      ks.select(on.map(col): _*), info.getLong(0))
     // each pruned layout's shard list sits after the count, in order
     val at = nSh.scanLeft(1)(_ + _.size)
-    layouts.lazyZip(nSh).lazyZip(at).map { (l, n, i) =>
+    (ks, layouts.lazyZip(nSh).lazyZip(at).map { (l, n, i) =>
       val scan = spark.read.parquet(l.at(live))
       n.fold(scan)(_ =>
           scan.filter(col(l.shardCol.get).isin(info.getSeq[Any](i): _*)))
         .join(semi, on, "leftsemi")
-    }
+    })
   }
 
   private def cols(names: String*): Seq[Column] = names.map(col)

@@ -353,7 +353,7 @@ object Multimodal {
       idCol: String = "asset_id", payloadCol: String = "payload")
       : DataFrame = {
     val deltaFp = deltaAssets.select(md5(col(payloadCol)).as("fingerprint"))
-    IndexLayout.Asset.probe(spark, path, deltaFp, "fingerprint")
+    IndexLayout.Asset.probe(spark, path, deltaFp, "fingerprint")._2
       .groupBy(col("fingerprint"))
       .agg(min(col("asset_id")).as("kept_id"),
         count(lit(1)).as("cluster_size"))
@@ -464,9 +464,9 @@ object Multimodal {
   def frameDedupIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String, deltaAssets: DataFrame, frameBytes: Int,
       idCol: String = "asset_id"): DataFrame = {
-    val frames = frameFingerprints(deltaAssets, idCol, frameBytes)
-      .localCheckpoint()
-    val mins = IndexLayout.Frame.probe(spark, path, frames, "fingerprint")
+    val (frames, probed) = IndexLayout.Frame.probe(spark, path,
+      frameFingerprints(deltaAssets, idCol, frameBytes), "fingerprint")
+    val mins = probed
       .groupBy(col("fingerprint"))
       .agg(min(struct(col("asset_id"), col("frame_no"))).as("m"))
     // LEFT join: the contract is append-then-probe (every snapshot
@@ -504,9 +504,9 @@ object Multimodal {
   def frameDecontamination(spark: org.apache.spark.sql.SparkSession,
       path: String, evalAssets: DataFrame, frameBytes: Int,
       idCol: String = "asset_id"): DataFrame = {
-    val frames = frameFingerprints(evalAssets, idCol, frameBytes)
-      .localCheckpoint()
-    val hits = IndexLayout.Frame.probe(spark, path, frames, "fingerprint")
+    val (frames, probed) = IndexLayout.Frame.probe(spark, path,
+      frameFingerprints(evalAssets, idCol, frameBytes), "fingerprint")
+    val hits = probed
       .select(col("fingerprint")).distinct()
       .withColumn("__hit", lit(1L))
     frames.join(hits, Seq("fingerprint"), "left")

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.functions.{broadcast, col}
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 
 /** Scale-adaptive parallelism repair for CPU-heavy per-document passes
   * (shingling, window fingerprints, per-char hashing, payload framing).
@@ -59,34 +61,37 @@ object Parallelism {
     }
   }
 
-  /** `df` under an explicit broadcast hint iff its row count is at most
-    * `spark.graft.probe.broadcastMaxKeys` (default 2e6 ≈ tens of MB
-    * hashed); unchanged otherwise. For the incremental-probe semi
-    * prunes (guide §3.1): the delta key set is MATERIALIZED
-    * (localCheckpoint) but checkpointed frames carry no reliable size
-    * estimate, so the static planner can pick a sort-merge semi join
-    * that map-writes the corpus-sized probe side to shuffle disk
-    * before AQE converts it. Counting the checkpointed frame is one
-    * cheap job; an explicit hint below the bound keeps the probe
-    * shuffle-free BY CONSTRUCTION, and above the bound (a delta so
+  /** The largest row count [[boundedBroadcast]] still hints: 2e6 keys
+    * ≈ tens of MB hashed.
+    */
+  val BroadcastMaxKeys: Long = 2000000L
+
+  /** `df` under an explicit broadcast hint iff its row count
+    * `knownCount` (or a conservative upper bound) is at most
+    * [[BroadcastMaxKeys]]; unchanged otherwise. For the
+    * incremental-probe semi prunes (guide §3.1): the delta key set is
+    * materialized and its count comes from the same job
+    * ([[observed]]). A local checkpoint carries its origin's size
+    * estimate, so the planner could pick a broadcast itself, but only
+    * by Spark's BYTE threshold (10 MB), while graft's bound is a ROW
+    * count: an explicit hint below it keeps the probe shuffle-free BY
+    * CONSTRUCTION, whatever the key width, and above it (a delta so
     * large broadcasting would strain executors — the 100 TB posture)
     * the planner keeps its choice.
     */
-  def boundedBroadcast(df: DataFrame): DataFrame =
-    boundedBroadcast(df, df.count())
+  def boundedBroadcast(df: DataFrame, knownCount: Long): DataFrame =
+    if (knownCount <= BroadcastMaxKeys) broadcast(df) else df
 
-  /** [[boundedBroadcast]] when the caller ALREADY KNOWS a row count (or
-    * a conservative upper bound) for `df` — skips the count job. The
-    * r22 probe-chain fusion: probes that materialize one delta frame
-    * and derive several broadcast sides from it fetch every needed
-    * count in the same single aggregation job (guide §1.2: fewer
-    * passes), then size each hint from those.
+  /** `df` materialized (`localCheckpoint`) together with `aggs` over its
+    * rows, which the same job computes through a Spark [[Observation]]:
+    * a driver scalar read right after a checkpoint (a row count, a
+    * shard set, a label sum) costs no aggregation job of its own.
+    * Returns the checkpointed frame and the aggregates' row.
     */
-  def boundedBroadcast(df: DataFrame, knownCount: Long): DataFrame = {
-    val maxKeys = df.sparkSession.conf
-      .get("spark.graft.probe.broadcastMaxKeys", "2000000").toLong
-    if (knownCount <= maxKeys) org.apache.spark.sql.functions.broadcast(df)
-    else df
+  def observed(df: DataFrame, aggs: Column*): (DataFrame, Row) = {
+    val obs = Observation()
+    val done = df.observe(obs, aggs.head, aggs.tail: _*).localCheckpoint()
+    (done, Await.result(obs.future, Duration.Inf))
   }
 
   /** Runs independent driver-side sections CONCURRENTLY and waits for

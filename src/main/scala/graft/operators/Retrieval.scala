@@ -228,10 +228,10 @@ object Retrieval {
       path0: String, queries: DataFrame, k: Int,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val path = IndexPaths.resolve(spark, path0)
-    val tokens = queryTerms(queries, idCol, textCol)
+    val (tokens, Seq(terms, postings)) = IndexLayout.probeAll(spark, path,
+      queryTerms(queries, idCol, textCol), Seq("term"),
+      IndexLayout.Bm25Terms, IndexLayout.Bm25)
     val qt = tokens.distinct()
-    val Seq(terms, postings) = IndexLayout.probeAll(spark, path, tokens,
-      Seq("term"), IndexLayout.Bm25Terms, IndexLayout.Bm25)
     val stats = spark.read.parquet(IndexLayout.Bm25Stats.at(path))
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("total")).as("total"))
     val dfq = terms.groupBy(col("term")).agg(sum(col("df")).as("df"))

@@ -175,18 +175,16 @@ object SubstringDedup {
   def substringPairsIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String, deltaDocs: DataFrame, idCol: String, textCol: String,
       minLen: Int, maxPostingSize: Int = 200): DataFrame = {
-    // ONE delta-sized window pass, materialized WITH doc_id (r22
-    // probe-chain fusion, guide §1.2): it feeds the probe and the
-    // snapshot-id broadcast sides. Window-bearing ids are exact: a
-    // delta doc shorter than minLen posts nothing and can never be a
-    // pair endpoint.
-    val qsets = substringWindows(deltaDocs, idCol, textCol, minLen)
-      .select(col("doc_id"), col("h")).distinct().localCheckpoint()
-    val snapIds = qsets.select(col("doc_id")).distinct().localCheckpoint()
-    val probe = IndexLayout.Substring.probe(spark, path, qsets, "h")
+    // ONE delta-sized window pass WITH doc_id, materialized by the
+    // probe (guide §1.2): it feeds the probe and the snapshot-id flag.
+    // Window-bearing ids are exact: a delta doc shorter than minLen
+    // posts nothing and can never be a pair endpoint.
+    val (qsets, probe) = IndexLayout.Substring.probe(spark, path,
+      substringWindows(deltaDocs, idCol, textCol, minLen)
+        .select(col("doc_id"), col("h")).distinct(), "h")
     // ride the snapshot-endpoint flag: pairsFromWindows keeps only the
     // pairs with a snapshot endpoint
-    val flagged = Dedup.flagDelta(probe, snapIds)
+    val flagged = Dedup.flagDelta(probe, qsets)
       .select(col("doc_id"), col("pos"), col("h"), col("__delta"))
     pairsFromWindows(flagged, minLen, maxPostingSize)
   }

@@ -253,7 +253,7 @@ object Cep {
         val h = q.evs.head
         h.tsMs < at._1 || (h.tsMs == at._1 && h.id < at._2)
       }
-      /** The emitted match's skip row, if the variable occurs in it. */
+      // The emitted match's skip row, if the variable occurs in it.
       def skipRowOf(p: Partial): Option[(Long, Long)] =
         if (skipToIdx < 0) None
         else {
@@ -277,14 +277,13 @@ object Cep {
       def noteStart(p: Partial): Unit =
         if (pattern.skipToNext) deadStarts += startRow(p)
 
-      /** Drops partials whose within-window closed; a dropped partial
-        * sitting at the final step with minTimes met flush-emits its
-        * maximal match first (greedy timeout emission). In
-        * SKIP_PAST_LAST mode the flush clears partials that started at
-        * or before the flushed match's end ROW — compared by (ts, id)
-        * position, since a same-millisecond row AFTER the match end is
-        * past the skip point and its partial must survive.
-        */
+      // Drops partials whose within-window closed; a dropped partial
+      // sitting at the final step with minTimes met flush-emits its
+      // maximal match first (greedy timeout emission). In
+      // SKIP_PAST_LAST mode the flush clears partials that started at
+      // or before the flushed match's end ROW — compared by (ts, id)
+      // position, since a same-millisecond row AFTER the match end is
+      // past the skip point and its partial must survive.
       def expire(isExpired: Partial => Boolean): Unit = {
         def startsAfter(q: Partial, endTs: Long, endId: Long): Boolean = {
           val h = q.evs.head

@@ -47,6 +47,9 @@ object StreamRunner {
     s"org.apache.spark.sql.execution.streaming.state.${store}StateStoreProvider"
   }
 
+  /** Compressed source bytes per state partition ([[statePartitions]]). */
+  private val BytesPerStatePartition: Long = 256L << 10
+
   /** DATA-SCALED state/shuffle partition count (make partitioning scale
     * with data, not with the machine). A stateful operator opens and
     * commits one state store per shuffle partition EVERY micro-batch,
@@ -54,8 +57,8 @@ object StreamRunner {
     * r21 scaling block measured q115, q43 and q71 2-3x FASTER at 8
     * cores than at 32 with tiny state.
     *
-    * Rule: ceil(source bytes / `spark.graft.stream.bytesPerStatePartition`,
-    * default 256 KB of compressed source) clamped to [1,
+    * Rule: ceil(source bytes / [[BytesPerStatePartition]], 256 KB of
+    * compressed source) clamped to [1,
     * defaultParallelism]: never more stores than the session runs
     * without it (at production volume the data term exceeds any core
     * count), never more than the data justifies. 256 KB, not 32 MB,
@@ -71,9 +74,6 @@ object StreamRunner {
     */
   private def statePartitions(spark: SparkSession,
       plan: LogicalPlan): Option[Int] = {
-    val target = spark.conf
-      .get("spark.graft.stream.bytesPerStatePartition",
-        (256L << 10).toString).toLong
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     val sources = plan.collect {
       case r: StreamingRelation => CaseInsensitiveMap(r.dataSource.options)
@@ -84,7 +84,7 @@ object StreamRunner {
       val paths = opts.get("pathGlobFilter").fold(Seq(dir))(glob =>
         Option(fs.globStatus(new Path(dir, glob))).toSeq.flatten.map(_.getPath))
       val bytes = paths.map(fs.getContentSummary(_).getLength).sum
-      val byData = math.ceil(bytes.toDouble / math.max(target, 1L)).toLong
+      val byData = math.ceil(bytes.toDouble / BytesPerStatePartition).toLong
       math.max(1L,
         math.min(byData, spark.sparkContext.defaultParallelism.toLong)).toInt
     }.maxOption

@@ -1,8 +1,12 @@
 package graft
 
-import org.apache.spark.sql.execution.FileSourceScanExec
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.graftshim.ListenerBusDrain
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Plan-shape assertions: the scale-critical properties of key query
   * plans (pushdown reaching scans, dims broadcast, bounded shuffle
@@ -17,6 +21,28 @@ class PlanSpec extends AnyFunSuite {
 
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
+
+  /** [[plan]] of `q`, and the executed plans of the `localCheckpoint`s
+    * that building it ran, in the order they finished: an indexed
+    * probe reads its keys' sources in its one key checkpoint, not in
+    * the served plan.
+    */
+  private def planAndCheckpoints(q: String): (String, Seq[String]) = {
+    val done = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") done.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    ListenerBusDrain.awaitEmpty(spark)
+    spark.listenerManager.register(listener)
+    try {
+      val p = plan(q)
+      ListenerBusDrain.awaitEmpty(spark)
+      (p, done.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("q1: filter and projection push into the parquet scan") {
     val p = plan("q1_agg")
@@ -618,8 +644,8 @@ class PlanSpec extends AnyFunSuite {
     assert("PartitionFilters: \\[[^\\]]*shard".r.findFirstIn(p).isDefined,
       s"snapshot shards must prune the bands scan:\n$p")
     // ZERO object-barrier passes in the served plan: the snapshot's
-    // signature pass ran once at probe-build time (checkpointed before
-    // the probe's shard aggregation), and the verify sets come from sigs/
+    // signature pass ran once at probe-build time (in the probe's one
+    // checkpoint of its keys), and the verify sets come from sigs/
     // parquet, NOT a re-tokenize — the whole point of the written
     // layout
     assert("MapPartitions graft\\.operators\\.Dedup".r.findAllIn(p).isEmpty,
@@ -653,8 +679,8 @@ class PlanSpec extends AnyFunSuite {
     val p = plan("q161_containment_incremental")
     assert("PartitionFilters: \\[[^\\]]*shard".r.findFirstIn(p).isDefined,
       s"snapshot shingle shards must prune the postings scan:\n$p")
-    // the snapshot shingle pass is checkpointed before the probe's
-    // shard aggregation, so the served plan reads the written postings
+    // the snapshot shingle pass runs in the probe's one checkpoint of
+    // its keys, so the served plan reads the written postings
     // exclusively
     assert("MapPartitions graft\\.operators\\.Dedup".r.findAllIn(p).isEmpty,
       s"the served plan must be purely index-driven:\n$p")
@@ -821,7 +847,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q207: the packed-asset probe keeps the q194 shape; the snapshot reads columnar packed parquet") {
-    val p = plan("q207_packed_asset_ingest")
+    val (p, checkpoints) = planAndCheckpoints("q207_packed_asset_ingest")
     assert("PartitionFilters: \\[[^\\]]*shard".r.findFirstIn(p).isDefined,
       s"snapshot fingerprint shards must prune the index scan:\n$p")
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"),
@@ -829,9 +855,14 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("partial_min") && p.contains("partial_count"),
       "cluster stats must map-side combine")
     // the snapshot side scans the PACKED parquet (columnar, bounded
-    // files), not a binaryFile edge — payload reads stay columnar
-    assert("ReadSchema: [^\\n]*payload:binary".r.findFirstIn(p).isDefined,
-      s"the snapshot must read the packed payload column:\n$p")
+    // files), not a binaryFile edge — payload reads stay columnar. It
+    // is read once, by the probe's key checkpoint (the last checkpoint
+    // the serve runs), which the served plan then scans
+    val keys = checkpoints.lastOption.getOrElse("")
+    assert("ReadSchema: [^\\n]*payload:binary".r.findFirstIn(keys).isDefined,
+      s"the snapshot must read the packed payload column:\n$keys")
+    assert(p.contains("Scan ExistingRDD"),
+      s"the served plan must read the probe's key checkpoint:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
       s"nothing corpus-sized may join:\n$p")
   }
@@ -1022,7 +1053,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q176: v7 manifest serves from written indexes + checkpoints only — every probe pruned") {
-    val p = plan("q176_curation_v7")
+    val (p, checkpoints) = planAndCheckpoints("q176_curation_v7")
     // fingerprint clusters + BM25 postings/terms all prune on their
     // md5 shards; the semantic probe prunes on the touched cluster ids
     assert("PartitionFilters: \\[[^\\]]*shard".r.findAllIn(p).size >= 2,
@@ -1030,16 +1061,19 @@ class PlanSpec extends AnyFunSuite {
     assert("PartitionFilters: \\[[^\\]]*cid".r.findFirstIn(p).isDefined,
       s"semantic index scan must stay cid-pruned:\n$p")
     // day-2 reads: the snapshot rides its checkpoints and the ONLY
-    // corpus scan left is the bounded lexical query set (doc_id < 8);
-    // the embedding corpus never reappears after the build
+    // corpus scan left is the bounded lexical query set (doc_id < 8),
+    // read by the BM25 probe's key checkpoint; the embedding corpus
+    // never reappears after the build
     assert(p.contains("Scan ExistingRDD"),
       "snapshot probes must come from their checkpoints")
     assert(!p.contains("embeddings.parquet"),
       s"the embedding corpus must not rescan in the served plan:\n$p")
-    // (the query-terms subtree plans twice — q154's serve shape — so
-    // there can be two of these scans; both must stay bounded)
-    val docScans = p.linesIterator.filter(_.contains("documents.parquet")).toSeq
-    assert(docScans.nonEmpty && docScans.forall(_.contains("LessThan(doc_id,8)")),
+    def docScans(plan: String) =
+      plan.linesIterator.filter(_.contains("documents.parquet")).toSeq
+    assert(checkpoints.exists(c => docScans(c).nonEmpty &&
+        docScans(c).forall(_.contains("LessThan(doc_id,8)"))),
+      s"the query set's checkpoint must read the corpus bounded:\n$checkpoints")
+    assert(docScans(p).forall(_.contains("LessThan(doc_id,8)")),
       s"every document-corpus scan must carry the doc_id<8 pushdown:\n$p")
     // the lexical serve's 1-row stats crossJoin broadcasts (a
     // BroadcastNestedLoopJoin over one row — q155's allowed shape);
@@ -1243,7 +1277,7 @@ class PlanSpec extends AnyFunSuite {
     // the pruned-regime core: pair emission is gated by a LeftSemi join
     // against the delta's own (blk, h) fingerprint set — probe cost
     // tracks the delta's matches, not the touched shards' full content
-    // (r21: broadcast EXPLICITLY below spark.graft.probe.broadcastMaxKeys)
+    // (r21: broadcast EXPLICITLY below Parallelism.BroadcastMaxKeys)
     assert(p.contains("LeftSemi"),
       s"the (blk, h) fingerprint semi prune must gate pair emission:\n$p")
     // r21 EARLY endpoint filter: (base, base) pairs are dropped AT

@@ -475,4 +475,20 @@ class DedupSpec extends AnyFunSuite {
     Dedup.winnowAppendIndex(snap, path.toString, "doc_id", "text", "source")
     assert(!IndexLayout.Winnow.audit(spark, path.toString).isEmpty)
   }
+
+  test("connectedComponents: a chain needing several rounds labels every vertex with its component's min") {
+    // 1-2-…-7 (the min label travels one hop per round) and 10-11-12
+    val pairs = (Seq((2L, 1L), (3L, 2L), (3L, 4L), (5L, 4L), (5L, 6L),
+        (7L, 6L)) ++ Seq((11L, 10L), (12L, 11L)))
+      .toDF("doc_a", "doc_b")
+    val labels = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
+      .as[(Long, Long)].collect().toMap
+    assert(labels == ((1L to 7L).map(_ -> 1L) ++
+      (10L to 12L).map(_ -> 10L)).toMap)
+    // the fixture really needs more than two rounds to converge
+    val e = intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(pairs, "doc_a", "doc_b", maxIter = 2)
+    }
+    assert(e.getMessage.contains("no fixpoint in 2 rounds"), e.getMessage)
+  }
 }

@@ -1,9 +1,13 @@
 package graft.operators
 
 import graft.SparkTestSession
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ListenerBusDrain
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The shared lifecycle, table-driven over every compactable layout:
   * a replayed append audits as bit-identical copies, the online
@@ -11,7 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * probe after the swap equals the probe before the replay, and a
   * payload-divergent copy makes the compaction refuse by member name.
   * A sharded layout whose `_shards` counts are gone serves the same
-  * probe rows, unpruned.
+  * probe rows, unpruned; building a pruned serve runs only the probe's
+  * one key checkpoint.
   */
 class IndexLayoutSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -147,8 +152,52 @@ class IndexLayoutSpec extends AnyFunSuite {
     counts.size
   }
 
+  /** `body`'s result and the jobs it submitted, each as its SQL
+    * execution id and its stages' call sites.
+    */
+  private def jobsOf[T](body: => T): (T, Seq[(String, Seq[String])]) = {
+    val jobs = new ConcurrentLinkedQueue[(String, Seq[String])]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((e.properties.getProperty("spark.sql.execution.id"),
+          e.stageInfos.map(_.name)))
+    }
+    ListenerBusDrain.awaitEmpty(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBusDrain.awaitEmpty(spark)
+      (out, jobs.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   members.foreach { m =>
     val name = m.layout.member
+    if (m.layout.shardOf.isDefined)
+      test(s"$name: building the served probe runs only its one key checkpoint") {
+        val root = TmpWorkspaces.pidScoped(s"graft_layout_spec_${name}_",
+          "jobs").toString
+        m.build(root)
+        m.append(root)
+        val (served, jobs) = jobsOf(m.probe(root))
+        // a query's jobs carry its SQL execution id; a parquet schema
+        // read (the footer job of `spark.read.parquet`) carries none
+        val (queries, schemaReads) = jobs.partition(_._1 != null)
+        assert(queries.nonEmpty && queries.map(_._1).distinct.size == 1,
+          s"the jobs must belong to one SQL execution: $jobs")
+        assert(queries.last._2.exists(_.startsWith("localCheckpoint at ")),
+          s"that execution must be the key checkpoint: $jobs")
+        assert(schemaReads.forall(_._2.forall(_.startsWith("parquet at "))),
+          s"every other job must be a schema read: $jobs")
+        val sites = jobs.flatMap(_._2)
+        assert(!sites.exists(s => s.startsWith("head at") ||
+          s.startsWith("collect at")), s"no driver aggregation: $sites")
+        val pruned = rows(served)
+        assert(dropShardCounts(IndexPaths.resolve(spark, root)) > 0)
+        assert(pruned.nonEmpty && rows(m.probe(root)) == pruned,
+          "the one-job probe must serve the unpruned rows")
+      }
+
     if (m.layout.shardOf.isDefined)
       test(s"$name: without `_shards` the probe scans unpruned and serves the pruned rows") {
         val root = TmpWorkspaces.pidScoped(s"graft_layout_spec_${name}_",
